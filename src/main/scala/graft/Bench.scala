@@ -49,15 +49,7 @@ object Bench {
         ordered.map { case (name, _) => name -> Vector.empty[Double] })
     for (_ <- 1 to reps; (name, fn) <- ordered) {
       val t0 = System.nanoTime()
-      // noop sink, NOT count(): count() lets Catalyst prune the output
-      // projection, so projection-only queries (the scalar families,
-      // l51/l56/l57) were timed as bare row counts — the ScaleRehearsal
-      // fix, applied to the bench for the same honesty. It pruned
-      // AGGREGATES too (count of groups needs only the grouping keys,
-      // so every unreferenced sum/avg column was dropped — a1's sums
-      // were never evaluated); under the noop sink every query pays
-      // its real evaluation cost.
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Metrics.noopSink(fn(spark, sfDir))
       catch {
         case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse("")
@@ -128,34 +120,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Kryo for broadcast/task payloads (the SQL row path is
-      // serializer-agnostic UnsafeRow either way): the suite's many
-      // broadcast joins and checkpoints serialize measurably faster —
-      // r17 A/B over a 12-query mixed subset, back-to-back, ~7–14% on
-      // the subset sum, no query slower
-      .config("spark.serializer",
-        "org.apache.spark.serializer.KryoSerializer")
-    // optional extra session confs for controlled A/B experiments
-    // (semicolon-separated k=v); the driver never sets it
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder
-      // the generated-class cache defaults to 100 entries; a 250+-query
-      // suite in ROUND-ROBIN rep order cycles it completely, so every
-      // rep of every query re-runs janino compilation (~0.3–1.5 s for a
-      // wide plan — s18 measured 1.8 s benched vs 0.08 s warm). Sized to
-      // hold the whole suite, reps 2..n measure execution, not the
-      // compiler — exactly what a long-lived production executor sees.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warm-up: one trivial scan+agg+join so the first measured
     // query isn't charged for session bring-up and compiler warm-up

@@ -2,34 +2,60 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Convenience builder for applications embedding the engine: a session
-  * with the graft native functions registered and the configuration the
-  * library is designed around (UTC, AQE with skew-join handling on,
-  * sane shuffle parallelism). The harness entry points (Verify/Bench)
-  * build their own sessions per the driver contract and register
-  * functions per-query instead — both paths end in the same plans.
+/** The one place a graft session is configured. Every entry point —
+  * Bench, Verify, the profiling and audit tools, the test suite and
+  * applications embedding the engine — builds through `builder`, so the
+  * DuckDB oracle checks plans built under exactly the config Bench
+  * times. A caller adds only its deployment paths (e.g. a warehouse
+  * dir). AQE and skew-join handling are Spark's defaults and stay on.
   */
 object GraftSession {
 
-  def builder(appName: String = "graft",
-              master: String = "local[*]",
-              shufflePartitions: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder =
-    SparkSession.builder()
-      .appName(appName)
-      .master(master)
+  /** Core count for a local session: `SPARK_GRAFT_CPUS`, default 4. */
+  private lazy val defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+
+  /** Parse `SPARK_GRAFT_EXTRA_CONF` ("k1=v1;k2=v2"), the session confs
+    * for controlled A/B experiments. Blank entries are skipped; an entry
+    * without `=` or with an empty key fails naming the entry. */
+  private[graft] def parseExtraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.trim.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
+      }
+    }
+
+  private lazy val extraConf: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(parseExtraConf).getOrElse(Nil)
+
+  /** `local[cpus]` with as many shuffle partitions, UI off, UTC, Kryo
+    * for broadcast/task payloads (r17 A/B over a 12-query mixed subset:
+    * ~7–14% on the subset sum, no query slower; the SQL row path is
+    * UnsafeRow either way) and a codegen class cache sized for the whole
+    * suite — the default 100 entries is cycled completely by a 250+-query
+    * round-robin bench, re-running janino for every rep (s18: 1.8 s
+    * benched vs 0.08 s warm). `SPARK_GRAFT_EXTRA_CONF` is applied last. */
+  def builder(cpus: Int = defaultCpus): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .appName("graft")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.serializer",
         "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+    extraConf.foreach { case (k, v) => b.config(k, v) }
+    b
+  }
 
-  /** Build (or reuse) the session and ensure functions are registered even
-    * when the extensions conf was overridden by the environment.
-    */
-  def getOrCreate(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
+  /** Build (or reuse) the session with the graft native functions and the
+    * as-of join planner registered. The declared queries register what
+    * they use themselves; `GraftExtensions` serves `--conf` users. */
+  def getOrCreate(): SparkSession = {
+    val spark = builder().getOrCreate()
     functions.GraftFunctions.register(spark)
     plans.AsOfJoin.register(spark)
     spark

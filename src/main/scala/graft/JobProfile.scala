@@ -1,88 +1,42 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-
 /** Per-query job/stage decomposition for the optimization rounds: runs a
   * query twice (rep 1 absorbs codegen/classload warm-up), and for the
   * warm rep prints every Spark job's wall time plus the gap spent
   * OUTSIDE jobs (driver-side planning, broadcast builds, result
-  * handling). Usage:
+  * handling), read from `Metrics.measure`. Usage:
   *   runMain graft.JobProfile <sfDir> <q1,q2,...>
-  * Session config mirrors Bench's.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    final case class JobRec(id: Int, start: Long, var end: Long = -1L,
-      var stages: Int = 0, var tasks: Int = 0, var taskTimeMs: Long = 0L,
-      var names: List[String] = Nil)
-    val jobs = new scala.collection.mutable.LinkedHashMap[Int, JobRec]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          jobs(e.jobId) = JobRec(e.jobId, e.time, stages = e.stageIds.size)
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        jobs.synchronized {
-          jobs.values.lastOption.foreach { j =>
-            val si = e.stageInfo
-            j.names ::= s"${si.name.takeWhile(_ != '.')}(${si.numTasks}t," +
-              s"${si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)}ms)"
-          }
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        jobs.synchronized {
-          // attribute by most recent open job (local mode, sequential)
-          jobs.values.lastOption.foreach { j =>
-            j.tasks += 1
-            if (e.taskMetrics != null)
-              j.taskTimeMs += e.taskMetrics.executorRunTime
-          }
-        }
-    }
-
-    // shared warm-up (mirrors Bench)
+    // shared warm-up
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    val qs = SparkEntry.queries
-    for (n <- names) qs.get(n) match {
+    for (n <- names) SparkEntry.queries.get(n) match {
       case None => System.err.println(s"[jobprofile] UNKNOWN query: $n")
       case Some(fn) =>
         // rep 1: warm-up (codegen, classload, fixture builds)
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        jobs.synchronized(jobs.clear())
-        spark.sparkContext.addSparkListener(listener)
+        Metrics.noopSink(fn(spark, sfDir))
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val tDef = (System.nanoTime() - t0) / 1e6
-        df.write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e6
+        val m = Metrics.measure(spark, df)
+        val wall = tDef + m.wallS * 1e3
         val phases = df.queryExecution.tracker.phases
           .map { case (p, t) => s"$p=${t.endTimeMs - t.startTimeMs}ms" }
           .mkString(" ")
         println(f"[def ${tDef}%8.1f ms]  phases: $phases")
-        Thread.sleep(300) // let listener events drain
-        spark.sparkContext.removeSparkListener(listener)
-        val js = jobs.synchronized(jobs.values.toSeq)
-        val inJobs = js.map(j => (j.end.max(j.start) - j.start)).sum
-        println(f"\n=== $n  wall ${wall}%9.1f ms   jobs ${js.size}%3d   " +
+        val inJobs = m.jobs.map(_.wallMs).sum
+        println(f"\n=== $n  wall ${wall}%9.1f ms   jobs ${m.jobs.size}%3d   " +
           f"in-jobs $inJobs%6d ms   outside ${wall - inJobs}%9.1f ms")
-        for (j <- js)
-          println(f"  job ${j.id}%3d  ${j.end - j.start}%6d ms  " +
+        for (j <- m.jobs)
+          println(f"  job ${j.jobId}%3d  ${j.wallMs}%6d ms  " +
             f"stages ${j.stages}%2d  tasks ${j.tasks}%4d  " +
-            f"taskTime ${j.taskTimeMs}%6d ms  ${j.names.reverse.mkString(" ")}")
+            f"taskTime ${j.taskTimeMs}%6d ms  ${j.stageNames.mkString(" ")}")
     }
     spark.stop()
   }

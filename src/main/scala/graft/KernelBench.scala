@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 
@@ -12,13 +11,7 @@ import graft.functions.{TextFunctions => TF}
 object KernelBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       .localCheckpoint()
@@ -26,24 +19,20 @@ object KernelBench {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     val forms: Seq[(String, () => Unit)] = Seq(
-      "wt_native" -> (() => docs.select(TF.wordTokens(col("text")).as("w"))
-        .write.format("noop").mode("overwrite").save()),
-      "wt_hof" -> (() => docs.select(TF.wordTokensRef(col("text")).as("w"))
-        .write.format("noop").mode("overwrite").save()),
-      "kg_native" -> (() => docs.select(
-        TF.kgramHashes(TF.wordTokens(col("text")), 2).as("h"))
-        .write.format("noop").mode("overwrite").save()),
-      "kg_hof" -> (() => docs.select(
-        TF.kgramHashesRef(TF.wordTokensRef(col("text")), 2).as("h"))
-        .write.format("noop").mode("overwrite").save()),
-      "explode_native" -> (() => docs.select(explode(
+      "wt_native" -> (() => Metrics.noopSink(
+        docs.select(TF.wordTokens(col("text")).as("w")))),
+      "wt_hof" -> (() => Metrics.noopSink(
+        docs.select(TF.wordTokensRef(col("text")).as("w")))),
+      "kg_native" -> (() => Metrics.noopSink(docs.select(
+        TF.kgramHashes(TF.wordTokens(col("text")), 2).as("h")))),
+      "kg_hof" -> (() => Metrics.noopSink(docs.select(
+        TF.kgramHashesRef(TF.wordTokensRef(col("text")), 2).as("h")))),
+      "explode_native" -> (() => Metrics.noopSink(docs.select(explode(
         TF.kgramHashes(TF.wordTokens(col("text")), 2)).as("h"))
-        .groupBy(col("h")).count()
-        .write.format("noop").mode("overwrite").save()),
-      "explode_hof" -> (() => docs.select(explode(
+        .groupBy(col("h")).count())),
+      "explode_hof" -> (() => Metrics.noopSink(docs.select(explode(
         TF.kgramHashesRef(TF.wordTokensRef(col("text")), 2)).as("h"))
-        .groupBy(col("h")).count()
-        .write.format("noop").mode("overwrite").save()),
+        .groupBy(col("h")).count())),
     )
     val reps = 5
     val samples = collection.mutable.Map.empty[String, Vector[Double]]

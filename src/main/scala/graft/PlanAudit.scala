@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for the plan-shape audit (SURVEY §4):
   * filter/projection pushdown, broadcast vs shuffle joins, top-k without
   * global sort, partial aggregation. Output reviewed into PLANS.md.
@@ -9,12 +7,8 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder()
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val interesting = Seq(

@@ -1,13 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for named queries to files — the
   * optimization-round evidence trail (`plans/r<N>/<query>_<tag>.txt`).
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
-  * Session config mirrors Bench's so the captured plan is the benched
-  * plan (same shuffle partitions, AQE defaults, codegen cache).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -15,13 +12,7 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val names = args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.queries

@@ -90,12 +90,7 @@ object ScaleRehearsal {
     val work = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val factors =
       (if (args.length > 2) args(2) else "10,30").split(",").map(_.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val dirs = ("x1" -> src) +: factors.toSeq.map { f =>
@@ -134,10 +129,6 @@ object ScaleRehearsal {
 
   private def timeOnce(spark: SparkSession, q: String, dir: String): Double = {
     val t0 = System.nanoTime()
-    // noop sink, NOT count(): count() lets Catalyst prune the output
-    // projection entirely, so a projection-only query (l51/l56/l57)
-    // would be timed as a bare parquet row count — vacuously flat. The
-    // noop write materializes every output column of the physical plan.
     val df =
       // twoLevelMin = 1: the rehearsal measures the TWO-LEVEL path's
       // curve at every scale (the adaptive dispatch would route small
@@ -145,7 +136,7 @@ object ScaleRehearsal {
       if (q == "l26_assign")
         graft.ops.LlmOps.semdedupAssigned(spark, dir, twoLevelMin = 1)
       else SparkEntry.queries(q)(spark, dir)
-    df.write.format("noop").mode("overwrite").save()
+    Metrics.noopSink(df)
     (System.nanoTime() - t0) / 1e9
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler for the streaming-proof cost floor (r9 verdict #2):
   * runs selected streaming proofs, prints wall time + per-trigger
   * durationMs breakdown from the query listener. Temporary tool; not
@@ -11,21 +9,7 @@ object StreamProfile {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val qs = (if (args.length > 1) args(1)
               else "e1b_stream_tumbling,e25_stream_stream_left").split(",")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // experiment knobs: SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => b.config(k, v)
-        case _ => sys.error(
-          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
-      }
-    })
-    val spark = b.getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val progresses =

@@ -84,14 +84,15 @@ object ShingleKernels {
     * `transform(sequence(1, max(n-k+1, 1)), i -> aggregate(
     *    split(array_join(slice(words, i, k), " "), ""), 0L,
     *    (acc, c) -> (acc*31 + ascii(c)) % 2^52))`.
-    * Equivalence notes: Java `split("")` iterates UTF-16 code units and
-    * `ascii` of a one-unit string returns exactly that unit's value (for
-    * BMP chars the code point; for a lone surrogate the surrogate value),
-    * so the per-`charAt` loop reproduces the fold exactly; `array_join`
+    * Equivalence notes: Spark's `split(g, "")` keeps a surrogate pair
+    * whole and `ascii` returns `codePointAt(0)`, so the fold is over CODE
+    * POINTS (as is the DuckDB oracle's str_split + ascii): the loop steps
+    * by `Character.charCount` (a lone surrogate is one unit, folded as
+    * its own value, like `codePointAt` returns it); `array_join`
     * skips null elements and separates kept ones with single spaces
     * (guarded below, though wordTokens never yields nulls); an empty gram
     * folds over `[""]` whose ascii is 0, i.e. stays 0 — the empty loop's
-    * value. acc < 2⁵², ×31 + char < 2⁵⁷: no overflow, and `%` on
+    * value. acc < 2⁵², ×31 + code point < 2⁵⁷: no overflow, and `%` on
     * non-negative operands matches Spark's Remainder. */
   def kgramHashes(words: ArrayData, k: Int): GenericArrayData = {
     val M = 4503599627370496L
@@ -119,8 +120,9 @@ object ShingleKernels {
           if (!first) acc = (acc * 31L + 32L) % M // the joining space
           var c = 0
           while (c < s.length) {
-            acc = (acc * 31L + s.charAt(c)) % M
-            c += 1
+            val cp = s.codePointAt(c)
+            acc = (acc * 31L + cp) % M
+            c += Character.charCount(cp)
           }
           first = false
         }

@@ -57,4 +57,18 @@ class BenchSpec extends SparkSpec {
     val full = Bench.fullJson(many, Nil, sf)
     assert(many.forall { case (k, _) => full.contains("\"" + k + "\":") })
   }
+
+  test("SPARK_GRAFT_EXTRA_CONF parses key=value pairs; blank entries skip") {
+    assert(GraftSession.parseExtraConf("a.b=1;c=x=y; d = 2 ;") ==
+      Seq("a.b" -> "1", "c" -> "x=y", "d" -> "2"))
+    assert(GraftSession.parseExtraConf("").isEmpty)
+  }
+
+  test("SPARK_GRAFT_EXTRA_CONF entry without '=' fails naming the entry") {
+    for (bad <- Seq("a=1;spark.sql.foo", "=v")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.parseExtraConf(bad))
+      assert(e.getMessage.contains(s"'${bad.split(";").last}'"), e.getMessage)
+    }
+  }
 }

@@ -88,4 +88,19 @@ class MetricsSpec extends SparkSpec {
     assert(m.shuffleWriteRecords * 10 < factRows,
       s"shuffled=${m.shuffleWriteRecords} factRows=$factRows")
   }
+
+  test("per-job task counts sum to the run's total (stageId → jobId attribution)") {
+    // a warm-up action right before: its late events must not be counted
+    Tables.orders(spark, sf).count()
+    // broadcast build + shuffle map stage + result stage: several jobs,
+    // the broadcast job running concurrently with the scan
+    val m = Metrics.measure(spark,
+      Tables.lineitem(spark, sf)
+        .join(broadcast(Tables.orders(spark, sf)),
+          col("o_orderkey") === col("l_orderkey"))
+        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n")))
+    assert(m.jobs.size > 1, s"jobs=${m.jobs}")
+    assert(m.tasks > 0)
+    assert(m.jobs.map(_.tasks).sum == m.tasks, s"jobs=${m.jobs} total=${m.tasks}")
+  }
 }

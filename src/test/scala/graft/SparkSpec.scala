@@ -4,16 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session keeps the
-  * suite fast; tests only read tiny in-memory frames + sf0.001 parquet).
+  * suite fast; tests only read tiny in-memory frames + sf0.001 parquet),
+  * configured by the same factory as every entry point.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(cpus = 2).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -414,9 +414,10 @@ class TextFunctionsSpec extends SparkSpec {
     graft.functions.GraftFunctions.register(spark)
     import graft.functions.{GraftFunctions => GF}
     // edge cases: empty, all-spaces, consecutive/leading/trailing spaces,
-    // non-space whitespace INSIDE tokens, multi-byte UTF-8
+    // non-space whitespace INSIDE tokens, multi-byte UTF-8, supplementary-
+    // plane chars (4-byte UTF-8, surrogate pairs in UTF-16)
     val edge = Seq("", "   ", "  a  b ", "a\tb\nc d", "héllo  wörld",
-      "日本語 テキスト").toDF("text")
+      "日本語 テキスト", "😀 x 😀😀 y", "𝄞 a").toDF("text")
     val docs = Tables.documents(spark, sf).limit(80).select($"text")
       .unionByName(edge)
     val cmp = docs.select(
@@ -448,9 +449,10 @@ class TextFunctionsSpec extends SparkSpec {
   test("native word_tokens == filter(split) HOF reference (r18)") {
     // edge cases: empty, all-spaces, consecutive/leading/trailing spaces,
     // non-space whitespace (stays INSIDE tokens — split cuts only 0x20),
-    // multi-byte UTF-8 (no space byte inside a multibyte sequence)
+    // multi-byte UTF-8 (no space byte inside a multibyte sequence),
+    // supplementary-plane chars (4-byte UTF-8, surrogate pairs in UTF-16)
     val edge = Seq("", "   ", "  a  b ", "a\tb\nc d", "héllo  wörld",
-      "日本語 テキスト", " x", "x ", "x").toDF("text")
+      "日本語 テキスト", " x", "x ", "x", "😀 x 😀😀 y", "𝄞 a").toDF("text")
     val docs = Tables.documents(spark, sf).limit(80).select($"text")
       .unionByName(edge)
     val cmp = docs.select(
@@ -461,10 +463,12 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("native kgram_hashes == transform/aggregate HOF reference (r18)") {
     // edge cases: empty token array (one empty gram, hash 0), fewer
-    // tokens than k (clamped slice), exactly k, multi-byte UTF-8 chars
-    // (the fold is over UTF-16 units via split(gram, '') + ascii)
+    // tokens than k (clamped slice), exactly k, multi-byte UTF-8 chars,
+    // supplementary-plane chars (the fold is over CODE POINTS via
+    // split(gram, '') + ascii, so a surrogate pair folds once)
     val edge = Seq("", "a", "a b", "a b c", "a b c d e",
-      "héllo wörld ünïcode tåkens", "日本語 の テキスト 例")
+      "héllo wörld ünïcode tåkens", "日本語 の テキスト 例",
+      "😀 x 😀😀 y", "𝄞 a")
       .toDF("text")
     val docs = Tables.documents(spark, sf).limit(80).select($"text")
       .unionByName(edge)
