@@ -3,14 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import graft.functions.GraftFunctions
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * expressions available in ANY session (including spark-sql / thrift)
-  * via `--conf spark.sql.extensions=graft.GraftExtensions`.
-  *
-  * Sessions built without the conf can call
-  * `CosineSimilarityExpression.register(spark)` imperatively — the
-  * declared queries do that themselves, so the harness sessions need no
-  * special configuration.
+/** SparkSessionExtensions entry point for sessions graft does not
+  * build (spark-sql, thrift, spark-submit): `--conf
+  * spark.sql.extensions=graft.GraftExtensions` adds the engine's native
+  * expressions and the as-of join planner. Sessions from
+  * `GraftSession.builder` get the functions without it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.functions.GraftFunctions
 
-/** The one place a graft session is configured. Every entry point —
-  * Bench, Verify, the profiling and audit tools, the test suite and
+/** The one owner of session-scoped state. Every entry point — Bench,
+  * Verify, the profiling and audit tools, the test suite and
   * applications embedding the engine — builds through `builder`, so the
   * DuckDB oracle checks plans built under exactly the config Bench
-  * times. A caller adds only its deployment paths (e.g. a warehouse
-  * dir). AQE and skew-join handling are Spark's defaults and stay on.
+  * times, and every session it builds (and every `newSession()` of one)
+  * has the native functions from birth. A caller adds only its
+  * deployment paths (e.g. a warehouse dir). AQE and skew-join handling
+  * are Spark's defaults and stay on. A query that needs a different
+  * conf scopes it with `withConf`, so it hands on the session it was
+  * given.
   */
 object GraftSession {
 
@@ -36,7 +41,8 @@ object GraftSession {
     * UnsafeRow either way) and a codegen class cache sized for the whole
     * suite — the default 100 entries is cycled completely by a 250+-query
     * round-robin bench, re-running janino for every rep (s18: 1.8 s
-    * benched vs 0.08 s warm). `SPARK_GRAFT_EXTRA_CONF` is applied last. */
+    * benched vs 0.08 s warm). `SPARK_GRAFT_EXTRA_CONF` is applied last.
+    * The native functions are injected as session extensions. */
   def builder(cpus: Int = defaultCpus): SparkSession.Builder = {
     val b = SparkSession.builder()
       .appName("graft")
@@ -47,17 +53,25 @@ object GraftSession {
       .config("spark.serializer",
         "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .withExtensions(e => GraftFunctions.all.foreach(e.injectFunction))
     extraConf.foreach { case (k, v) => b.config(k, v) }
     b
   }
 
-  /** Build (or reuse) the session with the graft native functions and the
-    * as-of join planner registered. The declared queries register what
-    * they use themselves; `GraftExtensions` serves `--conf` users. */
-  def getOrCreate(): SparkSession = {
-    val spark = builder().getOrCreate()
-    functions.GraftFunctions.register(spark)
-    plans.AsOfJoin.register(spark)
-    spark
+  /** Run `f` with the given confs set, then put each key back to its
+    * previous explicit value, or unset it if it had none — a Spark
+    * default is never written back as an explicit setting. Only EAGER
+    * work inside `f` sees the scope: a frame returned lazily plans later,
+    * under the restored conf. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(f: => T): T = {
+    val explicit = spark.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      f
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

@@ -87,13 +87,13 @@ object PlanAudit {
     Tables.lineitem(spark, sfDir).write.mode("overwrite")
       .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable("lineitem_b")
     // disable auto-broadcast so the plan shows what a big-big join does
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val bucketed = spark.table("orders_b")
-      .join(spark.table("lineitem_b"), col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-    println(bucketed.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val bucketed = spark.table("orders_b")
+        .join(spark.table("lineitem_b"), col("o_orderkey") === col("l_orderkey"))
+        .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
+      println(bucketed.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+    }
     spark.stop()
   }
 }

@@ -64,10 +64,6 @@ case class CosineSimilarityExpression(left: Expression, right: Expression)
 }
 
 object CosineSimilarityExpression {
-  import org.apache.spark.sql.SparkSession
-
-  def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
-
-  /** Column-API entry point (requires register() on the session first). */
+  /** Column-API entry point (the session must have the functions). */
   def cosineSim(a: Column, b: Column): Column = GraftFunctions.cosineSim(a, b)
 }

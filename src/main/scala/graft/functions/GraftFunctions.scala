@@ -5,10 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
-/** Registry for the engine's native expressions. Declared queries call
-  * `register(spark)` themselves (idempotent), so the harness sessions need
-  * no extra configuration; `GraftExtensions` injects the same set for
-  * sessions configured with spark.sql.extensions.
+/** Registry for the engine's native expressions. `GraftSession.builder`
+  * injects `all` into every session it builds, so declared queries never
+  * register anything; `GraftExtensions` injects the same set for sessions
+  * configured with spark.sql.extensions, and `register` (idempotent)
+  * serves any other session graft did not build.
   */
 object GraftFunctions {
 
@@ -484,7 +485,7 @@ object GraftFunctions {
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
 
-  // Column-API entry points (require register() on the session first).
+  // Column-API entry points (the session must have the functions).
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
   def jaroWinkler(a: Column, b: Column): Column =
     call_function("jaro_winkler", a, b)
@@ -547,8 +548,4 @@ object GraftFunctions {
     call_function("st_crosses", aWkt, bWkt)
   def stDifference(aWkt: Column, bWkt: Column): Column =
     call_function("st_difference", aWkt, bWkt)
-  def stSymDifference(aWkt: Column, bWkt: Column): Column =
-    call_function("st_symdifference", aWkt, bWkt)
-  def stBuffer(polyWkt: Column, d: Column): Column =
-    call_function("st_buffer", polyWkt, d)
 }

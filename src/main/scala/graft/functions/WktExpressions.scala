@@ -268,21 +268,6 @@ object WktCore {
     out
   }
 
-  // second one-entry memo for the RIGHT argument of the polygon-polygon
-  // predicates: a join probes (a, b) pairs where both sides vary, so a
-  // single shared slot would thrash on every call
-  private val lastPolyB = new ThreadLocal[(UTF8String, Array[Double])]
-
-  private def polygonCoordsB(s: UTF8String): Array[Double] = {
-    val cached = lastPolyB.get()
-    if (cached != null && cached._1.equals(s)) cached._2
-    else {
-      val coords = parsePolygon(s.toString)
-      lastPolyB.set((s.clone(), coords))
-      coords
-    }
-  }
-
   /** Segment–segment intersection (orientation signs; collinear
     * endpoint-on-segment counts as intersecting). */
   def segIntersect(ax: Double, ay: Double, bx: Double, by: Double,
@@ -393,8 +378,9 @@ object WktCore {
   private def isLineKindWkt(s: UTF8String): Boolean =
     isLineWkt(s) || hasWktPrefix(s, "multilinestring")
 
-  // B-side memo for the multi-ring accessor (join probes vary both
-  // sides; one shared slot would thrash) — mirrors lastPolyB
+  // second one-entry memo, for the RIGHT argument of the two-geometry
+  // predicates: a join probes (a, b) pairs where both sides vary, so a
+  // single shared slot would thrash on every call
   private val lastGeomB = new ThreadLocal[
     (UTF8String, Array[(Array[Double], Array[Array[Double]])])]
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, GraftSession, QueryModule, Tables}
 import graft.functions.{GraftFunctions => GF, TextFunctions => TF}
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
@@ -333,17 +333,13 @@ object Etl extends QueryModule {
           |  CAST(SUM(CAST(floor("value" * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS v_q6
           |FROM events WHERE CAST("ts" AS DATE) = :run_day
           |GROUP BY 1, 2""".stripMargin
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
+      GraftSession.withConf(s,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         Seq("2024-01-03", "2024-01-04", "2024-01-04").foreach { day =>
           graft.presto.PrestoSql
             .sql(s, stmt, Map("run_day" -> java.sql.Date.valueOf(day)))
             .write.mode("overwrite").partitionBy("day").parquet(out)
         }
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
       s.read.parquet(out)
         .select(col("day").cast("string").as("day"), col("event_type"),
@@ -2074,7 +2070,6 @@ object Etl extends QueryModule {
     // single serial point).
     "p7_preprocess_pipeline" -> ((s, d) => {
       val out = Sources.scratch("graft_p7")
-      GF.register(s)
       Tables.registerAll(s, d)
       Pipeline.run(s, Seq(
         Pipeline.dfStep("p7_quality") { sp =>
@@ -2108,21 +2103,8 @@ object Etl extends QueryModule {
         },
         Pipeline.dfStep("p7_summary", dependsOn = Seq("p7_decontaminated"),
             sink = Some(Pipeline.ParquetSink(out, coalesce = Some(1)))) { sp =>
-          import org.apache.spark.sql.expressions.Window
-          val ranked = sp.table("p7_decontaminated")
-            .repartitionByRange(8, col("doc_id"))
-            .withColumn("pid", spark_partition_id())
-            .withColumn("rn", row_number().over(
-              Window.partitionBy(col("pid")).orderBy(col("doc_id"))).cast("long"))
-            .localCheckpoint()
-          val offsets = ranked.groupBy(col("pid")).agg(max(col("rn")).as("cnt"))
-            .withColumn("offset", coalesce(sum(col("cnt")).over(
-              Window.orderBy(col("pid"))
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-            .select(col("pid"), col("offset"))
           val bucket = pmod(TF.rollingFingerprint(col("text"), 64), lit(10L))
-          ranked.join(broadcast(offsets), "pid")
-            .withColumn("stable_id", col("offset") + col("rn") - 1)
+          LlmOps.stableRank(sp.table("p7_decontaminated"), "stable_id", col("doc_id"))
             .withColumn("split",
               when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test"))
             .groupBy(col("split"), col("lang"))

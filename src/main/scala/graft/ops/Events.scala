@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, GraftSession, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -22,21 +22,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Events extends QueryModule {
 
-  // shared by e9 (inner) / e9b (left outer): views joined to same-user
-  // purchases within [0, 1h] via the streaming interval-join function
-  // (withWatermark is a no-op in batch, so the oracle gate covers the
-  // streaming operator's logic)
-  /** Run a streaming proof with the state-store task count sized to the
-    * gate fixture (a fresh checkpoint pins the count at query start, so
-    * this is per-query, not session-global). Rationale: every stateful
-    * micro-batch commits one state file PER PARTITION per store — at 32
-    * shuffle partitions a 4-trigger symmetric join writes ~500 tiny
-    * state files for a 100 k-row fixture, and that file churn, not
-    * data, dominated the gated streaming proofs' bench cost. Sizing
-    * state partitions to stream volume is the production rule too; a
-    * 1000-executor deployment sets the session default high and this
-    * helper becomes a no-op (it only ever lowers to the gate size).
-    */
   // Streaming-proof checkpoints (offset WAL + state deltas + commit log)
   // are per-run scaffolding, not the data path — production jobs put
   // them on HDFS/S3. On this host /tmp is disk-backed ext4, so every
@@ -69,29 +54,22 @@ object Events extends QueryModule {
     } else None
   }
 
-  /** Scoped RocksDB state-store provider (required by transformWithState;
-    * e30–e33 + the tws specs): set for the query, restore after — the
-    * same scoped-conf discipline as withStreamStateSizing. */
-  private[graft] def withRocksDBStateStore[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try f finally old match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  private def withStreamStateSizing[T](s: SparkSession)(f: => T): T = {
+  /** Run a streaming proof with the state-store task count sized to the
+    * gate fixture (a fresh checkpoint pins the count at query start, so
+    * this is per-query, not session-global). Rationale: every stateful
+    * micro-batch commits one state file PER PARTITION per store — at 32
+    * shuffle partitions a 4-trigger symmetric join writes ~500 tiny
+    * state files for a 100 k-row fixture, and that file churn, not
+    * data, dominated the gated streaming proofs' bench cost. Sizing
+    * state partitions to stream volume is the production rule too; a
+    * 1000-executor deployment sets the session default high and this
+    * helper becomes a no-op (it only ever lowers to the gate size).
+    * `extra` confs join the same scope.
+    */
+  private def withStreamStateSizing[T](s: SparkSession,
+      extra: (String, String)*)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val ckKey = "spark.sql.streaming.checkpointLocation"
-    val wsKey = "spark.sql.codegen.wholeStage"
-    val cfKey = "spark.sql.codegen.factoryMode"
-    val old = s.conf.get(key)
-    val oldCk = s.conf.getOption(ckKey)
-    val oldWs = s.conf.get(wsKey)
-    val oldCf = s.conf.getOption(cfKey)
     // 2, not the batch default: every micro-batch commits one state-store
     // instance PER stateful operator PER shuffle partition (open + delta
     // + snapshot bookkeeping each trigger), and the proofs' state is a
@@ -99,9 +77,9 @@ object Events extends QueryModule {
     // ~¼ of its 27 s in state-store file churn. Production sizing is the
     // opposite call (state must fit per-partition memory); the knob is
     // per-query here precisely because the right value is data-sized.
-    if (!old.toIntOption.exists(_ <= 2)) s.conf.set(key, "2")
-    shmCheckpointRoot.filter(_ => oldCk.isEmpty)
-      .foreach(r => s.conf.set(ckKey, r))
+    val parts = key -> math.min(s.conf.get(key).toInt, 2).toString
+    val ck = shmCheckpointRoot.filter(_ => s.conf.getOption(ckKey).isEmpty)
+      .map(ckKey -> _)
     // interpreted expressions for the PROOFS (r9 verdict #2): each
     // micro-batch embeds fresh watermark/offset literals in the
     // incremental plan, so generated sources differ per trigger and
@@ -112,19 +90,16 @@ object Events extends QueryModule {
     // at real volume. This knob is about what the proofs MEASURE —
     // streaming semantics, not kernel throughput (the batch forms of
     // every operator bench under full codegen).
-    s.conf.set(wsKey, "false")
-    s.conf.set(cfKey, "NO_CODEGEN")
-    try f finally {
-      s.conf.set(key, old)
-      if (oldCk.isEmpty) s.conf.unset(ckKey)
-      else s.conf.set(ckKey, oldCk.get)
-      s.conf.set(wsKey, oldWs)
-      oldCf match {
-        case Some(v) => s.conf.set(cfKey, v)
-        case None => s.conf.unset(cfKey)
-      }
-    }
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    GraftSession.withConf(s, (parts +: ck.toSeq) ++ interpreted ++ extra: _*)(f)
   }
+
+  /** RocksDB state-store provider, required by transformWithState
+    * (e30–e33 and the tws specs); scoped per query with `withConf`. */
+  private[graft] val RocksDBStateStore =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** r9 verdict #2 (streaming cost floor): Spark schedules one extra
     * NO-DATA micro-batch whenever the watermark advanced, purely to
@@ -134,16 +109,13 @@ object Events extends QueryModule {
     * from that batch — it costs a full trigger (~0.3–0.7 s) and emits
     * zero rows — so they disable it per-query. Proofs whose results ARE
     * watermark-driven (e25/e27 outer-join NULL rows) must keep it. */
-  private def withoutNoDataBatches[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val old = s.conf.get(key)
-    if (old == "false") f
-    else {
-      s.conf.set(key, "false")
-      try f finally s.conf.set(key, old)
-    }
-  }
+  private val NoDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
+  // shared by e9 (inner) / e9b (left outer): views joined to same-user
+  // purchases within [0, 1h] via the streaming interval-join function
+  // (withWatermark is a no-op in batch, so the oracle gate covers the
+  // streaming operator's logic)
   private def intervalJoin(s: SparkSession, d: String,
       joinType: String): DataFrame = {
     val e = Tables.events(s, d).filter(col("user_id") < 100)
@@ -445,8 +417,7 @@ object Events extends QueryModule {
     // — the strongest possible oracle.
     // (no-data batches disabled: append-mode dedup emits first arrivals
     // immediately; the post-watermark batch only evicts seen-key state)
-    "e22_stream_dedup" -> ((s, d) => withStreamStateSizing(s) {
-      withoutNoDataBatches(s) {
+    "e22_stream_dedup" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
       val batch = Tables.events(s, d)
       val base = Sources.fixtureOnce("graft_e22", d)(dir =>
         batch.unionAll(batch.filter(col("event_id") % 7 === 0))
@@ -464,7 +435,6 @@ object Events extends QueryModule {
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"), col("props"))
         .orderBy(col("event_id"))
-      }
     }),
 
     // E29: streaming DYNAMIC-gap sessions under the gate — e28's
@@ -506,7 +476,7 @@ object Events extends QueryModule {
         batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
       val stream = s.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      withRocksDBStateStore(s) {
+      GraftSession.withConf(s, RocksDBStateStore) {
         import s.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val qn = "graft_e30_" +
@@ -539,7 +509,7 @@ object Events extends QueryModule {
         batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
       val stream = s.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      withRocksDBStateStore(s) {
+      GraftSession.withConf(s, RocksDBStateStore) {
         import s.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val qn = "graft_e31_" +
@@ -579,8 +549,7 @@ object Events extends QueryModule {
     // emitted exactly once before the drain ends (no-data batches
     // disabled: the flush is data-batch-driven by construction).
     // Oracle = e17's strict-gap batch derivation verbatim.
-    "e32_tws_timer_sessions" -> ((s, d) => withStreamStateSizing(s) {
-      withoutNoDataBatches(s) {
+    "e32_tws_timer_sessions" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
       import s.implicits._
       val batch = Tables.events(s, d).select(col("user_id"), col("ts"))
       val base = Sources.fixtureOnce("graft_e32", d) { dir =>
@@ -600,7 +569,7 @@ object Events extends QueryModule {
       }
       val stream = s.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/src/*")
-      withRocksDBStateStore(s) {
+      GraftSession.withConf(s, RocksDBStateStore) {
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val qn = "graft_e32_" +
           java.util.UUID.randomUUID().toString.replace("-", "")
@@ -622,7 +591,6 @@ object Events extends QueryModule {
             max(col("n_events")).as("max_session_events"),
             sum(col("n_events")).as("n_total"))
           .orderBy(col("user_id"))
-      }
       }
     }),
 
@@ -671,7 +639,7 @@ object Events extends QueryModule {
           .outputMode("append").start()
         try q.processAllAvailable() finally q.stop()
       }
-      withRocksDBStateStore(s) {
+      GraftSession.withConf(s, RocksDBStateStore) {
         copyIn(full.take(2).toSeq)
         drain()                     // first lifetime: half the input
         copyIn(full.drop(2).toSeq)
@@ -813,8 +781,7 @@ object Events extends QueryModule {
     //    unemitted.
     // The rollup of emitted sessions then equals the batch derivation
     // exactly (oracle mirrors the sessionizer's strict `> gap` split).
-    "e17_stream_state_sessions" -> ((s, d) => withStreamStateSizing(s) {
-      withoutNoDataBatches(s) {
+    "e17_stream_state_sessions" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
       import s.implicits._
       val batch = Tables.events(s, d).select(col("user_id"), col("ts"))
       val base = Sources.fixtureOnce("graft_e17", d) { dir =>
@@ -863,7 +830,6 @@ object Events extends QueryModule {
           max(col("n_events")).as("max_session_events"),
           sum(col("n_events")).as("n_total"))
         .orderBy(col("user_id"))
-      }
     }),
 
     // E18: the stream-stream interval join run as a REAL dual-stream
@@ -887,8 +853,7 @@ object Events extends QueryModule {
     // that holds at 1000 executors.
     // (no-data batches disabled: inner-join emission is arrival-driven;
     // the post-watermark batch only evicts state and emits nothing)
-    "e18_stream_stream_join" -> ((s, d) => withStreamStateSizing(s) {
-      withoutNoDataBatches(s) {
+    "e18_stream_stream_join" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
       val batch = Tables.events(s, d).filter(col("user_id") < 100)
         .withColumn("ts", col("ts").cast("timestamp"))
       val base = Sources.fixtureOnce("graft_e18", d) { dir =>
@@ -915,7 +880,6 @@ object Events extends QueryModule {
         .select(col("user_id"), col("view_id"), col("purchase_id"),
           col("lag_us"))
         .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
-      }
     }),
 
     // E25: LEFT OUTER stream-stream join under the gate — the hardest
@@ -973,13 +937,12 @@ object Events extends QueryModule {
     // emit), so the watermark-advance batch can only evict state, never
     // add a row — unlike e25/e27/e37/e38, whose NULL-flush rows REQUIRE
     // it. StreamProfile: 3 → 2 triggers, warm wall 3.13 → 2.32 s,
-    // final table byte-identical (oracle re-verified). The same wrapper
+    // final table byte-identical (oracle re-verified). The same scope
     // was TRIED on the complete-mode aggregates (e1b/e16/e20/e21/e29)
     // and measured a NO-OP — complete-mode aggregation never schedules
     // the no-data batch at all (triggers=2 with and without) — so those
-    // sites stay unwrapped.
-    "e36_stream_stream_semi" -> ((s, d) => withStreamStateSizing(s) {
-      withoutNoDataBatches(s) {
+    // sites keep no-data batches on.
+    "e36_stream_stream_semi" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
       val batch = Tables.events(s, d).filter(col("user_id") < 100)
         .withColumn("ts", col("ts").cast("timestamp"))
       val base = streamJoinFixture(s, d, batch)
@@ -996,7 +959,6 @@ object Events extends QueryModule {
         .filter(col("user_id") < 100)
         .select(col("user_id"), col("view_id"))
         .orderBy(col("user_id"), col("view_id"))
-      }
     }),
 
     // E37 (r16): gated RIGHT OUTER stream-stream join — with e18
@@ -1110,8 +1072,7 @@ object Events extends QueryModule {
     // The delta dir is run-unique (rep-safe, like sc22).
     // (no-data batches disabled: update mode emits only CHANGED groups,
     // and a no-data batch changes nothing — it appends no delta)
-    "e26_stream_update_mode" -> ((s, d) => withStreamStateSizing(s) {
-      withoutNoDataBatches(s) {
+    "e26_stream_update_mode" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
       val batch = Tables.events(s, d)
       val base = Sources.fixtureOnce("graft_e26", d)(dir =>
         batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
@@ -1137,7 +1098,6 @@ object Events extends QueryModule {
         .filter(col("rn") === 1) // apply deltas: last write per key wins
         .select(col("w_start"), col("event_type"), col("n"))
         .orderBy(col("w_start"), col("event_type"))
-      }
     }),
 
     // E20: gated stream-static enrichment join — the SEVENTH streaming
@@ -1340,8 +1300,7 @@ object Events extends QueryModule {
     // keeps the quiet-gap flush and never buffers a full corpus.
     // (no-data batches disabled: the flush fires during s368's DATA
     // batch by fixture design — the trailing no-data batch emits nothing)
-    "e19_stream_pattern" -> ((s, d) => withStreamStateSizing(s) {
-      withoutNoDataBatches(s) {
+    "e19_stream_pattern" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
       import s.implicits._
       import RowPattern._
       val steps = Seq(
@@ -1392,7 +1351,6 @@ object Events extends QueryModule {
         .select(col("user_id"), col("match_no"), col("start_us"),
           col("end_us"), col("n_rows"))
         .orderBy(col("user_id"))
-      }
     }),
 
     // E10: a STREAMING-EXECUTED result under the oracle gate (r4 verdict

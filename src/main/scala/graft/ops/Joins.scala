@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, GraftSession, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -290,14 +290,11 @@ object Joins extends QueryModule {
         s.sql("ANALYZE TABLE graft_cbo.nat COMPUTE STATISTICS FOR COLUMNS n_nationkey, n_name")
         cboBuilt.put(s.sparkContext, d)
       }
-      val prev = (s.conf.get("spark.sql.cbo.enabled", "false"),
-        s.conf.get("spark.sql.cbo.joinReorder.enabled", "false"))
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      try
+      GraftSession.withConf(s, "spark.sql.cbo.enabled" -> "true",
+          "spark.sql.cbo.joinReorder.enabled" -> "true") {
         // localCheckpoint is EAGER: the join is planned and executed while
         // the CBO flags are on; lazily returning the raw frame would defer
-        // planning past the finally-restore below
+        // planning past the scope's restore
         s.sql(
           s"""SELECT c_mktsegment, COUNT(*) AS n, ${Det.dsumSql("o_totalprice")} AS total
              |FROM graft_cbo.ord
@@ -306,9 +303,6 @@ object Joins extends QueryModule {
              |WHERE n_name = 'NATION_3'
              |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
           .localCheckpoint()
-      finally {
-        s.conf.set("spark.sql.cbo.enabled", prev._1)
-        s.conf.set("spark.sql.cbo.joinReorder.enabled", prev._2)
       }
     }: DataFrame),
 
@@ -388,7 +382,6 @@ object Joins extends QueryModule {
     // no pair (data synthesized with a >=0.45 margin from every edge so
     // both predicates agree exactly).
     "j13_polygon_join" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       val cell = 8.0
       def dstr(c: org.apache.spark.sql.Column) = c.cast("string")
@@ -569,7 +562,6 @@ object Joins extends QueryModule {
     // broadcasts, as here at gate SF), pair work ∝ true spatial
     // density, never |A|×|B|.
     "j19_distance_join" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       val cell = 8.0
       val t = 2.75
@@ -633,7 +625,6 @@ object Joins extends QueryModule {
     }),
 
     "j18_polygon_polygon_join" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       val cell = 8.0
       def dstr(c: org.apache.spark.sql.Column) = c.cast("string")

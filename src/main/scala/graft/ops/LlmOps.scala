@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, GraftSession, QueryModule, Tables}
 import graft.functions.{CentroidAggregator, CosineSimilarityExpression, GraftFunctions => GF, SetDigestAggregator => SD, TextFunctions => TF, VectorFunctions => VF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -168,32 +168,44 @@ object LlmOps extends QueryModule {
     * single-file bench corpus, thousands at production split counts —
     * never a local[32] constant), so each step runs as ONE job. Integer
     * sums are partitioning-independent, so results are bit-identical;
-    * the conf is restored before the final (AQE-planned) scoring pass. */
+    * the conf is restored before the final (AQE-planned) scoring pass.
+    * Only EAGER work inside `f` (driver `.head`s, collects,
+    * localCheckpoints) sees the scope. Scope only SHALLOW per-step
+    * plans: on the deep semdedup two-level chain this measured WORSE
+    * (see the l26 note — AQE-less whole-tree planning costs more than
+    * the stage-jobs it saves). */
   private def withTrainStepConf[T](s: org.apache.spark.sql.SparkSession,
       feats: DataFrame)(f: => T): T =
-    withChainConf(s, feats.rdd.getNumPartitions)(f)
+    GraftSession.withConf(s,
+      "spark.sql.shuffle.partitions" ->
+        math.max(feats.rdd.getNumPartitions, 1).toString,
+      "spark.sql.adaptive.enabled" -> "false")(f)
 
-  /** The underlying scoped conf, parallelism passed explicitly. `parts`
-    * must be INPUT-derived (a checkpoint's or the source scan's
-    * partition count), never a constant; only EAGER work inside `f`
-    * (driver `.head`s, collects, localCheckpoints) sees the scope —
-    * lazily returned frames plan at execution time under the restored
-    * session conf. Scope only SHALLOW per-step plans: on the deep
-    * semdedup two-level chain this measured WORSE (see the l26 note —
-    * AQE-less whole-tree planning costs more than the stage-jobs it
-    * saves). */
-  private def withChainConf[T](s: org.apache.spark.sql.SparkSession,
-      parts: Int)(f: => T): T = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val aKey = "spark.sql.adaptive.enabled"
-    val oldP = s.conf.get(pKey)
-    val oldA = s.conf.get(aKey)
-    s.conf.set(pKey, math.max(parts, 1).toString)
-    s.conf.set(aKey, "false")
-    try f finally {
-      s.conf.set(pKey, oldP)
-      s.conf.set(aKey, oldA)
-    }
+  /** `df` plus `rankCol`, its 0-based rank in `order`, WITHOUT a global
+    * single-partition sort (the row_number()-over-everything trap).
+    * Two-phase zipWithIndex shape, DataFrame-only: range-partition on the
+    * order key, number rows per partition in parallel, then shift each
+    * partition by the exclusive prefix sum of partition counts — a P-row
+    * aggregate broadcast back. localCheckpoint pins ONE evaluated
+    * partitioning so the offsets branch and the join branch cannot see
+    * different range boundaries. At 100 TB: the only serial work is the
+    * P-row cumsum; everything else is per-partition. The result also
+    * carries the helper columns `pid`, `rn` and `offset`. */
+  private[graft] def stableRank(df: DataFrame, rankCol: String,
+      order: org.apache.spark.sql.Column*): DataFrame = {
+    val ranked = df
+      .repartitionByRange(8, order: _*)
+      .withColumn("pid", spark_partition_id())
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("pid")).orderBy(order: _*)).cast("long"))
+      .localCheckpoint()
+    val offsets = ranked.groupBy(col("pid")).agg(max(col("rn")).as("cnt"))
+      .withColumn("offset", coalesce(sum(col("cnt")).over(
+        Window.orderBy(col("pid"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(col("pid"), col("offset"))
+    ranked.join(broadcast(offsets), "pid")
+      .withColumn(rankCol, col("offset") + col("rn") - 1)
   }
 
   // ---- L12 shared: distributed connected components ---------------------
@@ -339,7 +351,6 @@ object LlmOps extends QueryModule {
   /** Docs of `src0` with their word-3-shingle sets (the bounded exact
     * correctness anchor; the scale path generates candidates via LSH). */
   private[ops] def shingledDocs(s: SparkSession, d: String): DataFrame = {
-    GF.register(s)
     Tables.documents(s, d).filter(col("source") === "src0")
       .select(col("doc_id"),
         GF.wordShingles(TF.wordTokens(col("text")), 3).as("sh"))
@@ -365,7 +376,6 @@ object LlmOps extends QueryModule {
   def knn(s: SparkSession, d: String, k: Int): DataFrame = {
     // native codegen'd cosine (bit-identical to VF.cosine, ~5x less
     // expression overhead in the scoring loop)
-    CosineSimilarityExpression.register(s)
     val e = Tables.embeddings(s, d)
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -397,7 +407,6 @@ object LlmOps extends QueryModule {
   // the two-level path itself.
   def semdedupAssigned(s: SparkSession, d: String,
       twoLevelMin: Long = 256L): DataFrame = {
-    CosineSimilarityExpression.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
     val planted = e.filter(col("vec_id") < 100)
@@ -528,7 +537,6 @@ object LlmOps extends QueryModule {
     // L2: MinHash + LSH banding near-dup candidates — approx pipeline,
     // no SQL oracle (rows-only); estimator accuracy is unit-tested.
     "l2_minhash_lsh" -> ((s, d) => {
-      GF.register(s)
       // materialize signatures ONCE: the sig pipeline fans out to four
       // plan branches (banding ×2 via the bucket-size guard + both pair
       // sides), and without the checkpoint each branch recomputes the
@@ -577,7 +585,6 @@ object LlmOps extends QueryModule {
     "l2b_jaccard_exact" -> ((s, d) => {
       // carry |shingles(doc)| through the explode so intersection counts
       // and union sizes come out of ONE self-join (no extra size joins)
-      GF.register(s)
       val docs = Tables.documents(s, d).filter(col("source") === "src0")
         .select(col("doc_id"),
           GF.wordShingles(TF.wordTokens(col("text")), 3).as("sh"))
@@ -607,7 +614,6 @@ object LlmOps extends QueryModule {
     // fingerprint with k=3 → 4×16-bit bands, where each band prunes
     // ~65536× and the same pigeonhole recall argument holds.
     "l2c_simhash" -> ((s, d) => {
-      GF.register(s)
       // materialize fingerprints once (same reasoning as l2: both sides
       // of the band self-join would otherwise recompute the kernel)
       val docs = Par.fanOut(Tables.documents(s, d)
@@ -644,7 +650,6 @@ object LlmOps extends QueryModule {
     // l2c's demo 4-bit bands). Same plan shape as l2c; ScaleShapeSpec
     // asserts pair-set equality vs the within-lang brute force.
     "l2c2_simhash_bands" -> ((s, d) => {
-      GF.register(s)
       // NO fanOut here (unlike l2c): the 12-bit production bands prune
       // ~4096× so the probe does not explode — measured r17: the added
       // repartition+checkpoint costs 0.3–0.4 s and buys nothing
@@ -683,7 +688,6 @@ object LlmOps extends QueryModule {
     // 64-perm kernel is not DuckDB-mirrorable), pre-registered like
     // l2/l35b; ScaleShapeSpec pins shape, determinism, and monotonicity.
     "l2f_minhash_band_sweep" -> ((s, d) => {
-      GF.register(s)
       // bounded to the src0 slice (l2b's declared-subset pattern): the
       // scorecard's purpose is the per-config RATIOS, which a uniform
       // slice preserves — and the coarsest-config candidate floor stays
@@ -753,7 +757,6 @@ object LlmOps extends QueryModule {
     // double dot products and dot/(√nx·√ny), verified bit-identical vs
     // DuckDB list_dot_product over DOUBLE[] on this data.
     "l2d_embedding_neardup" -> ((s, d) => {
-      CosineSimilarityExpression.register(s)
       val sub = Tables.embeddings(s, d).filter(col("label") === 0)
       val a = sub.select(col("vec_id").as("vid_a"), col("embedding").as("emb_a"))
       val b = sub.select(col("vec_id").as("vid_b"), col("embedding").as("emb_b"))
@@ -783,8 +786,6 @@ object LlmOps extends QueryModule {
     // membership is signature-algorithm-specific → rows-only; recall and
     // the planted-pair guarantee are property-tested in ApproxSpec.
     "l2e_embedding_rhp_lsh" -> ((s, d) => {
-      GF.register(s)
-      CosineSimilarityExpression.register(s)
       val base = Tables.embeddings(s, d).filter(col("vec_id") < 100)
         .select(col("vec_id"), col("embedding"))
       val planted = base.select((col("vec_id") + 10000L).as("vec_id"),
@@ -826,7 +827,6 @@ object LlmOps extends QueryModule {
     // round is one broadcast + one k-key shuffle — the canonical
     // distributed k-means; centroid frames are tiny and persisted.
     "l3b_knn_ivf" -> ((s, d) => {
-      CosineSimilarityExpression.register(s)
       val e = Tables.embeddings(s, d)
 
       def recompute(assigned: DataFrame): DataFrame =
@@ -919,7 +919,6 @@ object LlmOps extends QueryModule {
     // multi-level merge chains are property-tested in TextFunctionsSpec
     // against an independent reference implementation.
     "l4c_bpe_tokens" -> ((s, d) => {
-      GF.register(s)
       Tables.documents(s, d).filter(col("doc_id") < 300)
         .select(col("doc_id"),
           // \s, not ' ': BpeCore breaks words on EVERY whitespace char
@@ -938,7 +937,6 @@ object LlmOps extends QueryModule {
     // arithmetic wired to l4c's BPE count instead of the whitespace
     // estimate (the verdict's "wire l19's budgets to it").
     "l19b_pack_bpe" -> ((s, d) => {
-      GF.register(s)
       val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
       Tables.documents(s, d)
@@ -959,7 +957,6 @@ object LlmOps extends QueryModule {
     // independent single-machine reference trainer on both a
     // hand-computable synthetic corpus and the real fixture slice.
     "l4d_bpe_train" -> ((s, d) => {
-      GF.register(s)
       val docs = Tables.documents(s, d).filter(col("doc_id") < 200)
         .select(col("text"))
       val learned = bpeTrain(docs, col("text"), 6)
@@ -987,7 +984,6 @@ object LlmOps extends QueryModule {
     // high bit set — so char-level replace() counts the byte-level
     // merges exactly). Scan-stage codegen; zero shuffles.
     "l4e_bpe_bytes" -> ((s, d) => {
-      GF.register(s)
       Tables.documents(s, d).filter(col("doc_id") < 300)
         .select(col("doc_id"),
           concat(col("text"), lit(" "),
@@ -1132,7 +1128,6 @@ object LlmOps extends QueryModule {
     // result is deterministic; approx estimator → rows-only, with
     // mergeability (exact) + accuracy property-tested in ApproxSpec.
     "l16_setdigest_jaccard" -> ((s, d) => {
-      GF.register(s)
       val fine = Tables.documents(s, d)
         .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
         .select(col("source"), col("lang"),
@@ -1175,7 +1170,6 @@ object LlmOps extends QueryModule {
     // over a generate_series grid — DuckDB never sees a PNG, so a decoder
     // bug cannot cancel out.
     "l7c_image_decode" -> ((s, d) => {
-      GF.register(s)
       val out = Sources.scratch("graft_png")
       Tables.documents(s, d).filter(col("doc_id") < 60)
         .select(col("doc_id"))
@@ -1208,7 +1202,6 @@ object LlmOps extends QueryModule {
     // a WAV, so a decoder bug cannot cancel out. duration_ms and the
     // quantized mean-|amplitude| ride as integer arithmetic.
     "l7d_audio_decode" -> ((s, d) => {
-      GF.register(s)
       val out = Sources.scratch("graft_wav")
       // three payload classes (r13): mono PCM (ids < 60), hostile
       // non-WAV bytes (60–65 — NULL decode, audited), stereo PCM
@@ -1321,7 +1314,6 @@ object LlmOps extends QueryModule {
     // semi-joins map-side — contamination checking never shuffles the
     // corpus text.
     "l15_contamination" -> ((s, d) => {
-      GF.register(s)
       def sh(src: String) = Tables.documents(s, d).filter(col("source") === src)
         .select(col("doc_id"),
           explode(GF.wordShingles(TF.wordTokens(col("text")), 3)).as("shingle"))
@@ -1636,7 +1628,6 @@ object LlmOps extends QueryModule {
     // IVF/PQ there is no training step): DuckDB re-derives with its own
     // list_cosine_similarity over the same list prefixes.
     "l64_matryoshka_recall" -> ((s, d) => {
-      CosineSimilarityExpression.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -1694,7 +1685,6 @@ object LlmOps extends QueryModule {
     // is the one scoring pass; everything after the top-5 filter is
     // measured in kilobytes.
     "l74_ann_ranking_scorecard" -> ((s, d) => {
-      CosineSimilarityExpression.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -1829,29 +1819,11 @@ object LlmOps extends QueryModule {
 
     // L24: stable contiguous ids — assign 0..N-1 in doc_id order WITHOUT
     // a global single-partition sort (the row_number()-over-everything
-    // trap). Two-phase zipWithIndex shape, DataFrame-only: range-partition
-    // on the order key, number rows per partition in parallel, then shift
-    // each partition by the exclusive prefix sum of partition counts — a
-    // P-row aggregate broadcast back. localCheckpoint pins ONE evaluated
-    // partitioning so the offsets branch and the join branch cannot see
-    // different range boundaries. At 100 TB: the only serial work is the
-    // P-row cumsum; everything else is per-partition.
+    // trap), through `stableRank`.
     "l24_stable_ids" -> ((s, d) => {
-      val ranked = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"))
-        .repartitionByRange(8, col("doc_id"))
-        .withColumn("pid", spark_partition_id())
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("pid")).orderBy(col("doc_id"))).cast("long"))
-        .localCheckpoint()
-      val offsets = ranked.groupBy(col("pid")).agg(max(col("rn")).as("cnt"))
-        .withColumn("offset", coalesce(sum(col("cnt")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("pid"), col("offset"))
-      ranked.join(broadcast(offsets), "pid")
-        .select(col("doc_id"),
-          (col("offset") + col("rn") - 1).as("stable_id"), col("source"))
+      stableRank(Tables.documents(s, d).select(col("doc_id"), col("source")),
+          "stable_id", col("doc_id"))
+        .select(col("doc_id"), col("stable_id"), col("source"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1899,7 +1871,7 @@ object LlmOps extends QueryModule {
     // every natural vector survives. Cluster ids are algorithm-internal
     // and not exposed; the prune-rule MATH is independently re-derived by
     // the l26b oracle below.
-    // r18 note: withChainConf (AQE off + scan-derived parallelism, the
+    // r18 note: withTrainStepConf's scope (AQE off + scan-derived parallelism, the
     // l69/l70 training-loop cure) was TRIED around this chain and
     // MEASURED WORSE on l26c (jobs 37→17 but wall 3.1→3.6+ s): without
     // AQE the deep two-level assignment tree optimizes as one unit per
@@ -1927,7 +1899,6 @@ object LlmOps extends QueryModule {
     // (≈10¹² rows per label at q3·64-dim — production widens to the
     // dsum DECIMAL-rollup pattern, like Q1's money sums).
     "l71_cluster_diversity" -> ((s, d) => {
-      GF.register(s)
       // r18: the three-lambda quantize chain (nrm/q/qn2) evaluated
       // interpreted per row and dominated BOTH single-task branches
       // (profiled 0.6 s + 1.1 s concurrent stages at sf0.1); unit_q3 is
@@ -1972,7 +1943,6 @@ object LlmOps extends QueryModule {
     // identity + decimal arithmetic agree with the pairwise
     // definition.
     "l71b_cluster_diversity_decimal" -> ((s, d) => {
-      GF.register(s)
       // r18: unit_q3 kernel — the l71 note verbatim
       val emb = Tables.embeddings(s, d)
         .withColumn("u", expr("unit_q3(embedding)"))
@@ -2068,7 +2038,7 @@ object LlmOps extends QueryModule {
     // oracle encodes the kept set exactly; any assignment that keeps an
     // ε-copy apart from its original, or drops a point through the
     // cell-existence invariant, fails the gate).
-    // r18: withChainConf tried and reverted — the l26 note verbatim
+    // r18: withTrainStepConf's scope tried and reverted — the l26 note verbatim
     "l26c_semdedup_twolevel" -> ((s, d) =>
       semdedupPrune(semdedupAssigned(s, d, twoLevelMin = 1))),
 
@@ -2077,7 +2047,6 @@ object LlmOps extends QueryModule {
     // every pairwise cosine and the kept set independently. Quantized at
     // 1e6 like l2d (proven bit-exact vs DuckDB's double accumulation).
     "l26b_semdedup_exact" -> ((s, d) => {
-      CosineSimilarityExpression.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"), col("label"))
       val planted = e.filter(col("vec_id") < 100)
         .select((col("vec_id") + 100000L).as("vec_id"),
@@ -2456,32 +2425,18 @@ object LlmOps extends QueryModule {
     // ones right-to-left), the classic LPT-flavored round-robin that
     // needs NO driver state and NO greedy sequential pass.
     //
-    // Scale design: the global rank is the l24 two-phase construction —
-    // range-repartition the (doc_id, n_toks) PAIRS (text never
-    // shuffles), per-partition row_number behind an eager
-    // localCheckpoint, P-row offsets aggregate broadcast back. The
-    // only global window runs over P rows. Balance quality is part of
-    // the contract: the oracle re-derives every shard's exact token
-    // total, and the spec pins max−min spread ≤ the largest document
-    // (the LPT bound's shape) at sf0.01.
+    // Scale design: the global rank is `stableRank` (the l24
+    // construction) over the (doc_id, n_toks) PAIRS (text never
+    // shuffles); the only global window runs over P rows. Balance
+    // quality is part of the contract: the oracle re-derives every
+    // shard's exact token total, and the spec pins max−min spread ≤ the
+    // largest document (the LPT bound's shape) at sf0.01.
     "l33_shard_balance" -> ((s, d) => {
       val S = 16
-      val ranked = Tables.documents(s, d)
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_toks"))
-        .repartitionByRange(8, col("n_toks").desc, col("doc_id"))
-        .withColumn("pid", spark_partition_id())
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("pid"))
-            .orderBy(col("n_toks").desc, col("doc_id"))).cast("long"))
-        .localCheckpoint()
-      val offsets = ranked.groupBy(col("pid")).agg(max(col("rn")).as("cnt"))
-        .withColumn("offset", coalesce(sum(col("cnt")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("pid"), col("offset"))
-      ranked.join(broadcast(offsets), "pid")
-        .withColumn("rk", col("offset") + col("rn") - 1)
+      stableRank(Tables.documents(s, d)
+          .select(col("doc_id"),
+            size(split(col("text"), " ")).cast("long").as("n_toks")),
+          "rk", col("n_toks").desc, col("doc_id"))
         .withColumn("shard",
           when(expr(s"rk div $S") % 2 === 0, col("rk") % S)
             .otherwise(lit(S - 1) - col("rk") % S))
@@ -2503,7 +2458,6 @@ object LlmOps extends QueryModule {
     // occurrences cannot self-overlap; phrases span word boundaries to
     // prove substring semantics).
     "l36_blocklist_filter" -> ((s, d) => {
-      GF.register(s)
       val pats = Seq("stream", "filter", "slow", "batch scan", "dup")
       val quoted = pats.map(p => s"'$p'").mkString(", ")
       Tables.documents(s, d)
@@ -2906,7 +2860,6 @@ object LlmOps extends QueryModule {
     // (8192-bounded / Zipf-vocab-bounded), two feature→model joins +
     // doc rollups — the l68 shape twice, no new shuffle class.
     "l68b_nb_bigram_quality" -> ((s, d) => {
-      GF.register(s)
       val B = 8192L
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
@@ -3008,7 +2961,6 @@ object LlmOps extends QueryModule {
     // descent, and ≥99% training separation on the bigram-only planted
     // signal (the unigram-blind corpus l68b established).
     "l69_logreg_bigram_quality" -> ((s, d) => {
-      GF.register(s)
       import s.implicits._
       val B = 8192
       val docs = Tables.documents(s, d)
@@ -3131,7 +3083,6 @@ object LlmOps extends QueryModule {
     // Pre-registered NO-ORACLE (iterative); SoftmaxSpec property-tests
     // bit-determinism, ≥99% separation, and per-class OvR sign.
     "l70_softmax_domain_classifier" -> ((s, d) => {
-      GF.register(s)
       import s.implicits._
       val B = 8192
       val K = 3
@@ -3222,7 +3173,6 @@ object LlmOps extends QueryModule {
     // a shingle-keyed df count (Zipf-bounded), join back on the shingle
     // key, doc-keyed rollup. All counts integer; one quantized division.
     "l43_ngram_novelty" -> ((s, d) => {
-      GF.register(s)
       // fused codegen shingle kernel (the HOF transform/concat_ws form
       // is interpreted per element and benched 11 s at sf0.1; this is
       // ~1 s) — and the exploded frame checkpoints once because both
@@ -3252,7 +3202,6 @@ object LlmOps extends QueryModule {
     // scale. A hot boilerplate shingle fans out |sources|² here too; the
     // l22b df-cap is the production guard and composes unchanged.
     "l44_source_overlap" -> ((s, d) => {
-      GF.register(s)
       // fused shingle kernel + checkpoint: the distinct (source,
       // shingle) set feeds the sizes aggregate AND both sides of the
       // pair join — without the checkpoint the shingling runs 4×
@@ -3317,7 +3266,6 @@ object LlmOps extends QueryModule {
     // broadcast this composes with the l3b/l35 IVF index (probe buckets,
     // then the same label filter) — the filter semantics are the op.
     "l47_hard_negatives" -> ((s, d) => {
-      CosineSimilarityExpression.register(s)
       val e = Tables.embeddings(s, d)
       val qs = e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("label").as("qlabel"),
@@ -3562,7 +3510,6 @@ object LlmOps extends QueryModule {
     // |sources|-row frame only — the single-partition window is over a
     // provably tiny set, never the corpus.
     "l55_ngram_saturation" -> ((s, d) => {
-      GF.register(s)
       val ss = Tables.documents(s, d)
         .select(col("source"),
           explode(GF.wordShingles(TF.wordTokens(col("text")), 3))
@@ -3633,7 +3580,6 @@ object LlmOps extends QueryModule {
     // the kernel returns raw integer numerators so the float divisions
     // (and their quantization) are bit-identical to the HOF form.
     "l57_gopher_repetition" -> ((s, d) => {
-      GF.register(s)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"),
           length(col("text")).cast("long").as("nchar"),
@@ -3762,7 +3708,6 @@ object LlmOps extends QueryModule {
     // bytes_per_tok_q4 via bpe_count_bytes — since production budget
     // planning is done in byte-level tokens; see l4e.)
     "l59_tokenizer_fertility" -> ((s, d) => {
-      GF.register(s)
       Tables.documents(s, d)
         .select(col("lang"),
           size(TF.wordTokens(col("text"))).cast("long").as("w"),
@@ -4024,7 +3969,6 @@ object LlmOps extends QueryModule {
     * extra shuffle. */
   private def substringDupCovered(s: SparkSession, d: String,
       keepCanonical: Boolean = false): (DataFrame, DataFrame) = {
-    GF.register(s)
     val univ = Tables.documents(s, d).select(col("doc_id"), col("text"))
     // fanOut BEFORE the checkpoint: both gram-explode branches (the
     // phase-1 hash count and the phase-2 candidate re-derivation) sit
@@ -4132,7 +4076,6 @@ object LlmOps extends QueryModule {
     */
   private[graft] def bpeTrain(docs: DataFrame, textCol: org.apache.spark.sql.Column,
       numMerges: Int, byteLevel: Boolean = false): Seq[(String, String, Long)] = {
-    GF.register(docs.sparkSession)
     val wordHist = docs
       .select(explode(GF.wsWords(textCol)).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("wn"))
@@ -4243,7 +4186,6 @@ object LlmOps extends QueryModule {
     */
   private[graft] def decontaminate(s: SparkSession, d: String,
       dfCap: Option[Long]): DataFrame = {
-    GF.register(s)
     def side(src: String, id: String, n: String) =
       Tables.documents(s, d).filter(col("source") === src)
         .select(col("doc_id").as(id),

@@ -30,31 +30,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * a total ordering.
   */
 object Par {
-  /** Evidence hook (r18, judge item: checkpoint-shielded fanOuts leave no
-    * plan trace — the after-plan shows only ExistingRDD): with
-    * SPARK_GRAFT_FANOUT_LOG set, every fanOut decision prints its call
-    * site and before→after partition counts to stderr, so a committed
-    * capture (plans/rNN/fanout_partitions.txt) lets a non-executing judge
-    * verify every claimed partition change. Off by default (zero cost in
-    * the bench: one env lookup). */
-  private val logEnabled = sys.env.contains("SPARK_GRAFT_FANOUT_LOG")
-  private def logDecision(kind: String, cur: Int, p: Int): Unit =
-    if (logEnabled) {
-      val site = Thread.currentThread.getStackTrace
-        .find(e => e.getClassName.startsWith("graft.") &&
-          !e.getClassName.contains(".Par"))
-        .map(e => s"${e.getClassName.split('$').head}:${e.getLineNumber}")
-        .getOrElse("?")
-      System.err.println(
-        s"[fanout] $kind at $site: $cur -> ${if (cur >= p) cur else p} " +
-          s"partitions (defaultParallelism $p" +
-          s"${if (cur >= p) ", short-circuit: no repartition" else ""})")
-    }
-
   def fanOut(df: DataFrame, keys: Column*): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     val cur = df.rdd.getNumPartitions
-    logDecision("fanOut", cur, p)
     if (cur >= p) df
     else df.repartition(p, keys: _*)
   }
@@ -72,7 +50,6 @@ object Par {
   def fanOutAny(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     val cur = df.rdd.getNumPartitions
-    logDecision("fanOutAny", cur, p)
     if (cur >= p) df
     else df.repartition(p)
   }

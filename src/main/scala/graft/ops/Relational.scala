@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, GraftSession, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -237,12 +237,9 @@ object Relational extends QueryModule {
         .unionByName(ins)
         // break lineage from `out` so overwriting the dir we read is legal
         .localCheckpoint()
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try merged.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      GraftSession.withConf(s,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        merged.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
       }
       s.read.parquet(out)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))

@@ -375,7 +375,6 @@ object Scalars extends QueryModule {
     // engineered so no point lands on an edge (point fracs .5/.25 vs
     // polygon fracs .3).
     "sc21b_wkt" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       val pts = Tables.customer(s, d).filter(col("c_custkey") < 500)
         .select(col("c_custkey"),
@@ -400,7 +399,6 @@ object Scalars extends QueryModule {
     // oracle mirrors the arithmetic operation-for-operation on the same
     // round-trip-exact vertex doubles (the sc21 contract), q6-quantized.
     "sc21c_wkt_measure" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       def dstr(c: org.apache.spark.sql.Column) = c.cast("string")
       val g = Tables.nation(s, d).select(
@@ -440,7 +438,6 @@ object Scalars extends QueryModule {
     // keep every comparison strictly off boundaries (min margin 0.1 vs
     // ~1e-13 double noise).
     "sc21d_geo_predicates" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       def dstr(c: org.apache.spark.sql.Column) = c.cast("string")
       val g = Tables.nation(s, d).select(
@@ -509,7 +506,6 @@ object Scalars extends QueryModule {
     // area, so the oracle needs only the size parameters. The disjoint
     // pair pins the "POLYGON EMPTY" result as text.
     "sc21e_geo_clipping" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       def dstr(c: org.apache.spark.sql.Column) = c.cast("string")
       def rectWkt(x1: org.apache.spark.sql.Column,
@@ -600,7 +596,6 @@ object Scalars extends QueryModule {
     // difference pinning 'POLYGON EMPTY' as text. Component counts ride
     // the WKT text (each hole-free component renders exactly one '((').
     "sc21f_geo_clipping_general" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       def dstr(c: org.apache.spark.sql.Column) = c.cast("string")
       def poly(pts: Seq[(org.apache.spark.sql.Column,
@@ -692,7 +687,6 @@ object Scalars extends QueryModule {
     // 12.5ab with the void (4ab + ab/4) as one interior ring; all
     // coordinates dyadic so inclusion–exclusion closes exactly.
     "sc21g_geo_holes" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.q6
       val g = GeoFix.holesFixtures(s, d)
@@ -732,7 +726,6 @@ object Scalars extends QueryModule {
     // perimeter 4(a+b), hole perimeter 2(a+b)), out-of-range NULLs,
     // and EMPTY → 0 components.
     "sc21h_geo_accessors_multi" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.q6
       val g = GeoFix.holesFixtures(s, d)
@@ -773,7 +766,6 @@ object Scalars extends QueryModule {
     // (29a/8, 2b) — and an IEEE division whose true quotient is
     // representable is exact, so q6 lands on the closed form.
     "sc21i_geo_env_centroid_multi" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.q6
       val g = GeoFix.holesFixtures(s, d)
@@ -806,7 +798,6 @@ object Scalars extends QueryModule {
     // and nested MULTIPOLYGON components each pin their reason string;
     // EMPTY is valid.
     "sc21j_geo_validity" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.poly
       def ring(pts: Seq[(org.apache.spark.sql.Column,
@@ -898,7 +889,6 @@ object Scalars extends QueryModule {
     // rectangles fuse to the one 2a×b rectangle both engines can
     // render from first principles).
     "sc21k_geo_shared_border" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{q6, rect}
       def ncomp(c: org.apache.spark.sql.Column) =
@@ -965,7 +955,6 @@ object Scalars extends QueryModule {
     // fully inside the hole is EMPTY. Closed forms: dyadic rectangle
     // algebra on the sc21g fixture frame.
     "sc21l_geo_holed_inputs" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{q6, rect}
       def nrings(c: org.apache.spark.sql.Column) =
@@ -1009,7 +998,6 @@ object Scalars extends QueryModule {
     // intersect it). Every verdict is a structural constant of the
     // dyadic fixture frame.
     "sc21m_geo_relate" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, rect}
       val g = GeoFix.holesFixtures(s, d)
@@ -1101,7 +1089,6 @@ object Scalars extends QueryModule {
     // boundary run kept whole; hole-interior and disjoint lines are
     // EMPTY.
     "sc21n_geo_line_clip" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, q6}
       val g = GeoFix.holesFixtures(s, d)
@@ -1147,7 +1134,6 @@ object Scalars extends QueryModule {
     // two rings as a measurable MULTILINESTRING. All closed forms are
     // dyadic rectangle algebra.
     "sc21o_geo_aggregates" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GeomAggregators => GA, GraftFunctions => GF}
       import GeoFix.{q6, rect}
       def ncomp(c: org.apache.spark.sql.Column) =
@@ -1190,7 +1176,6 @@ object Scalars extends QueryModule {
     // clipper's own hole-plugged union, regardless of vertex count or
     // rotation. Every verdict is a structural constant.
     "sc21p_geo_within_multi" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.rect
       val g = GeoFix.holesFixtures(s, d)
@@ -1230,7 +1215,6 @@ object Scalars extends QueryModule {
     // dyadic; the single final sqrt is correctly rounded in both
     // engines.
     "sc21q_geo_distance" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, q6, rect}
       val g = GeoFix.holesFixtures(s, d)
@@ -1275,7 +1259,6 @@ object Scalars extends QueryModule {
     // at (cx+a, cy+b/2) sits at cumulative a + b/2 = exactly HALF of
     // 2a + b for every (a, b).
     "sc21r_geo_accessors_line" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1340,7 +1323,6 @@ object Scalars extends QueryModule {
     // the holed difference re-renders UNCHANGED at a tolerance below
     // every feature size.
     "sc21s_geo_simplify" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, q6}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1392,7 +1374,6 @@ object Scalars extends QueryModule {
     // closed form is area + perimeter·d + 4·d² (convex minus reflex
     // corners always nets to 4), exact on the dyadic fixture frame.
     "sc21t_geo_buffer_concave" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.q6
       val g = GeoFix.base(s, d)
@@ -1447,7 +1428,6 @@ object Scalars extends QueryModule {
     // HOLED output and a MULTIPOLYGON, plus exact-text columns the
     // oracle re-derives by string construction.
     "sc21u_geo_geojson" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1485,7 +1465,6 @@ object Scalars extends QueryModule {
     // trips land exactly on canonical text, areas survive the trip,
     // and a constant geometry pins the exact hex in both engines.
     "sc21v_geo_wkb" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1522,7 +1501,6 @@ object Scalars extends QueryModule {
     // rects — fixtures chosen so the argmin is UNIQUE, never a tie);
     // interpolation fractions land on exact dyadic targets.
     "sc21w_geo_nearest_simple" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, poly, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1576,7 +1554,6 @@ object Scalars extends QueryModule {
     // quantized at whole m² (ulp audit: ~2e-4 m² worst-case spread on
     // these fixtures vs the 0.5 m² decision boundary).
     "sc21x_geo_spherical" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1612,7 +1589,6 @@ object Scalars extends QueryModule {
     // 3-4-5 fixture makes the nearest member exact), both interchange
     // round trips, and the closed-form WKB length.
     "sc21z_geo_multipoint" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{dstr, line, point, q6}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1652,7 +1628,6 @@ object Scalars extends QueryModule {
     // the geography mirror re-derives the haversine operation-for-
     // operation like sc21x.
     "sc21y_geo_multiline" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, mline, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1754,7 +1729,6 @@ object Scalars extends QueryModule {
     // lower-dimension parts are absorbed, survivors render as a
     // collection in fixed dimension order.
     "sc21aa_geo_collection" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GeomAggregators => GA, GraftFunctions => GF}
       import GeoFix.{dstr, line, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1835,7 +1809,6 @@ object Scalars extends QueryModule {
     // stays available under the explicit flag (sc21t pins it) and the
     // POINT disk is the same 32-gon under both styles.
     "sc21ab_geo_buffer_round" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1907,7 +1880,6 @@ object Scalars extends QueryModule {
     // this model's empty-point spelling). All contact coordinates
     // dyadic.
     "sc21ac_geo_mixed_ops" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -1963,7 +1935,6 @@ object Scalars extends QueryModule {
     // subtrahends cover by coordinate equality. All coordinates dyadic,
     // so the oracle is pure string construction + a closed-form length.
     "sc21ad_geo_line_difference" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, mline, point, q6}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -2025,7 +1996,6 @@ object Scalars extends QueryModule {
     // union; empties render MULTIPOINT EMPTY (the point-set empty).
     // All coordinates dyadic → string-constructed oracle.
     "sc21af_geo_line_intersection" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{line, mline, point, q6}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -2091,7 +2061,6 @@ object Scalars extends QueryModule {
     // string-constructed oracle + closed-form area 6a² / length 2a and
     // the exact dual identity len(sym) = len(a−b) + len(b−a).
     "sc21ag_geo_sym_difference" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{dstr, line, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -2168,7 +2137,6 @@ object Scalars extends QueryModule {
     // er_touch closed form; only union folds the overlay itself
     // refuses (point-pinched merges) stay loud (WktSpec-pinned).
     "sc21ae_geo_buffer_multi" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       import GeoFix.{dstr, line, point, q6, rect}
       def f(name: String, cs: org.apache.spark.sql.Column*) =
@@ -2438,7 +2406,6 @@ object Scalars extends QueryModule {
     // error. Session ANSI mode is ON, so the wrapped cast / integer
     // division / out-of-bounds element_at genuinely throw without it.
     "sc8_try" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.part(s, d).filter(col("p_partkey") < 300)
         .select(col("p_partkey"),
           // 'Brand#13' → 13; 'Brand#5' → '#5' → error → NULL
@@ -2473,7 +2440,6 @@ object Scalars extends QueryModule {
     // expression over java.text.Normalizer; composed vs precomposed accents
     // built portably from chr() so the check is meaningful on ASCII testdata.
     "sc10_normalize" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // 'e' + U+0301 combining acute, appended to real ASCII data. (Spark's
       // chr() is byte-mod-256, unusable for codepoints — literals instead.)
       Tables.part(s, d).filter(col("p_partkey") < 100)
@@ -2616,7 +2582,6 @@ object Scalars extends QueryModule {
     // (high similarity), vs the reversed name (low), first word vs
     // second word (unrelated).
     "sc24_jaro_winkler" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => GF}
       def q6(c: org.apache.spark.sql.Column) =
         floor(c * 1e6 + 0.5).cast("long")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, GraftSession, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -152,15 +152,11 @@ object Sources extends QueryModule {
       val out = scratch("graft_povr")
       val o = Tables.orders(s, d)
       o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
+      GraftSession.withConf(s,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         o.filter(col("o_orderstatus") === "F")
           .withColumn("o_totalprice", col("o_totalprice") * 2.0)
           .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
       s.read.parquet(out)
         .groupBy(col("o_orderstatus"))

@@ -14,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Scale notes: steps stay LAZY until a sink or explicit materialization —
   * Catalyst optimizes ACROSS step boundaries (a filter in step 3 pushes
   * into step 1's scan), which a statement-at-a-time SQL orchestrator
-  * cannot do. `cache=true` marks reused intermediates.
+  * cannot do. A run leaves only its temp views behind: nothing is
+  * cached, so the session's CacheManager is as the run found it.
   */
 object Pipeline {
 
@@ -31,20 +32,19 @@ object Pipeline {
       dependsOn: Seq[String] = Nil,
       sql: Option[String] = None,
       transform: Option[SparkSession => DataFrame] = None,
-      sink: Option[Sink] = None,
-      cache: Boolean = false) {
+      sink: Option[Sink] = None) {
     require(sql.isDefined ^ transform.isDefined,
       s"step '$name' needs exactly one of sql/transform")
   }
 
   def sqlStep(name: String, sqlText: String, dependsOn: Seq[String] = Nil,
-              sink: Option[Sink] = None, cache: Boolean = false): Step =
-    Step(name, dependsOn, sql = Some(sqlText), sink = sink, cache = cache)
+              sink: Option[Sink] = None): Step =
+    Step(name, dependsOn, sql = Some(sqlText), sink = sink)
 
   def dfStep(name: String, dependsOn: Seq[String] = Nil,
-             sink: Option[Sink] = None, cache: Boolean = false)
+             sink: Option[Sink] = None)
             (f: SparkSession => DataFrame): Step =
-    Step(name, dependsOn, transform = Some(f), sink = sink, cache = cache)
+    Step(name, dependsOn, transform = Some(f), sink = sink)
 
   final case class Result(views: Map[String, DataFrame], order: Seq[String])
 
@@ -72,8 +72,7 @@ object Pipeline {
 
     val views = order.map { name =>
       val step = byName(name)
-      val df0 = step.sql.map(spark.sql).getOrElse(step.transform.get(spark))
-      val df = if (step.cache) df0.cache() else df0
+      val df = step.sql.map(spark.sql).getOrElse(step.transform.get(spark))
       df.createOrReplaceTempView(name)
       step.sink.foreach(write(df, _))
       name -> df

@@ -13,7 +13,6 @@ import scala.jdk.CollectionConverters._
   *     { "name": "cust_spend",
   *       "sql":  "SELECT ... FROM customer JOIN orders ...",
   *       "depends_on": ["other_step"],
-  *       "cache": false,
   *       "sink": { "format": "parquet", "path": "/out/dir",
   *                 "partition_by": ["seg"], "coalesce": 1 } } ] }
   * }}}
@@ -31,7 +30,7 @@ object PipelineSpec {
 
   private val mapper = new ObjectMapper()
 
-  private val stepFields = Set("name", "sql", "depends_on", "cache", "sink")
+  private val stepFields = Set("name", "sql", "depends_on", "sink")
   private val sinkFields = Set("format", "path", "partition_by", "coalesce", "header")
 
   def parse(json: String): Seq[Pipeline.Step] = {
@@ -61,8 +60,6 @@ object PipelineSpec {
     require(n.has("name") && n.get("name").isTextual, "step needs a string \"name\"")
     val name = n.get("name").asText()
     require(n.has("sql") && n.get("sql").isTextual, s"step '$name' needs a string \"sql\"")
-    require(!n.has("cache") || n.get("cache").isBoolean,
-      s"step '$name': \"cache\" must be a boolean")
     Pipeline.Step(
       name = name,
       dependsOn =
@@ -70,8 +67,7 @@ object PipelineSpec {
           stringArray(s"step '$name': \"depends_on\"", n.get("depends_on"))
         else Nil,
       sql = Some(n.get("sql").asText()),
-      sink = if (n.has("sink")) Some(parseSink(name, n.get("sink"))) else None,
-      cache = n.has("cache") && n.get("cache").asBoolean())
+      sink = if (n.has("sink")) Some(parseSink(name, n.get("sink"))) else None)
   }
 
   private def parseSink(step: String, n: JsonNode): Pipeline.Sink = {

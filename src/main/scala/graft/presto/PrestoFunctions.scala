@@ -43,31 +43,22 @@ object PrestoFunctions {
   /** Presto date_add(unit, value, ts). */
   def date_add(unit: String, value: Int, ts: Column): Column =
     ts + expr(s"INTERVAL $value ${unit.toUpperCase}")
-  /** Presto from_unixtime / to_unixtime. */
-  def from_unixtime_(epoch: Column): Column = timestamp_seconds(epoch)
+  /** Presto to_unixtime. */
   def to_unixtime(ts: Column): Column = unix_timestamp(ts).cast("double")
 
   // ---- aggregate names -------------------------------------------------
   /** Presto approx_distinct(col). */
   def approx_distinct(c: Column): Column = approx_count_distinct(c)
-  /** Presto approx_percentile(col, p). */
-  def approx_percentile_(c: Column, p: Double): Column =
-    percentile_approx(c, lit(p), lit(10000))
   /** Presto arbitrary(col) — any value; Spark: first (non-deterministic). */
   def arbitrary(c: Column): Column = first(c, ignoreNulls = true)
   /** Presto array_agg(col). */
   def array_agg(c: Column): Column = collect_list(c)
-  /** Presto bool_and / bool_or. */
-  def bool_and_(c: Column): Column = min(c)
-  def bool_or_(c: Column): Column = max(c)
 
   // ---- array / map -----------------------------------------------------
   /** Presto element_at — null on out-of-bounds (Spark ANSI throws). */
   def element_at_safe(c: Column, i: Int): Column = try_element_at(c, lit(i))
   /** Presto contains(array, elem). */
   def contains(arr: Column, elem: Column): Column = array_contains(arr, elem)
-  /** Presto slice(array, start, length). */
-  def slice_(arr: Column, start: Int, length: Int): Column = slice(arr, start, length)
   /** Presto map_keys / map_values already share names with Spark. */
 
   // ---- json ------------------------------------------------------------
@@ -75,23 +66,16 @@ object PrestoFunctions {
   def json_extract_scalar(json: Column, path: String): Column =
     get_json_object(json, path)
 
-  // ---- conditional -----------------------------------------------------
-  /** Presto if(cond, t, f). */
-  def if_(cond: Column, t: Column, f: Column): Column = when(cond, t).otherwise(f)
-
   // ---- url (r2) --------------------------------------------------------
   /** Presto url_extract_host / _path / _query / _protocol. */
   def url_extract_host(u: Column): Column = parse_url(u, lit("HOST"))
   def url_extract_path(u: Column): Column = parse_url(u, lit("PATH"))
   def url_extract_query(u: Column): Column = parse_url(u, lit("QUERY"))
   def url_extract_protocol(u: Column): Column = parse_url(u, lit("PROTOCOL"))
-  /** Presto url_encode / url_decode. */
-  def url_encode_(u: Column): Column = url_encode(u)
-  def url_decode_(u: Column): Column = url_decode(u)
 
   // ---- try / error capture (r2) ---------------------------------------
   /** Presto TRY(expr) — null instead of runtime error (engine-native
-    * expression; register GraftFunctions on the session first). */
+    * expression; the session must have the graft functions). */
   def try_(c: Column): Column = graft.functions.GraftFunctions.tryEval(c)
 
   // ---- more aggregates (r2) -------------------------------------------
@@ -115,18 +99,9 @@ object PrestoFunctions {
     call_function("hll_sketch_estimate", c)
   /** Presto geometric_mean(col). */
   def geometric_mean(c: Column): Column = exp(avg(log(c)))
-  /** Presto width_bucket(x, lo, hi, n). */
-  def width_bucket_(x: Column, lo: Double, hi: Double, n: Int): Column =
-    width_bucket(x, lit(lo), lit(hi), lit(n))
 
   // ---- string extras (r2) ---------------------------------------------
   /** Presto levenshtein_distance. */
   def levenshtein_distance(a: Column, b: Column): Column =
     levenshtein(a, b).cast("long")
-  /** Presto normalize(string, NFC|NFD|NFKC|NFKD). */
-  def normalize_(s: Column, form: String = "NFC"): Column =
-    graft.functions.GraftFunctions.normalizeStr(s, form)
-  /** Presto split_part(string, delim, index) — 1-based. */
-  def split_part_(s: Column, delim: Column, idx: Column): Column =
-    call_function("split_part", s, delim, idx)
 }

@@ -693,21 +693,17 @@ object PrestoSql {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(aqeKey)
     // Execute by draining the compiled plan's own RDD on the executors:
     // the SQLMetric accumulators flow back exactly as under collect(),
     // but no result row ever crosses to the driver — EXPLAIN ANALYZE
     // over a large SELECT stays scale-safe. (A noop-sink write would
     // build a SEPARATE QueryExecution and leave these metrics empty.)
-    val df =
-      try {
-        spark.conf.set(aqeKey, "false")
-        val d = sql(spark, query)
-        d.queryExecution.toRdd.foreach(_ => ())
-        d
-      }
-      finally spark.conf.set(aqeKey, prevAqe)
+    val df = graft.GraftSession.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "false") {
+      val d = sql(spark, query)
+      d.queryExecution.toRdd.foreach(_ => ())
+      d
+    }
     def rowsOut(p: SparkPlan): Long =
       p.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
     // a partial aggregate's row count depends on the physical partition

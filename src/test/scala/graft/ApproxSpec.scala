@@ -126,9 +126,6 @@ class ApproxSpec extends SparkSpec {
   }
 
   test("random-hyperplane LSH recovers planted near-duplicates (L2e)") {
-    import graft.functions.{CosineSimilarityExpression, GraftFunctions => GF}
-    GF.register(spark)
-    CosineSimilarityExpression.register(spark)
     val found = SparkEntry.queries("l2e_embedding_rhp_lsh")(spark, sf)
       .as[(Long, Long, Long)].collect()
     // every surviving pair must actually be ≥ 0.9 (the verification
@@ -198,7 +195,6 @@ class ApproxSpec extends SparkSpec {
   test("set digest rollup on documents: fine→merged equals direct digest (L16)") {
     import graft.functions.{GraftFunctions => GF, TextFunctions => TF}
     val SD = graft.functions.SetDigestAggregator
-    GF.register(spark)
     val hs = Tables.documents(spark, sf)
       .select($"source", $"lang",
         TF.shingleHashes(GF.charShingles($"text", 5)).as("hs"))

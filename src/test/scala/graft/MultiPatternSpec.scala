@@ -43,7 +43,6 @@ class MultiPatternSpec extends SparkSpec {
   }
 
   test("multi_count evaluates through codegen and matches the kernel") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq((1L, "the batch scan was slow and the stream dup'd"),
       (2L, "nothing here"), (3L, "filter filter slowslow"))
     val got = spark.createDataFrame(rows).toDF("id", "t")

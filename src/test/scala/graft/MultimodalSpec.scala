@@ -8,7 +8,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("image_stats decodes a known PNG exactly and NULLs undecodable bytes") {
     import graft.functions.{GraftFunctions => GF}
-    GF.register(spark)
     // 2x3 image with known pixels: r = 10x+y, g = 100+x, b = 200+y
     val img = new java.awt.image.BufferedImage(
       2, 3, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -53,7 +52,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("audio_stats decodes a known WAV exactly and NULLs undecodable bytes (r11)") {
     import graft.functions.{GraftFunctions => GF}
-    GF.register(spark)
     // 5 samples with known int16 values; 16-bit mono PCM at 8 kHz
     val samples = Array[Int](100, -250, 0, 32767, -32768)
     val data = new Array[Byte](samples.length * 2)

@@ -66,7 +66,6 @@ class PrestoFunctionsSpec extends SparkSpec {
   }
 
   test("try_eval: NULL on runtime error, value otherwise, errors not leaked") {
-    graft.functions.GraftFunctions.register(spark)
     val out = Seq(("12", 2), ("xy", 0), ("7", 1)).toDF("s", "n")
       .select(
         expr("try_eval(CAST(s AS INT))").as("i"),
@@ -76,7 +75,6 @@ class PrestoFunctionsSpec extends SparkSpec {
   }
 
   test("try_eval preserves child type and does not swallow analysis errors") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(1).toDF("x").select(expr("try_eval(x + 1)"))
     assert(df.schema.head.dataType == org.apache.spark.sql.types.IntegerType)
     intercept[Exception] { // unresolved column is an ANALYSIS error → throws
@@ -106,7 +104,6 @@ class PrestoFunctionsSpec extends SparkSpec {
   }
 
   test("normalize_str: NFC composes, NFD decomposes, idempotent on ASCII") {
-    graft.functions.GraftFunctions.register(spark)
     val decomposed = "cafe\u0301" // e + combining acute
     val composed = "caf\u00e9"    // precomposed
     val out = Seq((decomposed, composed, "plain")).toDF("d", "c", "a")

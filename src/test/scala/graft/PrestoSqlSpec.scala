@@ -1982,7 +1982,6 @@ class PrestoSqlSpec extends SparkSpec {
   }
 
   test("normalize forms and 3-arg strpos instance semantics") {
-    graft.functions.GraftFunctions.register(spark)
     val r = PrestoSql.sql(spark,
       // Å (Å) vs A + combining ring ̊: NFC composes, NFD splits
       """SELECT length(normalize('Å', NFC)) AS lc,

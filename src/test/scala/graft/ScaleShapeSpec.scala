@@ -14,7 +14,6 @@ class ScaleShapeSpec extends SparkSpec {
       .select("doc_a", "doc_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    GF.register(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"),
         GF.simhash48(TF.shingleHashes(TF.wordTokens(col("text")))).as("sh"))
@@ -64,7 +63,6 @@ class ScaleShapeSpec extends SparkSpec {
   test("fused sketch kernels sit in the scan-stage plan, not behind HOF chains") {
     // the signature frames are localCheckpointed inside the queries, so
     // pin the kernel placement on the pre-checkpoint select directly
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.col
     val mh = Tables.documents(spark, sf)
       .select(col("doc_id"),
@@ -425,7 +423,6 @@ class ScaleShapeSpec extends SparkSpec {
       .select("doc_a", "doc_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    GF.register(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"),
         GF.simhash48(TF.shingleHashes(TF.wordTokens(col("text")))).as("sh"))

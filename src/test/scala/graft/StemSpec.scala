@@ -68,7 +68,6 @@ class StemSpec extends SparkSpec {
   }
 
   test("word_stem is registered, codegen-evaluable, and in the dialect") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, expr}
     val r = spark.createDataFrame(Seq(
         (1L, "Running"), (2L, "replacement"), (3L, "a1b2"), (4L, "at")))

@@ -310,7 +310,7 @@ class StreamingSpec extends SparkSpec {
           assert(q.awaitTermination(120000), "Trigger.Once drain timed out")
         } finally q.stop()
       }
-      graft.ops.Events.withRocksDBStateStore(spark) {
+      GraftSession.withConf(spark, graft.ops.Events.RocksDBStateStore) {
         writeFile("a", Seq(1L, 2L, 3L))
         drain()
         Thread.sleep(sleepMs)
@@ -355,7 +355,7 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.TimestampType)))
     val qn = "t_e32spec_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.ops.Events.withRocksDBStateStore(spark) {
+    GraftSession.withConf(spark, graft.ops.Events.RocksDBStateStore) {
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
         .withWatermark("ts", "1 hour")

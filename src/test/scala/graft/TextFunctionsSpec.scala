@@ -113,7 +113,6 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("bpe_count word-break definition agrees with the \\s strip l4c uses") {
     import graft.functions.{BpeCore, GraftFunctions => GF}
-    GF.register(spark)
     // l4c derives n_merges = n_chars - n_bpe_tokens where n_chars strips
     // \s — that identity only holds if BpeCore's word-break chars are
     // exactly the stripped set. With zero merges every non-whitespace
@@ -140,7 +139,6 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("bpe_segment keeps word boundaries and matches the reference segmentation") {
     import graft.functions.{GraftFunctions => GF}
-    GF.register(spark)
     val merges = Seq("t" -> "h", "th" -> "e")
     val out = Seq((1L, "the ther x"))
       .toDF("id", "text")
@@ -264,7 +262,6 @@ class TextFunctionsSpec extends SparkSpec {
   test("bpe_segment_bytes keeps word boundaries; byte-level training equals the reference") {
     import graft.functions.{GraftFunctions => GF}
     import graft.ops.LlmOps
-    GF.register(spark)
     val merges = Seq("Ã" -> "©") // é = 0xC3 0xA9
     val out = Seq((1L, "café x")).toDF("id", "text")
       .select(GF.bpeSegmentBytes($"text", merges).as("w"))
@@ -310,7 +307,6 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("bpe_count evaluates identically in codegen and in a DataFrame plan") {
     import graft.functions.{GraftFunctions => GF}
-    GF.register(spark)
     val merges = Seq("t" -> "h", "th" -> "e", "e" -> "r")
     val df = Seq((1L, "the thermal truth"), (2L, "er er er"), (3L, " "))
       .toDF("id", "text")
@@ -383,7 +379,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("native sketch expressions == higher-order reference implementations") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sf).limit(50)
     val hashes = TF.shingleHashes(TF.charShingles($"text", 5))
     val cmp = docs.select(
@@ -395,7 +390,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("fused minhash_text_sig == composed minhash(shingle_hashes(char_shingles))") {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.{GraftFunctions => GF}
     // real docs plus the window-clamp edge cases: empty text, text
     // shorter than k, exactly k, and multi-byte UTF-8 (char windows must
@@ -411,7 +405,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("fused simhash48_text == composed simhash48(shingle_hashes(word_tokens))") {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.{GraftFunctions => GF}
     // edge cases: empty, all-spaces, consecutive/leading/trailing spaces,
     // non-space whitespace INSIDE tokens, multi-byte UTF-8, supplementary-
@@ -427,7 +420,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("native perm_match_count == zip_with/filter/size HOF reference (r17)") {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.{GraftFunctions => GF}
     import org.apache.spark.sql.functions.{filter, size, zip_with}
     // real signature pairs: every doc against a shifted copy of itself
@@ -481,7 +473,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("native shingle kernels == higher-order reference implementations") {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.{GraftFunctions => GF}
     val docs = Tables.documents(spark, sf).limit(50)
     val cmp = docs.select(
@@ -493,7 +484,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("native unit_q3 == HOF quantize chain bit-for-bit (r18, l71)") {
-    graft.functions.GraftFunctions.register(spark)
     // real embeddings plus edge vectors: negatives, tiny/large magnitudes,
     // a one-dimensional vector (the fixture never has zero vectors — the
     // HOF chain would ANSI-throw there, and so does the kernel)
@@ -515,7 +505,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("native cosine_sim == higher-order cosine bit-for-bit") {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).limit(100)
       .select($"embedding".as("a"), org.apache.spark.sql.functions.reverse($"embedding").as("b"))
     val diff = e.select(
@@ -636,7 +625,6 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("fused gopher kernel matches the HOF reference forms field-for-field") {
     import graft.functions.{GraftFunctions => GF}
-    GF.register(SparkSpec.spark)
     // real corpus docs + planted edge cases: empty text (1 empty line,
     // single "" gram), single word, exactly 6 words, heavy repetition
     val corpus = graft.Tables.documents(SparkSpec.spark,

@@ -75,7 +75,6 @@ class WireHashSpec extends SparkSpec {
   }
 
   test("SQL surface: registered expressions evaluate in codegen and agree") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  hex(murmur3_x64_128(encode('hello', 'UTF-8'))) AS m,

@@ -63,7 +63,6 @@ class WktSpec extends SparkSpec {
       WktCore.parseLineString("LINESTRING (1 2)")
     }
     // SQL path, codegen'd
-    GF.register(spark)
     val r = Seq(1).toDF("i").select(
       GF.stArea(lit("POLYGON ((0 0, 4 0, 0 3, 0 0))")).as("a"),
       GF.stLength(lit("LINESTRING (0 0, 0 7)")).as("l")).collect().head
@@ -71,7 +70,6 @@ class WktSpec extends SparkSpec {
   }
 
   test("st_contains/st_x/st_y evaluate identically in a codegen'd plan") {
-    GF.register(spark)
     val poly = "POLYGON ((5 0, 0 5, -5 0, 0 -5, 5 0))"
     val rows = Seq((1L, 1.25, 2.5), (2L, 4.75, 4.75), (3L, -1.25, -0.5),
         (4L, 5.25, 0.25))
@@ -95,7 +93,6 @@ class WktSpec extends SparkSpec {
 
   test("st_intersects: crossing, containment both ways, disjoint, codegen parity") {
     import graft.functions.WktCore
-    GF.register(SparkSpec.spark)
     def p(wkt: String) = WktCore.parsePolygon(wkt)
     val diamond = p("POLYGON ((5 0, 0 5, -5 0, 0 -5, 5 0))")
     // PURE edge crossing: a thin slab cutting through the diamond with
@@ -1276,7 +1273,6 @@ class WktSpec extends SparkSpec {
     }
 
     // codegen parity inside a plan
-    graft.functions.GraftFunctions.register(SparkSpec.spark)
     val row = Seq((sq, "POINT (0.5 3)")).toDF("g", "p")
       .selectExpr("geometry_nearest_points(g, p) AS np",
         "st_issimple(g) AS simp", "st_coorddim(g) AS cd",
@@ -1329,7 +1325,6 @@ class WktSpec extends SparkSpec {
     assert(WktCore.area(u("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")) == 1.0)
 
     // the Trino spelling end-to-end in a plan
-    graft.functions.GraftFunctions.register(SparkSpec.spark)
     val row = Seq((0.0, 0.0, 1.0, 0.0)).toDF("x1", "y1", "x2", "y2")
       .selectExpr(
         """st_distance(
@@ -1393,7 +1388,6 @@ class WktSpec extends SparkSpec {
     assert(WktCore.pointsOf(u("MULTIPOINT EMPTY")) == null)
 
     // codegen parity
-    graft.functions.GraftFunctions.register(SparkSpec.spark)
     val row = Seq(mp).toDF("g")
       .selectExpr("st_points(g) AS p", "st_numgeometries(g) AS n",
         "st_geomfrombinary(st_asbinary(g)) AS rt")
@@ -1461,7 +1455,6 @@ class WktSpec extends SparkSpec {
       "000000000000f03f0000000000000000000000000000f03f000000000000f03f")
 
     // codegen parity: hex(st_asbinary) and the round trip inside a plan
-    graft.functions.GraftFunctions.register(SparkSpec.spark)
     val row = Seq((sq, holed)).toDF("sq", "holed")
       .selectExpr("lower(hex(st_asbinary(sq))) AS h",
         "st_geomfrombinary(st_asbinary(holed)) AS rt")
