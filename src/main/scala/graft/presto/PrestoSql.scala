@@ -22,9 +22,12 @@ import org.apache.spark.sql.types._
   *    quoted identifiers → backticks, unit-string `date_diff('hour', a,
   *    b)` → `timestampdiff(hour, a, b)`, `TRY(x)` → the native try_eval
   *    expression, regex-vs-literal `split` semantics, and a few pure
-  *    renames (`approx_distinct` → `approx_count_distinct`). The rewriter
-  *    is literal-aware: single-quoted strings pass through untouched, so
-  *    a value like 'from_unixtime(' can never be rewritten.
+  *    renames (`approx_distinct` → `approx_count_distinct`). Every
+  *    rewrite asks one [[Lexer]] where string literals, quoted
+  *    identifiers and comments begin and end, so a value like
+  *    'from_unixtime(' or "o'k" is never rewritten. Comments are
+  *    dropped once where text enters (`script`, `prepare`); `/*+ … */`
+  *    hints are kept.
   *
   * Dialect pieces that need NO translation (verified by PrestoSqlSpec):
   * `||` concat, 1-based `substr`, `cardinality`, `element_at`,
@@ -34,11 +37,10 @@ import org.apache.spark.sql.types._
   * explode/posexplode (1-based ordinality preserved; multi-argument
   * UNNEST(a, b, …) zips positionally with NULL padding, like Presto).
   *
-  * Known limits (documented, not silent): SQL comments are passed
-  * through verbatim (a quote character inside a comment would confuse
-  * segmentation); no DDL translation; `AT TIME ZONE` accepts an
-  * identifier / qualified name / non-nested call WITHOUT string-literal
-  * arguments as its operand (wrap anything fancier in a subquery alias);
+  * Known limits (documented, not silent): no DDL translation; `AT TIME
+  * ZONE` accepts an identifier / qualified name / non-nested call
+  * WITHOUT string-literal arguments as its operand (wrap anything
+  * fancier in a subquery alias);
   * `date_parse` AND `date_format` map the MySQL %-specifiers listed in
   * `MysqlFormatTokens` only (unlisted specifiers and literal alphabetic
   * text inside format strings pass through into the Java pattern, where
@@ -99,12 +101,13 @@ object PrestoSql {
     * session-dependent rewrites (approx_most_frequent needs a UDAF
     * registered for its capacity, and MATCH_RECOGNIZE plans through the
     * owned row-pattern operator, so neither can be a pure string pass).
-    * MATCH_RECOGNIZE rewrites FIRST, on the raw Presto text — its DEFINE
-    * predicates are dialect-translated individually inside. */
+    * Comments drop first; MATCH_RECOGNIZE then rewrites on the Presto
+    * text — its DEFINE predicates are dialect-translated individually
+    * inside. */
   private def prepare(spark: SparkSession, prestoSql: String): String = {
     def build(s: String): String =
       rewriteApproxMostFrequent(spark,
-        translate(rewriteMatchRecognize(spark, s)))
+        translate(rewriteMatchRecognize(spark, new Lexer(s).withoutComments)))
     if (prestoSql.toLowerCase.contains("match_recognize")) build(prestoSql)
     else {
       val perSession = prepared.synchronized {
@@ -133,9 +136,9 @@ object PrestoSql {
   }
 
   /** Run a Presto-dialect SCRIPT — semicolon-separated statements, the
-    * form an ETL tool's SQL files take. Statements split outside string
-    * literals / quoted identifiers and run in order; the LAST statement's
-    * result is returned.
+    * form an ETL tool's SQL files take. Comments are dropped, then
+    * statements split outside string literals / quoted identifiers and
+    * run in order; the LAST statement's result is returned.
     *
     * Statement surface beyond queries (the forms an ETL tool's rendered
     * SQL files actually contain — r3 verdict "missing" #1):
@@ -238,7 +241,7 @@ object PrestoSql {
     // a partition-managing ETL tool renders for every landing table
     val ctasWithRe =
       """(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?("[^"]+"|[\w.]+)\s+WITH\s*\((.*?)\)\s+AS\b(.*)$""".r
-    val stmts = splitStatements(prestoScript)
+    val stmts = splitStatements(new Lexer(prestoScript).withoutComments)
       .map(_.trim).filter(_.nonEmpty)
       .flatMap {
         case ctasWithRe(ine, tbl, props, rest) =>
@@ -481,19 +484,12 @@ object PrestoSql {
         val rest = rest0.trim
         require(rest.startsWith("'"),
           "EXECUTE IMMEDIATE expects a string literal")
-        val sb = new StringBuilder
-        var i = 1
-        var closed = false
-        while (i < rest.length && !closed) {
-          val c = rest.charAt(i)
-          if (c == '\'') {
-            if (i + 1 < rest.length && rest.charAt(i + 1) == '\'') {
-              sb.append('\''); i += 2
-            } else { closed = true; i += 1 }
-          } else { sb.append(c); i += 1 }
-        }
-        require(closed, "EXECUTE IMMEDIATE: unterminated string literal")
-        val tail = rest.substring(i).trim
+        val end = new Lexer(rest).tokenEnd(0)
+        // an even quote count: the literal closed before the text ended
+        require(end > 1 && rest.substring(0, end).count(_ == '\'') % 2 == 0,
+          "EXECUTE IMMEDIATE: unterminated string literal")
+        val text = rest.substring(1, end - 1).replace("''", "'")
+        val tail = rest.substring(end).trim
         val params: Array[Any] =
           if (tail.isEmpty) Array.empty
           else {
@@ -506,8 +502,8 @@ object PrestoSql {
               .collect().head
             Array.tabulate[Any](exprs.size)(row.get)
           }
-        if (params.isEmpty) sql(spark, sb.toString)
-        else sql(spark, sb.toString, params)
+        if (params.isEmpty) sql(spark, text)
+        else sql(spark, text, params)
       case ExecuteRe(name, using) =>
         val key = s"graft.presto.prepared.$name"
         val text = spark.conf.getOption(key).getOrElse(
@@ -840,27 +836,11 @@ object PrestoSql {
   /** Replace each `?` placeholder outside string literals / quoted
     * identifiers with `repl` (planning-only substitution). */
   private def substituteParams(s: String, repl: String): String = {
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
-    var inIdent = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-      } else if (inIdent) { out.append(c); if (c == '"') inIdent = false }
-      else c match {
-        case '\'' => inLit = true; out.append(c)
-        case '"' => inIdent = true; out.append(c)
-        case '?' => out.append(repl)
-        case other => out.append(other)
-      }
-      i += 1
-    }
+    for (i <- 0 until s.length)
+      if (s.charAt(i) == '?' && lx.isCode(i)) out.append(repl)
+      else out.append(s.charAt(i))
     out.toString
   }
 
@@ -871,25 +851,12 @@ object PrestoSql {
   private[graft] def replaceWordOutsideLiterals(
       s: String, word: String, repl: String): String = {
     def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
-    var inIdent = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            out.append('\''); i += 1
-          } else inLit = false
-        }
-        i += 1
-      } else if (inIdent) {
-        out.append(c); if (c == '"') inIdent = false; i += 1
-      } else if (c == '\'') { inLit = true; out.append(c); i += 1 }
-      else if (c == '"') { inIdent = true; out.append(c); i += 1 }
-      else if (s.startsWith(word, i) &&
+      if (lx.isCode(i) && s.startsWith(word, i) &&
           (i == 0 || !isWordChar(s.charAt(i - 1))) &&
           (i + word.length >= s.length ||
             !isWordChar(s.charAt(i + word.length)))) {
@@ -922,26 +889,8 @@ object PrestoSql {
   private def runDescribeInput(spark: SparkSession, name: String): DataFrame = {
     val text = spark.conf.getOption(s"graft.presto.prepared.$name").getOrElse(
       throw new IllegalArgumentException(s"no prepared statement '$name'"))
-    var n = 0
-    var inLit = false
-    var inIdent = false
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inLit) {
-        if (c == '\'') {
-          if (i + 1 < text.length && text.charAt(i + 1) == '\'') i += 1
-          else inLit = false
-        }
-      } else if (inIdent) { if (c == '"') inIdent = false }
-      else c match {
-        case '\'' => inLit = true
-        case '"' => inIdent = true
-        case '?' => n += 1
-        case _ =>
-      }
-      i += 1
-    }
+    val lx = new Lexer(text)
+    val n = text.indices.count(i => text.charAt(i) == '?' && lx.isCode(i))
     val s2 = spark; import s2.implicits._
     (0 until n).map(p => (p.toLong, "unknown")).toDF("Position", "Type")
   }
@@ -1354,26 +1303,12 @@ object PrestoSql {
     * clause condition contain `CASE … THEN … END` as long as it is
     * parenthesized, which Trino requires in practice too. */
   private def firstTopLevelThen(s: String): Int = {
-    var depth = 0; var inLit = false; var inIdent = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inLit) { if (c == '\'') inLit = false }
-      else if (inIdent) { if (c == '"') inIdent = false }
-      else c match {
-        case '\'' => inLit = true
-        case '"' => inIdent = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case 'T' | 't' if depth == 0 &&
-          i + 4 <= s.length && s.substring(i, i + 4).equalsIgnoreCase("THEN") &&
-          (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
-          (i + 4 == s.length || !Character.isLetterOrDigit(s.charAt(i + 4))) =>
-          return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
+    val lx = new Lexer(s)
+    s.indices.find(i => lx.isTopLevel(i) &&
+      s.regionMatches(true, i, "THEN", 0, 4) &&
+      (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
+      (i + 4 == s.length || !Character.isLetterOrDigit(s.charAt(i + 4))))
+      .getOrElse(-1)
   }
 
   private def runMerge(spark: SparkSession, stmt: String): DataFrame = {
@@ -1522,9 +1457,6 @@ object PrestoSql {
     stageSwap(spark, t, s"$matchedBranch$insertBranch")
   }
 
-  /** Split on `sep` at zero paren/bracket depth outside string literals /
-    * quoted identifiers (assignment expressions contain commas inside
-    * function calls). */
   /** SQL:2016 `JSON_TABLE(expr, 'row path' COLUMNS(…))` — the standard
     * JSON-shredding table function Trino ships, onto Spark 4 VARIANT:
     * the row path (its `[*]` tail iterates the array at the prefix)
@@ -1538,30 +1470,17 @@ object PrestoSql {
     * loud beats silently wrong). */
   private[graft] def rewriteJsonTable(sql: String): String = {
     val Head = """(?is)\bJSON_TABLE\s*\(""".r
+    def next(s: String) = {
+      lazy val lx = new Lexer(s)
+      Head.findAllMatchIn(s).find(m => lx.isCode(m.start))
+        .map(m => (m, lx.matchingClose(m.end - 1)))
+    }
     var s = sql
-    var m = Head.findFirstMatchIn(s)
+    var m = next(s)
     while (m.isDefined) {
-      val open = m.get.end - 1
-      val close = {
-        // literal-aware matching close (same walk as rewriteWindowFilter)
-        var depth = 0; var i = open; var inLit = false; var inId = false
-        var res = -1
-        while (i < s.length && res < 0) {
-          val c = s.charAt(i)
-          if (inLit) { if (c == '\'') inLit = false }
-          else if (inId) { if (c == '"') inId = false }
-          else c match {
-            case '\'' => inLit = true
-            case '"' => inId = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) res = i
-            case _ =>
-          }
-          i += 1
-        }
-        require(res > 0, "unbalanced JSON_TABLE parens")
-        res
-      }
+      val (hm, close) = m.get
+      val open = hm.end - 1
+      require(close > 0, "unbalanced JSON_TABLE parens")
       val inside = s.substring(open + 1, close)
       require(!"""(?is)\bNESTED\s+PATH\b""".r.findFirstIn(inside).isDefined &&
         !"""(?is)\bPLAN\s*\(""".r.findFirstIn(inside).isDefined,
@@ -1604,8 +1523,8 @@ object PrestoSql {
       val replacement =
         s"LATERAL (SELECT ${colExprs.mkString(", ")} FROM" +
           s" (SELECT posexplode($rowsExpr)))"
-      s = s.substring(0, m.get.start) + replacement + s.substring(close + 1)
-      m = Head.findFirstMatchIn(s)
+      s = s.substring(0, hm.start) + replacement + s.substring(close + 1)
+      m = next(s)
     }
     s
   }
@@ -1617,7 +1536,8 @@ object PrestoSql {
     * engines. */
   private[graft] def rewriteSequenceTable(s: String): String = {
     val re = """(?is)\bTABLE\s*\(\s*sequence\s*\(([^()]*)\)\s*\)""".r
-    re.replaceAllIn(s, m => {
+    lazy val lx = new Lexer(s)
+    re.replaceSomeIn(s, m => Option.when(lx.isCode(m.start)) {
       val raw = splitTopLevel(m.group(1), ',').map(_.trim).filter(_.nonEmpty)
       val kv = raw.map { a =>
         """(?is)^(\w+)\s*=>\s*(.+)$""".r.findFirstMatchIn(a)
@@ -1660,37 +1580,15 @@ object PrestoSql {
   private[graft] def rewriteWindowFilter(sql: String): String = {
     val FilterHead = """(?is)^\s*FILTER\s*\(\s*WHERE\b""".r
     val OverNext = """(?is)^\s*OVER\b""".r
-    // literal-aware matching close paren for the '(' at `open`
-    def closeOf(s: String, open: Int): Int = {
-      var depth = 0; var i = open; var inLit = false; var inId = false
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inLit) { if (c == '\'') inLit = false }
-        else if (inId) { if (c == '"') inId = false }
-        else c match {
-          case '\'' => inLit = true
-          case '"' => inId = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) return i
-          case _ =>
-        }
-        i += 1
-      }
-      -1
-    }
     var s = sql
     var changed = true
     while (changed) {
       changed = false
-      var i = 0; var inLit = false; var inId = false
+      val lx = new Lexer(s)
+      var i = 0
       val opens = scala.collection.mutable.Stack.empty[Int]
       while (i < s.length && !changed) {
-        val c = s.charAt(i)
-        if (inLit) { if (c == '\'') inLit = false }
-        else if (inId) { if (c == '"') inId = false }
-        else c match {
-          case '\'' => inLit = true
-          case '"' => inId = true
+        if (lx.isCode(i)) s.charAt(i) match {
           case '(' => opens.push(i)
           case ')' if opens.nonEmpty =>
             val open = opens.pop()
@@ -1703,7 +1601,7 @@ object PrestoSql {
               while (j >= 0 && (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')) j -= 1
               if (idEnd > j) {
                 val fOpen = i + 1 + tail.indexOf('(')
-                val fClose = closeOf(s, fOpen)
+                val fClose = lx.matchingClose(fOpen)
                 require(fClose > fOpen, "unbalanced FILTER parens")
                 if (OverNext.findFirstIn(s.substring(fClose + 1)).isDefined) {
                   val whereEnd = i + 1 + fm.matched.length
@@ -1727,37 +1625,10 @@ object PrestoSql {
     s
   }
 
-  private[graft] def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inLit = false
-    var inIdent = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inLit) {
-        cur.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { cur.append('\''); i += 1 }
-          else inLit = false
-        }
-      } else if (inIdent) {
-        cur.append(c)
-        if (c == '"') inIdent = false
-      } else c match {
-        case '\'' => inLit = true; cur.append(c)
-        case '"' => inIdent = true; cur.append(c)
-        case '(' | '[' => depth += 1; cur.append(c)
-        case ')' | ']' => depth -= 1; cur.append(c)
-        case `sep` if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.toSeq
-  }
+  /** Split on `sep` outside brackets, literals, quoted identifiers and
+    * comments (argument lists contain commas inside function calls). */
+  private[graft] def splitTopLevel(s: String, sep: Char): Seq[String] =
+    new Lexer(s).splitTopLevel(sep)
 
   private def runUpdate(spark: SparkSession, tblRaw: String,
       setList: String, pred: Option[String]): DataFrame = {
@@ -1818,36 +1689,9 @@ object PrestoSql {
       }
     }
 
-  /** Split on ';' outside single-quoted literals ('' escapes respected)
-    * and double-quoted identifiers. */
-  private[graft] def splitStatements(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inLit = false
-    var inIdent = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inLit) {
-        cur.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { cur.append('\''); i += 1 }
-          else inLit = false
-        }
-      } else if (inIdent) {
-        cur.append(c)
-        if (c == '"') inIdent = false
-      } else c match {
-        case '\'' => inLit = true; cur.append(c)
-        case '"' => inIdent = true; cur.append(c)
-        case ';' => out += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.toSeq
-  }
+  /** A script's statements: the text split on top-level `;`. */
+  private[graft] def splitStatements(s: String): Seq[String] =
+    splitTopLevel(s, ';')
 
   /** MySQL %-specifier → Java/Joda pattern tokens (date_parse AND
     * date_format route through this). Tokens are matched case-sensitively
@@ -3464,30 +3308,19 @@ object PrestoSql {
     * The limit argument passes through: both engines put the remainder
     * in the last element. */
   private[graft] def inlineSplit(s: String): String = {
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
-    var inIdent = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-        i += 1
-      } else if (inIdent) { out.append(c); if (c == '"') inIdent = false; i += 1 }
-      else if (c == '\'') { inLit = true; out.append(c); i += 1 }
-      else if (c == '"') { inIdent = true; out.append(c); i += 1 }
-      else if (c == '(') {
+      if (c == '(' && lx.isCode(i)) {
         var j = out.length - 1
         while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
         val wordEnd = j
         while (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_')) j -= 1
         val isSplit = wordEnd - j == 5 &&
           out.substring(j + 1, wordEnd + 1).equalsIgnoreCase("split")
-        val close = if (isSplit) matchingClose(s, i) else -1
+        val close = if (isSplit) lx.matchingClose(i) else -1
         if (isSplit && close > i) {
           val args = splitTopLevel(s.substring(i + 1, close), ',')
             .map(a => inlineSplit(a.trim))
@@ -3514,23 +3347,12 @@ object PrestoSql {
   private[graft] def rewriteListagg(s: String): String = {
     if (!s.toLowerCase.contains("listagg")) return s
     val name = "listagg"
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
-    var inIdent = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-        i += 1
-      } else if (inIdent) { out.append(c); if (c == '"') inIdent = false; i += 1 }
-      else if (c == '\'') { inLit = true; out.append(c); i += 1 }
-      else if (c == '"') { inIdent = true; out.append(c); i += 1 }
-      else if (s.regionMatches(true, i, name, 0, name.length) &&
+      if (lx.isCode(i) && s.regionMatches(true, i, name, 0, name.length) &&
           (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) && {
             var p = i + name.length
             while (p < s.length && s.charAt(p).isWhitespace) p += 1
@@ -3538,7 +3360,7 @@ object PrestoSql {
           }) {
         var p = i + name.length
         while (s.charAt(p).isWhitespace) p += 1
-        val close = matchingClose(s, p)
+        val close = lx.matchingClose(p)
         require(close > p, "unbalanced listagg(")
         val args = splitTopLevel(s.substring(p + 1, close), ',').map(_.trim)
         require(args.nonEmpty && args.size <= 2,
@@ -3561,7 +3383,7 @@ object PrestoSql {
         q += wg.length
         require(q < s.length && s.charAt(q) == '(',
           "LISTAGG WITHIN GROUP needs (ORDER BY …)")
-        val wgClose = matchingClose(s, q)
+        val wgClose = lx.matchingClose(q)
         val spec = s.substring(q + 1, wgClose).trim
         require("""(?is)^ORDER\s+BY\s""".r.findFirstIn(spec).isDefined,
           "LISTAGG WITHIN GROUP needs ORDER BY")
@@ -3581,23 +3403,12 @@ object PrestoSql {
   private def rewriteCall(s: String, name: String)(
       build: Seq[String] => String): String = {
     if (!s.toLowerCase.contains(name)) return s
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
-    var inIdent = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-        i += 1
-      } else if (inIdent) { out.append(c); if (c == '"') inIdent = false; i += 1 }
-      else if (c == '\'') { inLit = true; out.append(c); i += 1 }
-      else if (c == '"') { inIdent = true; out.append(c); i += 1 }
-      else if (s.regionMatches(true, i, name, 0, name.length) &&
+      if (lx.isCode(i) && s.regionMatches(true, i, name, 0, name.length) &&
           (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) &&
           (i + name.length >= s.length ||
             !(s.charAt(i + name.length).isLetterOrDigit ||
@@ -3605,7 +3416,7 @@ object PrestoSql {
         var p = i + name.length
         while (p < s.length && s.charAt(p).isWhitespace) p += 1
         if (p < s.length && s.charAt(p) == '(') {
-          val close = matchingClose(s, p)
+          val close = lx.matchingClose(p)
           require(close > p, s"unbalanced $name(")
           val args = splitTopLevel(s.substring(p + 1, close), ',')
             .map(a => rewriteCall(a.trim, name)(build))
@@ -3911,23 +3722,12 @@ object PrestoSql {
   private[graft] def wrapMapAgg(s: String): String = {
     val out = new StringBuilder
     val stack = scala.collection.mutable.Stack.empty[Boolean]
-    var inLit = false
-    var inIdent = false
+    val lx = new Lexer(s)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-      } else if (inIdent) {
-        out.append(c)
-        if (c == '"') inIdent = false
-      } else c match {
-        case '\'' => inLit = true; out.append(c)
-        case '"' => inIdent = true; out.append(c)
+      if (!lx.isCode(i)) out.append(c)
+      else c match {
         case '(' =>
           var j = out.length - 1
           while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
@@ -3968,28 +3768,17 @@ object PrestoSql {
       spark: SparkSession, s: String): String = {
     if (!s.toLowerCase.contains("approx_most_frequent")) return s
     val name = "approx_most_frequent"
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
-    var inIdent = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-        i += 1
-      } else if (inIdent) { out.append(c); if (c == '"') inIdent = false; i += 1 }
-      else if (c == '\'') { inLit = true; out.append(c); i += 1 }
-      else if (c == '"') { inIdent = true; out.append(c); i += 1 }
-      else if (s.regionMatches(true, i, name, 0, name.length) &&
+      if (lx.isCode(i) && s.regionMatches(true, i, name, 0, name.length) &&
           (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_'))) {
         var p = i + name.length
         while (p < s.length && s.charAt(p).isWhitespace) p += 1
         if (p < s.length && s.charAt(p) == '(') {
-          val close = matchingClose(s, p)
+          val close = lx.matchingClose(p)
           require(close > p, "unbalanced approx_most_frequent(")
           val args = splitTopLevel(s.substring(p + 1, close), ',').map(_.trim)
           require(args.size == 3,
@@ -4059,7 +3848,7 @@ object PrestoSql {
       case None => pred
       case Some(mm) =>
         val open = mm.end - 1
-        val close = matchingClose(pred, open)
+        val close = new Lexer(pred).matchingClose(open)
         require(close > open,
           s"MATCH_RECOGNIZE: unbalanced ${mm.group(1)}( in DEFINE")
         val args = splitTopLevel(pred.substring(open + 1, close), ',')
@@ -4085,11 +3874,13 @@ object PrestoSql {
   private[graft] def rewriteMatchRecognize(
       spark: SparkSession, s: String): String = {
     val kw = "match_recognize"
+    val lx = new Lexer(s)
     val at = {
       val lower = s.toLowerCase
       var i = lower.indexOf(kw)
-      // keyword must stand alone (not part of an identifier)
-      while (i >= 0 && ((i > 0 && (lower.charAt(i - 1).isLetterOrDigit ||
+      // keyword must stand alone (not part of an identifier or literal)
+      while (i >= 0 && (!lx.isCode(i) ||
+          (i > 0 && (lower.charAt(i - 1).isLetterOrDigit ||
           lower.charAt(i - 1) == '_')) ||
           (i + kw.length < lower.length &&
             (lower.charAt(i + kw.length).isLetterOrDigit ||
@@ -4117,7 +3908,7 @@ object PrestoSql {
     while (p < s.length && s.charAt(p).isWhitespace) p += 1
     require(p < s.length && s.charAt(p) == '(',
       "MATCH_RECOGNIZE must be followed by (...)")
-    val close = matchingClose(s, p)
+    val close = lx.matchingClose(p)
     require(close > p, "unbalanced MATCH_RECOGNIZE (")
     val body = s.substring(p + 1, close)
 
@@ -4351,7 +4142,7 @@ object PrestoSql {
           case None => t
           case Some(mm) =>
             val open = mm.end - 1
-            val cl = matchingClose(t, open)
+            val cl = new Lexer(t).matchingClose(open)
             require(cl > open,
               s"MATCH_RECOGNIZE: unbalanced ${mm.group(1)}( in MEASURES")
             val arg = t.substring(open + 1, cl).trim
@@ -4414,23 +4205,12 @@ object PrestoSql {
   private[graft] def wrapKeysValuesMatch(s: String): String = {
     val out = new StringBuilder
     val stack = scala.collection.mutable.Stack.empty[KvGroup]
-    var inLit = false
-    var inIdent = false
+    val lx = new Lexer(s)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-      } else if (inIdent) {
-        out.append(c)
-        if (c == '"') inIdent = false
-      } else c match {
-        case '\'' => inLit = true; out.append(c)
-        case '"' => inIdent = true; out.append(c)
+      if (!lx.isCode(i)) out.append(c)
+      else c match {
         case '(' =>
           var j = out.length - 1
           while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
@@ -4465,23 +4245,12 @@ object PrestoSql {
   private[graft] def wrapNoneMatch(s: String): String = {
     val out = new StringBuilder
     val stack = scala.collection.mutable.Stack.empty[Boolean]
-    var inLit = false
-    var inIdent = false
+    val lx = new Lexer(s)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-      } else if (inIdent) {
-        out.append(c)
-        if (c == '"') inIdent = false
-      } else c match {
-        case '\'' => inLit = true; out.append(c)
-        case '"' => inIdent = true; out.append(c)
+      if (!lx.isCode(i)) out.append(c)
+      else c match {
         case '(' =>
           // same bounded look-back as rewriteArrayLiterals: skip trailing
           // whitespace, take the maximal word run, require a non-word
@@ -4509,32 +4278,6 @@ object PrestoSql {
     out.toString
   }
 
-  /** Index of the `)` matching the `(` at `open`, literal-aware; -1 when
-    * unbalanced. */
-  private def matchingClose(s: String, open: Int): Int = {
-    var depth = 0
-    var inLit = false
-    var inIdent = false
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inLit) {
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1 else inLit = false
-        }
-      } else if (inIdent) { if (c == '"') inIdent = false }
-      else c match {
-        case '\'' => inLit = true
-        case '"' => inIdent = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** Presto `CROSS JOIN UNNEST(expr) [WITH ORDINALITY] [AS] t(c1[, c2[,
     * c3]])` → Spark's correlated-LATERAL table-function form:
     *  - array, no ordinality: `, LATERAL (SELECT col AS c1 FROM
@@ -4548,42 +4291,27 @@ object PrestoSql {
   /** Trino allows `FROM UNNEST(\u2026) [WITH ORDINALITY] AS t (\u2026)` with no
     * join (r13 syntax probe): normalize to the CROSS JOIN form over a
     * one-row relation so rewriteUnnest's machinery takes over. */
-  // a match inside a string literal has an odd number of quotes before
-  // it (doubled '' escapes keep parity even); allocation-free scan
-  // shared by the literal-guarded rewrite passes. SQL comments are NOT
-  // modeled -- the dialect passes comments through verbatim (documented
-  // limit, see the file header), so a typed-literal keyword inside a
-  // comment would still be rewritten (r15 ADVICE, accepted).
-  private def inLiteral(upTo: Int, s: String): Boolean = {
-    var i = 0; var n = 0
-    while (i < upTo) { if (s.charAt(i) == '\'') n += 1; i += 1 }
-    (n & 1) == 1
-  }
-
   private[graft] def rewriteBareFromUnnest(s0: String): String = {
     val re = """(?is)\bFROM\s+UNNEST\s*\(""".r
-    re.replaceAllIn(s0, m =>
-      if (inLiteral(m.start, s0))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else "FROM (SELECT 1 AS graft_one) CROSS JOIN UNNEST(")
+    lazy val lx = new Lexer(s0)
+    re.replaceSomeIn(s0, m => Option.when(lx.isCode(m.start))(
+      "FROM (SELECT 1 AS graft_one) CROSS JOIN UNNEST("))
   }
 
   /** Trino `DECIMAL 'x'` literals (r13 syntax probe): precision/scale
     * infer from the literal text, exactly as Trino does. */
   private[graft] def rewriteDecimalLiterals(s0: String): String = {
     val re = """(?is)\bDECIMAL\s*'([+-]?[0-9]+(?:\.[0-9]+)?)'""".r
-    re.replaceAllIn(s0, m =>
-      if (inLiteral(m.start, s0))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val lit = m.group(1)
-        val digits = lit.count(_.isDigit)
-        val scale = {
-          val dot = lit.indexOf('.')
-          if (dot < 0) 0 else lit.length - dot - 1
-        }
-        s"CAST('$lit' AS DECIMAL(${math.max(digits, 1)}, $scale))"
-      })
+    lazy val lx = new Lexer(s0)
+    re.replaceSomeIn(s0, m => Option.when(lx.isCode(m.start)) {
+      val lit = m.group(1)
+      val digits = lit.count(_.isDigit)
+      val scale = {
+        val dot = lit.indexOf('.')
+        if (dot < 0) 0 else lit.length - dot - 1
+      }
+      s"CAST('$lit' AS DECIMAL(${math.max(digits, 1)}, $scale))"
+    })
   }
 
   /** Trino's remaining NUMERIC typed literals (r15 probe sweep 4):
@@ -4594,17 +4322,15 @@ object PrestoSql {
   private[graft] def rewriteNumericTypedLiterals(s0: String): String = {
     val re =
       """(?is)\b(REAL|DOUBLE|TINYINT|SMALLINT|INTEGER|BIGINT)\s+'([^']*)'""".r
-    re.replaceAllIn(s0, m =>
-      if (inLiteral(m.start, s0))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val t = m.group(1).toUpperCase(java.util.Locale.ROOT) match {
-          case "REAL" => "FLOAT"
-          case "INTEGER" => "INT"
-          case other => other
-        }
-        s"CAST('${m.group(2)}' AS $t)"
-      })
+    lazy val lx = new Lexer(s0)
+    re.replaceSomeIn(s0, m => Option.when(lx.isCode(m.start)) {
+      val t = m.group(1).toUpperCase(java.util.Locale.ROOT) match {
+        case "REAL" => "FLOAT"
+        case "INTEGER" => "INT"
+        case other => other
+      }
+      s"CAST('${m.group(2)}' AS $t)"
+    })
   }
 
   private[graft] def rewriteUnnest(s0: String): String = {
@@ -4612,13 +4338,17 @@ object PrestoSql {
     val tailRe =
       ("""(?is)^\s*(WITH\s+ORDINALITY\s+)?(?:AS\s+)?("[^"]+"|\w+)""" +
         """\s*\(\s*([^()]*?)\s*\)(\s+ON\s+TRUE)?""").r
+    def next(s: String) = {
+      lazy val lx = new Lexer(s)
+      head.findAllMatchIn(s).find(mm => lx.isCode(mm.start))
+        .map(mm => (mm, lx.matchingClose(mm.end - 1)))
+    }
     var s = s0
     var guard = 0
-    var m = head.findAllMatchIn(s).find(mm => !inLiteral(mm.start, s))
+    var m = next(s)
     while (m.isDefined && guard < 100) {
-      val mm = m.get
+      val (mm, close) = m.get
       val open = mm.end - 1
-      val close = matchingClose(s, open)
       require(close > open, s"unbalanced parens in UNNEST: ${s.substring(mm.start)}")
       val expr = s.substring(open + 1, close)
       val args = splitTopLevel(expr, ',').map(_.trim)
@@ -4698,7 +4428,7 @@ object PrestoSql {
       }
       s = s.substring(0, mm.start) + inner + tail.substring(tm.end)
       guard += 1
-      m = head.findAllMatchIn(s).find(mm2 => !inLiteral(mm2.start, s))
+      m = next(s)
     }
     s
   }
@@ -4721,25 +4451,12 @@ object PrestoSql {
     * inner aggregate's enclosing expression and is NOT supported on the
     * ORDER BY form — documented limit. */
   private[graft] def rewriteArrayAgg(s: String): String = {
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
-    var inIdent = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-        i += 1
-      } else if (inIdent) {
-        out.append(c); if (c == '"') inIdent = false
-        i += 1
-      } else if (c == '\'') { inLit = true; out.append(c); i += 1 }
-      else if (c == '"') { inIdent = true; out.append(c); i += 1 }
-      else if (c == '(') {
+      if (c == '(' && lx.isCode(i)) {
         // look back for the bare word array_agg (same bounded look-back
         // as wrapNoneMatch)
         var j = out.length - 1
@@ -4748,7 +4465,7 @@ object PrestoSql {
         while (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_')) j -= 1
         val isArrayAgg = wordEnd - j == 9 &&
           out.substring(j + 1, wordEnd + 1).equalsIgnoreCase("array_agg")
-        val close = if (isArrayAgg) matchingClose(s, i) else -1
+        val close = if (isArrayAgg) lx.matchingClose(i) else -1
         if (isArrayAgg && close > i) {
           out.setLength(j + 1)
           // a trailing FILTER (WHERE …) clause belongs on the INNER
@@ -4760,7 +4477,7 @@ object PrestoSql {
             filterRe.findPrefixMatchOf(afterClose) match {
               case Some(fm) =>
                 val fOpen = close + 1 + fm.end - 1
-                val fClose = matchingClose(s, fOpen)
+                val fClose = lx.matchingClose(fOpen)
                 require(fClose > fOpen, "unbalanced FILTER parens")
                 (Some(s.substring(fOpen + 1, fClose)), fClose + 1)
               case None => (None, close + 1)
@@ -4788,34 +4505,14 @@ object PrestoSql {
     }
     if (distinct) inner = inner.substring(8).trim
 
-    // locate a top-level ORDER BY (depth 0, outside literals)
-    var depth = 0
-    var inLit = false
-    var inIdent = false
-    var obAt = -1
-    var k = 0
-    while (k < inner.length && obAt < 0) {
-      val c = inner.charAt(k)
-      if (inLit) {
-        if (c == '\'') {
-          if (k + 1 < inner.length && inner.charAt(k + 1) == '\'') k += 1 else inLit = false
-        }
-      } else if (inIdent) { if (c == '"') inIdent = false }
-      else c match {
-        case '\'' => inLit = true
-        case '"' => inIdent = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case 'o' | 'O' if depth == 0 =>
-          val boundedBefore = k == 0 || !(inner.charAt(k - 1).isLetterOrDigit ||
-            inner.charAt(k - 1) == '_')
-          if (boundedBefore &&
-              """(?is)^order\s+by\s""".r.findFirstIn(inner.substring(k)).isDefined)
-            obAt = k
-        case _ =>
-      }
-      k += 1
-    }
+    // locate a top-level ORDER BY
+    val lx = new Lexer(inner)
+    val obAt = inner.indices.find(k => lx.isTopLevel(k) &&
+      (inner.charAt(k) == 'o' || inner.charAt(k) == 'O') &&
+      (k == 0 || !(inner.charAt(k - 1).isLetterOrDigit ||
+        inner.charAt(k - 1) == '_')) &&
+      """(?is)^order\s+by\s""".r.findFirstIn(inner.substring(k)).isDefined)
+      .getOrElse(-1)
 
     def distPrefix = if (distinct) "DISTINCT " else ""
     if (obAt < 0) {
@@ -4870,25 +4567,17 @@ object PrestoSql {
 
   /** Start index in `buf` of the primary expression a subscript applies
     * to (identifier, "quoted", call or (paren) group — plus `.` qualifier
-    * chains), or -1 when unrecognizable. Backward scan is literal-aware:
-    * quotes toggle with `''`/`""` escape pairs consumed, so parens inside
-    * string literals (`split(s, '(')[1]`) never unbalance the match.
+    * chains), or -1 when unrecognizable. A [[Lexer]] over `buf` pairs
+    * the brackets and quotes, so parens inside string literals
+    * (`split(s, '(')[1]`) never unbalance the match; it is built only
+    * for a call, paren-group or quoted target.
     */
   private def subscriptTargetStart(buf: StringBuilder): Int = {
-    def skipQuoted(close: Int, q: Char): Int = {
-      var k = close - 1
-      while (k >= 0) {
-        if (buf.charAt(k) == q) {
-          if (k > 0 && buf.charAt(k - 1) == q) k -= 2 // escaped pair, still inside
-          else return k
-        } else k -= 1
-      }
-      -1
-    }
+    lazy val lx = new Lexer(buf.toString)
     // one identifier segment ending at `end` (inclusive) → its start, -1 if none
     def segStart(end: Int): Int = {
       if (end < 0) return -1
-      if (buf.charAt(end) == '"') skipQuoted(end, '"')
+      if (buf.charAt(end) == '"') lx.tokenStart(end)
       else if (buf.charAt(end).isLetterOrDigit || buf.charAt(end) == '_') {
         var w = end
         while (w >= 0 && (buf.charAt(w).isLetterOrDigit || buf.charAt(w) == '_')) w -= 1
@@ -4910,28 +4599,15 @@ object PrestoSql {
     if (j < 0) return -1
     buf.charAt(j) match {
       case ')' =>
-        var depth = 1
-        var k = j - 1
-        while (k >= 0 && depth > 0) {
-          buf.charAt(k) match {
-            case '\'' => k = skipQuoted(k, '\''); if (k < 0) return -1
-            case '"' => k = skipQuoted(k, '"'); if (k < 0) return -1
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ =>
-          }
-          k -= 1
-        }
-        if (depth > 0) -1
+        val open = lx.matchingOpen(j)
+        if (open < 0) -1
         else {
           // include a function name directly before the '(' (call target);
           // a bare paren group starts at the '(' itself
-          val ws = segStart(k)
-          if (ws < 0) k + 1 else withQualifiers(ws)
+          val ws = segStart(open - 1)
+          if (ws < 0) open else withQualifiers(ws)
         }
-      case '"' =>
-        val open = skipQuoted(j, '"')
-        if (open < 0) -1 else withQualifiers(open)
+      case '"' => withQualifiers(lx.tokenStart(j))
       case c if c.isLetterOrDigit || c == '_' =>
         val ws = segStart(j)
         // CASE…END[i] can't be rewritten by look-back (END is not the
@@ -4958,23 +4634,12 @@ object PrestoSql {
   private[graft] def rewriteArrayLiterals(s: String): String = {
     val out = new StringBuilder
     val stack = scala.collection.mutable.Stack.empty[Int]
-    var inLit = false
-    var inIdent = false
+    val lx = new Lexer(s)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inLit) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inLit = false
-        }
-      } else if (inIdent) {
-        out.append(c)
-        if (c == '"') inIdent = false
-      } else c match {
-        case '\'' => inLit = true; out.append(c)
-        case '"' => inIdent = true; out.append(c)
+      if (!lx.isCode(i)) out.append(c)
+      else c match {
         case '[' =>
           // bounded look-back (a full-buffer regex here is O(n²) over the
           // statement): skip trailing whitespace, then take the maximal
@@ -5011,13 +4676,6 @@ object PrestoSql {
     out.toString
   }
 
-  /** Literal-aware dialect translation. Splits the statement into
-    * single-quoted literals (kept verbatim, '' escapes respected),
-    * double-quoted identifiers (→ backticks, "" → "), and code segments
-    * (rewritten); unit-form date_diff/date_add spans code + literal, so
-    * it is matched on the code segment with its trailing quoted unit
-    * consumed by the regex BEFORE segmentation (see translate body).
-    */
   /** Trino's 3-argument `max_by(x, y, n)` / `min_by(x, y, n)` — the
     * top-n values of x by y as an ARRAY. Spark's same-named builtins
     * are 2-argument only (those pass through untouched — semantics
@@ -5116,20 +4774,17 @@ object PrestoSql {
     * literals of their own (inlineSplit's '\\Q' quoting) stay untouched. */
   private[graft] def escapeLiteralBackslashes(s: String): String = {
     if (s.indexOf('\\') < 0) return s
+    val lx = new Lexer(s)
     val out = new StringBuilder
-    var inLit = false
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (!inLit) {
-        if (c == '\'') inLit = true
-        out.append(c); i += 1
-      } else if (c == '\\') { out.append("\\\\"); i += 1 }
-      else if (c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') {
-        out.append("''"); i += 2
-      } else {
-        if (c == '\'') inLit = false
-        out.append(c); i += 1
+      if (lx.isCode(i)) { out.append(s.charAt(i)); i += 1 }
+      else {
+        val end = lx.tokenEnd(i)
+        val token = s.substring(i, end)
+        out.append(
+          if (s.charAt(i) == '\'') token.replace("\\", "\\\\") else token)
+        i = end
       }
     }
     out.toString
@@ -5427,15 +5082,6 @@ object PrestoSql {
       // `CAST(0.5 AS DOUBLE)` / `(0.5)` classify as a percentage
       // rather than routing to the weighted form (r16 advice);
       // exponent sign may be explicit ('1e+0')
-      // inner never dips below depth 0 → the outer parens are a pair
-      def balancedParens(t: String): Boolean = {
-        var depth = 0
-        t.forall { c =>
-          if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          depth >= 0
-        }
-      }
       @scala.annotation.tailrec
       def strip(e0: String): String = {
         val t = e0.trim
@@ -5443,8 +5089,9 @@ object PrestoSql {
           """(?is)^CAST\s*\((.+)\s+AS\s+(?:DOUBLE|FLOAT|REAL|DECIMAL(?:\s*\([^)]*\))?)\s*\)$""".r
         t match {
           case castRe(inner) => strip(inner)
-          case _ if t.startsWith("(") && t.endsWith(")") &&
-              balancedParens(t.substring(1, t.length - 1)) =>
+          // the outer parens are a pair
+          case _ if t.startsWith("(") &&
+              new Lexer(t).matchingClose(0) == t.length - 1 =>
             strip(t.substring(1, t.length - 1))
           case _ => t
         }
@@ -5532,39 +5179,26 @@ object PrestoSql {
     val trailing =
       """(?is)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+)\s+ROWS?\s+WITH\s+TIES\s*$""".r
     val sql = sql0.replaceAll("""\s+$""", "")
-    trailing.findFirstMatchIn(sql) match {
+    lazy val lx = new Lexer(sql)
+    trailing.findFirstMatchIn(sql).filter(m => lx.isCode(m.start)) match {
       case None =>
-        // any other placement (subquery, after OFFSET, inside a literal —
-        // the scan is textual) still fails loudly rather than silently
-        // dropping ties
-        require("""(?i)\bWITH\s+TIES\b""".r.findFirstIn(sql).isEmpty,
+        // any other placement (subquery, after OFFSET) still fails loudly
+        // rather than silently dropping ties
+        require("""(?i)\bWITH\s+TIES\b""".r.findAllMatchIn(sql)
+          .forall(m => !lx.isCode(m.start)),
           "FETCH … WITH TIES is only supported as the statement's final " +
             "clause with a top-level ORDER BY (no OFFSET, no subquery use)")
         sql0
       case Some(fm) =>
         val n = fm.group(1).toLong
         val prefix = sql.substring(0, fm.start)
-        // literal/identifier-aware scan for the LAST depth-0 ORDER BY
-        var i = 0; var depth = 0; var inLit = false; var inId = false
-        var obAt = -1
+        // the LAST top-level ORDER BY
         val ObHead = """(?is)^ORDER\s+BY\b""".r
-        while (i < prefix.length) {
-          val c = prefix.charAt(i)
-          if (inLit) { if (c == '\'') inLit = false }
-          else if (inId) { if (c == '"') inId = false }
-          else c match {
-            case '\'' => inLit = true
-            case '"' => inId = true
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case 'O' | 'o' if depth == 0 &&
-                (i == 0 || !(prefix.charAt(i - 1).isLetterOrDigit ||
-                  prefix.charAt(i - 1) == '_')) =>
-              if (ObHead.findFirstIn(prefix.substring(i)).isDefined) obAt = i
-            case _ =>
-          }
-          i += 1
-        }
+        val obAt = prefix.indices.findLast(i => lx.isTopLevel(i) &&
+          (prefix.charAt(i) == 'O' || prefix.charAt(i) == 'o') &&
+          (i == 0 || !(prefix.charAt(i - 1).isLetterOrDigit ||
+            prefix.charAt(i - 1) == '_')) &&
+          ObHead.findFirstIn(prefix.substring(i)).isDefined).getOrElse(-1)
         require(obAt >= 0,
           "FETCH … WITH TIES requires a top-level ORDER BY (as in Trino)")
         val keys = prefix.substring(obAt).replaceFirst("""(?is)^ORDER\s+BY""", "").trim
@@ -5578,6 +5212,13 @@ object PrestoSql {
     }
   }
 
+  /** Literal-aware dialect translation. After the rewrite passes, the
+    * [[Lexer]] splits the statement into single-quoted literals (kept
+    * verbatim), double-quoted identifiers (→ backticks, "" → "), hints
+    * and comments (kept verbatim) and code segments (rewritten by
+    * `codeRewrites`); unit-form date_diff/date_add spans code + literal,
+    * so its quoted unit joins the code segment (see the body).
+    */
   def translate(prestoSql: String): String = {
     val out = new StringBuilder
     val s = wrapSweep7(rewriteWindowFilter(wrapMinMaxByN(wrapArrayMinMaxBy(wrapNormalize(
@@ -5588,6 +5229,7 @@ object PrestoSql {
               rewriteSequenceTable(rewriteJsonTable(
                 inlineSplit(rewriteFetchTies(
                   escapeLiteralBackslashes(prestoSql))))))))))))))))))))))))))
+    val lx = new Lexer(s)
     var i = 0
     var code = new StringBuilder
     def flushCode(): Unit = {
@@ -5597,46 +5239,33 @@ object PrestoSql {
       code = new StringBuilder
     }
     while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' =>
-          // the unit-form date functions need their quoted unit visible to
-          // the code-segment regex: peek whether the tail of `code` ends
-          // with date_diff(/date_add( and, if so, pull the literal into
-          // the code segment (it is a \w+ unit name, never user data)
-          val tail = code.toString
-          // contexts where the upcoming literal must stay visible to the
-          // code-segment regexes: unit-form date fns and AT TIME ZONE
-          val unitCtx = """(?i)(\bdate_(diff|add)\s*\(\s*|\bAT\s+TIME\s+ZONE\s*)$""".r
-            .findFirstIn(tail).isDefined
-          var j = i + 1
-          val lit = new StringBuilder("'")
-          var closed = false
-          while (j < s.length && !closed) {
-            if (s.charAt(j) == '\'' && j + 1 < s.length && s.charAt(j + 1) == '\'') {
-              lit.append("''"); j += 2
-            } else if (s.charAt(j) == '\'') { lit.append('\''); closed = true; j += 1 }
-            else { lit.append(s.charAt(j)); j += 1 }
-          }
-          if (unitCtx) code.append(lit) else { flushCode(); out.append(lit) }
-          i = j
-        case '"' =>
-          // backticked identifiers stay IN the code segment so operand-
-          // context rewrites (AT TIME ZONE) still see them; function-name
-          // rewrites can't false-positive on them (they require a
-          // following '(' and identifiers are never called)
-          var j = i + 1
-          val ident = new StringBuilder
-          var closed = false
-          while (j < s.length && !closed) {
-            if (s.charAt(j) == '"' && j + 1 < s.length && s.charAt(j + 1) == '"') {
-              ident.append('"'); j += 2
-            } else if (s.charAt(j) == '"') { closed = true; j += 1 }
-            else { ident.append(s.charAt(j)); j += 1 }
-          }
-          code.append('`').append(ident).append('`')
-          i = j
-        case c =>
-          code.append(c); i += 1
+      if (lx.isCode(i)) { code.append(s.charAt(i)); i += 1 }
+      else {
+        val end = lx.tokenEnd(i)
+        val token = s.substring(i, end)
+        s.charAt(i) match {
+          case '\'' =>
+            // the unit-form date functions need their quoted unit visible to
+            // the code-segment regex: peek whether the tail of `code` ends
+            // with date_diff(/date_add( and, if so, pull the literal into
+            // the code segment (it is a \w+ unit name, never user data)
+            val tail = code.toString
+            // contexts where the upcoming literal must stay visible to the
+            // code-segment regexes: unit-form date fns and AT TIME ZONE
+            val unitCtx = """(?i)(\bdate_(diff|add)\s*\(\s*|\bAT\s+TIME\s+ZONE\s*)$""".r
+              .findFirstIn(tail).isDefined
+            if (unitCtx) code.append(token) else { flushCode(); out.append(token) }
+          case '"' =>
+            // backticked identifiers stay IN the code segment so operand-
+            // context rewrites (AT TIME ZONE) still see them; function-name
+            // rewrites can't false-positive on them (they require a
+            // following '(' and identifiers are never called)
+            val ident = token.substring(1).stripSuffix("\"").replace("\"\"", "\"")
+            code.append('`').append(ident).append('`')
+          case _ =>
+            flushCode(); out.append(token)
+        }
+        i = end
       }
     }
     flushCode()

@@ -12,6 +12,11 @@ class PrestoSqlSpec extends SparkSpec {
   test("double-quoted identifiers become backticks; literals untouched") {
     assert(PrestoSql.translate("""SELECT "a b" FROM t WHERE x = 'it''s "q"'""")
       == """SELECT `a b` FROM t WHERE x = 'it''s "q"'""")
+    // a quote inside a quoted identifier opens no literal: both
+    // backslashes stay ordinary characters, as in Trino
+    assert(PrestoSql.sql(spark,
+      """SELECT length('a\b') AS "o'k", length('c\d') AS n""")
+      .collect().head.toString == "[3,3]")
   }
 
   test("function names inside string literals are never rewritten") {
@@ -316,11 +321,15 @@ class PrestoSqlSpec extends SparkSpec {
     // exactly as written after the full script pipeline
     val hostile = Seq("split(", "ARRAY[1,2]", "a;b", "it's", "x]",
       "date_diff('hour'", "\"q\"", "map(array(", "%Y-%m-%d", "lax $.k",
-      "try(", "chr(", "json_extract(", "'';--", "AT TIME ZONE")
+      "try(", "chr(", "json_extract(", "'';--", "AT TIME ZONE",
+      "with ties", "json_table(", "TABLE(sequence(1, 3))", "match_recognize")
     val rnd = new scala.util.Random(7)
-    (1 to 40).foreach { _ =>
-      val content = (1 to (1 + rnd.nextInt(3)))
+    val mixes = (1 to 40).map { _ =>
+      (1 to (1 + rnd.nextInt(3)))
         .map(_ => hostile(rnd.nextInt(hostile.size))).mkString(" ")
+    }
+    // every item once on its own, then the random mixes
+    (hostile ++ mixes).foreach { content =>
       val lit = content.replace("'", "''")
       val got = PrestoSql.script(spark,
         s"SELECT 1 AS warm; SELECT '$lit' AS c")
@@ -334,6 +343,14 @@ class PrestoSqlSpec extends SparkSpec {
       == Seq("SELECT 'a;b'", " SELECT \"x;y\"", " SELECT 1"))
     assert(PrestoSql.splitStatements("SELECT 'it''s;ok'")
       == Seq("SELECT 'it''s;ok'"))
+    // a quote or `;` inside a comment neither opens a literal nor splits
+    assert(PrestoSql.splitStatements("-- don't\nSELECT 1; SELECT 2").size == 2)
+    assert(PrestoSql.splitStatements("SELECT 1 -- a;b\n; SELECT 2").size == 2)
+    assert(PrestoSql.script(spark,
+      "-- it's the header\nSELECT 1 AS x;\nSELECT 2 AS y")
+      .collect().head.getInt(0) == 2)
+    assert(PrestoSql.script(spark, "SELECT 1 AS x; -- done")
+      .collect().head.getInt(0) == 1)
   }
 
   test("script runs statements in order; CREATE VIEW becomes a temp view") {
@@ -2113,6 +2130,15 @@ class PrestoSqlSpec extends SparkSpec {
       "ALTER TABLE opt_spec EXECUTE optimize(file_size_threshold => '1GB')")
     assert(files() == 1, s"expected 1 file after optimize, got ${files()}")
     assert(spark.table(qualified).orderBy("k").collect().toSeq == before)
+    // in a commented script the plain comments drop and the staged
+    // rewrite's /*+ COALESCE */ hint survives
+    PrestoSql.script(spark, "INSERT INTO opt_spec SELECT 4, 'd'")
+    assert(files() >= 2, s"expected fragmentation, got ${files()} files")
+    PrestoSql.script(spark,
+      """-- compact again, it's cheap
+        |ALTER TABLE opt_spec EXECUTE optimize(file_size_threshold => '1GB');
+        |/* done */""".stripMargin)
+    assert(files() == 1, s"expected 1 file after optimize, got ${files()}")
     PrestoSql.script(spark, "DROP TABLE opt_spec")
   }
 
