@@ -1,6 +1,9 @@
 package graft.ops
 
-import graft.{Det, GraftSession, QueryModule, Tables}
+import graft.{Det, QueryModule, Tables}
+import graft.streaming.EventStreams
+import graft.streaming.StreamProof.{NoDataBatchesOff, RocksDBStateStore, drain,
+  files, toMemory, twoLifetimes, withProofConf}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -22,95 +25,23 @@ import org.apache.spark.sql.expressions.Window
   */
 object Events extends QueryModule {
 
-  // Streaming-proof checkpoints (offset WAL + state deltas + commit log)
-  // are per-run scaffolding, not the data path — production jobs put
-  // them on HDFS/S3. On this host /tmp is disk-backed ext4, so every
-  // trigger paid real fsync latency for throwaway metadata; tmpfs
-  // removes that without touching what the proofs measure (the
-  // streaming EXECUTION over the real on-disk fixtures). Falls back to
-  // the default temp dir when /dev/shm is absent.
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(); ()
+  // The 4-file fixtures the two-trigger proofs stream from, one per
+  // table and sfDir: each file holds a round-robin quarter of the table,
+  // and two files per trigger make two micro-batches.
+  private def fourFiles(key: String, batch: DataFrame, d: String): String =
+    Sources.fixtureOnce(key, d)(dir =>
+      batch.repartition(4).write.mode("overwrite").parquet(dir))
+
+  private def eventFiles(s: SparkSession, d: String): String =
+    fourFiles("graft_events4", Tables.events(s, d), d)
+
+  private def eventStream(s: SparkSession, d: String): DataFrame =
+    files(s, Tables.events(s, d).schema, eventFiles(s, d), 2)
+
+  private def documentStream(s: SparkSession, d: String): DataFrame = {
+    val batch = Tables.documents(s, d)
+    files(s, batch.schema, fourFiles("graft_documents4", batch, d), 2)
   }
-
-  private lazy val shmCheckpointRoot: Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      // conf-root checkpoints are NOT auto-deleted on query stop (Spark
-      // treats them as user-specified), and deleteOnExit cannot remove
-      // non-empty dirs — so each JVM gets its OWN UUID subdirectory and
-      // removes exactly that tree on shutdown. Deleting the shared root
-      // would clobber a concurrently running JVM's live checkpoints
-      // (bench + verify overlap on this host); leftovers from crashed
-      // JVMs are rare and tmpfs clears on reboot.
-      val d = new java.io.File(new java.io.File(shm, "graft_stream_ck"),
-        java.util.UUID.randomUUID().toString)
-      d.mkdirs()
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => deleteRecursively(d), "graft-shm-ck-cleanup"))
-      Some(d.getAbsolutePath)
-    } else None
-  }
-
-  /** Run a streaming proof with the state-store task count sized to the
-    * gate fixture (a fresh checkpoint pins the count at query start, so
-    * this is per-query, not session-global). Rationale: every stateful
-    * micro-batch commits one state file PER PARTITION per store — at 32
-    * shuffle partitions a 4-trigger symmetric join writes ~500 tiny
-    * state files for a 100 k-row fixture, and that file churn, not
-    * data, dominated the gated streaming proofs' bench cost. Sizing
-    * state partitions to stream volume is the production rule too; a
-    * 1000-executor deployment sets the session default high and this
-    * helper becomes a no-op (it only ever lowers to the gate size).
-    * `extra` confs join the same scope.
-    */
-  private def withStreamStateSizing[T](s: SparkSession,
-      extra: (String, String)*)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val ckKey = "spark.sql.streaming.checkpointLocation"
-    // 2, not the batch default: every micro-batch commits one state-store
-    // instance PER stateful operator PER shuffle partition (open + delta
-    // + snapshot bookkeeping each trigger), and the proofs' state is a
-    // few hundred keys — at 8 partitions the r8 streaming family spent
-    // ~¼ of its 27 s in state-store file churn. Production sizing is the
-    // opposite call (state must fit per-partition memory); the knob is
-    // per-query here precisely because the right value is data-sized.
-    val parts = key -> math.min(s.conf.get(key).toInt, 2).toString
-    val ck = shmCheckpointRoot.filter(_ => s.conf.getOption(ckKey).isEmpty)
-      .map(ckKey -> _)
-    // interpreted expressions for the PROOFS (r9 verdict #2): each
-    // micro-batch embeds fresh watermark/offset literals in the
-    // incremental plan, so generated sources differ per trigger and
-    // Janino recompiles EVERY batch — on 2–4-trigger fixture runs
-    // compilation dominates the work it would speed up (measured
-    // 15–20% per proof). Production streams keep codegen ON: the
-    // compile amortizes over hours of triggers and per-row cost rules
-    // at real volume. This knob is about what the proofs MEASURE —
-    // streaming semantics, not kernel throughput (the batch forms of
-    // every operator bench under full codegen).
-    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    GraftSession.withConf(s, (parts +: ck.toSeq) ++ interpreted ++ extra: _*)(f)
-  }
-
-  /** RocksDB state-store provider, required by transformWithState
-    * (e30–e33 and the tws specs); scoped per query with `withConf`. */
-  private[graft] val RocksDBStateStore =
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** r9 verdict #2 (streaming cost floor): Spark schedules one extra
-    * NO-DATA micro-batch whenever the watermark advanced, purely to
-    * evict state and emit watermark-DRIVEN results. Proofs whose
-    * emission is ARRIVAL-driven (inner joins, append-mode dedup,
-    * update-mode aggs, data-driven session/pattern flushes) get nothing
-    * from that batch — it costs a full trigger (~0.3–0.7 s) and emits
-    * zero rows — so they disable it per-query. Proofs whose results ARE
-    * watermark-driven (e25/e27 outer-join NULL rows) must keep it. */
-  private val NoDataBatchesOff =
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
   // shared by e9 (inner) / e9b (left outer): views joined to same-user
   // purchases within [0, 1h] via the streaming interval-join function
@@ -120,7 +51,7 @@ object Events extends QueryModule {
       joinType: String): DataFrame = {
     val e = Tables.events(s, d).filter(col("user_id") < 100)
       .withColumn("ts", col("ts").cast("timestamp"))
-    graft.streaming.EventStreams.viewPurchaseJoin(
+    EventStreams.viewPurchaseJoin(
         e.filter(col("event_type") === "view"),
         e.filter(col("event_type") === "purchase"), joinType)
       .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
@@ -156,6 +87,24 @@ object Events extends QueryModule {
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$dir/$side/sentinel")
     }
+
+  /** e25/e27/e36/e37/e38: the events of users below 100 as two streams,
+    * views and purchases, over [[streamJoinFixture]], joined by
+    * `viewPurchaseJoin(how)` into a memory sink, sentinel rows filtered
+    * out. Two files per trigger: the halves arrive together (the
+    * watermark is still 0 at that batch's start, so nothing is late) and
+    * the sentinels land in their own second micro-batch; a null flush
+    * then runs as the post-watermark third batch — same guarantees, half
+    * the trigger latency of one file per trigger. */
+  private def streamedJoin(s: SparkSession, d: String, how: String): DataFrame = {
+    val batch = Tables.events(s, d).filter(col("user_id") < 100)
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val base = streamJoinFixture(s, d, batch)
+    def src(side: String) = files(s, batch.schema, s"$base/$side/*", 2)
+    toMemory(EventStreams.viewPurchaseJoin(src("views"), src("purchases"), how),
+        "append")
+      .filter(col("user_id") < 100)
+  }
 
   val queries: Map[String, Q] = Map(
     // E1: tumbling 1h window counts per event_type.
@@ -384,19 +333,8 @@ object Events extends QueryModule {
     // multi-batch argument is batching-independent (that's its point),
     // and each extra micro-batch is pure trigger-scheduling latency
     // (22% of the whole r7 bench went to these two streaming proofs).
-    "e1b_stream_tumbling" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e1b", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      val qn = "graft_e1b_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams.tumblingCounts(stream)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+    "e1b_stream_tumbling" -> ((s, d) => withProofConf(s) {
+      toMemory(EventStreams.tumblingCounts(eventStream(s, d)), "complete")
         .select(unix_timestamp(col("window.start")).as("w_start"),
           col("event_type"), col("n"))
         .orderBy(col("w_start"), col("event_type"))
@@ -417,21 +355,13 @@ object Events extends QueryModule {
     // — the strongest possible oracle.
     // (no-data batches disabled: append-mode dedup emits first arrivals
     // immediately; the post-watermark batch only evicts seen-key state)
-    "e22_stream_dedup" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
+    "e22_stream_dedup" -> ((s, d) => withProofConf(s, NoDataBatchesOff) {
       val batch = Tables.events(s, d)
       val base = Sources.fixtureOnce("graft_e22", d)(dir =>
         batch.unionAll(batch.filter(col("event_id") % 7 === 0))
           .repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      val qn = "graft_e22_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .dedupEvents(stream, delay = "3650 days")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+      toMemory(EventStreams.dedupEvents(files(s, batch.schema, s"$base/src", 2),
+          delay = "3650 days"), "append")
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"), col("props"))
         .orderBy(col("event_id"))
@@ -443,19 +373,8 @@ object Events extends QueryModule {
     // re-emits the full session table each epoch, so the final table
     // equals the batch answer under ANY file batching; only session
     // rows ever reach the sink).
-    "e29_stream_session_dynamic" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e16", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      val qn = "graft_e29_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams.sessionCountsDynamic(stream)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+    "e29_stream_session_dynamic" -> ((s, d) => withProofConf(s) {
+      toMemory(EventStreams.sessionCountsDynamic(eventStream(s, d)), "complete")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"),
           max(col("n_events")).as("max_session_events"),
@@ -470,32 +389,20 @@ object Events extends QueryModule {
     // per-user RUNNING count — monotone per key — so max(running_n) in
     // the final append-mode table equals the batch per-user total under
     // any micro-batching.
-    "e30_stream_transform_state" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e16", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      GraftSession.withConf(s, RocksDBStateStore) {
-        import s.implicits._
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        val qn = "graft_e30_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = stream
+    "e30_stream_transform_state" -> ((s, d) => withProofConf(s, RocksDBStateStore) {
+      import s.implicits._
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+      toMemory(eventStream(s, d)
           .select(col("user_id").cast("long"), col("event_id").cast("long"))
           .as[(Long, Long)]
           .groupByKey(_._1)
           .transformWithState(
-            new graft.streaming.EventStreams.RunningCountProcessor,
+            new EventStreams.RunningCountProcessor,
             TimeMode.None(), OutputMode.Append())
-          .toDF("user_id", "running_n")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(qn).groupBy(col("user_id"))
-          .agg(max(col("running_n")).as("n_events"))
-          .orderBy(col("user_id"))
-      }
+          .toDF("user_id", "running_n"), "append")
+        .groupBy(col("user_id"))
+        .agg(max(col("running_n")).as("n_events"))
+        .orderBy(col("user_id"))
     }),
 
     // E31: transformWithState with LIST state under the gate — the
@@ -503,38 +410,25 @@ object Events extends QueryModule {
     // every emission carries the monotone n_seen, so the final-table row
     // with max n_seen per user is the full-data session summary under
     // any batching/arrival order. Oracle = e16's batch derivation.
-    "e31_stream_tws_sessions" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e16", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      GraftSession.withConf(s, RocksDBStateStore) {
-        import s.implicits._
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        val qn = "graft_e31_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = stream
+    "e31_stream_tws_sessions" -> ((s, d) => withProofConf(s, RocksDBStateStore) {
+      import s.implicits._
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+      toMemory(eventStream(s, d)
           .select(col("user_id").cast("long"),
             unix_micros(col("ts").cast("timestamp")))
           .as[(Long, Long)]
           .groupByKey(_._1)
           .transformWithState(
-            new graft.streaming.EventStreams.SessionListProcessor,
+            new EventStreams.SessionListProcessor,
             TimeMode.None(), OutputMode.Append())
-          .toDF("user_id", "n_seen", "n_sessions", "max_len", "n_total")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(qn)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("user_id"))
-              .orderBy(col("n_seen").desc)))
-          .filter(col("rk") === 1)
-          .select(col("user_id"), col("n_sessions"),
-            col("max_len").as("max_session_events"), col("n_total"))
-          .orderBy(col("user_id"))
-      }
+          .toDF("user_id", "n_seen", "n_sessions", "max_len", "n_total"), "append")
+        .withColumn("rk", row_number().over(
+          Window.partitionBy(col("user_id"))
+            .orderBy(col("n_seen").desc)))
+        .filter(col("rk") === 1)
+        .select(col("user_id"), col("n_sessions"),
+          col("max_len").as("max_session_events"), col("n_total"))
+        .orderBy(col("user_id"))
     }),
 
     // E32: transformWithState EVENT-TIME TIMERS under the gate — the
@@ -549,8 +443,10 @@ object Events extends QueryModule {
     // emitted exactly once before the drain ends (no-data batches
     // disabled: the flush is data-batch-driven by construction).
     // Oracle = e17's strict-gap batch derivation verbatim.
-    "e32_tws_timer_sessions" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
+    "e32_tws_timer_sessions" -> ((s, d) =>
+        withProofConf(s, NoDataBatchesOff, RocksDBStateStore) {
       import s.implicits._
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val batch = Tables.events(s, d).select(col("user_id"), col("ts"))
       val base = Sources.fixtureOnce("graft_e32", d) { dir =>
         val mm = batch.agg(min(col("ts")), max(col("ts"))).collect().head
@@ -567,31 +463,21 @@ object Events extends QueryModule {
               timestamp_millis(lit(hi + days * 24 * 3600 * 1000)).as("ts"))
             .coalesce(1).write.mode("overwrite").parquet(s"$dir/src/s$days")
       }
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src/*")
-      GraftSession.withConf(s, RocksDBStateStore) {
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        val qn = "graft_e32_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = stream
+      toMemory(files(s, batch.schema, s"$base/src/*", 1)
           .withWatermark("ts", "1 hour")
           .select(col("user_id").cast("long"), unix_micros(col("ts")))
           .as[(Long, Long)]
           .groupByKey(_._1)
           .transformWithState(
-            new graft.streaming.EventStreams.TimerSessionProcessor,
+            new EventStreams.TimerSessionProcessor,
             TimeMode.EventTime(), OutputMode.Append())
-          .toDF("user_id", "session_start_us", "n_events", "closed_by")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table(qn).filter(col("user_id") >= 0)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_sessions"),
-            max(col("n_events")).as("max_session_events"),
-            sum(col("n_events")).as("n_total"))
-          .orderBy(col("user_id"))
-      }
+          .toDF("user_id", "session_start_us", "n_events", "closed_by"), "append")
+        .filter(col("user_id") >= 0)
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_sessions"),
+          max(col("n_events")).as("max_session_events"),
+          sum(col("n_events")).as("n_total"))
+        .orderBy(col("user_id"))
     }),
 
     // E33: transformWithState RESTART RECOVERY — e24's two-lifetime
@@ -603,49 +489,22 @@ object Events extends QueryModule {
     // n_seen, so if recovery lost buffered timestamps the post-restart
     // max(n_seen) per user would undercount and the rollup would miss
     // the batch answer. Oracle = e31's (e16 batch session derivation).
-    "e33_tws_restart_recovery" -> ((s, d) => withStreamStateSizing(s) {
+    "e33_tws_restart_recovery" -> ((s, d) => withProofConf(s, RocksDBStateStore) {
       import s.implicits._
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e33", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val full = new java.io.File(s"$base/src").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val work = Sources.scratch("graft_e33_run")
-      val srcDir = new java.io.File(s"$work/src"); srcDir.mkdirs()
-      def copyIn(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          new java.io.File(srcDir, f.getName).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      def drain(): Unit = {
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-        // 2 files/trigger = ONE trigger per lifetime: the multi-batch
-        // state story is e30/e31's; THIS proof is about the restart
-        // boundary, and extra triggers inside a lifetime add nothing
-        val stream = s.readStream.schema(batch.schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$work/src")
-        val q = stream
-          .select(col("user_id").cast("long"),
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+      // 2 files/trigger = ONE trigger per lifetime: the multi-batch
+      // state story is e30/e31's; THIS proof is about the restart
+      // boundary, and extra triggers inside a lifetime add nothing
+      val out = twoLifetimes(s, Tables.events(s, d).schema, eventFiles(s, d), 2)(
+        _.select(col("user_id").cast("long"),
             unix_micros(col("ts").cast("timestamp")))
           .as[(Long, Long)]
           .groupByKey(_._1)
           .transformWithState(
-            new graft.streaming.EventStreams.SessionListProcessor,
+            new EventStreams.SessionListProcessor,
             TimeMode.None(), OutputMode.Append())
-          .toDF("user_id", "n_seen", "n_sessions", "max_len", "n_total")
-          .writeStream.format("parquet")
-          .option("path", s"$work/data")
-          .option("checkpointLocation", s"$work/chk")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      GraftSession.withConf(s, RocksDBStateStore) {
-        copyIn(full.take(2).toSeq)
-        drain()                     // first lifetime: half the input
-        copyIn(full.drop(2).toSeq)
-        drain()                     // restart: ListState restored
-      }
-      s.read.parquet(s"$work/data")
+          .toDF("user_id", "n_seen", "n_sessions", "max_len", "n_total"))
+      s.read.parquet(out)
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("user_id"))
             .orderBy(col("n_seen").desc)))
@@ -664,25 +523,18 @@ object Events extends QueryModule {
     // month keeps the per-trigger file count bounded the way a real
     // ingest pipeline buckets by date. The read-back must equal the
     // batch filter row-for-row, whatever the micro-batching.
-    "e23_stream_parquet_sink" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e23", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
+    "e23_stream_parquet_sink" -> ((s, d) => withProofConf(s) {
       val out = Sources.scratch("graft_e23_out")
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      val q = stream.filter(col("event_type") === "purchase")
+      drain(eventStream(s, d).filter(col("event_type") === "purchase")
         .withColumn("month",
           date_format(col("ts"), "yyyy-MM"))
         .select(col("event_id"), col("user_id"), col("ts"), col("value"),
           col("month"))
         .writeStream.format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
+        .option("path", out)
         .partitionBy("month")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$out/data")
+        .outputMode("append"))
+      s.read.parquet(out)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("value"), col("month").cast("string").as("month"))
         .orderBy(col("event_id"))
@@ -697,35 +549,11 @@ object Events extends QueryModule {
     // equal the batch answer even though two separate query lifetimes
     // wrote it. This is the failure-recovery contract every production
     // streaming ETL job leans on.
-    "e24_stream_restart_recovery" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e24", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val full = new java.io.File(s"$base/src").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val work = Sources.scratch("graft_e24_run")
-      val srcDir = new java.io.File(s"$work/src"); srcDir.mkdirs()
-      def copyIn(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          new java.io.File(srcDir, f.getName).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      def drain(): Unit = {
-        val stream = s.readStream.schema(batch.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$work/src")
-        val q = stream.filter(col("event_type") =!= "error")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-          .writeStream.format("parquet")
-          .option("path", s"$work/data")
-          .option("checkpointLocation", s"$work/chk")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      copyIn(full.take(2).toSeq)
-      drain()                       // first lifetime: half the input
-      copyIn(full.drop(2).toSeq)
-      drain()                       // restart from the same checkpoint
-      s.read.parquet(s"$work/data")
+    "e24_stream_restart_recovery" -> ((s, d) => withProofConf(s) {
+      val out = twoLifetimes(s, Tables.events(s, d).schema, eventFiles(s, d), 1)(
+        _.filter(col("event_type") =!= "error")
+          .select(col("event_id"), col("user_id"), col("ts"), col("value")))
+      s.read.parquet(out)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("user_id"), col("value"))
         .orderBy(col("event_id"))
@@ -741,19 +569,8 @@ object Events extends QueryModule {
     // the batch session_window answer (e14's oracle) under ANY
     // batching. Complete mode keeps all session state, which is what
     // makes the cross-batch merge oracle-exact.
-    "e16_stream_session" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e16", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      val qn = "graft_e16_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams.sessionCounts(stream)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+    "e16_stream_session" -> ((s, d) => withProofConf(s) {
+      toMemory(EventStreams.sessionCounts(eventStream(s, d)), "complete")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"),
           max(col("n_events")).as("max_session_events"),
@@ -781,7 +598,7 @@ object Events extends QueryModule {
     //    unemitted.
     // The rollup of emitted sessions then equals the batch derivation
     // exactly (oracle mirrors the sessionizer's strict `> gap` split).
-    "e17_stream_state_sessions" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
+    "e17_stream_state_sessions" -> ((s, d) => withProofConf(s, NoDataBatchesOff) {
       import s.implicits._
       val batch = Tables.events(s, d).select(col("user_id"), col("ts"))
       val base = Sources.fixtureOnce("graft_e17", d) { dir =>
@@ -809,22 +626,14 @@ object Events extends QueryModule {
             timestamp_millis(lit(hi + 90L * 24 * 3600 * 1000)))
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/src/sentinel")
       }
-      val src = s"$base/src"
       // one file per trigger ⇒ three genuine time-ordered micro-batches
       // (FileStreamSource schedules oldest modification time first);
       // sessions close on sentinel ARRIVAL (data-driven), so the
       // post-watermark no-data batch is pure overhead — disabled above
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
-      val qn = "graft_e17_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams.sessionizeWithState(
-          stream.as[graft.streaming.EventStreams.SessionInput],
-          watermarkDelay = "365 days")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+      val stream = files(s, batch.schema, s"$base/src/*", 1)
+      toMemory(EventStreams.sessionizeWithState(
+          stream.as[EventStreams.SessionInput],
+          watermarkDelay = "365 days"), "append")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"),
           max(col("n_events")).as("max_session_events"),
@@ -853,7 +662,7 @@ object Events extends QueryModule {
     // that holds at 1000 executors.
     // (no-data batches disabled: inner-join emission is arrival-driven;
     // the post-watermark batch only evicts state and emits nothing)
-    "e18_stream_stream_join" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
+    "e18_stream_stream_join" -> ((s, d) => withProofConf(s, NoDataBatchesOff) {
       val batch = Tables.events(s, d).filter(col("user_id") < 100)
         .withColumn("ts", col("ts").cast("timestamp"))
       val base = Sources.fixtureOnce("graft_e18", d) { dir =>
@@ -867,16 +676,9 @@ object Events extends QueryModule {
           batch.filter(col("event_type") === tpe && cond)
             .coalesce(1).write.mode("overwrite").parquet(s"$dir/$side/$half")
       }
-      def src(side: String) = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/$side/*")
-      val qn = "graft_e18_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .viewPurchaseJoin(src("views"), src("purchases"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+      def src(side: String) = files(s, batch.schema, s"$base/$side/*", 1)
+      toMemory(EventStreams.viewPurchaseJoin(src("views"), src("purchases")),
+          "append")
         .select(col("user_id"), col("view_id"), col("purchase_id"),
           col("lag_us"))
         .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
@@ -895,26 +697,8 @@ object Events extends QueryModule {
     // so every trailing unmatched view flushes its NULL row before the
     // drain ends. Sentinel rows themselves stay in state unemitted and
     // are filtered out. Oracle = e9b's batch interval left join.
-    "e25_stream_stream_left" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d).filter(col("user_id") < 100)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val base = streamJoinFixture(s, d, batch)
-      // two files per trigger: the halves arrive together (watermark is
-      // still 0 at that batch's start, so nothing is late) and the
-      // sentinels land in their own second micro-batch; the null flush
-      // then runs as the post-watermark third batch — same guarantees,
-      // half the trigger latency of one-file-per-trigger
-      def src(side: String) = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/$side/*")
-      val qn = "graft_e25_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .viewPurchaseJoin(src("views"), src("purchases"), "left")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
-        .filter(col("user_id") < 100)
+    "e25_stream_stream_left" -> ((s, d) => withProofConf(s) {
+      streamedJoin(s, d, "left")
         .select(col("user_id"), col("view_id"), col("purchase_id"),
           col("lag_us"))
         .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
@@ -942,21 +726,8 @@ object Events extends QueryModule {
     // and measured a NO-OP — complete-mode aggregation never schedules
     // the no-data batch at all (triggers=2 with and without) — so those
     // sites keep no-data batches on.
-    "e36_stream_stream_semi" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
-      val batch = Tables.events(s, d).filter(col("user_id") < 100)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val base = streamJoinFixture(s, d, batch)
-      def src(side: String) = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/$side/*")
-      val qn = "graft_e36_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .viewPurchaseJoin(src("views"), src("purchases"), "left_semi")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
-        .filter(col("user_id") < 100)
+    "e36_stream_stream_semi" -> ((s, d) => withProofConf(s, NoDataBatchesOff) {
+      streamedJoin(s, d, "left_semi")
         .select(col("user_id"), col("view_id"))
         .orderBy(col("user_id"), col("view_id"))
     }),
@@ -970,21 +741,8 @@ object Events extends QueryModule {
     // bound); the shared fixture's sentinels push the watermark past
     // every real row so trailing unmatched purchases flush before the
     // drain ends. Oracle = the batch right interval join.
-    "e37_stream_stream_right" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d).filter(col("user_id") < 100)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val base = streamJoinFixture(s, d, batch)
-      def src(side: String) = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/$side/*")
-      val qn = "graft_e37_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .viewPurchaseJoin(src("views"), src("purchases"), "right_outer")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
-        .filter(col("user_id") < 100)
+    "e37_stream_stream_right" -> ((s, d) => withProofConf(s) {
+      streamedJoin(s, d, "right_outer")
         .select(col("user_id"), col("view_id"), col("purchase_id"),
           col("lag_us"))
         .orderBy(col("user_id"), col("purchase_id"), col("view_id"))
@@ -1007,21 +765,8 @@ object Events extends QueryModule {
     // e25 left, e27 full, e36 semi, e37 right this closes the join-
     // mode matrix at ALL SIX modes a funnel user can ask for. Oracle =
     // the batch NOT EXISTS anti join.
-    "e38_stream_stream_anti" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d).filter(col("user_id") < 100)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val base = streamJoinFixture(s, d, batch)
-      def src(side: String) = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/$side/*")
-      val qn = "graft_e38_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .viewPurchaseJoin(src("views"), src("purchases"), "left_anti")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
-        .filter(col("user_id") < 100)
+    "e38_stream_stream_anti" -> ((s, d) => withProofConf(s) {
+      streamedJoin(s, d, "left_anti")
         .select(col("user_id"), col("view_id"))
         .orderBy(col("user_id"), col("view_id"))
     }),
@@ -1035,21 +780,8 @@ object Events extends QueryModule {
     // user_id). Oracle = the batch full interval join — for full outer
     // the unmatched-purchase rows carry user_id from the purchase side
     // (coalesce in viewPurchaseJoin).
-    "e27_stream_stream_full" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d).filter(col("user_id") < 100)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val base = streamJoinFixture(s, d, batch)
-      def src(side: String) = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/$side/*")
-      val qn = "graft_e27_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .viewPurchaseJoin(src("views"), src("purchases"), "full_outer")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
-        .filter(col("user_id") < 100)
+    "e27_stream_stream_full" -> ((s, d) => withProofConf(s) {
+      streamedJoin(s, d, "full_outer")
         .select(col("user_id"), col("view_id"), col("purchase_id"),
           col("lag_us"))
         .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
@@ -1072,14 +804,9 @@ object Events extends QueryModule {
     // The delta dir is run-unique (rep-safe, like sc22).
     // (no-data batches disabled: update mode emits only CHANGED groups,
     // and a no-data batch changes nothing — it appends no delta)
-    "e26_stream_update_mode" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e26", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
+    "e26_stream_update_mode" -> ((s, d) => withProofConf(s, NoDataBatchesOff) {
       val deltas = Sources.scratch("graft_e26_deltas")
-      val q = stream
+      drain(eventStream(s, d)
         .withWatermark("ts", "3650 days")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -1089,8 +816,7 @@ object Events extends QueryModule {
               col("event_type"), col("n"), lit(batchId).as("batch_id"))
             .write.mode("append").parquet(deltas)
           ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+        })
       val w = Window.partitionBy(col("w_start"), col("event_type"))
         .orderBy(col("batch_id").desc)
       s.read.parquet(deltas)
@@ -1108,21 +834,10 @@ object Events extends QueryModule {
     // up), then aggregates hourly per-segment counts in complete mode.
     // Counts are associative/commutative, so the final table is
     // batching-independent and equals the batch join+rollup exactly.
-    "e20_stream_enrichment" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e20", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      val qn = "graft_e20_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .enrichedCounts(stream.withColumn("ts", col("ts").cast("timestamp")),
-          Tables.customer(s, d))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+    "e20_stream_enrichment" -> ((s, d) => withProofConf(s) {
+      toMemory(EventStreams.enrichedCounts(
+          eventStream(s, d).withColumn("ts", col("ts").cast("timestamp")),
+          Tables.customer(s, d)), "complete")
         .select(unix_timestamp(col("window.start")).as("w_start"),
           col("segment"), col("n"))
         .orderBy(col("w_start"), col("segment"))
@@ -1136,23 +851,12 @@ object Events extends QueryModule {
     // a real multi-micro-batch run), and the label is the l30 argmax
     // chain over the aggregated scores. Docs with NO model hits never
     // reach the sink (inner model join) — the oracle filters the same.
-    "e34_stream_model_scoring" -> ((s, d) => withStreamStateSizing(s) {
+    "e34_stream_model_scoring" -> ((s, d) => withProofConf(s) {
       import s.implicits._
-      val batch = Tables.documents(s, d)
-      val base = Sources.fixtureOnce("graft_e34", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
       val lex = (DomainLexicons.storage.map((_, "storage")) ++
         DomainLexicons.compute.map((_, "compute")) ++
         DomainLexicons.query.map((_, "query"))).toDF("word", "domain")
-      val qn = "graft_e34_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams.lexiconScores(stream, lex)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+      toMemory(EventStreams.lexiconScores(documentStream(s, d), lex), "complete")
         .withColumn("domain",
           when(col("s_compute") >= col("s_query") &&
             col("s_compute") >= col("s_storage"), "compute")
@@ -1185,7 +889,7 @@ object Events extends QueryModule {
     // w₀ = 0 ⇒ per-doc residual ±500000, g = Σ cnt·gq, w₁ =
     // −floorDiv(4g, n), score = Σ cnt·w₁. Scoring the corpus with the
     // streamed-trained w₁ is the oracle-gated output.
-    "e35_stream_model_training" -> ((s, d) => withStreamStateSizing(s) {
+    "e35_stream_model_training" -> ((s, d) => withProofConf(s) {
       import s.implicits._
       val vocabWords = DomainLexicons.storage.take(2) ++
         Seq("qpos", "qneg", "qbias")
@@ -1208,15 +912,10 @@ object Events extends QueryModule {
             element_at(widMap, col("w")).as("wid"))
           .groupBy(col("doc_id"), col("pos"), col("wid"))
           .agg(count(lit(1)).as("cnt"))
-      val batch = Tables.documents(s, d)
-      val base = Sources.fixtureOnce("graft_e35", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
       val g = new Array[Long](V)
       var nDocs = 0L
       val lock = new Object
-      val q = stream.writeStream.outputMode("update")
+      drain(documentStream(s, d).writeStream.outputMode("update")
         .foreachBatch { (df: DataFrame, _: Long) =>
           val cached = df.localCheckpoint()
           val wDf = broadcast(
@@ -1238,8 +937,7 @@ object Events extends QueryModule {
             nDocs += n
           }
           ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+        })
       val nd = math.max(1L, nDocs)
       val w1Df = broadcast(g.zipWithIndex.toSeq.map { case (gr, k) =>
         (k, -Math.floorDiv(gr * 4L, nd)) }.toDF("wid", "wq"))
@@ -1256,20 +954,10 @@ object Events extends QueryModule {
     // E21: gated streaming SLIDING windows — the overlapping-window
     // state shape (each event lands in 4 windows) as a real run;
     // complete-mode counts are batching-independent like e1b/e16/e20.
-    "e21_stream_sliding" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      val base = Sources.fixtureOnce("graft_e21", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src"))
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$base/src")
-      val qn = "graft_e21_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams
-        .slidingCounts(stream.withColumn("ts", col("ts").cast("timestamp")))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+    "e21_stream_sliding" -> ((s, d) => withProofConf(s) {
+      toMemory(EventStreams.slidingCounts(
+          eventStream(s, d).withColumn("ts", col("ts").cast("timestamp"))),
+          "complete")
         .select(unix_timestamp(col("window.start")).as("w_start"),
           col("event_type"), col("n"))
         // sliding windows materialize only slides CONTAINING data on
@@ -1300,7 +988,7 @@ object Events extends QueryModule {
     // keeps the quiet-gap flush and never buffers a full corpus.
     // (no-data batches disabled: the flush fires during s368's DATA
     // batch by fixture design — the trailing no-data batch emits nothing)
-    "e19_stream_pattern" -> ((s, d) => withStreamStateSizing(s, NoDataBatchesOff) {
+    "e19_stream_pattern" -> ((s, d) => withProofConf(s, NoDataBatchesOff) {
       import s.implicits._
       import RowPattern._
       val steps = Seq(
@@ -1333,20 +1021,11 @@ object Events extends QueryModule {
               lit(-1L).as("event_id"), lit("sentinel").as("event_type"))
             .coalesce(1).write.mode("overwrite").parquet(s"$dir/src/s$days")
       }
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src/*")
-      val qn = "graft_e19_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.EventStreams.patternMatchesWithState(
-          graft.streaming.EventStreams.patternRows(
-            stream, "user_id", "ts", "event_id", steps),
+      toMemory(EventStreams.patternMatchesWithState(
+          EventStreams.patternRows(files(s, batch.schema, s"$base/src/*", 1),
+            "user_id", "ts", "event_id", steps),
           steps.map(_.quant), withinUs = 24L * 3600 * 1000000,
-          watermarkDelay = "365 days")
-        .toDF()
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+          watermarkDelay = "365 days"), "append")
         .filter(col("user_id") >= 0 && col("match_no") === 1)
         .select(col("user_id"), col("match_no"), col("start_us"),
           col("end_us"), col("n_rows"))
@@ -1355,31 +1034,17 @@ object Events extends QueryModule {
 
     // E10: a STREAMING-EXECUTED result under the oracle gate (r4 verdict
     // missing #5) — the foreachBatch keyed-upsert sink run as a real
-    // Structured Streaming query over a file source (one file per
-    // micro-batch; no driver-side data movement). The per-batch merge is
-    // last-write-wins by max(struct(ts, event_id, type)) per user —
-    // associative and commutative — so the final table equals the batch
-    // answer REGARDLESS of how files batch up, which is what makes a
-    // streaming execution oracle-checkable.
-    "e10_stream_upsert" -> ((s, d) => withStreamStateSizing(s) {
-      val batch = Tables.events(s, d)
-      // pre-split into 4 files, two per micro-batch → 2 micro-batches:
-      // the minimum genuine multi-epoch run (last-write-wins is
-      // commutative, so the answer is batching-independent); every
-      // extra trigger beyond two is pure scheduling latency. Source
-      // files are the build-once fixture; the upsert TABLE and
-      // checkpoint are fresh per invocation (reusing the checkpoint
-      // would skip the run).
-      val srcDir = Sources.fixtureOnce("graft_e10_src", d)(dir =>
-        batch.repartition(4).write.mode("overwrite").parquet(s"$dir/src")) +
-        "/src"
-      val base = Sources.scratch("graft_e10_out")
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "2").parquet(srcDir)
-      val q = graft.streaming.EventStreams.upsertSink(
-        stream, s"$base/table", s"$base/ck")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/table")
+    // Structured Streaming query over a file source (two micro-batches,
+    // the minimum genuine multi-epoch run; no driver-side data movement).
+    // The per-batch merge is last-write-wins by max(struct(ts, event_id,
+    // type)) per user — associative and commutative — so the final table
+    // equals the batch answer REGARDLESS of how files batch up, which is
+    // what makes a streaming execution oracle-checkable. The upsert
+    // table is fresh per invocation.
+    "e10_stream_upsert" -> ((s, d) => withProofConf(s) {
+      val table = Sources.scratch("graft_e10_out") + "/table"
+      drain(EventStreams.upsertWriter(eventStream(s, d), table))
+      s.read.parquet(table)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         .orderBy(col("user_id"))
     }),

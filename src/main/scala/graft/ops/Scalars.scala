@@ -114,10 +114,8 @@ private[ops] object GeoFix {
 
 object Scalars extends QueryModule {
 
-  // per-JVM scratch discriminator for queries that round-trip through a
-  // tmpdir file (sc22): stable within a run, distinct across runs
-  private val runToken: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+  // sc22's per-JVM scratch dir: stable within a run, distinct across runs
+  private lazy val sc22Dir: String = Sources.scratch("graft_sc22")
 
   val queries: Map[String, Q] = Map(
     // String family.
@@ -2601,12 +2599,11 @@ object Scalars extends QueryModule {
     }),
 
     "sc22_timestamp_ntz" -> ((s, d) => {
-      // scratch location unique per RUN (one UUID per JVM), overwritten
+      // scratch location unique per RUN (one dir per JVM), overwritten
       // within it: repeated bench reps in one run don't accumulate, and
       // two concurrent runs on one host can't clobber each other's file
       // mid-read (a fixed shared path did exactly that)
-      val out = System.getProperty("java.io.tmpdir") +
-        s"/graft_sc22_$runToken/ntz.parquet"
+      val out = s"$sc22Dir/ntz.parquet"
       Tables.events(s, d).filter(col("event_id") < 5000)
         .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ntz"))
         .write.mode("overwrite").parquet(out)

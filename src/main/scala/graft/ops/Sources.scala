@@ -27,10 +27,20 @@ object Sources extends QueryModule {
   // batch scratch deliberately stays on the default temp dir (unlike the
   // streaming checkpoints, whose per-trigger WAL latency did move).
   private[graft] def scratch(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix)
-    dir.toFile.deleteOnExit()
+    val dir = Files.createTempDirectory(prefix).toFile
+    deleteAtExit(dir)
     dir.toString
   }
+
+  // Scratch dirs are removed, recursively, when the JVM exits and not
+  // before: a query's result may read its scratch files lazily, after
+  // the query has returned.
+  private val atExit = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  Runtime.getRuntime.addShutdownHook(new Thread(
+    () => atExit.forEach(f => org.apache.commons.io.FileUtils.deleteQuietly(f)),
+    "graft-scratch-cleanup"))
+
+  private[graft] def deleteAtExit(dir: java.io.File): Unit = atExit.add(dir)
 
   // Build-once streaming-source fixtures, keyed by (prefix, sfDir): the
   // first call materializes the files, later calls in the same JVM

@@ -1315,7 +1315,8 @@ object PrestoSql {
     // split into the head (MERGE INTO … ON cond) and the WHEN clauses;
     // each clause is `WHEN [NOT] MATCHED [AND <cond>] THEN <action>`
     val clauseRe = """(?i)\bWHEN\s+(NOT\s+)?MATCHED\b""".r
-    val marks = clauseRe.findAllMatchIn(stmt).toSeq
+    val lx = new Lexer(stmt)
+    val marks = clauseRe.findAllMatchIn(stmt).filter(m => lx.isCode(m.start)).toSeq
     require(marks.nonEmpty, "MERGE needs at least one WHEN clause")
     val head = stmt.substring(0, marks.head.start)
     val clauses = marks.zipWithIndex.map { case (m, i) =>
@@ -1482,8 +1483,9 @@ object PrestoSql {
       val open = hm.end - 1
       require(close > 0, "unbalanced JSON_TABLE parens")
       val inside = s.substring(open + 1, close)
-      require(!"""(?is)\bNESTED\s+PATH\b""".r.findFirstIn(inside).isDefined &&
-        !"""(?is)\bPLAN\s*\(""".r.findFirstIn(inside).isDefined,
+      val ilx = new Lexer(inside)
+      require("""(?is)\bNESTED\s+PATH\b|\bPLAN\s*\(""".r.findAllMatchIn(inside)
+        .forall(m => !ilx.isCode(m.start)),
         "JSON_TABLE NESTED PATH / PLAN clauses are not supported")
       val parts = splitTopLevel(inside, ',')
       require(parts.length >= 2, "JSON_TABLE requires (expr, 'path' COLUMNS(…))")
@@ -3369,8 +3371,9 @@ object PrestoSql {
         val sep =
           if (args.size == 2) {
             val sp = args(1)
+            val slx = new Lexer(sp)
             require("""(?is)\bON\s+OVERFLOW\s+TRUNCATE\b""".r
-              .findFirstIn(sp).isEmpty,
+              .findAllMatchIn(sp).forall(m => !slx.isCode(m.start)),
               "LISTAGG ON OVERFLOW TRUNCATE is not supported (results are never truncated)")
             """(?is)\s+ON\s+OVERFLOW\s+ERROR\s*$""".r.replaceFirstIn(sp, "")
           } else "''"

@@ -328,14 +328,19 @@ object EventStreams {
     * re-run the same idempotent merge.
     */
   def upsertSink(events: DataFrame, tableDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    upsertWriter(events, tableDir)
+      .option("checkpointLocation", checkpointDir).start()
+
+  /** [[upsertSink]]'s writer, not yet started. */
+  def upsertWriter(events: DataFrame, tableDir: String)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     def latestPerKey(df: DataFrame): DataFrame =
       df.groupBy(col("user_id"))
         .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("m"))
         .select(col("user_id"), col("m.ts").as("ts"),
           col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))
     events.writeStream
-      .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val s = batch.sparkSession
@@ -348,7 +353,6 @@ object EventStreams {
         merged.localCheckpoint().write.mode("overwrite").parquet(tableDir)
         ()
       }
-      .start()
   }
 
   // ---- custom state: streaming row-pattern matching (E8) ----------------

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, StreamProof}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,12 +24,8 @@ class FileStreamSpec extends SparkSpec {
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
     val streamed = spark.readStream.schema(schema).parquet(dir)
-    val q = EventStreams.tumblingCounts(streamed)
-      .writeStream.format("memory").queryName("t_file_tumbling")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val got = spark.table("t_file_tumbling")
+    val got = StreamProof.toMemory(
+        EventStreams.tumblingCounts(streamed), "complete")
       .select(unix_timestamp($"window.start").as("w"), $"event_type", $"n")
       .orderBy("w", "event_type").as[(Long, String, Long)].collect()
     val expected = all

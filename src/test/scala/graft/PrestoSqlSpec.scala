@@ -336,6 +336,28 @@ class PrestoSqlSpec extends SparkSpec {
         .collect().head.getString(0)
       assert(got == content, s"literal corrupted: <$content> -> <$got>")
     }
+    // statements whose clause keywords also appear inside a literal:
+    // the keyword checks must read code only
+    val merged = PrestoSql.script(spark,
+      """DROP TABLE IF EXISTS prb_t;
+        |CREATE TABLE prb_t AS SELECT * FROM (VALUES (1, 'old')) AS t(k, tag);
+        |CREATE VIEW prb_src AS SELECT * FROM (VALUES (1)) AS s(k);
+        |MERGE INTO prb_t AS tg USING prb_src AS sr ON tg.k = sr.k
+        |WHEN MATCHED THEN UPDATE SET tag = 'when matched then';
+        |SELECT tag FROM prb_t""".stripMargin).collect().head.getString(0)
+    spark.catalog.dropTempView("prb_src")
+    PrestoSql.script(spark, "DROP TABLE IF EXISTS prb_t; SELECT 1 AS one")
+    assert(merged == "when matched then")
+    val agg = PrestoSql.sql(spark,
+      """SELECT listagg(v, ' ON OVERFLOW TRUNCATE ') WITHIN GROUP (ORDER BY v) AS m
+        |FROM (VALUES ('a'), ('b')) AS t(v)""".stripMargin)
+      .collect().head.getString(0)
+    assert(agg == "a ON OVERFLOW TRUNCATE b")
+    val shredded = PrestoSql.sql(spark,
+      """SELECT jt.b FROM (SELECT '{"b":"x"}' AS j) t,
+        |  JSON_TABLE(j, 'lax $' COLUMNS(b varchar PATH '$.nested path')) AS jt
+        |""".stripMargin).collect()
+    assert(shredded.length == 1)
   }
 
   test("script splitting respects literals and quoted identifiers") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, StreamProof}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -27,11 +27,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Ev]
     stream.addData(sample)
-    val q = EventStreams.tumblingCounts(stream.toDF())
-      .writeStream.format("memory").queryName("t_tumbling")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("t_tumbling")
+    val streamed = StreamProof.toMemory(
+        EventStreams.tumblingCounts(stream.toDF()), "complete")
       .select(unix_timestamp($"window.start").as("w"), $"event_type", $"n")
       .orderBy("w", "event_type").as[(Long, String, Long)].collect()
     val batch = sample.toDF()
@@ -46,11 +43,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Ev]
     stream.addData(sample.distinct)
-    val q = EventStreams.slidingCounts(stream.toDF())
-      .writeStream.format("memory").queryName("t_sliding")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("t_sliding")
+    val streamed = StreamProof.toMemory(
+        EventStreams.slidingCounts(stream.toDF()), "complete")
       .select(unix_timestamp($"window.start").as("w"), $"event_type", $"n")
       .orderBy("w", "event_type").as[(Long, String, Long)].collect()
     val batch = sample.distinct.toDF()
@@ -65,11 +59,9 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Ev]
     stream.addData(sample)
-    val q = EventStreams.dedupEvents(stream.toDF())
-      .writeStream.format("memory").queryName("t_dedup")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.table("t_dedup").count() == 4) // 5 rows, one dup id
+    val sunk = StreamProof.toMemory(
+        EventStreams.dedupEvents(stream.toDF()), "append")
+    assert(sunk.count() == 4) // 5 rows, one dup id
   }
 
   test("stream-static enrichment join == batch join (E6)") {
@@ -77,11 +69,8 @@ class StreamingSpec extends SparkSpec {
     val customers = Tables.customer(spark, sf)
     val stream = MemoryStream[Ev]
     stream.addData(sample.distinct)
-    val q = EventStreams.enrichedCounts(stream.toDF(), customers)
-      .writeStream.format("memory").queryName("t_enriched")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("t_enriched")
+    val streamed = StreamProof.toMemory(
+        EventStreams.enrichedCounts(stream.toDF(), customers), "complete")
       .select(unix_timestamp($"window.start").as("w"), $"segment", $"n")
       .orderBy("w", "segment").as[(Long, String, Long)].collect()
     val batch = sample.distinct.toDF()
@@ -180,11 +169,8 @@ class StreamingSpec extends SparkSpec {
       Ev(21, ts(70), 1, "purchase"), Ev(22, ts(5), 2, "purchase"))
     val vs = MemoryStream[Ev]; val ps = MemoryStream[Ev]
     vs.addData(viewRows); ps.addData(purchRows)
-    val q = EventStreams.viewPurchaseJoin(vs.toDF(), ps.toDF())
-      .writeStream.format("memory").queryName("t_ssjoin")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("t_ssjoin")
+    val streamed = StreamProof.toMemory(
+        EventStreams.viewPurchaseJoin(vs.toDF(), ps.toDF()), "append")
       .select($"user_id", $"view_id", $"purchase_id", $"lag_us")
       .as[(Long, Long, Long, Long)].collect().toSet
     val batch = EventStreams.viewPurchaseJoin(
@@ -228,13 +214,11 @@ class StreamingSpec extends SparkSpec {
     }
     val stream = MemoryStream[EvV]
     stream.addData(evs)
-    val q = EventStreams.sketchProfile(stream.toDF())
-      .writeStream.format("memory").queryName("t_sketch")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
+    val sunk = StreamProof.toMemory(
+        EventStreams.sketchProfile(stream.toDF()), "complete")
     // the streamed output is per-window SKETCHES; roll them up per type in
     // batch and compare against exact batch answers on the same data
-    val rolled = spark.table("t_sketch")
+    val rolled = sunk
       .groupBy($"event_type")
       .agg(hll_sketch_estimate(hll_union_agg($"user_hll")).as("du"),
         tdigestQuantile(tdigestMergeAgg($"value_td"), 0.5).as("p50"))
@@ -257,11 +241,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Ev]
     stream.addData(sample.distinct)
-    val q = EventStreams.sessionCounts(stream.toDF())
-      .writeStream.format("memory").queryName("t_sessions")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table("t_sessions")
+    val out = StreamProof.toMemory(
+        EventStreams.sessionCounts(stream.toDF()), "complete")
       .select($"user_id", $"n_events").orderBy($"user_id", $"n_events")
       .as[(Long, Long)].collect()
     // user 1: {e1,e2} then {e3}; user 2: {e4}
@@ -310,7 +291,7 @@ class StreamingSpec extends SparkSpec {
           assert(q.awaitTermination(120000), "Trigger.Once drain timed out")
         } finally q.stop()
       }
-      GraftSession.withConf(spark, graft.ops.Events.RocksDBStateStore) {
+      GraftSession.withConf(spark, StreamProof.RocksDBStateStore) {
         writeFile("a", Seq(1L, 2L, 3L))
         drain()
         Thread.sleep(sleepMs)
@@ -353,10 +334,8 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType)))
-    val qn = "t_e32spec_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    GraftSession.withConf(spark, graft.ops.Events.RocksDBStateStore) {
-      val q = spark.readStream.schema(schema)
+    GraftSession.withConf(spark, StreamProof.RocksDBStateStore) {
+      val out = StreamProof.toMemory(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
         .withWatermark("ts", "1 hour")
         .select(col("user_id"), unix_micros(col("ts")))
@@ -365,11 +344,8 @@ class StreamingSpec extends SparkSpec {
         .transformWithState(
           new EventStreams.TimerSessionProcessor,
           TimeMode.EventTime(), OutputMode.Append())
-        .toDF("user_id", "start_us", "n_events", "closed_by")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val rows = spark.table(qn).filter(col("user_id") >= 0)
+        .toDF("user_id", "start_us", "n_events", "closed_by"), "append")
+      val rows = out.filter(col("user_id") >= 0)
         .orderBy(col("start_us"))
         .collect().map(r => (r.getLong(2), r.getLong(3)))
       // first session (2 events) closed by the GAP-breaking arrival;
