@@ -23,11 +23,13 @@ import org.apache.spark.sql.types._
   *    b)` → `timestampdiff(hour, a, b)`, `TRY(x)` → the native try_eval
   *    expression, regex-vs-literal `split` semantics, and a few pure
   *    renames (`approx_distinct` → `approx_count_distinct`). Every
-  *    rewrite asks one [[Lexer]] where string literals, quoted
-  *    identifiers and comments begin and end, so a value like
-  *    'from_unixtime(' or "o'k" is never rewritten. Comments are
-  *    dropped once where text enters (`script`, `prepare`); `/*+ … */`
-  *    hints are kept.
+  *    rewrite, and every keyword test of the `script` dispatch, reads
+  *    code through one [[Lexer]]: keyword regexes run on its code view
+  *    (`find`, `replace`, `CodeRegex`) and call rewrites on its call
+  *    finder (`replaceCalls`), so a value like 'from_unixtime(',
+  *    'a where b' or "o'k" is never rewritten. Comments are dropped
+  *    once where text enters (`script`, `prepare`); `/*+ … */` hints
+  *    are kept.
   *
   * Dialect pieces that need NO translation (verified by PrestoSqlSpec):
   * `||` concat, 1-based `substr`, `cardinality`, `element_at`,
@@ -238,9 +240,10 @@ object PrestoSql {
       """(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?("[^"]+"|[\w.]+)\s*\((.+)\)\s*$""".r
     // Presto table-properties CTAS: WITH (format=…, partitioned_by=…,
     // bucketed_by=…, bucket_count=…) between the name and AS — the form
-    // a partition-managing ETL tool renders for every landing table
-    val ctasWithRe =
-      """(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?("[^"]+"|[\w.]+)\s+WITH\s*\((.*?)\)\s+AS\b(.*)$""".r
+    // a partition-managing ETL tool renders for every landing table (read
+    // on code only: a `)` inside a property value does not end the list)
+    val ctasWithRe = new Lexer.CodeRegex(
+      """(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?("[^"]+"|[\w.]+)\s+WITH\s*\((.*?)\)\s+AS\b(.*)$""".r)
     val stmts = splitStatements(new Lexer(prestoScript).withoutComments)
       .map(_.trim).filter(_.nonEmpty)
       .flatMap {
@@ -327,7 +330,7 @@ object PrestoSql {
       CommentTableRe.findFirstIn(st).isDefined ||
       CommentColumnRe.findFirstIn(st).isDefined ||
       AnalyzeTableRe.findFirstIn(st).isDefined ||
-      InfoSchemaRe.findFirstIn(st).isDefined) ||
+      readsInfoSchema(st)) ||
       // once the DDL database exists, EVERY script resolves against it:
       // a SELECT-only script must still read tables/views an earlier
       // script created (temp views keep winning name resolution)
@@ -590,8 +593,7 @@ object PrestoSql {
           .toDF("Name", "Value", "Default", "Type", "Description")
       case ExplainAnalyzeRe(q) => runExplainAnalyze(spark, q)
       case ExplainRe(opts, q) => runExplain(spark, q, Option(opts))
-      case q if InfoSchemaRe.findFirstIn(q).isDefined =>
-        runInfoSchema(spark, q)
+      case q if readsInfoSchema(q) => runInfoSchema(spark, q)
       case _ => sql(spark, st)
     }
     try {
@@ -729,7 +731,10 @@ object PrestoSql {
     """(?is)^\s*SHOW\s+STATS\s+FOR\s*\((.+)\)\s*$""".r
   private val ShowCreateRe =
     """(?is)^\s*SHOW\s+CREATE\s+TABLE\s+("[^"]+"|[\w.]+)\s*$""".r
-  private val InfoSchemaRe = """(?i)\binformation_schema\s*\.""".r
+  // an information_schema relation; group 1 names it
+  private val InfoSchemaRe = """(?i)\binformation_schema\s*\.\s*(\w*)""".r
+  private def readsInfoSchema(st: String): Boolean =
+    new Lexer(st).find(InfoSchemaRe).isDefined
 
   /** `SHOW STATS FOR t` → Trino's stats table shape (one row per column
     * + a summary row carrying row_count), computed on demand via
@@ -833,38 +838,23 @@ object PrestoSql {
   private val DescribeInputRe =
     """(?is)^\s*DESCRIBE\s+INPUT\s+(\w+)\s*$""".r
 
+  private val ParamRe = """\?""".r
+
   /** Replace each `?` placeholder outside string literals / quoted
     * identifiers with `repl` (planning-only substitution). */
-  private def substituteParams(s: String, repl: String): String = {
-    val lx = new Lexer(s)
-    val out = new StringBuilder
-    for (i <- 0 until s.length)
-      if (s.charAt(i) == '?' && lx.isCode(i)) out.append(repl)
-      else out.append(s.charAt(i))
-    out.toString
-  }
+  private def substituteParams(s: String, repl: String): String =
+    new Lexer(s).replace(ParamRe)(_ => Some(repl))
 
   /** Replace whole-word occurrences of `word` with `repl`, skipping
     * string literals and quoted identifiers — the lambda-variable
     * rebinding surgery (find_first_index) must not rewrite a literal
     * like 'n' when the lambda variable is n (r16 advice). */
   private[graft] def replaceWordOutsideLiterals(
-      s: String, word: String, repl: String): String = {
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    val lx = new Lexer(s)
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (lx.isCode(i) && s.startsWith(word, i) &&
-          (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-          (i + word.length >= s.length ||
-            !isWordChar(s.charAt(i + word.length)))) {
-        out.append(repl); i += word.length
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
+      s: String, word: String, repl: String): String =
+    new Lexer(s).replace(wordRe(word))(_ => Some(repl))
+
+  private def wordRe(word: String) =
+    ("""\b""" + java.util.regex.Pattern.quote(word) + """\b""").r
 
   /** `DESCRIBE OUTPUT name` — Trino's prepared-statement output shape
     * (Column Name, Catalog, Schema, Table, Type, Type Size, Aliased).
@@ -889,8 +879,7 @@ object PrestoSql {
   private def runDescribeInput(spark: SparkSession, name: String): DataFrame = {
     val text = spark.conf.getOption(s"graft.presto.prepared.$name").getOrElse(
       throw new IllegalArgumentException(s"no prepared statement '$name'"))
-    val lx = new Lexer(text)
-    val n = text.indices.count(i => text.charAt(i) == '?' && lx.isCode(i))
+    val n = new Lexer(text).findAll(ParamRe).size
     val s2 = spark; import s2.implicits._
     (0 until n).map(p => (p.toLong, "unknown")).toDF("Position", "Type")
   }
@@ -1083,10 +1072,18 @@ object PrestoSql {
     * are materialized from the live catalog (current database's tables
     * + session temp views) as temp views in Presto's column shape, the
     * statement text is rewritten to reference them, and the query runs
-    * through the normal dialect path. */
+    * through the normal dialect path. The views are dropped once the
+    * statement is analysed: its result keeps the analysed plan, and the
+    * session's catalog is left as it was. */
   private def runInfoSchema(spark: SparkSession, stmt: String): DataFrame = {
     import spark.implicits._
-    val db = spark.catalog.currentDatabase
+    val rewritten = new Lexer(stmt).replace(InfoSchemaRe) { m =>
+      val rel = m.group(1).toLowerCase
+      require(rel == "tables" || rel == "columns",
+        s"unsupported information_schema relation in: $stmt " +
+          "(tables and columns are implemented)")
+      Some(s"graft_info_schema_$rel")
+    }
     val tables = spark.catalog.listTables().collect().toSeq
     tables.map { tb =>
       ("spark", Option(tb.database).getOrElse("session"), tb.name,
@@ -1105,20 +1102,15 @@ object PrestoSql {
     }.toDF("table_catalog", "table_schema", "table_name", "column_name",
         "ordinal_position", "column_default", "is_nullable", "data_type")
       .createOrReplaceTempView("graft_info_schema_columns")
-    val rewritten = stmt
-      .replaceAll("(?i)\\binformation_schema\\s*\\.\\s*tables\\b",
-        "graft_info_schema_tables")
-      .replaceAll("(?i)\\binformation_schema\\s*\\.\\s*columns\\b",
-        "graft_info_schema_columns")
-    require(!InfoSchemaRe.findFirstIn(rewritten).isDefined,
-      s"unsupported information_schema relation in: $stmt " +
-        "(tables and columns are implemented)")
-    val _ = db
-    sql(spark, rewritten)
+    try sql(spark, rewritten)
+    finally Seq("tables", "columns")
+      .foreach(r => spark.catalog.dropTempView(s"graft_info_schema_$r"))
   }
 
-  private val UpdateRe =
-    """(?is)^\s*UPDATE\s+("[^"]+"|[\w.]+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?\s*$""".r
+  // read on code only: a WHERE inside a SET value's literal is not the
+  // statement's WHERE
+  private val UpdateRe = new Lexer.CodeRegex(
+    """(?is)^\s*UPDATE\s+("[^"]+"|[\w.]+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?\s*$""".r)
 
   private val DeleteRe =
     """(?is)^\s*DELETE\s+FROM\s+("[^"]+"|[\w.]+)(?:\s+WHERE\s+(.+))?\s*$""".r
@@ -1298,33 +1290,24 @@ object PrestoSql {
   private case class InsertClause(cond: Option[String],
                                   byCol: Map[String, String])
 
-  /** Index of the first top-level (outside parens/brackets/literals/
-    * quoted identifiers) case-insensitive THEN keyword, or -1. Lets a
-    * clause condition contain `CASE … THEN … END` as long as it is
-    * parenthesized, which Trino requires in practice too. */
-  private def firstTopLevelThen(s: String): Int = {
-    val lx = new Lexer(s)
-    s.indices.find(i => lx.isTopLevel(i) &&
-      s.regionMatches(true, i, "THEN", 0, 4) &&
-      (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
-      (i + 4 == s.length || !Character.isLetterOrDigit(s.charAt(i + 4))))
-      .getOrElse(-1)
-  }
-
   private def runMerge(spark: SparkSession, stmt: String): DataFrame = {
     // split into the head (MERGE INTO … ON cond) and the WHEN clauses;
     // each clause is `WHEN [NOT] MATCHED [AND <cond>] THEN <action>`
-    val clauseRe = """(?i)\bWHEN\s+(NOT\s+)?MATCHED\b""".r
     val lx = new Lexer(stmt)
-    val marks = clauseRe.findAllMatchIn(stmt).filter(m => lx.isCode(m.start)).toSeq
+    val marks = lx.findAll("""(?i)\bWHEN\s+(NOT\s+)?MATCHED\b""".r).toSeq
     require(marks.nonEmpty, "MERGE needs at least one WHEN clause")
+    // a clause's THEN is its first one outside brackets, so a condition
+    // may hold `CASE … THEN … END` when it is parenthesized, which Trino
+    // requires in practice too
+    val thens = lx.findAll("""(?i)\bTHEN\b""".r)
+      .filter(t => lx.isTopLevel(t.start)).toSeq
     val head = stmt.substring(0, marks.head.start)
     val clauses = marks.zipWithIndex.map { case (m, i) =>
       val end = if (i + 1 < marks.size) marks(i + 1).start else stmt.length
-      val body = stmt.substring(m.end, end).trim
-      val thenAt = firstTopLevelThen(body)
-      require(thenAt >= 0, s"MERGE clause missing THEN: ${body.take(120)}")
-      val pre = body.substring(0, thenAt).trim
+      val thenAt = thens.find(t => t.start >= m.end && t.start < end)
+      require(thenAt.nonEmpty, "MERGE clause missing THEN: " +
+        stmt.substring(m.end, end).trim.take(120))
+      val pre = stmt.substring(m.end, thenAt.get.start).trim
       val condOpt =
         if (pre.isEmpty) None
         else {
@@ -1332,7 +1315,7 @@ object PrestoSql {
             s"unexpected text before THEN in MERGE clause: ${pre.take(120)}")
           Some(pre.substring(3).trim)
         }
-      (m.group(1) != null, condOpt, body.substring(thenAt + 4).trim)
+      (m.group(1) != null, condOpt, stmt.substring(thenAt.get.end, end).trim)
     }
     val (tRaw, tAliasOpt, sRaw, sAliasOpt, cond) = head match {
       case MergeIntoRe(t, ta, s0, sa, c) => (t, Option(ta), s0, Option(sa), c.trim)
@@ -1469,25 +1452,12 @@ object PrestoSql {
     * accepted and stripped. Subset: the row path must be a quoted
     * literal, NESTED PATH / PLAN clauses are not supported (they throw —
     * loud beats silently wrong). */
-  private[graft] def rewriteJsonTable(sql: String): String = {
-    val Head = """(?is)\bJSON_TABLE\s*\(""".r
-    def next(s: String) = {
-      lazy val lx = new Lexer(s)
-      Head.findAllMatchIn(s).find(m => lx.isCode(m.start))
-        .map(m => (m, lx.matchingClose(m.end - 1)))
-    }
-    var s = sql
-    var m = next(s)
-    while (m.isDefined) {
-      val (hm, close) = m.get
-      val open = hm.end - 1
-      require(close > 0, "unbalanced JSON_TABLE parens")
-      val inside = s.substring(open + 1, close)
-      val ilx = new Lexer(inside)
-      require("""(?is)\bNESTED\s+PATH\b|\bPLAN\s*\(""".r.findAllMatchIn(inside)
-        .forall(m => !ilx.isCode(m.start)),
+  private[graft] def rewriteJsonTable(sql: String): String =
+    replaceCalls(sql, "json_table") { c =>
+      require(new Lexer(c.args)
+        .find("""(?is)\bNESTED\s+PATH\b|\bPLAN\s*\(""".r).isEmpty,
         "JSON_TABLE NESTED PATH / PLAN clauses are not supported")
-      val parts = splitTopLevel(inside, ',')
+      val parts = splitTopLevel(c.args, ',')
       require(parts.length >= 2, "JSON_TABLE requires (expr, 'path' COLUMNS(…))")
       val jExpr = parts.head.trim
       val rest = parts.tail.mkString(",")
@@ -1522,14 +1492,9 @@ object PrestoSql {
         else
           s"array(try_variant_get(try_parse_json(CAST(($jExpr) AS STRING))," +
             s" '$rowPrefix'))"
-      val replacement =
-        s"LATERAL (SELECT ${colExprs.mkString(", ")} FROM" +
-          s" (SELECT posexplode($rowsExpr)))"
-      s = s.substring(0, hm.start) + replacement + s.substring(close + 1)
-      m = next(s)
+      (s"LATERAL (SELECT ${colExprs.mkString(", ")} FROM" +
+        s" (SELECT posexplode($rowsExpr)))", c.end)
     }
-    s
-  }
 
   /** Trino's `TABLE(sequence(start, stop[, step]))` table function (also
     * the `name => value` named-argument form, any order) → a derived
@@ -1538,8 +1503,7 @@ object PrestoSql {
     * engines. */
   private[graft] def rewriteSequenceTable(s: String): String = {
     val re = """(?is)\bTABLE\s*\(\s*sequence\s*\(([^()]*)\)\s*\)""".r
-    lazy val lx = new Lexer(s)
-    re.replaceSomeIn(s, m => Option.when(lx.isCode(m.start)) {
+    new Lexer(s).replace(re) { m =>
       val raw = splitTopLevel(m.group(1), ',').map(_.trim).filter(_.nonEmpty)
       val kv = raw.map { a =>
         """(?is)^(\w+)\s*=>\s*(.+)$""".r.findFirstMatchIn(a)
@@ -1565,10 +1529,9 @@ object PrestoSql {
       // timestamp arguments pass through unchanged)
       val widened = ordered.map(a =>
         if (a.matches("""-?\d+""")) s"CAST($a AS BIGINT)" else a)
-      scala.util.matching.Regex.quoteReplacement(
-        s"(SELECT explode(sequence(${widened.mkString(", ")}))" +
-          " AS sequential_number)")
-    })
+      Some(s"(SELECT explode(sequence(${widened.mkString(", ")}))" +
+        " AS sequential_number)")
+    }
   }
 
   /** Trino `agg(args) FILTER (WHERE pred) OVER (…)` — Spark rejects a
@@ -3293,14 +3256,6 @@ object PrestoSql {
     ("""(?i)\bas\s+varbinary\s*\)""".r, "AS BINARY)"),
     ("""(?i)\bas\s+real\s*\)""".r, "AS FLOAT)"))
 
-  /** `none_match(a, f)` → `(not exists(a, f))` with the closing parens
-    * placed by bracket matching (the call's argument list may contain
-    * literals and nested calls, so a regex can't pair them). The outer
-    * parens keep the rewrite atomic in operand position: `x =
-    * none_match(…)` must not become `x = not exists(…)`, which Spark
-    * parses as `(x = not exists(…))`'s ill-formed NOT-operand (r4
-    * ADVICE). NULL propagation is exact: none_match = NOT any_match and
-    * NOT preserves NULL. */
   /** Presto `split(s, d[, limit])` has a LITERAL delimiter where Spark's
     * same-named builtin takes a regex — inline the `\Q…\E` quoting
     * around the delimiter expression by bracket matching. Inlining
@@ -3309,34 +3264,16 @@ object PrestoSql {
     * (the UNNEST path) and which keeps plans in whole-stage codegen.
     * The limit argument passes through: both engines put the remainder
     * in the last element. */
-  private[graft] def inlineSplit(s: String): String = {
-    val lx = new Lexer(s)
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(' && lx.isCode(i)) {
-        var j = out.length - 1
-        while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-        val wordEnd = j
-        while (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_')) j -= 1
-        val isSplit = wordEnd - j == 5 &&
-          out.substring(j + 1, wordEnd + 1).equalsIgnoreCase("split")
-        val close = if (isSplit) lx.matchingClose(i) else -1
-        if (isSplit && close > i) {
-          val args = splitTopLevel(s.substring(i + 1, close), ',')
-            .map(a => inlineSplit(a.trim))
-          require(args.size == 2 || args.size == 3,
-            s"split takes 2 or 3 arguments, got ${args.size}")
-          val limit = if (args.size == 3) s", ${args(2)}" else ""
-          out.append(
-            s"(${args(0)}, concat('\\\\Q', ${args(1)}, '\\\\E')$limit)")
-          i = close + 1
-        } else { out.append('('); i += 1 }
-      } else { out.append(c); i += 1 }
+  private[graft] def inlineSplit(s: String): String =
+    replaceCalls(s, "split") { c =>
+      val args = splitTopLevel(c.args, ',').map(a => inlineSplit(a.trim))
+      require(args.size == 2 || args.size == 3,
+        s"split takes 2 or 3 arguments, got ${args.size}")
+      val limit = if (args.size == 3) s", ${args(2)}" else ""
+      // the name stays as written
+      (s.substring(c.start, c.open) +
+        s"(${args(0)}, concat('\\\\Q', ${args(1)}, '\\\\E')$limit)", c.end)
     }
-    out.toString
-  }
 
   /** SQL:2016 `LISTAGG(x [, 'sep' [ON OVERFLOW ERROR]]) WITHIN GROUP
     * (ORDER BY …)` (Trino ships it) → `array_join` over the ordered
@@ -3348,88 +3285,53 @@ object PrestoSql {
     * TRUNCATE is rejected loudly (this engine never truncates). */
   private[graft] def rewriteListagg(s: String): String = {
     if (!s.toLowerCase.contains("listagg")) return s
-    val name = "listagg"
     val lx = new Lexer(s)
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (lx.isCode(i) && s.regionMatches(true, i, name, 0, name.length) &&
-          (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) && {
-            var p = i + name.length
-            while (p < s.length && s.charAt(p).isWhitespace) p += 1
-            p < s.length && s.charAt(p) == '('
-          }) {
-        var p = i + name.length
-        while (s.charAt(p).isWhitespace) p += 1
-        val close = lx.matchingClose(p)
-        require(close > p, "unbalanced listagg(")
-        val args = splitTopLevel(s.substring(p + 1, close), ',').map(_.trim)
-        require(args.nonEmpty && args.size <= 2,
-          s"listagg takes (value [, separator]), got ${args.size} arguments")
-        val value = rewriteListagg(args(0))
-        val sep =
-          if (args.size == 2) {
-            val sp = args(1)
-            val slx = new Lexer(sp)
-            require("""(?is)\bON\s+OVERFLOW\s+TRUNCATE\b""".r
-              .findAllMatchIn(sp).forall(m => !slx.isCode(m.start)),
-              "LISTAGG ON OVERFLOW TRUNCATE is not supported (results are never truncated)")
-            """(?is)\s+ON\s+OVERFLOW\s+ERROR\s*$""".r.replaceFirstIn(sp, "")
-          } else "''"
-        var q = close + 1
-        while (q < s.length && s.charAt(q).isWhitespace) q += 1
-        val wg = """(?is)^WITHIN\s+GROUP\s*""".r
-          .findFirstIn(s.substring(q))
-          .getOrElse(throw new IllegalArgumentException(
-            "LISTAGG requires WITHIN GROUP (ORDER BY …)"))
-        q += wg.length
-        require(q < s.length && s.charAt(q) == '(',
-          "LISTAGG WITHIN GROUP needs (ORDER BY …)")
-        val wgClose = lx.matchingClose(q)
-        val spec = s.substring(q + 1, wgClose).trim
-        require("""(?is)^ORDER\s+BY\s""".r.findFirstIn(spec).isDefined,
-          "LISTAGG WITHIN GROUP needs ORDER BY")
-        out.append(s"array_join(array_agg($value $spec), $sep)")
-        i = wgClose + 1
-      } else { out.append(c); i += 1 }
+    lx.replaceCalls("listagg") { c =>
+      val args = splitTopLevel(c.args, ',').map(_.trim)
+      require(args.nonEmpty && args.size <= 2,
+        s"listagg takes (value [, separator]), got ${args.size} arguments")
+      val value = rewriteListagg(args(0))
+      val sep =
+        if (args.size == 2) {
+          val slx = new Lexer(args(1))
+          require(slx.find("""(?is)\bON\s+OVERFLOW\s+TRUNCATE\b""".r).isEmpty,
+            "LISTAGG ON OVERFLOW TRUNCATE is not supported (results are never truncated)")
+          slx.replace("""(?is)\s+ON\s+OVERFLOW\s+ERROR\s*$""".r)(_ => Some(""))
+        } else "''"
+      // the WITHIN GROUP (ORDER BY …) suffix is part of the rewrite
+      val wg = """(?is)^\s*WITHIN\s+GROUP\s*""".r
+        .findFirstIn(s.substring(c.end))
+        .getOrElse(throw new IllegalArgumentException(
+          "LISTAGG requires WITHIN GROUP (ORDER BY …)"))
+      val q = c.end + wg.length
+      require(q < s.length && s.charAt(q) == '(',
+        "LISTAGG WITHIN GROUP needs (ORDER BY …)")
+      val wgClose = lx.matchingClose(q)
+      val spec = s.substring(q + 1, wgClose).trim
+      require("""(?is)^ORDER\s+BY\s""".r.findFirstIn(spec).isDefined,
+        "LISTAGG WITHIN GROUP needs ORDER BY")
+      (s"array_join(array_agg($value $spec), $sep)", wgClose + 1)
     }
-    out.toString
   }
 
-  /** Generic bracket-matching call rewriter (scanner family of
-    * wrapNoneMatch): finds `name(args)` outside string literals and
-    * quoted identifiers — word-boundary checked, so `histogram` never
-    * fires inside `numeric_histogram` — and replaces the whole call via
-    * `build(args)`. Arguments are rewritten recursively first, so
-    * nested same-name calls translate too. */
+  /** `s` with each call of `name` in code replaced (see
+    * [[Lexer.replaceCalls]]); `name` is lower case, and a text without it
+    * is returned as it is. */
+  private def replaceCalls(s: String, name: String)(
+      f: Lexer.Call => (String, Int)): String =
+    if (!s.toLowerCase.contains(name)) s
+    else new Lexer(s).replaceCalls(name)(f)
+
+  /** Each call `name(args)` in code replaced by `build(args)`: the word
+    * boundary keeps `histogram` from firing inside `numeric_histogram`.
+    * Arguments are split at top-level commas, trimmed and rewritten
+    * first, so nested same-name calls translate too. */
   private def rewriteCall(s: String, name: String)(
-      build: Seq[String] => String): String = {
-    if (!s.toLowerCase.contains(name)) return s
-    val lx = new Lexer(s)
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (lx.isCode(i) && s.regionMatches(true, i, name, 0, name.length) &&
-          (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) &&
-          (i + name.length >= s.length ||
-            !(s.charAt(i + name.length).isLetterOrDigit ||
-              s.charAt(i + name.length) == '_'))) {
-        var p = i + name.length
-        while (p < s.length && s.charAt(p).isWhitespace) p += 1
-        if (p < s.length && s.charAt(p) == '(') {
-          val close = lx.matchingClose(p)
-          require(close > p, s"unbalanced $name(")
-          val args = splitTopLevel(s.substring(p + 1, close), ',')
-            .map(a => rewriteCall(a.trim, name)(build))
-          out.append(build(args))
-          i = close + 1
-        } else { out.append(c); i += 1 }
-      } else { out.append(c); i += 1 }
+      build: Seq[String] => String): String =
+    replaceCalls(s, name) { c =>
+      (build(splitTopLevel(c.args, ',').map(a => rewriteCall(a.trim, name)(build))),
+        c.end)
     }
-    out.toString
-  }
 
   /** Presto aggregate functions Spark lacks under these names —
     * `checksum` / `histogram` / `multimap_agg` route to the mergeable
@@ -3716,102 +3618,53 @@ object PrestoSql {
   }
 
   /** Presto `map_agg(k, v)` → `map_from_entries(collect_list(struct(k,
-    * v)))` with the two extra closing parens placed by bracket matching
-    * (same scanner as wrapNoneMatch). collect_list rather than the
+    * v)))`. collect_list rather than the
     * dialect's null-retaining array_agg wrap: a struct entry is never
     * NULL, and map_from_entries throws on NULL keys exactly like
     * Trino's map_agg. DISTINCT is not supported in this form
     * (map_agg(DISTINCT …) is not Presto syntax either). */
-  private[graft] def wrapMapAgg(s: String): String = {
-    val out = new StringBuilder
-    val stack = scala.collection.mutable.Stack.empty[Boolean]
-    val lx = new Lexer(s)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!lx.isCode(i)) out.append(c)
-      else c match {
-        case '(' =>
-          var j = out.length - 1
-          while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-          val wordEnd = j
-          while (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_')) j -= 1
-          val isMapAgg = wordEnd - j == 7 &&
-            out.substring(j + 1, wordEnd + 1).equalsIgnoreCase("map_agg")
-          if (isMapAgg) {
-            out.setLength(j + 1)
-            out.append("map_from_entries(collect_list(struct(")
-            stack.push(true)
-          } else {
-            out.append('(')
-            stack.push(false)
-          }
-        case ')' =>
-          if (stack.nonEmpty && stack.pop()) out.append(")))") else out.append(')')
-        case _ => out.append(c)
-      }
-      i += 1
+  private[graft] def wrapMapAgg(s: String): String =
+    replaceCalls(s, "map_agg") { c =>
+      (s"map_from_entries(collect_list(struct(${wrapMapAgg(c.args)})))", c.end)
     }
-    out.toString
-  }
 
   /** Trino `approx_most_frequent(buckets, value, capacity)` → the
     * Misra–Gries heavy-hitters UDAF (graft.functions
     * .HeavyHittersAggregator — the same mergeable sketch a18 declares),
     * sliced to `buckets` entries and rebuilt into Trino's map(value →
     * count) shape. The capacity argument parameterizes the UDAF, so one
-    * is registered per distinct capacity per session (on first use, by a
-    * bracket-matching scan — same scanner family as wrapNoneMatch).
+    * is registered per distinct capacity per session, on first use.
     * Values are aggregated as varchar (the sketch's key type); a bigint
     * input comes back with varchar keys — documented difference. Buckets
     * and capacity must be integer literals (they shape the aggregate,
     * like Trino requires). */
 
   private[graft] def rewriteApproxMostFrequent(
-      spark: SparkSession, s: String): String = {
-    if (!s.toLowerCase.contains("approx_most_frequent")) return s
-    val name = "approx_most_frequent"
-    val lx = new Lexer(s)
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (lx.isCode(i) && s.regionMatches(true, i, name, 0, name.length) &&
-          (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_'))) {
-        var p = i + name.length
-        while (p < s.length && s.charAt(p).isWhitespace) p += 1
-        if (p < s.length && s.charAt(p) == '(') {
-          val close = lx.matchingClose(p)
-          require(close > p, "unbalanced approx_most_frequent(")
-          val args = splitTopLevel(s.substring(p + 1, close), ',').map(_.trim)
-          require(args.size == 3,
-            s"approx_most_frequent takes (buckets, value, capacity), got ${args.size}")
-          def intLit(a: String, what: String): Int =
-            a.toIntOption.getOrElse(throw new IllegalArgumentException(
-              s"approx_most_frequent $what must be an integer literal, got '$a'"))
-          val buckets = intLit(args(0), "buckets")
-          val cap = intLit(args(2), "capacity")
-          require(buckets > 0 && cap > 0,
-            "approx_most_frequent buckets and capacity must be positive")
-          val fn = s"graft_amf_$cap"
-          // The live catalog is the session-accurate registry (a JVM-wide
-          // cache keyed on identityHashCode could collide, or go stale
-          // after a session is stopped and recreated at the same address).
-          if (!spark.catalog.functionExists(fn))
-            spark.udf.register(fn, org.apache.spark.sql.functions.udaf(
-              graft.functions.HeavyHittersAggregator.of(cap)))
-          val value = rewriteApproxMostFrequent(spark, args(1))
-          val re = "'^(.*):([0-9]+)$'"
-          out.append(
-            s"map_from_entries(transform(slice($fn(CAST(($value) AS STRING))," +
-              s" 1, $buckets), e_amf -> struct(regexp_extract(e_amf, $re, 1)," +
-              s" CAST(regexp_extract(e_amf, $re, 2) AS BIGINT))))")
-          i = close + 1
-        } else { out.append(c); i += 1 }
-      } else { out.append(c); i += 1 }
+      spark: SparkSession, s: String): String =
+    replaceCalls(s, "approx_most_frequent") { c =>
+      val args = splitTopLevel(c.args, ',').map(_.trim)
+      require(args.size == 3,
+        s"approx_most_frequent takes (buckets, value, capacity), got ${args.size}")
+      def intLit(a: String, what: String): Int =
+        a.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"approx_most_frequent $what must be an integer literal, got '$a'"))
+      val buckets = intLit(args(0), "buckets")
+      val cap = intLit(args(2), "capacity")
+      require(buckets > 0 && cap > 0,
+        "approx_most_frequent buckets and capacity must be positive")
+      val fn = s"graft_amf_$cap"
+      // The live catalog is the session-accurate registry (a JVM-wide
+      // cache keyed on identityHashCode could collide, or go stale
+      // after a session is stopped and recreated at the same address).
+      if (!spark.catalog.functionExists(fn))
+        spark.udf.register(fn, org.apache.spark.sql.functions.udaf(
+          graft.functions.HeavyHittersAggregator.of(cap)))
+      val value = rewriteApproxMostFrequent(spark, args(1))
+      val re = "'^(.*):([0-9]+)$'"
+      (s"map_from_entries(transform(slice($fn(CAST(($value) AS STRING))," +
+        s" 1, $buckets), e_amf -> struct(regexp_extract(e_amf, $re, 1)," +
+        s" CAST(regexp_extract(e_amf, $re, 2) AS BIGINT))))", c.end)
     }
-    out.toString
-  }
 
   // ---------------------------------------------------------------------
   // MATCH_RECOGNIZE — the Trino row-pattern clause, planned onto the
@@ -3847,11 +3700,12 @@ object PrestoSql {
     * use the offset form PREV(x, 2) instead. */
   private[graft] def rewriteDefineNav(pred: String, partCol: String,
       tsCol: String, tbCol: String): String = {
-    """(?i)\b(PREV|NEXT)\s*\(""".r.findFirstMatchIn(pred) match {
+    val lx = new Lexer(pred)
+    lx.find("""(?i)\b(PREV|NEXT)\s*\(""".r) match {
       case None => pred
       case Some(mm) =>
         val open = mm.end - 1
-        val close = new Lexer(pred).matchingClose(open)
+        val close = lx.matchingClose(open)
         require(close > open,
           s"MATCH_RECOGNIZE: unbalanced ${mm.group(1)}( in DEFINE")
         val args = splitTopLevel(pred.substring(open + 1, close), ',')
@@ -3876,22 +3730,10 @@ object PrestoSql {
 
   private[graft] def rewriteMatchRecognize(
       spark: SparkSession, s: String): String = {
-    val kw = "match_recognize"
     val lx = new Lexer(s)
-    val at = {
-      val lower = s.toLowerCase
-      var i = lower.indexOf(kw)
-      // keyword must stand alone (not part of an identifier or literal)
-      while (i >= 0 && (!lx.isCode(i) ||
-          (i > 0 && (lower.charAt(i - 1).isLetterOrDigit ||
-          lower.charAt(i - 1) == '_')) ||
-          (i + kw.length < lower.length &&
-            (lower.charAt(i + kw.length).isLetterOrDigit ||
-              lower.charAt(i + kw.length) == '_'))))
-        i = lower.indexOf(kw, i + 1)
-      i
-    }
-    if (at < 0) return s
+    val kw = lx.find("""(?i)\bmatch_recognize\b""".r)
+    if (kw.isEmpty) return s
+    val at = kw.get.start
 
     // the table factor before the keyword: scan back over an identifier
     // (possibly qualified/quoted), which must follow FROM
@@ -3907,7 +3749,7 @@ object PrestoSql {
     require("""(?is).*\bFROM\s*$""".r.matches(beforeTable),
       s"MATCH_RECOGNIZE table factor must follow FROM, got '...${beforeTable.takeRight(30)}'")
 
-    var p = at + kw.length
+    var p = kw.get.end
     while (p < s.length && s.charAt(p).isWhitespace) p += 1
     require(p < s.length && s.charAt(p) == '(',
       "MATCH_RECOGNIZE must be followed by (...)")
@@ -3915,7 +3757,7 @@ object PrestoSql {
     require(close > p, "unbalanced MATCH_RECOGNIZE (")
     val body = s.substring(p + 1, close)
 
-    val m = MrBlockRe.findFirstMatchIn(body).getOrElse(
+    val m = new Lexer(body).find(MrBlockRe).getOrElse(
       throw new IllegalArgumentException(
         "unsupported MATCH_RECOGNIZE shape — expected PARTITION BY … " +
           "ORDER BY … [MEASURES …] [ONE ROW PER MATCH] [AFTER MATCH SKIP …] " +
@@ -4194,10 +4036,9 @@ object PrestoSql {
   /** Trino's map-lambda predicate family — `all/any/no_keys_match(m, f)`
     * and `all/any/no_values_match(m, f)` — onto Spark's array HOFs over
     * map_keys/map_values. The first top-level comma of the call closes
-    * the injected map_keys/map_values group; nested parens (including
-    * the lambda's own parameter list) pass through untouched. */
-  private final class KvGroup(val close: String, var pending: Boolean)
-  private val kvSpecs = Map(
+    * the injected map_keys/map_values group; the arguments (the lambda's
+    * own parameter list too) pass through untouched. */
+  private val kvSpecs = Seq(
     "all_keys_match" -> ("forall(map_keys(", ")"),
     "any_keys_match" -> ("exists(map_keys(", ")"),
     "no_keys_match" -> ("(not exists(map_keys(", "))"),
@@ -4205,81 +4046,27 @@ object PrestoSql {
     "any_values_match" -> ("exists(map_values(", ")"),
     "no_values_match" -> ("(not exists(map_values(", "))"))
 
-  private[graft] def wrapKeysValuesMatch(s: String): String = {
-    val out = new StringBuilder
-    val stack = scala.collection.mutable.Stack.empty[KvGroup]
-    val lx = new Lexer(s)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!lx.isCode(i)) out.append(c)
-      else c match {
-        case '(' =>
-          var j = out.length - 1
-          while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-          val wordEnd = j
-          while (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_')) j -= 1
-          val word =
-            if (wordEnd > j) out.substring(j + 1, wordEnd + 1).toLowerCase
-            else ""
-          kvSpecs.get(word) match {
-            case Some((open, close))
-                if j < 0 || !out.charAt(j).isLetterOrDigit =>
-              out.setLength(j + 1)
-              out.append(open)
-              stack.push(new KvGroup(close, pending = true))
-            case _ =>
-              out.append('(')
-              stack.push(null)
-          }
-        case ')' =>
-          val g = if (stack.nonEmpty) stack.pop() else null
-          if (g != null) out.append(g.close) else out.append(')')
-        case ',' if stack.nonEmpty && stack.top != null && stack.top.pending =>
-          stack.top.pending = false
-          out.append("),")
-        case other => out.append(other)
+  private[graft] def wrapKeysValuesMatch(s: String): String =
+    kvSpecs.foldLeft(s) { case (text, (name, (open, close))) =>
+      def wrap(t: String): String = replaceCalls(t, name) { c =>
+        val args = splitTopLevel(c.args, ',')
+        val inner =
+          if (args.size < 2) wrap(c.args)
+          else wrap(args.head) + ")," + wrap(args.tail.mkString(","))
+        (open + inner + close, c.end)
       }
-      i += 1
+      wrap(text)
     }
-    out.toString
-  }
 
-  private[graft] def wrapNoneMatch(s: String): String = {
-    val out = new StringBuilder
-    val stack = scala.collection.mutable.Stack.empty[Boolean]
-    val lx = new Lexer(s)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!lx.isCode(i)) out.append(c)
-      else c match {
-        case '(' =>
-          // same bounded look-back as rewriteArrayLiterals: skip trailing
-          // whitespace, take the maximal word run, require a non-word
-          // char (or start) before it
-          var j = out.length - 1
-          while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-          val wordEnd = j
-          while (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_')) j -= 1
-          val isNoneMatch = wordEnd - j == 10 &&
-            out.substring(j + 1, wordEnd + 1).equalsIgnoreCase("none_match")
-          if (isNoneMatch) {
-            out.setLength(j + 1)
-            out.append("(not exists(")
-            stack.push(true)
-          } else {
-            out.append('(')
-            stack.push(false)
-          }
-        case ')' =>
-          if (stack.nonEmpty && stack.pop()) out.append("))") else out.append(')')
-        case _ => out.append(c)
-      }
-      i += 1
+  /** `none_match(a, f)` → `(not exists(a, f))`. The outer parens keep
+    * the rewrite atomic in operand position: `x = none_match(…)` must
+    * not become `x = not exists(…)`, which Spark parses as `(x = not
+    * exists(…))`'s ill-formed NOT-operand (r4 ADVICE). NULL propagation
+    * is exact: none_match = NOT any_match and NOT preserves NULL. */
+  private[graft] def wrapNoneMatch(s: String): String =
+    replaceCalls(s, "none_match") { c =>
+      (s"(not exists(${wrapNoneMatch(c.args)}))", c.end)
     }
-    out.toString
-  }
 
   /** Presto `CROSS JOIN UNNEST(expr) [WITH ORDINALITY] [AS] t(c1[, c2[,
     * c3]])` → Spark's correlated-LATERAL table-function form:
@@ -4295,26 +4082,22 @@ object PrestoSql {
     * join (r13 syntax probe): normalize to the CROSS JOIN form over a
     * one-row relation so rewriteUnnest's machinery takes over. */
   private[graft] def rewriteBareFromUnnest(s0: String): String = {
-    val re = """(?is)\bFROM\s+UNNEST\s*\(""".r
-    lazy val lx = new Lexer(s0)
-    re.replaceSomeIn(s0, m => Option.when(lx.isCode(m.start))(
-      "FROM (SELECT 1 AS graft_one) CROSS JOIN UNNEST("))
+    new Lexer(s0).replace("""(?is)\bFROM\s+UNNEST\s*\(""".r)(_ =>
+      Some("FROM (SELECT 1 AS graft_one) CROSS JOIN UNNEST("))
   }
 
   /** Trino `DECIMAL 'x'` literals (r13 syntax probe): precision/scale
     * infer from the literal text, exactly as Trino does. */
   private[graft] def rewriteDecimalLiterals(s0: String): String = {
-    val re = """(?is)\bDECIMAL\s*'([+-]?[0-9]+(?:\.[0-9]+)?)'""".r
-    lazy val lx = new Lexer(s0)
-    re.replaceSomeIn(s0, m => Option.when(lx.isCode(m.start)) {
+    new Lexer(s0).replace("""(?is)\bDECIMAL\s*'([^']*)'""".r) { m =>
       val lit = m.group(1)
-      val digits = lit.count(_.isDigit)
-      val scale = {
+      Option.when(lit.matches("""[+-]?[0-9]+(?:\.[0-9]+)?""")) {
+        val digits = lit.count(_.isDigit)
         val dot = lit.indexOf('.')
-        if (dot < 0) 0 else lit.length - dot - 1
+        val scale = if (dot < 0) 0 else lit.length - dot - 1
+        s"CAST('$lit' AS DECIMAL(${math.max(digits, 1)}, $scale))"
       }
-      s"CAST('$lit' AS DECIMAL(${math.max(digits, 1)}, $scale))"
-    })
+    }
   }
 
   /** Trino's remaining NUMERIC typed literals (r15 probe sweep 4):
@@ -4325,15 +4108,14 @@ object PrestoSql {
   private[graft] def rewriteNumericTypedLiterals(s0: String): String = {
     val re =
       """(?is)\b(REAL|DOUBLE|TINYINT|SMALLINT|INTEGER|BIGINT)\s+'([^']*)'""".r
-    lazy val lx = new Lexer(s0)
-    re.replaceSomeIn(s0, m => Option.when(lx.isCode(m.start)) {
+    new Lexer(s0).replace(re) { m =>
       val t = m.group(1).toUpperCase(java.util.Locale.ROOT) match {
         case "REAL" => "FLOAT"
         case "INTEGER" => "INT"
         case other => other
       }
-      s"CAST('${m.group(2)}' AS $t)"
-    })
+      Some(s"CAST('${m.group(2)}' AS $t)")
+    }
   }
 
   private[graft] def rewriteUnnest(s0: String): String = {
@@ -4342,9 +4124,8 @@ object PrestoSql {
       ("""(?is)^\s*(WITH\s+ORDINALITY\s+)?(?:AS\s+)?("[^"]+"|\w+)""" +
         """\s*\(\s*([^()]*?)\s*\)(\s+ON\s+TRUE)?""").r
     def next(s: String) = {
-      lazy val lx = new Lexer(s)
-      head.findAllMatchIn(s).find(mm => lx.isCode(mm.start))
-        .map(mm => (mm, lx.matchingClose(mm.end - 1)))
+      val lx = new Lexer(s)
+      lx.find(head).map(mm => (mm, lx.matchingClose(mm.end - 1)))
     }
     var s = s0
     var guard = 0
@@ -4454,44 +4235,22 @@ object PrestoSql {
     * inner aggregate's enclosing expression and is NOT supported on the
     * ORDER BY form — documented limit. */
   private[graft] def rewriteArrayAgg(s: String): String = {
+    if (!s.toLowerCase.contains("array_agg")) return s
     val lx = new Lexer(s)
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(' && lx.isCode(i)) {
-        // look back for the bare word array_agg (same bounded look-back
-        // as wrapNoneMatch)
-        var j = out.length - 1
-        while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-        val wordEnd = j
-        while (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_')) j -= 1
-        val isArrayAgg = wordEnd - j == 9 &&
-          out.substring(j + 1, wordEnd + 1).equalsIgnoreCase("array_agg")
-        val close = if (isArrayAgg) lx.matchingClose(i) else -1
-        if (isArrayAgg && close > i) {
-          out.setLength(j + 1)
-          // a trailing FILTER (WHERE …) clause belongs on the INNER
-          // aggregate, not on the transform/array_sort wrappers — detect
-          // it after the close paren and move it inside
-          val filterRe = """(?is)^\s*FILTER\s*\(""".r
-          val afterClose = s.substring(close + 1)
-          val (filterClause, consumedTo) =
-            filterRe.findPrefixMatchOf(afterClose) match {
-              case Some(fm) =>
-                val fOpen = close + 1 + fm.end - 1
-                val fClose = lx.matchingClose(fOpen)
-                require(fClose > fOpen, "unbalanced FILTER parens")
-                (Some(s.substring(fOpen + 1, fClose)), fClose + 1)
-              case None => (None, close + 1)
-            }
-          out.append(buildArrayAgg(
-            rewriteArrayAgg(s.substring(i + 1, close)), filterClause))
-          i = consumedTo
-        } else { out.append('('); i += 1 }
-      } else { out.append(c); i += 1 }
+    lx.replaceCalls("array_agg") { c =>
+      val inner = rewriteArrayAgg(c.args)
+      // a trailing FILTER (WHERE …) clause belongs on the INNER
+      // aggregate, not on the transform/array_sort wrappers — detect it
+      // after the close paren and move it inside
+      """(?is)^\s*FILTER\s*\(""".r.findPrefixMatchOf(s.substring(c.end)) match {
+        case Some(fm) =>
+          val fOpen = c.end + fm.end - 1
+          val fClose = lx.matchingClose(fOpen)
+          require(fClose > fOpen, "unbalanced FILTER parens")
+          (buildArrayAgg(inner, Some(s.substring(fOpen + 1, fClose))), fClose + 1)
+        case None => (buildArrayAgg(inner), c.end)
+      }
     }
-    out.toString
   }
 
   /** One parsed ORDER BY key: expression, descending?, nulls-first?. */
@@ -4510,12 +4269,8 @@ object PrestoSql {
 
     // locate a top-level ORDER BY
     val lx = new Lexer(inner)
-    val obAt = inner.indices.find(k => lx.isTopLevel(k) &&
-      (inner.charAt(k) == 'o' || inner.charAt(k) == 'O') &&
-      (k == 0 || !(inner.charAt(k - 1).isLetterOrDigit ||
-        inner.charAt(k - 1) == '_')) &&
-      """(?is)^order\s+by\s""".r.findFirstIn(inner.substring(k)).isDefined)
-      .getOrElse(-1)
+    val obAt = lx.findAll("""(?i)\border\s+by\s""".r)
+      .find(m => lx.isTopLevel(m.start)).fold(-1)(_.start)
 
     def distPrefix = if (distinct) "DISTINCT " else ""
     if (obAt < 0) {
@@ -4714,11 +4469,10 @@ object PrestoSql {
     * leaves ties unspecified). Spark has no equivalent and a SQL
     * function can't take a lambda parameter, so the lambda body is
     * spliced TEXTUALLY into an aggregate() fold, applying it to both
-    * the accumulator and the probe by renaming the bound variable
-    * (word-boundary replace — the variable must not appear inside
-    * string literals in the body; rename it if it does, documented
-    * limit). Empty array → NULL (try_element_at seed); an element with
-    * a NULL key never replaces the accumulator.
+    * the accumulator and the probe by renaming the bound variable in
+    * code (a literal holding the same word stays as written). Empty
+    * array → NULL (try_element_at seed); an element with a NULL key
+    * never replaces the accumulator.
     */
   private[graft] def wrapArrayMinMaxBy(s: String): String = {
     var r = s
@@ -4733,9 +4487,7 @@ object PrestoSql {
           s"$fn lambda must bind one plain variable, got '$v'")
         val body = lam.drop(arrow + 2).trim
         def app(arg: String): String =
-          "(" + body.replaceAll(
-            "\\b" + java.util.regex.Pattern.quote(v) + "\\b",
-            java.util.regex.Matcher.quoteReplacement(arg)) + ")"
+          "(" + replaceWordOutsideLiterals(body, v, arg) + ")"
         val (a, x) = (s"${v}_acc_mby", s"${v}_x_mby")
         s"aggregate((${args(0)}), try_element_at((${args(0)}), 1)," +
           s" ($a, $x) -> IF(${app(x)} $cmp ${app(a)}, $x, $a))"
@@ -4827,12 +4579,10 @@ object PrestoSql {
           ("""\belement_at\s*\(\s*""" + java.util.regex.Pattern.quote(v) +
             """\s*,\s*(\d+)\s*\)""").r)
         refs.foreach { ref =>
-          body = ref.replaceAllIn(body, m =>
-            java.util.regex.Matcher.quoteReplacement(
-              s"regexp_extract(__m, $pat, ${m.group(1)})"))
+          body = new Lexer(body).replace(ref)(m =>
+            Some(s"regexp_extract(__m, $pat, ${m.group(1)})"))
         }
-        require(("""\b""" + java.util.regex.Pattern.quote(v) + """\b""").r
-          .findFirstIn(body).isEmpty,
+        require(new Lexer(body).find(wordRe(v)).isEmpty,
           s"regexp_replace(lambda): only $v[k] capture references are " +
             "supported in the lambda body")
         // r14 ADVICE fix: a pattern that matches the EMPTY string (e.g.
@@ -5182,13 +4932,12 @@ object PrestoSql {
     val trailing =
       """(?is)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+)\s+ROWS?\s+WITH\s+TIES\s*$""".r
     val sql = sql0.replaceAll("""\s+$""", "")
-    lazy val lx = new Lexer(sql)
-    trailing.findFirstMatchIn(sql).filter(m => lx.isCode(m.start)) match {
+    val lx = new Lexer(sql)
+    lx.find(trailing) match {
       case None =>
         // any other placement (subquery, after OFFSET) still fails loudly
         // rather than silently dropping ties
-        require("""(?i)\bWITH\s+TIES\b""".r.findAllMatchIn(sql)
-          .forall(m => !lx.isCode(m.start)),
+        require(lx.find("""(?i)\bWITH\s+TIES\b""".r).isEmpty,
           "FETCH … WITH TIES is only supported as the statement's final " +
             "clause with a top-level ORDER BY (no OFFSET, no subquery use)")
         sql0
@@ -5196,16 +4945,15 @@ object PrestoSql {
         val n = fm.group(1).toLong
         val prefix = sql.substring(0, fm.start)
         // the LAST top-level ORDER BY
-        val ObHead = """(?is)^ORDER\s+BY\b""".r
-        val obAt = prefix.indices.findLast(i => lx.isTopLevel(i) &&
-          (prefix.charAt(i) == 'O' || prefix.charAt(i) == 'o') &&
-          (i == 0 || !(prefix.charAt(i - 1).isLetterOrDigit ||
-            prefix.charAt(i - 1) == '_')) &&
-          ObHead.findFirstIn(prefix.substring(i)).isDefined).getOrElse(-1)
-        require(obAt >= 0,
+        val ob = lx.findAll("""(?i)\bORDER\s+BY\b""".r)
+          .filter(m => m.start < fm.start && lx.isTopLevel(m.start))
+          .toSeq.lastOption
+        require(ob.nonEmpty,
           "FETCH … WITH TIES requires a top-level ORDER BY (as in Trino)")
-        val keys = prefix.substring(obAt).replaceFirst("""(?is)^ORDER\s+BY""", "").trim
-        require("""(?i)\bOFFSET\b""".r.findFirstIn(keys).isEmpty,
+        val obAt = ob.get.start
+        val keys = prefix.substring(ob.get.end).trim
+        require(!lx.findAll("""(?i)\bOFFSET\b""".r)
+          .exists(m => m.start > obAt && m.start < fm.start),
           "OFFSET combined with FETCH … WITH TIES is not supported")
         require(keys.nonEmpty, "FETCH … WITH TIES: empty ORDER BY key list")
         s"SELECT * EXCEPT (graft_ties_rnk) FROM (" +

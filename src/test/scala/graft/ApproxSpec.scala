@@ -78,7 +78,7 @@ class ApproxSpec extends SparkSpec {
       val v = centers(label).map(c => c + 0.05f * rnd.nextGaussian().toFloat)
       (i.toLong, v.toSeq, label)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = ops.Sources.scratch("graft_ivf")
     rows.toDF("vec_id", "embedding", "label")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"), $"label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -13,7 +13,7 @@ class FileStreamSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
   test("readStream over a parquet directory == batch on the same files (E1)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_in").toString
+    val dir = ops.Sources.scratch("graft_stream_in")
     // two "micro-batch" files landing in the source directory
     val all = Tables.events(spark, sf)
     all.filter($"event_id" % 2 === 0).write.mode("append").parquet(dir)

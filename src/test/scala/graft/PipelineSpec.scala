@@ -11,7 +11,7 @@ class PipelineSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
   test("three-step source→transform→sink pipeline round-trips") {
-    val out = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val out = ops.Sources.scratch("graft_pipe")
     val result = Pipeline.run(spark, Seq(
       dfStep("src_orders")(s => Tables.orders(s, sf)),
       sqlStep("big_orders",
@@ -60,7 +60,7 @@ class PipelineSpec extends SparkSpec {
 
   test("JSON spec parses to steps, runs the DAG, and honors sinks") {
     import graft.pipeline.PipelineSpec
-    val out = java.nio.file.Files.createTempDirectory("graft_spec").toString
+    val out = ops.Sources.scratch("graft_spec")
     Seq((1, "a"), (2, "a"), (3, "b")).toDF("k", "g").createOrReplaceTempView("spec_src")
     val r = PipelineSpec.run(spark,
       s"""{ "steps": [

@@ -322,7 +322,8 @@ class PrestoSqlSpec extends SparkSpec {
     val hostile = Seq("split(", "ARRAY[1,2]", "a;b", "it's", "x]",
       "date_diff('hour'", "\"q\"", "map(array(", "%Y-%m-%d", "lax $.k",
       "try(", "chr(", "json_extract(", "'';--", "AT TIME ZONE",
-      "with ties", "json_table(", "TABLE(sequence(1, 3))", "match_recognize")
+      "with ties", "json_table(", "TABLE(sequence(1, 3))", "match_recognize",
+      "information_schema.tables")
     val rnd = new scala.util.Random(7)
     val mixes = (1 to 40).map { _ =>
       (1 to (1 + rnd.nextInt(3)))
@@ -345,9 +346,13 @@ class PrestoSqlSpec extends SparkSpec {
         |MERGE INTO prb_t AS tg USING prb_src AS sr ON tg.k = sr.k
         |WHEN MATCHED THEN UPDATE SET tag = 'when matched then';
         |SELECT tag FROM prb_t""".stripMargin).collect().head.getString(0)
+    val updated = PrestoSql.script(spark,
+      """UPDATE prb_t SET tag = 'a where b' WHERE k = 1;
+        |SELECT tag FROM prb_t""".stripMargin).collect().head.getString(0)
     spark.catalog.dropTempView("prb_src")
     PrestoSql.script(spark, "DROP TABLE IF EXISTS prb_t; SELECT 1 AS one")
     assert(merged == "when matched then")
+    assert(updated == "a where b")
     val agg = PrestoSql.sql(spark,
       """SELECT listagg(v, ' ON OVERFLOW TRUNCATE ') WITHIN GROUP (ORDER BY v) AS m
         |FROM (VALUES ('a'), ('b')) AS t(v)""".stripMargin)
@@ -1417,6 +1422,12 @@ class PrestoSqlSpec extends SparkSpec {
         |WHERE table_name = 'info_demo' ORDER BY ordinal_position""".stripMargin)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
     assert(cols == Seq(("k", 1L, "bigint"), ("v", 2L, "varchar")))
+    // the relations' backing views do not outlive their query
+    val internal = PrestoSql.script(spark,
+      """SELECT table_name FROM information_schema.tables
+        |WHERE table_name LIKE 'graft_info_schema%'""".stripMargin)
+      .collect().map(_.getString(0)).toSeq
+    assert(internal.isEmpty, s"internal views listed: $internal")
   }
 
   test("CREATE VIEW is catalog-backed: a second script call reads it; txn no-ops; SHOW CATALOGS/FUNCTIONS") {

@@ -31,7 +31,7 @@ class SessionStateSpec extends SparkSpec {
       "l69_logreg_bigram_quality", "e1b_stream_tumbling",
       "e22_stream_dedup", "e30_stream_transform_state",
       "e16_stream_session", "e24_stream_restart_recovery",
-      "e26_stream_update_mode").foreach { q =>
+      "e26_stream_update_mode", "p4h_presto_introspection").foreach { q =>
       Metrics.noopSink(SparkEntry.queries(q)(s, sf))
       val after = s.conf.getAll
       val changed = (before.keySet ++ after.keySet)

@@ -183,7 +183,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch upsert sink: last write per key wins across micro-batches (E10)") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = ops.Sources.scratch("graft_upsert")
     val tableDir = s"$dir/table"
     val ckDir = s"$dir/ck"
     val stream = MemoryStream[Ev]
@@ -259,7 +259,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig}
     import org.apache.spark.sql.functions._
     def run(ttl: TTLConfig, sleepMs: Long): Seq[Long] = {
-      val work = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+      val work = ops.Sources.scratch("graft_ttl")
       val src = s"$work/src"
       def writeFile(name: String, ids: Seq[Long]): Unit =
         ids.toDF("event_id").withColumn("user_id", lit(1L))
@@ -318,7 +318,7 @@ class StreamingSpec extends SparkSpec {
     //       opens the trailing session
     //   s1/s2: user -1 sentinels advance the watermark, firing the
     //       trailing session's TIMER (closed_by = 1) in s2's data batch
-    val work = java.nio.file.Files.createTempDirectory("graft_e32spec")
+    val work = ops.Sources.scratch("graft_e32spec")
     val src = s"$work/src"
     val t0 = 1700000000000L
     def writeFile(name: String, rows: Seq[(Long, Long)]): Unit =

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
@@ -22,7 +21,7 @@ class TablesSpec extends SparkSpec {
   private def expected: Seq[Timestamp] = micros.map(us => new Timestamp(us / 1000))
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"tables-spec-$tag").toString + "/events.parquet"
+    ops.Sources.scratch(s"tables-spec-$tag") + "/events.parquet"
 
   private def loadedTs(path: String): (DataType, Seq[Timestamp]) = {
     val df = Tables.eventsAt(spark, path)
