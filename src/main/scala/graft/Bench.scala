@@ -29,8 +29,9 @@ object Bench {
       case c => c.toString
     }
 
-  /** Time every query; returns per-query medians plus one error string
-    * per (query, rep) that threw. Reps are interleaved ROUND-ROBIN (all
+  /** Time every query through `Metrics.measure`; returns per-query
+    * medians, one error string per (query, rep) that threw, and the
+    * split of each query's median rep. Reps are interleaved ROUND-ROBIN (all
     * queries rep 1, then all rep 2, …), not back-to-back per query: on a
     * contended host a load burst spans minutes, and back-to-back reps put
     * all three samples of one query inside it — the r7 driver bench
@@ -41,43 +42,53 @@ object Bench {
   private[graft] def run(
       spark: SparkSession, sfDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame],
-      reps: Int): (Seq[(String, Double)], Seq[String]) = {
+      reps: Int): (Seq[(String, Double)], Seq[String],
+        Map[String, Metrics.RunMetrics]) = {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     val ordered = queries.toSeq.sortBy(_._1)
+    // per rep: its wall time and, when it ran, its split
     val samples =
-      scala.collection.mutable.LinkedHashMap.from(
-        ordered.map { case (name, _) => name -> Vector.empty[Double] })
+      scala.collection.mutable.LinkedHashMap.from(ordered.map { case (name, _) =>
+        name -> Vector.empty[(Double, Option[Metrics.RunMetrics])] })
     for (_ <- 1 to reps; (name, fn) <- ordered) {
       val t0 = System.nanoTime()
-      try Metrics.noopSink(fn(spark, sfDir))
-      catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse("")
-            .takeWhile(_ != '\n').take(200)
-          errors += s"$name: ${e.getClass.getSimpleName}: $msg"
+      samples(name) :+= {
+        try {
+          val m = Metrics.measure(spark, fn(spark, sfDir))
+          (m.wallS, Some(m))
+        } catch {
+          case e: Throwable =>
+            val msg = Option(e.getMessage).getOrElse("")
+              .takeWhile(_ != '\n').take(200)
+            errors += s"$name: ${e.getClass.getSimpleName}: $msg"
+            // a rep that throws is charged its time to the failure
+            ((System.nanoTime() - t0) / 1e9, None)
+        }
       }
-      samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
     }
-    val results = samples.toSeq.map { case (name, times) =>
+    val medians = samples.toSeq.map { case (name, runs) =>
       // lower-middle median: for odd reps the true median; for even reps
       // (e.g. REPS=2) the FASTER sample — the upper-middle would charge
       // rep-1 JIT warm-up as the result, the very noise the median exists
       // to discard
-      val median = times.sorted.apply((times.size - 1) / 2)
+      val (median, split) = runs.sortBy(_._1).apply((runs.size - 1) / 2)
       System.err.println(
         f"[bench] $name%-24s median $median%6.2f s  " +
-          times.map(t => f"$t%.2f").mkString("[", " ", "]"))
-      name -> median
+          runs.map(r => f"${r._1}%.2f").mkString("[", " ", "]"))
+      (name, median, split)
     }
-    (results, errors.toSeq.distinct)
+    (medians.map(m => m._1 -> m._2), errors.toSeq.distinct,
+      medians.collect { case (name, _, Some(split)) => name -> split }.toMap)
   }
 
   /** Full per-query JSON (every median, full precision) — goes to stderr
     * and `bench_detail.json`, NOT stdout: the driver keeps only the last
     * 2000 characters of output, and BENCH_r01–r05 all show `parsed: null`
-    * because a 200+-entry map (~7 KB) can never survive that tail buffer. */
+    * because a 200+-entry map (~7 KB) can never survive that tail buffer.
+    * `"split"` carries each query's `Metrics.RunMetrics.split`. */
   private[graft] def fullJson(results: Seq[(String, Double)],
-      errors: Seq[String], sfDir: String): String = {
+      errors: Seq[String], sfDir: String,
+      splits: Map[String, Metrics.RunMetrics] = Map.empty): String = {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -85,7 +96,10 @@ object Bench {
       if (errors.isEmpty) ""
       else errors.map(e => "\"" + jsonEscape(e) + "\"")
         .mkString(",\"errors\":[", ",", "]")
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$errField,"sf":"$sfDir"}"""
+    val split = results.flatMap { case (k, _) => splits.get(k).map(m =>
+      m.split.map { case (f, v) => s""""$f":$v""" }
+        .mkString(s""""$k":{""", ",", "}")) }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$errField,"sf":"$sfDir","split":$split}"""
   }
 
   /** The ONE stdout JSON line, guaranteed complete inside the driver's
@@ -143,8 +157,8 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val picked = SparkEntry.queries
       .filter { case (k, _) => only.forall(_.contains(k)) }
-    val (results, errors) = run(spark, sfDir, picked, reps)
-    val full = fullJson(results, errors, sfDir)
+    val (results, errors, splits) = run(spark, sfDir, picked, reps)
+    val full = fullJson(results, errors, sfDir, splits)
     System.err.println(s"[bench] full: $full")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),

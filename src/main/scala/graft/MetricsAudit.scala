@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Quantitative audit (the measured sibling of PlanAudit): prints task-
-  * metric totals for the mechanism comparisons MetricsSpec asserts, at a
-  * real SF, so PLANS.md can quote concrete byte/record numbers.
+/** Quantitative audit (the measured sibling of PLANS.md's plan audit):
+  * prints task-metric totals for the mechanism comparisons MetricsSpec
+  * asserts, at a real SF, so PLANS.md can quote concrete byte/record
+  * numbers.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 sbt "runMain graft.MetricsAudit"`
   */

@@ -720,9 +720,10 @@ object Events extends QueryModule {
     // when its first qualifying purchase arrives; unmatched views never
     // emit), so the watermark-advance batch can only evict state, never
     // add a row — unlike e25/e27/e37/e38, whose NULL-flush rows REQUIRE
-    // it. StreamProfile: 3 → 2 triggers, warm wall 3.13 → 2.32 s,
-    // final table byte-identical (oracle re-verified). The same scope
-    // was TRIED on the complete-mode aggregates (e1b/e16/e20/e21/e29)
+    // it. Measured 3 → 2 triggers (`triggers` in Bench's split), warm
+    // wall 3.13 → 2.32 s, final table byte-identical (oracle
+    // re-verified). The same scope was TRIED on the complete-mode
+    // aggregates (e1b/e16/e20/e21/e29)
     // and measured a NO-OP — complete-mode aggregation never schedules
     // the no-data batch at all (triggers=2 with and without) — so those
     // sites keep no-data batches on.

@@ -299,7 +299,7 @@ object Sources extends QueryModule {
     // pattern: both fact tables bucketed (and sorted) on the join key at
     // write time, so every subsequent join on that key plans as a
     // SortMergeJoin with ZERO pre-join Exchange (plan evidence in
-    // PlanAudit/PLANS.md; this query puts the read-side ANSWER under the
+    // PLANS.md's audit list; this query puts the read-side ANSWER under the
     // oracle gate). Tables live in a scratch-located database; setup is
     // cached per (session, sf-dir) like j11's.
     "s14_bucketed_join" -> ((s, d) => {

@@ -14,11 +14,44 @@ class BenchSpec extends SparkSpec {
     (s, _) => s.read.parquet("/nonexistent/definitely/missing.parquet")
 
   test("broken query is recorded in errors, not swallowed") {
-    val (results, errors) = Bench.run(spark, sf,
+    val (results, errors, splits) = Bench.run(spark, sf,
       Map("zz_broken" -> brokenQuery, "aa_good" -> goodQuery), reps = 1)
     assert(results.map(_._1) == Seq("aa_good", "zz_broken"))
     assert(errors.nonEmpty, "a throwing query must produce an error entry")
     assert(errors.forall(_.startsWith("zz_broken:")))
+    assert(splits.keySet == Set("aa_good"))
+  }
+
+  test("stdout line and detail medians keep their exact format") {
+    // whatever reads the bench output parses these strings: any drift in
+    // them is a contract break, so they are pinned byte for byte
+    val rs = Seq("b_query" -> 1.23456789, "a_query" -> 0.1,
+      "c_query" -> 2.0 / 3, "d_tie" -> 0.0005)
+    val errs = Seq("c_query: Boom: say \"hi\"")
+    val dir = "/data/sf0.1"
+    assert(Bench.jsonLine(rs, Nil, dir) ==
+      """{"metric":"total","value":2.002,"unit":"sec","queries":{"b_query":1.235,"c_query":0.667,"a_query":0.100,"d_tie":0.001},"queries_n":4,"detail":"bench_detail.json","sf":"/data/sf0.1"}""")
+    assert(Bench.jsonLine(rs, errs, dir) ==
+      """{"metric":"total","value":2.002,"unit":"sec","queries":{"b_query":1.235,"c_query":0.667,"a_query":0.100,"d_tie":0.001},"queries_n":4,"detail":"bench_detail.json","errors":["c_query: Boom: say \"hi\""],"sf":"/data/sf0.1"}""")
+    assert(Bench.jsonLine(rs, Nil, dir, budget = 140) ==
+      """{"metric":"total","value":2.002,"unit":"sec","queries":{"b_query":1.235},"queries_n":4,"detail":"bench_detail.json","sf":"/data/sf0.1"}""")
+    // the detail file keeps every field in place; the split follows them
+    for ((e, errField) <- Seq(Nil -> "",
+        errs -> ""","errors":["c_query: Boom: say \"hi\""]"""))
+      assert(Bench.fullJson(rs, e, dir).startsWith(
+        """{"metric":"total","value":2.001734556666667,"unit":"sec","queries":{"b_query":1.23456789,"a_query":0.1,"c_query":0.6666666666666666,"d_tie":5.0E-4}""" +
+          errField + ""","sf":"/data/sf0.1","split":{"""))
+  }
+
+  test("a streaming proof's split carries its triggers") {
+    val q = "e1b_stream_tumbling"
+    val (_, errors, splits) =
+      Bench.run(spark, sf, Map(q -> SparkEntry.queries(q)), reps = 1)
+    assert(errors.isEmpty, errors)
+    val s = splits(q).stream
+    assert(s.triggers >= 1 && s.addBatchMs > 0, s)
+    assert(Bench.fullJson(Seq(q -> 1.0), Nil, sf, splits)
+      .contains(s""""split":{"$q":{"jobs":"""))
   }
 
   test("clean run has no errors field; broken run emits one") {

@@ -103,4 +103,26 @@ class MetricsSpec extends SparkSpec {
     assert(m.tasks > 0)
     assert(m.jobs.map(_.tasks).sum == m.tasks, s"jobs=${m.jobs} total=${m.tasks}")
   }
+
+  test("eager work inside the query function is charged to its own jobs") {
+    val orders = Tables.orders(spark, sf)
+    def agg = orders.groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
+    val plain = Metrics.measure(spark, agg)
+    val eager = Metrics.measure(spark, { orders.count(); agg })
+    assert(eager.jobs.size > plain.jobs.size,
+      s"eager=${eager.jobs} plain=${plain.jobs}")
+    assert(eager.tasks > plain.tasks)
+  }
+
+  test("the split reports optimization and planning, not only analysis") {
+    def agg = Tables.lineitem(spark, sf).filter(col("l_quantity") > 10)
+      .groupBy(col("l_returnflag")).agg(sum(col("l_extendedprice")).as("rev"))
+    // phases are whole milliseconds and a warm plan takes a few: three
+    // runs are summed so a sub-millisecond phase cannot read as missing
+    val splits = (1 to 3).map(_ => Metrics.measure(spark, agg))
+    assert(splits.forall(m =>
+      Set("optimization", "planning").subsetOf(m.phaseMs.keySet)), splits)
+    for (phase <- Seq("optimization_ms", "planning_ms", "jobs", "stages", "tasks"))
+      assert(splits.map(_.split.toMap.apply(phase)).sum > 0, phase)
+  }
 }
