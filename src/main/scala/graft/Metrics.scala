@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -20,7 +21,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - Catalyst analysis, optimization and planning, summed over every
   *    QueryExecution that finishes in the window: the noop write plans
   *    under its own, and so does every eager action of the query
-  *    function;
+  *    function. The returned frame's own analysis, done when the query
+  *    function builds it, is added once: its QueryExecution never runs;
   *  - the triggers of every stream the query function runs, split by
   *    phase, and their state rows;
   *  - block-manager storage memory and persistent RDDs after the action.
@@ -136,6 +138,7 @@ object Metrics {
       shuffleReadBytes, spillBytes, cpuNs, gcMs = 0L
     private var stages = 0
     private val phaseMs = mutable.Map.empty[String, Long]
+    private val reported = mutable.Set.empty[QueryExecution]
     private var triggers = 0
     private var sourceMs, planningMs, addBatchMs, commitMs, triggerMs = 0L
     private val stateRows = mutable.Map.empty[java.util.UUID, Long]
@@ -173,10 +176,11 @@ object Metrics {
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
       addPhases(qe)
     private def addPhases(qe: QueryExecution): Unit = synchronized {
-      qe.tracker.phases.foreach { case (phase, t) =>
-        phaseMs(phase) = phaseMs.getOrElse(phase, 0L) + t.durationMs
-      }
+      reported += qe
+      qe.tracker.phases.foreach { case (phase, t) => addPhase(phase, t.durationMs) }
     }
+    private def addPhase(phase: String, ms: Long): Unit =
+      phaseMs(phase) = phaseMs.getOrElse(phase, 0L) + ms
 
     val streams: StreamingQueryListener = new StreamingQueryListener {
       override def onQueryStarted(
@@ -200,8 +204,13 @@ object Metrics {
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
 
-    def result(wallS: Double, storageMemBytes: Long,
+    /** `frame` is the returned frame's QueryExecution: its analysis is
+      * added unless a listener event already reported it. */
+    def result(wallS: Double, frame: QueryExecution, storageMemBytes: Long,
         persistentRdds: Int): RunMetrics = synchronized {
+      if (!reported(frame))
+        frame.tracker.phases.get(QueryPlanningTracker.ANALYSIS)
+          .foreach(t => addPhase(QueryPlanningTracker.ANALYSIS, t.durationMs))
       val runs = taskRunMs.sorted
       RunMetrics(wallS, inputBytes, inputRecords, shuffleBytes,
         shuffleRecords, runs.size, jobs.values.toSeq, stages, runs.sum,
@@ -230,9 +239,15 @@ object Metrics {
     planners.register(collector)
     spark.streams.addListener(collector.streams)
     var actionFailed = false
+    var frame: QueryExecution = null
     val t0 = System.nanoTime()
     val wallS =
-      try { noopSink(df); (System.nanoTime() - t0) / 1e9 }
+      try {
+        val d = df
+        frame = d.queryExecution
+        noopSink(d)
+        (System.nanoTime() - t0) / 1e9
+      }
       catch { case e: Throwable => actionFailed = true; throw e }
       finally {
         // deliver queued events before detaching. A drain failure is
@@ -250,6 +265,6 @@ object Metrics {
       }
     val storageMemBytes = sc.getExecutorMemoryStatus.values
       .map { case (max, free) => max - free }.sum
-    collector.result(wallS, storageMemBytes, sc.getPersistentRDDs.size)
+    collector.result(wallS, frame, storageMemBytes, sc.getPersistentRDDs.size)
   }
 }

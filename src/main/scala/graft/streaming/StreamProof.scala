@@ -2,11 +2,14 @@ package graft.streaming
 
 import graft.GraftSession
 import graft.ops.Sources
-import java.io.File
-import java.nio.file.{Files, StandardCopyOption}
+import java.io.{BufferedOutputStream, File}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
 import org.apache.commons.io.FileUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, FSDataOutputStream, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
@@ -27,14 +30,17 @@ import org.apache.spark.sql.types.StructType
   *    Production sizes state partitions to stream volume too (state must
   *    fit per-partition memory), so a deployment that sets the session
   *    default high keeps it: the scope only ever lowers to the gate size.
-  *  - ''interpreted expressions.'' Each micro-batch embeds fresh
-  *    watermark/offset literals in the incremental plan, so generated
-  *    sources differ per trigger and Janino recompiles every batch; on
-  *    2–4-trigger fixture runs compilation dominates the work it would
-  *    speed up (measured 15–20% per proof). Production streams keep
-  *    codegen on: the compile amortizes over hours of triggers. The proofs
-  *    measure streaming semantics, not kernel throughput (the batch form
-  *    of every operator benches under full codegen).
+  *  - ''one class loader.'' `start()` runs the query on a clone of the
+  *    session, and with artifact isolation on (Spark's default) the clone
+  *    gets a class loader of its own. `CodeGenerator`'s cache is keyed by
+  *    class loader and source, so every stream recompiled code the JVM had
+  *    already compiled, though the sources are byte-identical from run to
+  *    run. With `spark.sql.artifact.isolation.enabled=false` the clone
+  *    shares the session's loader and its codegen cache, and the proofs
+  *    run generated code, as production streams and every batch query do.
+  *    No proof adds artifacts, so isolation guarded nothing here.
+  *  - ''the checkpoint manager'', [[LocalCheckpointFileManager]] (see
+  *    Checkpoints).
   *  - the caller's `extra` pairs, e.g. [[RocksDBStateStore]] or
   *    [[NoDataBatchesOff]].
   *
@@ -43,7 +49,11 @@ import org.apache.spark.sql.types.StructType
   * Each query gets a fresh one under a per-JVM root on tmpfs
   * (`/dev/shm/graft_stream_ck/<uuid>`, or the temp dir when `/dev/shm`
   * is absent): on a disk-backed temp dir every trigger paid real fsync
-  * latency for throwaway metadata. The checkpoint is deleted when its
+  * latency for throwaway metadata. They are written through
+  * [[LocalCheckpointFileManager]]: without libhadoop, Spark's default
+  * manager has Hadoop fork a `chmod` or `readlink` process for every
+  * offset, commit and state file and each `.crc` sidecar (181 forks per
+  * e1b run, most of its commit phase). The checkpoint is deleted when its
   * query stops (Spark never deletes a user-specified one), and the root
   * goes with the scratch dirs at JVM exit. The root is per JVM because
   * deleting the shared parent would clobber a concurrently running JVM's
@@ -89,8 +99,9 @@ private[graft] object StreamProof {
     val key = "spark.sql.shuffle.partitions"
     GraftSession.withConf(s, Seq(
       key -> math.min(s.conf.get(key).toInt, 2).toString,
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") ++ extra: _*)(f)
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[LocalCheckpointFileManager].getName) ++ extra: _*)(f)
   }
 
   /** A file-source stream over the parquet files at `path`. */
@@ -147,5 +158,60 @@ private[graft] object StreamProof {
   private def run(w: DataStreamWriter[_], ck: File): Unit = {
     val q = w.option("checkpointLocation", ck.getPath).start()
     try q.processAllAvailable() finally q.stop()
+  }
+}
+
+/** The checkpoint manager of the proofs: Spark's FileSystem-based
+  * manager with every write done through java.nio, for `file:` paths
+  * only. Hadoop's local file system sets the permission of each file and
+  * directory it creates, and without libhadoop that forks `chmod`; the
+  * FileContext-based default also forks `readlink` on every rename.
+  * Here a file is written to a temp file by `Files.newOutputStream` and
+  * published by an atomic rename, so it is invisible until `close`; a
+  * temp file that may not replace an existing file is deleted. Directories
+  * come from `Files.createDirectories`. Reads, listings and
+  * deletes stay with the parent. No `.crc` sidecar is written; Hadoop
+  * reads a file without one unverified.
+  */
+class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
+    extends FileSystemBasedCheckpointFileManager(
+      LocalCheckpointFileManager.requireLocal(path, hadoopConf), hadoopConf) {
+
+  /** `p` as a java.nio path; a path of another file system fails. */
+  private def local(p: Path): java.nio.file.Path =
+    Paths.get(fs.makeQualified(p).toUri)
+
+  override def mkdirs(p: Path): Unit = Files.createDirectories(local(p))
+
+  override def createTempFile(p: Path): FSDataOutputStream = {
+    val f = local(p)
+    Files.createDirectories(f.getParent)
+    new FSDataOutputStream(new BufferedOutputStream(Files.newOutputStream(f)), null)
+  }
+
+  override def renameTempFile(src: Path, dst: Path,
+      overwriteIfPossible: Boolean): Unit = {
+    val (s, d) = (local(src), local(dst))
+    if (!overwriteIfPossible && Files.exists(d)) {
+      Files.delete(s)
+      throw new FileAlreadyExistsException(s"$dst exists; not overwriting it")
+    }
+    Files.move(s, d, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  override def createCheckpointDirectory(): Path = {
+    val q = fs.makeQualified(path)
+    Files.createDirectories(local(q))
+    q
+  }
+}
+
+object LocalCheckpointFileManager {
+  private def requireLocal(p: Path, conf: Configuration): Path = {
+    val scheme = Option(p.toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    require(scheme == "file",
+      s"LocalCheckpointFileManager handles file: paths only, not $p")
+    p
   }
 }

@@ -125,4 +125,14 @@ class MetricsSpec extends SparkSpec {
     for (phase <- Seq("optimization_ms", "planning_ms", "jobs", "stages", "tasks"))
       assert(splits.map(_.split.toMap.apply(phase)).sum > 0, phase)
   }
+
+  test("the split reports the declared frame's own analysis") {
+    val q = SparkEntry.queries("a1_pricing_summary")
+    // the frame is analysed when the query function builds it, and the
+    // noop write re-analyses nothing; phases are whole milliseconds, so
+    // three runs are summed
+    val analysis = (1 to 3).map(_ => Metrics.measure(spark, q(spark, sf)))
+      .map(_.split.toMap.apply("analysis_ms"))
+    assert(analysis.sum > 0, analysis)
+  }
 }

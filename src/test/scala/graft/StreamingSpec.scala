@@ -353,4 +353,27 @@ class StreamingSpec extends SparkSpec {
       assert(rows.toSeq == Seq((2L, 0L), (1L, 1L)), rows.toSeq.toString)
     }
   }
+
+  test("a warm proof compiles nothing and forks no Hadoop shell command (e1b)") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import scala.jdk.CollectionConverters._
+    val e1b = SparkEntry.queries("e1b_stream_tumbling")
+    Metrics.noopSink(e1b(spark, sf))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try Metrics.noopSink(e1b(spark, sf)) finally rec.stop()
+    val dump = java.nio.file.Paths.get(ops.Sources.scratch("graft_jfr"), "e1b.jfr")
+    try rec.dump(dump) finally rec.close()
+    val forks = RecordingFile.readAllEvents(dump).asScala
+      .map(_.getString("command"))
+      .filter(c => Set("chmod", "readlink")(c.split(' ').head.split('/').last))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+    assert(compiled == 0 && forks.isEmpty,
+      s"$compiled compiles, ${forks.size} forks, e.g. ${forks.take(3)}")
+  }
 }
+
