@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Real audio decode for the multimodal column story — the audio
@@ -19,6 +17,15 @@ import org.apache.spark.sql.types._
   * integers.
   */
 object AudioCore {
+  /** `audio_stats`' result; NULL when the payload is not decodable
+    * 16-bit PCM. */
+  val resultType: StructType = StructType(Seq(
+    StructField("n_samples", LongType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("sample_rate", IntegerType, nullable = false),
+    StructField("sum_abs", LongType, nullable = false),
+    StructField("peak", LongType, nullable = false)))
+
   /** Decode bytes → (n_samples, channels, sample_rate, sum_abs, peak),
     * or null if the payload is not decodable 16-bit integer PCM
     * (NULL-on-error, like TRY()). Multi-channel audio sums across
@@ -60,30 +67,4 @@ object AudioCore {
       case scala.util.control.NonFatal(_) => null
     }
   }
-}
-
-/** `audio_stats(binary)` → struct<n_samples bigint, channels int,
-  * sample_rate int, sum_abs bigint, peak bigint>, NULL when the payload
-  * is not decodable 16-bit PCM. */
-case class AudioStatsExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_samples", LongType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("sum_abs", LongType, nullable = false),
-    StructField("peak", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_stats"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AudioCore.stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.AudioCore.stats($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): AudioStatsExpression = copy(child = newChild)
 }

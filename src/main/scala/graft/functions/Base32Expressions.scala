@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Trino's `to_base32` / `from_base32` (r16 probe sweep 7) — RFC 4648
@@ -98,40 +95,4 @@ object Base32Core {
     }
     out
   }
-}
-
-case class ToBase32Expression(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "to_base32"
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-
-  override def nullSafeEval(input: Any): Any =
-    Base32Core.encode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Base32Core.encode($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): ToBase32Expression = copy(child = newChild)
-}
-
-case class FromBase32Expression(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "from_base32"
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override def nullSafeEval(input: Any): Any =
-    Base32Core.decodeB32(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Base32Core.decodeB32($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): FromBase32Expression = copy(child = newChild)
 }

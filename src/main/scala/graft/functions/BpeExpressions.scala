@@ -239,25 +239,6 @@ object BpeCore {
   }
 }
 
-/** `ws_words(text)` — the whitespace-split words of the text (the BPE
-  * trainers' word-histogram input; same split as bpe_segment). */
-case class WsWordsExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-  override def prettyName: String = "ws_words"
-
-  override def nullSafeEval(input: Any): Any =
-    BpeCore.wsWords(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeCore.wsWords($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WsWordsExpression = copy(child = newChild)
-}
-
 /** `bpe_segment(text, 'l r,l r,…')` — per-word symbol sequences after
   * applying the merges table: `array<array<string>>`, one inner array
   * per whitespace word. The nested shape keeps WORD BOUNDARIES visible

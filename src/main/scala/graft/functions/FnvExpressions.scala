@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
-
 /** Fowler–Noll–Vo hashes (the public-domain FNV spec; Trino's
   * fnv1_32 / fnv1a_32 / fnv1_64 / fnv1a_64 over VARBINARY). FNV-1
   * multiplies then XORs per byte; FNV-1a XORs then multiplies. Wrapping
@@ -66,58 +62,4 @@ object IeeeKernels {
       s"from_ieee754_32 expects exactly 4 bytes, got ${b.length}")
     java.lang.Float.intBitsToFloat(java.nio.ByteBuffer.wrap(b).getInt)
   }
-}
-
-case class ToIeee754Expression(child: Expression, bits: Int)
-  extends UnaryExpression {
-  require(bits == 32 || bits == 64)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.BinaryType
-  override def prettyName: String = s"to_ieee754_$bits"
-  override def nullSafeEval(input: Any): Any =
-    if (bits == 64) IeeeKernels.to64(input.asInstanceOf[Double])
-    else IeeeKernels.to32(input.asInstanceOf[Float])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.IeeeKernels.to$bits($c)")
-  override protected def withNewChildInternal(newChild: Expression): ToIeee754Expression =
-    copy(child = newChild)
-}
-
-case class FromIeee754Expression(child: Expression, bits: Int)
-  extends UnaryExpression {
-  require(bits == 32 || bits == 64)
-  override def dataType: DataType =
-    if (bits == 64) org.apache.spark.sql.types.DoubleType
-    else org.apache.spark.sql.types.FloatType
-  override def prettyName: String = s"from_ieee754_$bits"
-  override def nullSafeEval(input: Any): Any =
-    if (bits == 64) IeeeKernels.from64(input.asInstanceOf[Array[Byte]])
-    else IeeeKernels.from32(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.IeeeKernels.from$bits($c)")
-  override protected def withNewChildInternal(newChild: Expression): FromIeee754Expression =
-    copy(child = newChild)
-}
-
-case class FnvExpression(child: Expression, bits: Int, fnv1a: Boolean)
-  extends UnaryExpression {
-  require(bits == 32 || bits == 64, s"fnv bits must be 32 or 64: $bits")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String =
-    s"fnv1${if (fnv1a) "a" else ""}_$bits"
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (bits == 32) FnvKernels.fnv32(b, fnv1a) else FnvKernels.fnv64(b, fnv1a)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.FnvKernels.fnv$bits($c, $fnv1a)")
-
-  override protected def withNewChildInternal(newChild: Expression): FnvExpression =
-    copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -29,6 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *   (array_distinct keeps firsts; sums are order-independent).
   */
 object GopherKernels {
+  /** `gopher_repetition_stats`' result: a struct of 8 longs. */
+  val resultType: StructType = StructType(
+    Seq("n_lines", "n_dlines", "len_all", "len_dist", "top2", "top3", "dup5",
+      "dup10").map(StructField(_, LongType, nullable = false)))
+
 
   private val Space = UTF8String.fromString(" ")
 
@@ -93,31 +96,4 @@ object GopherKernels {
       nLines.toLong, seen.size().toLong, lenAll, lenDist,
       top2, top3, dup5, dup10))
   }
-}
-
-/** `gopher_repetition_stats(array<string>)` → struct of 8 longs. */
-case class GopherRepetitionExpression(child: Expression)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", LongType, nullable = false),
-    StructField("n_dlines", LongType, nullable = false),
-    StructField("len_all", LongType, nullable = false),
-    StructField("len_dist", LongType, nullable = false),
-    StructField("top2", LongType, nullable = false),
-    StructField("top3", LongType, nullable = false),
-    StructField("dup5", LongType, nullable = false),
-    StructField("dup10", LongType, nullable = false)))
-  override def prettyName: String = "gopher_repetition_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    GopherKernels.repetitionStats(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.GopherKernels.repetitionStats($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GopherRepetitionExpression =
-    copy(child = newChild)
 }

@@ -2,476 +2,234 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.types._
 
 /** Registry for the engine's native expressions. `GraftSession.builder`
   * injects `all` into every session it builds, so declared queries never
   * register anything; `GraftExtensions` injects the same set for sessions
   * configured with spark.sql.extensions, and `register` (idempotent)
   * serves any other session graft did not build.
+  *
+  * Adding a native scalar function takes a static method on a kernel
+  * object plus one `kernel(...)` line below: the [[Kernel]] expression
+  * calls the method from both `eval` and generated code, checks the
+  * argument count and that constant parameters are literals, and casts
+  * arguments to the method's parameter types. Hand-written expressions
+  * remain only where one static call cannot express the kernel:
+  *  - `cosine_sim`, `cosine_similarity`, `dot_product`: vector loops
+  *    written out in generated code, and an array/map overload;
+  *  - `multi_count`: holds an Aho-Corasick automaton built at plan time;
+  *  - `bpe_count`, `bpe_segment`, `bpe_count_bytes`,
+  *    `bpe_segment_bytes`: hold the merge-rank map built at plan time;
+  *  - `try_eval`: wraps an arbitrary child, interpreted on purpose;
+  *  - the PQ expressions (`PqFunctions`), never registered, hold the
+  *    trained codebooks.
   */
 object GraftFunctions {
 
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarityExpression].getName, "cosine_sim"),
-      (e: Seq[Expression]) => CosineSimilarityExpression(e(0), e(1))),
+  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def entry(name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression): Entry =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** `name(cols column arguments, lits literal arguments)` calls
+    * `target.method(columns…, literal values…, fixed…)`. */
+  private def kernel(name: String, target: AnyRef, method: String,
+      dataType: DataType, cols: Int = 1, lits: Int = 0, fixed: Seq[Any] = Nil,
+      nullResult: Boolean = false, sqlName: String = null): Entry =
+    entry(name, classOf[Kernel])(e => Kernel.build(Option(sqlName).getOrElse(name),
+      e, cols, lits, fixed, target, method, dataType, nullResult))
+
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val longs = ArrayType(LongType, containsNull = false)
+
+  val all: Seq[Entry] = Seq(
+    entry("cosine_sim", classOf[CosineSimilarityExpression])(
+      e => CosineSimilarityExpression(e(0), e(1))),
     // Trino's dual-form similarity functions (r15): array×array dense
     // AND map<string,·>×map sparse behind one name — the overload SQL
     // temp functions cannot express (dialect infra note in PrestoSql)
-    (FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarityDispatchExpression].getName,
-        "cosine_similarity"),
-      (e: Seq[Expression]) => {
-        require(e.length == 2,
-          s"cosine_similarity expects 2 arguments; got ${e.length}")
-        CosineSimilarityDispatchExpression(e(0), e(1))
-      }),
-    (FunctionIdentifier("to_iso8601"),
-      new ExpressionInfo(classOf[ToIso8601Expression].getName, "to_iso8601"),
-      (e: Seq[Expression]) => {
-        require(e.length == 1,
-          s"to_iso8601 expects 1 argument; got ${e.length}")
-        ToIso8601Expression(e(0))
-      }),
-    (FunctionIdentifier("to_base32"),
-      new ExpressionInfo(classOf[ToBase32Expression].getName, "to_base32"),
-      (e: Seq[Expression]) => {
-        require(e.length == 1,
-          s"to_base32 expects 1 argument; got ${e.length}")
-        ToBase32Expression(e(0))
-      }),
-    (FunctionIdentifier("from_base32"),
-      new ExpressionInfo(classOf[FromBase32Expression].getName,
-        "from_base32"),
-      (e: Seq[Expression]) => {
-        require(e.length == 1,
-          s"from_base32 expects 1 argument; got ${e.length}")
-        FromBase32Expression(e(0))
-      }),
-    (FunctionIdentifier("murmur3_x64_128"),
-      new ExpressionInfo(classOf[Murmur3X64128Expression].getName,
-        "murmur3_x64_128"),
-      (e: Seq[Expression]) => {
-        require(e.length == 1,
-          s"murmur3_x64_128 expects 1 argument; got ${e.length}")
-        Murmur3X64128Expression(e(0))
-      }),
+    entry("cosine_similarity", classOf[CosineSimilarityDispatchExpression]) { e =>
+      require(e.length == 2,
+        s"cosine_similarity expects 2 arguments; got ${e.length}")
+      CosineSimilarityDispatchExpression(e(0), e(1))
+    },
+    entry("dot_product", classOf[DotProductDispatchExpression]) { e =>
+      require(e.length == 2, s"dot_product expects 2 arguments; got ${e.length}")
+      DotProductDispatchExpression(e(0), e(1))
+    },
+    entry("to_iso8601", classOf[Kernel]) { e =>
+      val method = e.headOption.map(_.dataType) match {
+        case Some(DateType) => "fmtDate"
+        case Some(TimestampType) | None => "fmtTs"
+        case Some(other) => throw new IllegalArgumentException(
+          s"to_iso8601: DATE or TIMESTAMP argument required, got $other")
+      }
+      Kernel.build("to_iso8601", e, 1, 0, Nil, Iso8601Core, method, StringType,
+        nullResult = false)
+    },
+    kernel("to_base32", Base32Core, "encode", StringType),
+    kernel("from_base32", Base32Core, "decodeB32", BinaryType),
+    kernel("murmur3_x64_128", WireHashCore, "murmur3x64128", BinaryType),
     // Trino's name for the same 128-bit digest
-    (FunctionIdentifier("murmur3"),
-      new ExpressionInfo(classOf[Murmur3X64128Expression].getName,
-        "murmur3"),
-      (e: Seq[Expression]) => {
-        require(e.length == 1,
-          s"murmur3 expects 1 argument; got ${e.length}")
-        Murmur3X64128Expression(e(0))
-      }),
-    (FunctionIdentifier("spooky_hash_v2_32"),
-      new ExpressionInfo(classOf[SpookyHashV232Expression].getName,
-        "spooky_hash_v2_32"),
-      (e: Seq[Expression]) => {
-        require(e.length == 1,
-          s"spooky_hash_v2_32 expects 1 argument; got ${e.length}")
-        SpookyHashV232Expression(e(0))
-      }),
-    (FunctionIdentifier("spooky_hash_v2_64"),
-      new ExpressionInfo(classOf[SpookyHashV264Expression].getName,
-        "spooky_hash_v2_64"),
-      (e: Seq[Expression]) => {
-        require(e.length == 1,
-          s"spooky_hash_v2_64 expects 1 argument; got ${e.length}")
-        SpookyHashV264Expression(e(0))
-      }),
-    (FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProductDispatchExpression].getName,
-        "dot_product"),
-      (e: Seq[Expression]) => {
-        require(e.length == 2,
-          s"dot_product expects 2 arguments; got ${e.length}")
-        DotProductDispatchExpression(e(0), e(1))
-      }),
-    (FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignatureExpression].getName, "minhash_sig"),
-      (e: Seq[Expression]) => MinHashSignatureExpression(e(0), 64)),
-    (FunctionIdentifier("minhash_text_sig"),
-      new ExpressionInfo(
-        classOf[MinHashTextSignatureExpression].getName, "minhash_text_sig"),
-      (e: Seq[Expression]) =>
-        MinHashTextSignatureExpression(e(0), litInt(e(1)), 64)),
-    (FunctionIdentifier("simhash48"),
-      new ExpressionInfo(classOf[SimHash48Expression].getName, "simhash48"),
-      (e: Seq[Expression]) => SimHash48Expression(e(0))),
-    (FunctionIdentifier("perm_match_count"),
-      new ExpressionInfo(
-        classOf[PermMatchCountExpression].getName, "perm_match_count"),
-      (e: Seq[Expression]) => PermMatchCountExpression(e(0), e(1))),
-    (FunctionIdentifier("simhash48_text"),
-      new ExpressionInfo(
-        classOf[SimHash48TextExpression].getName, "simhash48_text"),
-      (e: Seq[Expression]) => SimHash48TextExpression(e(0))),
-    (FunctionIdentifier("rhp_sig64"),
-      new ExpressionInfo(classOf[RhpSignatureExpression].getName, "rhp_sig64"),
-      (e: Seq[Expression]) => RhpSignatureExpression(e(0))),
-    (FunctionIdentifier("char_shingles"),
-      new ExpressionInfo(classOf[CharShinglesExpression].getName, "char_shingles"),
-      (e: Seq[Expression]) => CharShinglesExpression(e(0), litInt(e(1)))),
-    (FunctionIdentifier("gram_hashes"),
-      new ExpressionInfo(classOf[GramHashesExpression].getName, "gram_hashes"),
-      (e: Seq[Expression]) => GramHashesExpression(e(0), litInt(e(1)))),
-    (FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShinglesExpression].getName, "word_shingles"),
-      (e: Seq[Expression]) => WordShinglesExpression(e(0), litInt(e(1)))),
-    (FunctionIdentifier("word_tokens"),
-      new ExpressionInfo(classOf[WordTokensExpression].getName, "word_tokens"),
-      (e: Seq[Expression]) => WordTokensExpression(e(0))),
-    (FunctionIdentifier("kgram_hashes"),
-      new ExpressionInfo(classOf[KGramHashesExpression].getName, "kgram_hashes"),
-      (e: Seq[Expression]) => KGramHashesExpression(e(0), litInt(e(1)))),
-    (FunctionIdentifier("unit_q3"),
-      new ExpressionInfo(classOf[UnitQ3Expression].getName, "unit_q3"),
-      (e: Seq[Expression]) => UnitQ3Expression(e(0))),
-    (FunctionIdentifier("to_ieee754_64"),
-      new ExpressionInfo(classOf[ToIeee754Expression].getName, "to_ieee754_64"),
-      (e: Seq[Expression]) => ToIeee754Expression(
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          e(0), org.apache.spark.sql.types.DoubleType), 64)),
-    (FunctionIdentifier("to_ieee754_32"),
-      new ExpressionInfo(classOf[ToIeee754Expression].getName, "to_ieee754_32"),
-      (e: Seq[Expression]) => ToIeee754Expression(
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          e(0), org.apache.spark.sql.types.FloatType), 32)),
-    (FunctionIdentifier("from_ieee754_64"),
-      new ExpressionInfo(classOf[FromIeee754Expression].getName, "from_ieee754_64"),
-      (e: Seq[Expression]) => FromIeee754Expression(e(0), 64)),
-    (FunctionIdentifier("from_ieee754_32"),
-      new ExpressionInfo(classOf[FromIeee754Expression].getName, "from_ieee754_32"),
-      (e: Seq[Expression]) => FromIeee754Expression(e(0), 32)),
-    (FunctionIdentifier("fnv1_32"),
-      new ExpressionInfo(classOf[FnvExpression].getName, "fnv1_32"),
-      (e: Seq[Expression]) => FnvExpression(e(0), 32, fnv1a = false)),
-    (FunctionIdentifier("fnv1a_32"),
-      new ExpressionInfo(classOf[FnvExpression].getName, "fnv1a_32"),
-      (e: Seq[Expression]) => FnvExpression(e(0), 32, fnv1a = true)),
-    (FunctionIdentifier("fnv1_64"),
-      new ExpressionInfo(classOf[FnvExpression].getName, "fnv1_64"),
-      (e: Seq[Expression]) => FnvExpression(e(0), 64, fnv1a = false)),
-    (FunctionIdentifier("fnv1a_64"),
-      new ExpressionInfo(classOf[FnvExpression].getName, "fnv1a_64"),
-      (e: Seq[Expression]) => FnvExpression(e(0), 64, fnv1a = true)),
-    (FunctionIdentifier("gopher_repetition_stats"),
-      new ExpressionInfo(
-        classOf[GopherRepetitionExpression].getName, "gopher_repetition_stats"),
-      (e: Seq[Expression]) => GopherRepetitionExpression(e(0))),
-    (FunctionIdentifier("try_eval"),
-      new ExpressionInfo(classOf[TryEvalExpression].getName, "try_eval"),
-      (e: Seq[Expression]) => TryEvalExpression(e(0))),
-    (FunctionIdentifier("normalize_str"),
-      new ExpressionInfo(classOf[NormalizeExpression].getName, "normalize_str"),
-      (e: Seq[Expression]) =>
-        NormalizeExpression(e(0), if (e.size > 1) litStr(e(1)) else "NFC")),
-    (FunctionIdentifier("bpe_count"),
-      new ExpressionInfo(classOf[BpeCountExpression].getName, "bpe_count"),
-      (e: Seq[Expression]) =>
-        BpeCountExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
-    (FunctionIdentifier("image_stats"),
-      new ExpressionInfo(classOf[ImageStatsExpression].getName, "image_stats"),
-      (e: Seq[Expression]) => ImageStatsExpression(e(0))),
-    (FunctionIdentifier("audio_stats"),
-      new ExpressionInfo(classOf[AudioStatsExpression].getName, "audio_stats"),
-      (e: Seq[Expression]) => AudioStatsExpression(e(0))),
-    (FunctionIdentifier("ws_words"),
-      new ExpressionInfo(classOf[WsWordsExpression].getName, "ws_words"),
-      (e: Seq[Expression]) => WsWordsExpression(e(0))),
-    (FunctionIdentifier("bpe_segment"),
-      new ExpressionInfo(classOf[BpeSegmentExpression].getName, "bpe_segment"),
-      (e: Seq[Expression]) =>
-        BpeSegmentExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
-    (FunctionIdentifier("bpe_count_bytes"),
-      new ExpressionInfo(classOf[ByteBpeCountExpression].getName, "bpe_count_bytes"),
-      (e: Seq[Expression]) =>
-        ByteBpeCountExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
-    (FunctionIdentifier("bpe_segment_bytes"),
-      new ExpressionInfo(classOf[ByteBpeSegmentExpression].getName, "bpe_segment_bytes"),
-      (e: Seq[Expression]) =>
-        ByteBpeSegmentExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
-    (FunctionIdentifier("st_contains"),
-      new ExpressionInfo(classOf[StContainsExpression].getName, "st_contains"),
-      // arity dispatch: the 3-arg form is the original (polyWkt, x, y)
-      // point test; the 2-arg form is OGC ST_Contains(a, b) — geometry b
-      // within geometry a — which is exactly the within kernel with the
-      // arguments swapped (so the Trino geospatial page runs unmodified)
-      (e: Seq[Expression]) =>
-        if (e.length == 2) StWithinExpression(e(1), e(0))
-        else StContainsExpression(e(0), e(1), e(2))),
-    (FunctionIdentifier("st_intersects"),
-      new ExpressionInfo(classOf[StIntersectsExpression].getName, "st_intersects"),
-      (e: Seq[Expression]) => StIntersectsExpression(e(0), e(1))),
-    (FunctionIdentifier("st_touches"),
-      new ExpressionInfo(classOf[StTouchesExpression].getName, "st_touches"),
-      (e: Seq[Expression]) => StTouchesExpression(e(0), e(1))),
-    (FunctionIdentifier("st_crosses"),
-      new ExpressionInfo(classOf[StCrossesExpression].getName, "st_crosses"),
-      (e: Seq[Expression]) => StCrossesExpression(e(0), e(1))),
-    (FunctionIdentifier("st_within"),
-      new ExpressionInfo(classOf[StWithinExpression].getName, "st_within"),
-      (e: Seq[Expression]) => StWithinExpression(e(0), e(1))),
-    (FunctionIdentifier("st_overlaps"),
-      new ExpressionInfo(classOf[StOverlapsExpression].getName, "st_overlaps"),
-      (e: Seq[Expression]) => StOverlapsExpression(e(0), e(1))),
-    (FunctionIdentifier("st_x"),
-      new ExpressionInfo(classOf[StPointCoordExpression].getName, "st_x"),
-      (e: Seq[Expression]) => StPointCoordExpression(e(0), 0)),
-    (FunctionIdentifier("st_y"),
-      new ExpressionInfo(classOf[StPointCoordExpression].getName, "st_y"),
-      (e: Seq[Expression]) => StPointCoordExpression(e(0), 1)),
-    (FunctionIdentifier("st_centroid_x"),
-      new ExpressionInfo(classOf[StCentroidExpression].getName, "st_centroid_x"),
-      (e: Seq[Expression]) => StCentroidExpression(e(0), 0)),
-    (FunctionIdentifier("st_centroid_y"),
-      new ExpressionInfo(classOf[StCentroidExpression].getName, "st_centroid_y"),
-      (e: Seq[Expression]) => StCentroidExpression(e(0), 1)),
-    (FunctionIdentifier("st_xmin"),
-      new ExpressionInfo(classOf[StEnvBoundExpression].getName, "st_xmin"),
-      (e: Seq[Expression]) => StEnvBoundExpression(e(0), 0)),
-    (FunctionIdentifier("st_ymin"),
-      new ExpressionInfo(classOf[StEnvBoundExpression].getName, "st_ymin"),
-      (e: Seq[Expression]) => StEnvBoundExpression(e(0), 1)),
-    (FunctionIdentifier("st_xmax"),
-      new ExpressionInfo(classOf[StEnvBoundExpression].getName, "st_xmax"),
-      (e: Seq[Expression]) => StEnvBoundExpression(e(0), 2)),
-    (FunctionIdentifier("st_ymax"),
-      new ExpressionInfo(classOf[StEnvBoundExpression].getName, "st_ymax"),
-      (e: Seq[Expression]) => StEnvBoundExpression(e(0), 3)),
-    (FunctionIdentifier("st_area"),
-      new ExpressionInfo(classOf[StAreaExpression].getName, "st_area"),
-      (e: Seq[Expression]) => StAreaExpression(e(0))),
-    (FunctionIdentifier("st_length"),
-      new ExpressionInfo(classOf[StLengthExpression].getName, "st_length"),
-      (e: Seq[Expression]) => StLengthExpression(e(0))),
-    (FunctionIdentifier("st_intersection"),
-      new ExpressionInfo(classOf[StIntersectionExpression].getName,
-        "st_intersection"),
-      (e: Seq[Expression]) => StIntersectionExpression(e(0), e(1))),
-    (FunctionIdentifier("st_union"),
-      new ExpressionInfo(classOf[StUnionExpression].getName, "st_union"),
-      (e: Seq[Expression]) => StUnionExpression(e(0), e(1))),
-    (FunctionIdentifier("st_difference"),
-      new ExpressionInfo(classOf[StDifferenceExpression].getName,
-        "st_difference"),
-      (e: Seq[Expression]) => StDifferenceExpression(e(0), e(1))),
-    (FunctionIdentifier("st_symdifference"),
-      new ExpressionInfo(classOf[StSymDifferenceExpression].getName,
-        "st_symdifference"),
-      (e: Seq[Expression]) => StSymDifferenceExpression(e(0), e(1))),
-    (FunctionIdentifier("st_numgeometries"),
-      new ExpressionInfo(classOf[StNumGeometriesExpression].getName,
-        "st_numgeometries"),
-      (e: Seq[Expression]) => StNumGeometriesExpression(e(0))),
-    (FunctionIdentifier("st_geometryn"),
-      new ExpressionInfo(classOf[StGeometryNExpression].getName,
-        "st_geometryn"),
-      (e: Seq[Expression]) => StGeometryNExpression(e(0), e(1))),
-    (FunctionIdentifier("st_exteriorring"),
-      new ExpressionInfo(classOf[StExteriorRingExpression].getName,
-        "st_exteriorring"),
-      (e: Seq[Expression]) => StExteriorRingExpression(e(0))),
-    (FunctionIdentifier("st_numinteriorring"),
-      new ExpressionInfo(classOf[StNumInteriorRingExpression].getName,
-        "st_numinteriorring"),
-      (e: Seq[Expression]) => StNumInteriorRingExpression(e(0))),
-    (FunctionIdentifier("st_interiorringn"),
-      new ExpressionInfo(classOf[StInteriorRingNExpression].getName,
-        "st_interiorringn"),
-      (e: Seq[Expression]) => StInteriorRingNExpression(e(0), e(1))),
-    (FunctionIdentifier("st_isvalid"),
-      new ExpressionInfo(classOf[StIsValidExpression].getName,
-        "st_isvalid"),
-      (e: Seq[Expression]) => StIsValidExpression(e(0))),
-    (FunctionIdentifier("geometry_invalid_reason"),
-      new ExpressionInfo(classOf[StInvalidReasonExpression].getName,
-        "geometry_invalid_reason"),
-      (e: Seq[Expression]) => StInvalidReasonExpression(e(0))),
-    (FunctionIdentifier("st_geometrytype"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_geometrytype"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 0)),
-    (FunctionIdentifier("st_isempty"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_isempty"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 1)),
-    (FunctionIdentifier("st_dimension"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_dimension"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 2)),
-    (FunctionIdentifier("st_numpoints"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_numpoints"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 3)),
-    (FunctionIdentifier("st_startpoint"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_startpoint"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 4)),
-    (FunctionIdentifier("st_endpoint"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_endpoint"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 5)),
-    (FunctionIdentifier("st_isclosed"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_isclosed"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 6)),
-    (FunctionIdentifier("st_isring"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_isring"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 7)),
-    (FunctionIdentifier("st_pointn"),
-      new ExpressionInfo(classOf[StPointNExpression].getName, "st_pointn"),
-      (e: Seq[Expression]) => StPointNExpression(e(0), e(1))),
-    (FunctionIdentifier("line_locate_point"),
-      new ExpressionInfo(classOf[LineLocatePointExpression].getName,
-        "line_locate_point"),
-      (e: Seq[Expression]) => LineLocatePointExpression(e(0), e(1))),
-    (FunctionIdentifier("line_interpolate_point"),
-      new ExpressionInfo(classOf[LineInterpolatePointExpression].getName,
-        "line_interpolate_point"),
-      (e: Seq[Expression]) =>
-        LineInterpolatePointExpression(e(0), dbl(e(1)))),
-    (FunctionIdentifier("to_geojson_geometry"),
-      new ExpressionInfo(classOf[GeoJsonExpression].getName,
-        "to_geojson_geometry"),
-      (e: Seq[Expression]) => GeoJsonExpression(e(0), 0)),
-    (FunctionIdentifier("from_geojson_geometry"),
-      new ExpressionInfo(classOf[GeoJsonExpression].getName,
-        "from_geojson_geometry"),
-      (e: Seq[Expression]) => GeoJsonExpression(e(0), 1)),
-    (FunctionIdentifier("simplify_geometry"),
-      new ExpressionInfo(classOf[SimplifyGeometryExpression].getName,
-        "simplify_geometry"),
-      (e: Seq[Expression]) => SimplifyGeometryExpression(e(0), dbl(e(1)))),
-    (FunctionIdentifier("st_distance"),
-      new ExpressionInfo(classOf[StDistanceExpression].getName,
-        "st_distance"),
-      (e: Seq[Expression]) => StDistanceExpression(e(0), e(1))),
-    (FunctionIdentifier("st_equals"),
-      new ExpressionInfo(classOf[StEqualsExpression].getName, "st_equals"),
-      (e: Seq[Expression]) => StEqualsExpression(e(0), e(1))),
-    (FunctionIdentifier("st_boundary"),
-      new ExpressionInfo(classOf[StBoundaryExpression].getName,
-        "st_boundary"),
-      (e: Seq[Expression]) => StBoundaryExpression(e(0))),
-    (FunctionIdentifier("st_buffer"),
-      new ExpressionInfo(classOf[StBufferExpression].getName, "st_buffer"),
-      (e: Seq[Expression]) => {
-        // optional 3rd arg: join style literal — 'round' (default,
-        // Trino/GEOS arcs) or 'miter' (the r13 closed form)
-        require(e.length == 2 || e.length == 3,
-          s"st_buffer expects (geometry, distance[, join_style]); got " +
-            s"${e.length} arguments")
-        val style =
-          if (e.length < 3) WktCore.BufRound
-          else litStr(e(2)).toLowerCase(java.util.Locale.ROOT) match {
+    kernel("murmur3", WireHashCore, "murmur3x64128", BinaryType,
+      sqlName = "murmur3_x64_128"),
+    kernel("spooky_hash_v2_32", WireHashCore, "spooky32", BinaryType),
+    kernel("spooky_hash_v2_64", WireHashCore, "spooky64", BinaryType),
+    kernel("minhash_sig", SketchKernels, "minhash", longs, fixed = Seq(64)),
+    kernel("minhash_text_sig", SketchKernels, "minhashTextSig", longs, lits = 1,
+      fixed = Seq(64)),
+    kernel("simhash48", SketchKernels, "simhash48", LongType),
+    kernel("perm_match_count", SketchKernels, "matchCount", IntegerType, cols = 2),
+    kernel("simhash48_text", SketchKernels, "simhash48Text", LongType),
+    kernel("rhp_sig64", SketchKernels, "rhpSig64", LongType),
+    kernel("char_shingles", ShingleKernels, "charShingles", strings, lits = 1),
+    kernel("gram_hashes", ShingleKernels, "gramHashes", longs, lits = 1),
+    kernel("word_shingles", ShingleKernels, "wordShingles", strings, lits = 1),
+    kernel("word_tokens", ShingleKernels, "wordTokens", strings),
+    kernel("kgram_hashes", ShingleKernels, "kgramHashes", longs, lits = 1),
+    kernel("unit_q3", VectorQuantizeKernel, "unitQ3", VectorQuantizeKernel.resultType),
+    // Trino's to_ieee754_* take DOUBLE / REAL: any numeric argument casts
+    entry("to_ieee754_64", classOf[Kernel])(e => Kernel.build("to_ieee754_64",
+      e.map(Cast(_, DoubleType)), 1, 0, Nil, IeeeKernels, "to64", BinaryType, false)),
+    entry("to_ieee754_32", classOf[Kernel])(e => Kernel.build("to_ieee754_32",
+      e.map(Cast(_, FloatType)), 1, 0, Nil, IeeeKernels, "to32", BinaryType, false)),
+    kernel("from_ieee754_64", IeeeKernels, "from64", DoubleType),
+    kernel("from_ieee754_32", IeeeKernels, "from32", FloatType),
+    kernel("fnv1_32", FnvKernels, "fnv32", LongType, fixed = Seq(false)),
+    kernel("fnv1a_32", FnvKernels, "fnv32", LongType, fixed = Seq(true)),
+    kernel("fnv1_64", FnvKernels, "fnv64", LongType, fixed = Seq(false)),
+    kernel("fnv1a_64", FnvKernels, "fnv64", LongType, fixed = Seq(true)),
+    kernel("gopher_repetition_stats", GopherKernels, "repetitionStats",
+      GopherKernels.resultType),
+    entry("try_eval", classOf[TryEvalExpression])(e => TryEvalExpression(e(0))),
+    // Presto normalize(string[, form]); the form is a plan-time literal
+    entry("normalize_str", classOf[Kernel]) { e =>
+      val form =
+        if (e.length == 2) Kernel.literal("normalize_str", e(1), 2).toString else "NFC"
+      require(Set("NFC", "NFD", "NFKC", "NFKD")(form), s"bad normalization form: $form")
+      Kernel.build("normalize_str", if (e.length == 2) e.init else e, 1, 0, Seq(form),
+        NormalizeKernel, "normalize", StringType, nullResult = false)
+    },
+    entry("bpe_count", classOf[BpeCountExpression])(e =>
+      BpeCountExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+    kernel("image_stats", ImageCore, "stats", ImageCore.resultType, nullResult = true),
+    kernel("audio_stats", AudioCore, "stats", AudioCore.resultType, nullResult = true),
+    kernel("ws_words", BpeCore, "wsWords", strings),
+    entry("bpe_segment", classOf[BpeSegmentExpression])(e =>
+      BpeSegmentExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+    entry("bpe_count_bytes", classOf[ByteBpeCountExpression])(e =>
+      ByteBpeCountExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+    entry("bpe_segment_bytes", classOf[ByteBpeSegmentExpression])(e =>
+      ByteBpeSegmentExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+    // arity dispatch: the 3-arg form is the original (polyWkt, x, y)
+    // point test; the 2-arg form is OGC ST_Contains(a, b) — geometry b
+    // within geometry a — which is exactly the within kernel with the
+    // arguments swapped (so the Trino geospatial page runs unmodified)
+    entry("st_contains", classOf[Kernel]) { e =>
+      if (e.length == 2) Kernel.build("st_within", e.reverse, 2, 0, Nil, WktCore,
+        "withinWkt", BooleanType, nullResult = false)
+      else Kernel.build("st_contains", e, 3, 0, Nil, WktCore, "containsWkt",
+        BooleanType, nullResult = false)
+    },
+    kernel("st_intersects", WktCore, "intersectsWkt", BooleanType, cols = 2),
+    kernel("st_touches", WktCore, "touchesWkt", BooleanType, cols = 2),
+    kernel("st_crosses", WktCore, "crossesWkt", BooleanType, cols = 2),
+    kernel("st_within", WktCore, "withinWkt", BooleanType, cols = 2),
+    kernel("st_overlaps", WktCore, "overlapsWkt", BooleanType, cols = 2),
+    kernel("st_x", WktCore, "pointCoord", DoubleType, fixed = Seq(0)),
+    kernel("st_y", WktCore, "pointCoord", DoubleType, fixed = Seq(1)),
+    kernel("st_centroid_x", WktCore, "centroid", DoubleType, fixed = Seq(0)),
+    kernel("st_centroid_y", WktCore, "centroid", DoubleType, fixed = Seq(1)),
+    kernel("st_xmin", WktCore, "envBound", DoubleType, fixed = Seq(0)),
+    kernel("st_ymin", WktCore, "envBound", DoubleType, fixed = Seq(1)),
+    kernel("st_xmax", WktCore, "envBound", DoubleType, fixed = Seq(2)),
+    kernel("st_ymax", WktCore, "envBound", DoubleType, fixed = Seq(3)),
+    kernel("st_area", WktCore, "area", DoubleType),
+    kernel("st_length", WktCore, "length", DoubleType),
+    kernel("st_intersection", WktCore, "intersectionWkt", StringType, cols = 2),
+    kernel("st_union", WktCore, "unionWkt", StringType, cols = 2),
+    kernel("st_difference", WktCore, "differenceWkt", StringType, cols = 2),
+    kernel("st_symdifference", WktCore, "symDifferenceWkt", StringType, cols = 2),
+    kernel("st_numgeometries", WktCore, "numGeometries", LongType),
+    kernel("st_geometryn", WktCore, "geometryN", StringType, cols = 2,
+      nullResult = true),
+    kernel("st_exteriorring", WktCore, "exteriorRing", StringType),
+    kernel("st_numinteriorring", WktCore, "numInteriorRing", LongType),
+    kernel("st_interiorringn", WktCore, "interiorRingN", StringType, cols = 2,
+      nullResult = true),
+    kernel("st_isvalid", WktCore, "isValid", BooleanType),
+    kernel("geometry_invalid_reason", WktCore, "invalidReason", StringType,
+      nullResult = true),
+    kernel("st_geometrytype", WktCore, "geometryType", StringType),
+    kernel("st_isempty", WktCore, "isEmptyGeom", BooleanType),
+    kernel("st_dimension", WktCore, "dimensionOf", LongType),
+    kernel("st_numpoints", WktCore, "numPoints", LongType),
+    kernel("st_startpoint", WktCore, "lineTerminal", StringType, fixed = Seq(false)),
+    kernel("st_endpoint", WktCore, "lineTerminal", StringType, fixed = Seq(true)),
+    kernel("st_isclosed", WktCore, "isClosedLine", BooleanType),
+    kernel("st_isring", WktCore, "isRingLine", BooleanType),
+    kernel("st_pointn", WktCore, "pointN", StringType, cols = 2, nullResult = true),
+    kernel("line_locate_point", WktCore, "lineLocatePoint", DoubleType, cols = 2),
+    kernel("line_interpolate_point", WktCore, "lineInterpolatePoint", StringType,
+      cols = 2),
+    kernel("to_geojson_geometry", WktCore, "toGeoJson", StringType),
+    kernel("from_geojson_geometry", WktCore, "fromGeoJson", StringType),
+    kernel("simplify_geometry", WktCore, "simplifyWkt", StringType, cols = 2),
+    kernel("st_distance", WktCore, "distanceWkt", DoubleType, cols = 2),
+    kernel("st_equals", WktCore, "equalsWkt", BooleanType, cols = 2),
+    kernel("st_boundary", WktCore, "boundaryWkt", StringType),
+    // optional 3rd arg: join style literal — 'round' (default, Trino/GEOS
+    // arcs) or 'miter' (the r13 closed form)
+    entry("st_buffer", classOf[Kernel]) { e =>
+      val style = if (e.length != 3) WktCore.BufRound
+        else Kernel.literal("st_buffer", e(2), 3).toString
+          .toLowerCase(java.util.Locale.ROOT) match {
             case "round" => WktCore.BufRound
             case "miter" => WktCore.BufMiter
             case other => throw new IllegalArgumentException(
               s"st_buffer: unknown join style '$other' (round | miter)")
           }
-        StBufferExpression(e(0), e(1), style)
-      }),
-    (FunctionIdentifier("st_convexhull"),
-      new ExpressionInfo(classOf[StConvexHullExpression].getName,
-        "st_convexhull"),
-      (e: Seq[Expression]) => StConvexHullExpression(e(0))),
-    (FunctionIdentifier("geometry_nearest_points"),
-      new ExpressionInfo(classOf[GeometryNearestPointsExpression].getName,
-        "geometry_nearest_points"),
-      (e: Seq[Expression]) => GeometryNearestPointsExpression(e(0), e(1))),
-    (FunctionIdentifier("line_interpolate_points"),
-      new ExpressionInfo(classOf[LineInterpolatePointsExpression].getName,
-        "line_interpolate_points"),
-      (e: Seq[Expression]) =>
-        LineInterpolatePointsExpression(e(0), dbl(e(1)))),
-    (FunctionIdentifier("st_issimple"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_issimple"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 8)),
-    (FunctionIdentifier("st_coorddim"),
-      new ExpressionInfo(classOf[StGeomInfoExpression].getName,
-        "st_coorddim"),
-      (e: Seq[Expression]) => StGeomInfoExpression(e(0), 9)),
-    (FunctionIdentifier("st_points"),
-      new ExpressionInfo(classOf[StPointsExpression].getName, "st_points"),
-      (e: Seq[Expression]) => StPointsExpression(e(0))),
-    (FunctionIdentifier("to_spherical_geography"),
-      new ExpressionInfo(classOf[SphericalGeographyExpression].getName,
-        "to_spherical_geography"),
-      (e: Seq[Expression]) => SphericalGeographyExpression(e(0), 0)),
-    (FunctionIdentifier("to_geometry"),
-      new ExpressionInfo(classOf[SphericalGeographyExpression].getName,
-        "to_geometry"),
-      (e: Seq[Expression]) => SphericalGeographyExpression(e(0), 1)),
-    (FunctionIdentifier("st_asbinary"),
-      new ExpressionInfo(classOf[WkbExpression].getName, "st_asbinary"),
-      (e: Seq[Expression]) => WkbExpression(e(0), 0)),
-    (FunctionIdentifier("st_geomfrombinary"),
-      new ExpressionInfo(classOf[WkbExpression].getName, "st_geomfrombinary"),
-      (e: Seq[Expression]) => WkbExpression(e(0), 1)),
-    (FunctionIdentifier("word_stem"),
-      new ExpressionInfo(classOf[WordStemExpression].getName, "word_stem"),
-      // Trino's 2-arg form takes a language code; the kernel is the
-      // English Porter stemmer, so only 'en' is honest — any other
-      // language fails loudly rather than silently mis-stemming
-      (e: Seq[Expression]) => {
-        if (e.length == 2) require(litStr(e(1)) == "en",
-          s"word_stem: only language 'en' is supported (Porter stemmer)" +
-            s", got '${litStr(e(1))}'")
-        WordStemExpression(e(0))
-      }),
-    (FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpression].getName, "jaro_winkler"),
-      (e: Seq[Expression]) => JaroWinklerExpression(e(0), e(1))),
-    (FunctionIdentifier("multi_count"),
-      new ExpressionInfo(classOf[MultiCountExpression].getName, "multi_count"),
-      (e: Seq[Expression]) => MultiCountExpression(e(0), e.tail.map(litStr))),
-    (FunctionIdentifier("graft_pgamma"),
-      new ExpressionInfo(classOf[RegGammaPExpression].getName, "graft_pgamma"),
-      (e: Seq[Expression]) => RegGammaPExpression(dbl(e(0)), dbl(e(1)))),
-    (FunctionIdentifier("graft_ibeta"),
-      new ExpressionInfo(classOf[RegBetaExpression].getName, "graft_ibeta"),
-      (e: Seq[Expression]) => RegBetaExpression(dbl(e(0)), dbl(e(1)), dbl(e(2)))),
-    (FunctionIdentifier("graft_inv_pgamma"),
-      new ExpressionInfo(classOf[InvRegGammaExpression].getName,
-        "graft_inv_pgamma"),
-      (e: Seq[Expression]) => InvRegGammaExpression(dbl(e(0)), dbl(e(1)))),
-    (FunctionIdentifier("graft_inv_ibeta"),
-      new ExpressionInfo(classOf[InvRegBetaExpression].getName, "graft_inv_ibeta"),
-      (e: Seq[Expression]) => InvRegBetaExpression(dbl(e(0)), dbl(e(1)), dbl(e(2)))),
-    (FunctionIdentifier("graft_inv_poisson"),
-      new ExpressionInfo(classOf[InvPoissonCdfExpression].getName,
-        "graft_inv_poisson"),
-      (e: Seq[Expression]) => InvPoissonCdfExpression(dbl(e(0)), dbl(e(1)))),
-    (FunctionIdentifier("graft_inv_binomial"),
-      new ExpressionInfo(classOf[InvBinomialCdfExpression].getName,
-        "graft_inv_binomial"),
-      (e: Seq[Expression]) => InvBinomialCdfExpression(lng(e(0)), dbl(e(1)),
-        dbl(e(2)))))
-
-  private def lng(e: Expression): Expression =
-    if (e.dataType == org.apache.spark.sql.types.LongType) e
-    else org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.LongType)
-
-  // numeric-literal convenience: the stat kernels are double-only
-  private def dbl(e: Expression): Expression =
-    if (e.dataType == org.apache.spark.sql.types.DoubleType) e
-    else org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.DoubleType)
-
-  private def litInt(e: Expression): Int =
-    e.eval(null) match {
-      case i: Int => i
-      case other => throw new IllegalArgumentException(
-        s"expected foldable int literal, got $other")
-    }
+      Kernel.build("st_buffer", if (e.length == 3) e.init else e, 2, 0, Seq(style),
+        WktCore, "bufferWkt", StringType, nullResult = false)
+    },
+    kernel("st_convexhull", WktCore, "convexHullWkt", StringType),
+    kernel("geometry_nearest_points", WktCore, "nearestPointsWkt", strings,
+      cols = 2, nullResult = true),
+    kernel("line_interpolate_points", WktCore, "lineInterpolatePoints", strings,
+      cols = 2),
+    kernel("st_issimple", WktCore, "isSimpleWkt", BooleanType),
+    kernel("st_coorddim", WktCore, "coordDim", LongType),
+    kernel("st_points", WktCore, "pointsOf", strings, nullResult = true),
+    kernel("to_spherical_geography", WktCore, "toSphericalGeography", StringType),
+    kernel("to_geometry", WktCore, "sphericalToGeometry", StringType),
+    kernel("st_asbinary", WktCore, "toWkb", BinaryType),
+    kernel("st_geomfrombinary", WktCore, "fromWkb", StringType),
+    // Trino's 2-arg form takes a language code; the kernel is the
+    // English Porter stemmer, so only 'en' is honest — any other
+    // language fails loudly rather than silently mis-stemming
+    entry("word_stem", classOf[Kernel]) { e =>
+      if (e.length == 2) {
+        val lang = Kernel.literal("word_stem", e(1), 2).toString
+        require(lang == "en",
+          s"word_stem: only language 'en' is supported (Porter stemmer), got '$lang'")
+      }
+      Kernel.build("word_stem", if (e.length == 2) e.init else e, 1, 0, Nil,
+        PorterKernel, "stem", StringType, nullResult = false)
+    },
+    kernel("jaro_winkler", JaroWinklerKernel, "sim", DoubleType, cols = 2),
+    entry("multi_count", classOf[MultiCountExpression])(e =>
+      MultiCountExpression(e(0), e.tail.map(litStr))),
+    kernel("graft_pgamma", StatKernel, "pgamma", DoubleType, cols = 2),
+    kernel("graft_ibeta", StatKernel, "ibeta", DoubleType, cols = 3),
+    kernel("graft_inv_pgamma", StatKernel, "invPgamma", DoubleType, cols = 2),
+    kernel("graft_inv_ibeta", StatKernel, "invIbeta", DoubleType, cols = 3),
+    kernel("graft_inv_poisson", StatKernel, "invPoisson", LongType, cols = 2),
+    kernel("graft_inv_binomial", StatKernel, "invBinomial", LongType, cols = 3))
 
   private def litStr(e: Expression): String =
     e.eval(null) match {
@@ -479,6 +237,18 @@ object GraftFunctions {
       case other => throw new IllegalArgumentException(
         s"expected foldable string literal, got $other")
     }
+
+  private lazy val builders = all.map { case (id, _, b) => id.funcName -> b }.toMap
+
+  /** The registered expression `name(args…)` as a Column, built directly
+    * from the registry, so the session needs no registration. A Column
+    * argument is an expression; any other value is a literal (a Column's
+    * expression is only resolved at analysis, so `lit(k)` is not one). */
+  def native(name: String, args: Any*): Column =
+    GraftShim.exprCol(builders(name)(args.map {
+      case c: Column => GraftShim.colExpr(c)
+      case v => Literal(v)
+    }))
 
   def register(spark: SparkSession): Unit =
     all.foreach { case (ident, info, builder) =>
@@ -504,8 +274,6 @@ object GraftFunctions {
   def gopherRepetitionStats(tokens: Column): Column =
     call_function("gopher_repetition_stats", tokens)
   def tryEval(e: Column): Column = call_function("try_eval", e)
-  def normalizeStr(s: Column, form: String = "NFC"): Column =
-    call_function("normalize_str", s, org.apache.spark.sql.functions.lit(form))
   def bpeCount(text: Column, merges: Seq[(String, String)]): Column =
     call_function("bpe_count", text, org.apache.spark.sql.functions.lit(
       merges.map { case (l, r) => s"$l $r" }.mkString(",")))

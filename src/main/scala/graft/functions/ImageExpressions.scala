@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Real image decode for the multimodal column story (r3 verdict missing
@@ -20,6 +17,15 @@ import org.apache.spark.sql.types._
   * fixture's pixel formula — stays in exact integers.
   */
 object ImageCore {
+  /** `image_stats`' result: struct<width int, height int, rsum, gsum,
+    * bsum long>; NULL for undecodable bytes. */
+  val resultType: StructType = StructType(Seq(
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false),
+    StructField("rsum", LongType, nullable = false),
+    StructField("gsum", LongType, nullable = false),
+    StructField("bsum", LongType, nullable = false)))
+
   /** Decode bytes → [width, height, rsum, gsum, bsum], or null if the
     * payload is not a decodable image (NULL-on-error, like TRY()). */
   def stats(bytes: Array[Byte]): InternalRow = {
@@ -51,36 +57,4 @@ object ImageCore {
       case scala.util.control.NonFatal(_) => null
     }
   }
-}
-
-/** `image_stats(binary)` → struct<width int, height int, rsum, gsum,
-  * bsum long>; NULL for undecodable bytes. */
-case class ImageStatsExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ImageStatsExpression.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    ImageCore.stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-        |${ev.value} = graft.functions.ImageCore.stats($c);
-        |${ev.isNull} = (${ev.value} == null);
-      """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): ImageStatsExpression = copy(child = newChild)
-}
-
-object ImageStatsExpression {
-  val schema: StructType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("rsum", LongType, nullable = false),
-    StructField("gsum", LongType, nullable = false),
-    StructField("bsum", LongType, nullable = false)))
 }

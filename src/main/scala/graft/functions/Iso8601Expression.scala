@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Trino's `to_iso8601` with BOTH argument forms behind one name — the
@@ -31,31 +28,4 @@ object Iso8601Core {
       java.time.ZoneOffset.UTC)
     UTF8String.fromString(tsFmt.format(ldt))
   }
-}
-
-case class ToIso8601Expression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "to_iso8601"
-
-  private lazy val isDate = child.dataType match {
-    case DateType => true
-    case TimestampType => false
-    case other => throw new IllegalArgumentException(
-      s"to_iso8601: DATE or TIMESTAMP argument required, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    if (isDate) Iso8601Core.fmtDate(input.asInstanceOf[Int])
-    else Iso8601Core.fmtTs(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      if (isDate)
-        s"${ev.value} = graft.functions.Iso8601Core.fmtDate($c);"
-      else s"${ev.value} = graft.functions.Iso8601Core.fmtTs($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): ToIso8601Expression = copy(child = newChild)
 }

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro–Winkler string similarity (Winkler 1990, building on Jaro 1989 —
@@ -72,24 +69,4 @@ object JaroWinklerKernel {
       jaro + l * 0.1 * (1.0 - jaro)
     } else jaro
   }
-}
-
-/** `jaro_winkler(a, b)` → double in [0, 1]; codegen-friendly binary
-  * expression (one static call — stays inside whole-stage codegen). */
-case class JaroWinklerExpression(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaro_winkler"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinklerKernel.sim(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.JaroWinklerKernel.sim($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinklerExpression =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,37 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode normalization kernel (static so generated code can call it). */
+/** Presto `normalize(string[, form])`, registered as `normalize_str`:
+  * Unicode normalization (NFC/NFD/NFKC/NFKD) over `java.text.Normalizer`
+  * (the semantics DuckDB's nfc_normalize uses); the form is a plan-time
+  * literal. */
 object NormalizeKernel {
   def normalize(s: UTF8String, form: String): UTF8String =
     UTF8String.fromString(
       java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.valueOf(form)))
-}
-
-/** Presto `normalize(string[, form])` — Unicode normalization (NFC/NFD/
-  * NFKC/NFKD). Spark has no built-in; this is a codegen'd expression over
-  * `java.text.Normalizer` (same ICU semantics DuckDB's nfc_normalize uses).
-  * Form is a compile-time literal, so the hot loop is one static call.
-  */
-case class NormalizeExpression(child: Expression, form: String = "NFC")
-  extends UnaryExpression {
-
-  require(Set("NFC", "NFD", "NFKC", "NFKD")(form), s"bad normalization form: $form")
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "normalize_str"
-
-  override def nullSafeEval(input: Any): Any =
-    NormalizeKernel.normalize(input.asInstanceOf[UTF8String], form)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"""graft.functions.NormalizeKernel.normalize($c, "$form")""")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeExpression =
-    copy(child = newChild)
 }

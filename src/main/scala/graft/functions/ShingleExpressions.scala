@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native shingle kernels (SURVEY §2.9 L2 hot path).
@@ -165,93 +162,4 @@ object ShingleKernels {
     }
     new GenericArrayData(out)
   }
-}
-
-/** `gram_hashes(string, k)` → array<long> of per-position Karp–Rabin
-  * k-gram hashes (one per window, NO dedup — positions matter). */
-case class GramHashesExpression(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gram_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernels.gramHashes(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleKernels.gramHashes($c, $k)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GramHashesExpression = copy(child = newChild)
-}
-
-/** `word_tokens(string)` → array<string> of space-split non-empty tokens
-  * (see [[ShingleKernels.wordTokens]]). */
-case class WordTokensExpression(child: Expression)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_tokens"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernels.wordTokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernels.wordTokens($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordTokensExpression =
-    copy(child = newChild)
-}
-
-/** `kgram_hashes(array<string>, k)` → array<long> of per-gram polynomial
-  * hashes, in order, non-distinct (see [[ShingleKernels.kgramHashes]]). */
-case class KGramHashesExpression(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "kgram_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernels.kgramHashes(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernels.kgramHashes($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): KGramHashesExpression =
-    copy(child = newChild)
-}
-
-/** `char_shingles(string)` → array<string> of distinct k-grams. */
-case class CharShinglesExpression(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "char_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernels.charShingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernels.charShingles($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharShinglesExpression =
-    copy(child = newChild)
-}
-
-/** `word_shingles(array<string>)` → array<string> of distinct n-grams. */
-case class WordShinglesExpression(child: Expression, n: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernels.wordShingles(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernels.wordShingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShinglesExpression =
-    copy(child = newChild)
 }

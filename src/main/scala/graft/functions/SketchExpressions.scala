@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd sketch kernels for the dedup pipeline (SURVEY §2.9 L2).
@@ -236,117 +233,4 @@ object SketchKernels {
     }
     value
   }
-}
-
-/** `minhash_sig(array<long>)` → `array<long>` of `numPerms` minima. */
-case class MinHashSignatureExpression(child: Expression, numPerms: Int = 64)
-  extends UnaryExpression {
-
-  // input must already be array<long> (see note on AbstractDataType above)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.minhash(input.asInstanceOf[ArrayData], numPerms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SketchKernels.minhash($c, $numPerms)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignatureExpression =
-    copy(child = newChild)
-}
-
-/** `simhash48_text(text)` → 48-bit SimHash fused over the space-split
-  * tokens of the text (see [[SketchKernels.simhash48Text]]). */
-case class SimHash48TextExpression(child: Expression)
-  extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash48_text"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.simhash48Text(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SketchKernels.simhash48Text($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SimHash48TextExpression = copy(child = newChild)
-}
-
-/** `minhash_text_sig(text, k)` → `array<long>` of `numPerms` minima,
-  * fused over the char k-windows of the text (see
-  * [[SketchKernels.minhashTextSig]]). */
-case class MinHashTextSignatureExpression(child: Expression, k: Int,
-    numPerms: Int = 64) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_text_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.minhashTextSig(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k, numPerms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SketchKernels.minhashTextSig($c, $k, $numPerms)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): MinHashTextSignatureExpression = copy(child = newChild)
-}
-
-/** `rhp_sig64(array<float>)` → 64-bit random-hyperplane signature. */
-case class RhpSignatureExpression(child: Expression)
-  extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rhp_sig64"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.rhpSig64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernels.rhpSig64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RhpSignatureExpression =
-    copy(child = newChild)
-}
-
-/** `perm_match_count(array<long>, array<long>)` → int: positions where
-  * the two signatures agree (see [[SketchKernels.matchCount]]). */
-case class PermMatchCountExpression(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "perm_match_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernels.matchCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SketchKernels.matchCount($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PermMatchCountExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `simhash48(array<long>)` → long (per-bit majority vote, 48 bits). */
-case class SimHash48Expression(child: Expression)
-  extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash48"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.simhash48(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernels.simhash48($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash48Expression =
-    copy(child = newChild)
 }

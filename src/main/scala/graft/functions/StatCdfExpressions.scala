@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
-
 /** Special-function kernels behind Trino's statistical CDF family
   * (`gamma_cdf`, `chi_squared_cdf`, `poisson_cdf`, `beta_cdf`,
   * `binomial_cdf`, `f_cdf`, `inverse_beta_cdf` — the closed-form CDFs
@@ -218,129 +214,4 @@ object StatKernel {
     }
     hi
   }
-}
-
-/** `graft_pgamma(a, x)` — regularized lower incomplete gamma P(a, x). */
-case class RegGammaPExpression(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  // children are Cast-to-DOUBLE at registration (GraftFunctions)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_pgamma"
-
-  override def nullSafeEval(a: Any, x: Any): Any =
-    StatKernel.pgamma(a.asInstanceOf[Double], x.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, x) =>
-      s"graft.functions.StatKernel.pgamma($a, $x)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RegGammaPExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_ibeta(a, b, x)` — regularized incomplete beta I_x(a, b). */
-case class RegBetaExpression(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  // children are Cast-to-DOUBLE at registration (GraftFunctions)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_ibeta"
-
-  override def nullSafeEval(a: Any, b: Any, x: Any): Any =
-    StatKernel.ibeta(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      x.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, x) =>
-      s"graft.functions.StatKernel.ibeta($a, $b, $x)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): RegBetaExpression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** `graft_inv_ibeta(a, b, p)` — x with I_x(a, b) = p. */
-case class InvRegBetaExpression(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  // children are Cast-to-DOUBLE at registration (GraftFunctions)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_inv_ibeta"
-
-  override def nullSafeEval(a: Any, b: Any, p: Any): Any =
-    StatKernel.invIbeta(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      p.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, p) =>
-      s"graft.functions.StatKernel.invIbeta($a, $b, $p)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): InvRegBetaExpression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** `graft_inv_pgamma(a, p)` — x with P(a, x) = p (bisection). */
-case class InvRegGammaExpression(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  // children are Cast-to-DOUBLE at registration (GraftFunctions)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_inv_pgamma"
-
-  override def nullSafeEval(a: Any, pv: Any): Any =
-    StatKernel.invPgamma(a.asInstanceOf[Double], pv.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, pv) =>
-      s"graft.functions.StatKernel.invPgamma($a, $pv)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): InvRegGammaExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_inv_poisson(lambda, p)` — smallest k with Poisson CDF ≥ p. */
-case class InvPoissonCdfExpression(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  // children are Cast at registration: lambda → DOUBLE, p → DOUBLE
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_inv_poisson"
-
-  override def nullSafeEval(lambda: Any, p: Any): Any =
-    StatKernel.invPoisson(lambda.asInstanceOf[Double],
-      p.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, p) =>
-      s"graft.functions.StatKernel.invPoisson($l, $p)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): InvPoissonCdfExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_inv_binomial(n, p, prob)` — smallest k in [0, n] with
-  * Binomial CDF ≥ prob. */
-case class InvBinomialCdfExpression(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  // children are Cast at registration: n → BIGINT, p/prob → DOUBLE
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_inv_binomial"
-
-  override def nullSafeEval(n: Any, p: Any, prob: Any): Any =
-    StatKernel.invBinomial(n.asInstanceOf[Long], p.asInstanceOf[Double],
-      prob.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (n, p, prob) =>
-      s"graft.functions.StatKernel.invBinomial($n, $p, $prob)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): InvBinomialCdfExpression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Porter stemming kernel (Porter 1980, "An algorithm for suffix
@@ -145,23 +142,4 @@ object PorterKernel {
       b = b.dropRight(1)
     b
   }
-}
-
-/** Trino `word_stem(word)` — Porter stemming as a codegen'd unary
-  * expression (scan-stage, no UDF): the normalization step every
-  * vocabulary/decontamination pipeline wants before exact-match joins.
-  */
-case class WordStemExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "word_stem"
-
-  override def nullSafeEval(input: Any): Any =
-    PorterKernel.stem(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PorterKernel.stem($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordStemExpression =
-    copy(child = newChild)
 }

@@ -15,13 +15,10 @@ object TextFunctions {
 
   /** Whitespace word tokens, empties dropped — the native codegen kernel
     * (ShingleKernels.wordTokens), bit-identical to [[wordTokensRef]]
-    * (parity property-pinned in TextFunctionsSpec). Direct expression
-    * construction (GraftShim.exprCol), so no session registration is
+    * (parity property-pinned in TextFunctionsSpec). Built straight from
+    * the registry (GraftFunctions.native), so no session registration is
     * needed at any of the ~40 call sites. */
-  def wordTokens(text: Column): Column =
-    org.apache.spark.sql.graftshim.GraftShim.exprCol(
-      WordTokensExpression(
-        org.apache.spark.sql.graftshim.GraftShim.colExpr(text)))
+  def wordTokens(text: Column): Column = GraftFunctions.native("word_tokens", text)
 
   /** The HOF reference form of [[wordTokens]] — kept as the parity
     * oracle: the filter lambda evaluates interpreted per token, which is
@@ -105,9 +102,7 @@ object TextFunctions {
     * identical values (l9's equivalence: a first-element fold equals a
     * 0-initialized one under this hash). */
   def kgramHashes(words: Column, k: Int): Column =
-    org.apache.spark.sql.graftshim.GraftShim.exprCol(
-      KGramHashesExpression(
-        org.apache.spark.sql.graftshim.GraftShim.colExpr(words), k))
+    GraftFunctions.native("kgram_hashes", words, k)
 
   /** The HOF reference form of [[kgramHashes]] — kept as the parity
     * oracle: the per-character fold evaluates interpreted (one boxed

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -28,6 +26,11 @@ import org.apache.spark.sql.types._
   * matching ANSI CAST on the HOF path.
   */
 object VectorQuantizeKernel {
+  /** `unit_q3`' result: `struct(q array<bigint>, qn2 bigint)`. */
+  val resultType: StructType = StructType(Seq(
+    StructField("q", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("qn2", LongType, nullable = false)))
+
   def unitQ3(vec: ArrayData): InternalRow = {
     val n = vec.numElements()
     var nx = 0.0
@@ -53,23 +56,4 @@ object VectorQuantizeKernel {
     }
     new GenericInternalRow(Array[Any](new GenericArrayData(q), qn2))
   }
-}
-
-/** `unit_q3(array<float>)` → `struct(q array<bigint>, qn2 bigint)`. */
-case class UnitQ3Expression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("q", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("qn2", LongType, nullable = false)))
-  override def prettyName: String = "unit_q3"
-
-  override def nullSafeEval(input: Any): Any =
-    VectorQuantizeKernel.unitQ3(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorQuantizeKernel.unitQ3($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): UnitQ3Expression =
-    copy(child = newChild)
 }

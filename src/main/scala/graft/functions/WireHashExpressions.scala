@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** The two documented wire-hash scope-outs from the probed digest page,
   * closed in r17 as native codegen expressions (the Base32 pattern):
   *
@@ -287,45 +283,4 @@ object WireHashCore {
     while (j < 4) { out(j) = ((h >>> (24 - 8 * j)) & 0xff).toByte; j += 1 }
     out
   }
-}
-
-abstract class WireHashExpression extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def dataType: DataType = BinaryType
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  protected def coreMethod: String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WireHashCore.$coreMethod($c);")
-}
-
-case class Murmur3X64128Expression(child: Expression)
-    extends WireHashExpression {
-  override def prettyName: String = "murmur3_x64_128"
-  override protected def coreMethod: String = "murmur3x64128"
-  override def nullSafeEval(input: Any): Any =
-    WireHashCore.murmur3x64128(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(
-      newChild: Expression): Murmur3X64128Expression = copy(child = newChild)
-}
-
-case class SpookyHashV264Expression(child: Expression)
-    extends WireHashExpression {
-  override def prettyName: String = "spooky_hash_v2_64"
-  override protected def coreMethod: String = "spooky64"
-  override def nullSafeEval(input: Any): Any =
-    WireHashCore.spooky64(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(
-      newChild: Expression): SpookyHashV264Expression = copy(child = newChild)
-}
-
-case class SpookyHashV232Expression(child: Expression)
-    extends WireHashExpression {
-  override def prettyName: String = "spooky_hash_v2_32"
-  override protected def coreMethod: String = "spooky32"
-  override def nullSafeEval(input: Any): Any =
-    WireHashCore.spooky32(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(
-      newChild: Expression): SpookyHashV232Expression = copy(child = newChild)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** WKT geometry v2 (r4 verdict missing #4 beyond the lat/lon starter):
@@ -4436,806 +4433,4 @@ object WktCore {
       (dropCollinear(shell), holes.map(dropCollinear))
     }))
   }
-}
-
-/** `st_contains(polygon_wkt, x, y)` → boolean (even-odd ray cast on the
-  * outer ring). */
-case class StContainsExpression(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean =
-    first.nullable || second.nullable || third.nullable
-  override def prettyName: String = "st_contains"
-
-  override protected def nullSafeEval(p: Any, x: Any, y: Any): Any =
-    WktCore.containsWkt(p.asInstanceOf[UTF8String],
-      x.asInstanceOf[Double], y.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (p, x, y) =>
-      s"${ev.value} = graft.functions.WktCore.containsWkt($p, $x, $y);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): StContainsExpression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** `st_intersects(polygon_wkt, polygon_wkt)` → boolean (edge crossings
-  * + mutual vertex containment over the outer rings). */
-/** `st_distance(a_wkt, b_wkt)` → double — planar minimum distance
-  * over the point/line/polygon matrix (0 on any intersection). */
-case class StDistanceExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_distance"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.distanceWkt(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.distanceWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StDistanceExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `to_geojson_geometry(wkt)` / `from_geojson_geometry(json)` —
-  * RFC 7946 geometry interchange (op 0 = to, 1 = from). */
-case class GeoJsonExpression(child: Expression, op: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String =
-    if (op == 0) "to_geojson_geometry" else "from_geojson_geometry"
-
-  override protected def nullSafeEval(g: Any): Any =
-    if (op == 0) WktCore.toGeoJson(g.asInstanceOf[UTF8String])
-    else WktCore.fromGeoJson(g.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      if (op == 0) s"graft.functions.WktCore.toGeoJson($c)"
-      else s"graft.functions.WktCore.fromGeoJson($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GeoJsonExpression = copy(child = newChild)
-}
-
-/** `simplify_geometry(wkt, tolerance)` — Douglas–Peucker. */
-case class SimplifyGeometryExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "simplify_geometry"
-
-  override protected def nullSafeEval(g: Any, tol: Any): Any =
-    WktCore.simplifyWkt(g.asInstanceOf[UTF8String],
-      tol.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, tol) =>
-      s"${ev.value} = graft.functions.WktCore.simplifyWkt($g, $tol);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): SimplifyGeometryExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Unary geometry info accessors, op-dispatched (r13): 0 =
-  * st_geometrytype, 1 = st_isempty, 2 = st_dimension, 3 =
-  * st_numpoints, 4 = st_startpoint, 5 = st_endpoint, 6 = st_isclosed,
-  * 7 = st_isring, 8 = st_issimple, 9 = st_coorddim. */
-case class StGeomInfoExpression(child: Expression, op: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = op match {
-    case 0 | 4 | 5 => StringType
-    case 1 | 6 | 7 | 8 => BooleanType
-    case _ => LongType
-  }
-  override def prettyName: String = op match {
-    case 0 => "st_geometrytype"
-    case 1 => "st_isempty"
-    case 2 => "st_dimension"
-    case 3 => "st_numpoints"
-    case 4 => "st_startpoint"
-    case 5 => "st_endpoint"
-    case 6 => "st_isclosed"
-    case 8 => "st_issimple"
-    case 9 => "st_coorddim"
-    case _ => "st_isring"
-  }
-
-  override protected def nullSafeEval(g: Any): Any = {
-    val u = g.asInstanceOf[UTF8String]
-    op match {
-      case 0 => WktCore.geometryType(u)
-      case 1 => WktCore.isEmptyGeom(u)
-      case 2 => WktCore.dimensionOf(u)
-      case 3 => WktCore.numPoints(u)
-      case 4 => WktCore.lineTerminal(u, end = false)
-      case 5 => WktCore.lineTerminal(u, end = true)
-      case 6 => WktCore.isClosedLine(u)
-      case 8 => WktCore.isSimpleWkt(u)
-      case 9 => WktCore.coordDim(u)
-      case _ => WktCore.isRingLine(u)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val call = op match {
-      case 0 => (c: String) => s"graft.functions.WktCore.geometryType($c)"
-      case 1 => (c: String) => s"graft.functions.WktCore.isEmptyGeom($c)"
-      case 2 => (c: String) => s"graft.functions.WktCore.dimensionOf($c)"
-      case 3 => (c: String) => s"graft.functions.WktCore.numPoints($c)"
-      case 4 => (c: String) => s"graft.functions.WktCore.lineTerminal($c, false)"
-      case 5 => (c: String) => s"graft.functions.WktCore.lineTerminal($c, true)"
-      case 6 => (c: String) => s"graft.functions.WktCore.isClosedLine($c)"
-      case 8 => (c: String) => s"graft.functions.WktCore.isSimpleWkt($c)"
-      case 9 => (c: String) => s"graft.functions.WktCore.coordDim($c)"
-      case _ => (c: String) => s"graft.functions.WktCore.isRingLine($c)"
-    }
-    defineCodeGen(ctx, ev, call)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StGeomInfoExpression = copy(child = newChild)
-}
-
-/** st_pointn(line, n) — NULL out of range, so nullable and not
-  * defineCodeGen. */
-case class StPointNExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "st_pointn"
-
-  override protected def nullSafeEval(g: Any, n: Any): Any =
-    WktCore.pointN(g.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, n) =>
-      s"""${ev.value} = graft.functions.WktCore.pointN($g, $n);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StPointNExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** line_locate_point(line, point) → fraction in [0, 1]. */
-case class LineLocatePointExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "line_locate_point"
-
-  override protected def nullSafeEval(l: Any, p: Any): Any =
-    WktCore.lineLocatePoint(l.asInstanceOf[UTF8String],
-      p.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, p) =>
-      s"${ev.value} = graft.functions.WktCore.lineLocatePoint($l, $p);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): LineLocatePointExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** line_interpolate_point(line, fraction) → POINT WKT. */
-case class LineInterpolatePointExpression(left: Expression,
-    right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "line_interpolate_point"
-
-  override protected def nullSafeEval(l: Any, f: Any): Any =
-    WktCore.lineInterpolatePoint(l.asInstanceOf[UTF8String],
-      f.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, f) =>
-      s"${ev.value} = graft.functions.WktCore.lineInterpolatePoint($l, $f);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): LineInterpolatePointExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_equals(a_wkt, b_wkt)` → boolean — OGC point-set equality
-  * (POINT pairs by coordinates; areal pairs via two empty overlay
-  * differences). */
-case class StEqualsExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_equals"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.equalsWkt(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.equalsWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StEqualsExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_boundary(polygon_wkt)` → every ring as a closed LINESTRING
-  * (MULTILINESTRING for several rings; EMPTY stays EMPTY). */
-case class StBoundaryExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_boundary"
-
-  override protected def nullSafeEval(g: Any): Any =
-    WktCore.boundaryWkt(g.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WktCore.boundaryWkt($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StBoundaryExpression = copy(child = newChild)
-}
-
-/** `st_touches(a_wkt, b_wkt)` → boolean — OGC touches over POINT /
-  * LINESTRING / (MULTI)POLYGON (r13 overlay tier). */
-case class StTouchesExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_touches"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.touchesWkt(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.touchesWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StTouchesExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_crosses(a_wkt, b_wkt)` → boolean — OGC crosses (line×line /
-  * line×area; POINT pairings and area×area are false, like JTS). */
-case class StCrossesExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_crosses"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.crossesWkt(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.crossesWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StCrossesExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class StIntersectsExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_intersects"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.intersectsWkt(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.intersectsWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StIntersectsExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_within(a_wkt, b_wkt)` → boolean (OGC order: a within b; simple
-  * outer rings, POINT a degenerates to point-in-polygon). */
-case class StWithinExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_within"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.withinWkt(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.withinWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StWithinExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_overlaps(a_wkt, b_wkt)` → boolean (polygon×polygon: intersect
-  * but neither contains the other; POINT operands → false). */
-case class StOverlapsExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_overlaps"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.overlapsWkt(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.overlapsWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StOverlapsExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_x(point_wkt)` / `st_y(point_wkt)` → double. */
-case class StPointCoordExpression(child: Expression, idx: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = if (idx == 0) "st_x" else "st_y"
-
-  override def nullSafeEval(input: Any): Any =
-    WktCore.pointCoord(input.asInstanceOf[UTF8String], idx)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WktCore.pointCoord($c, $idx);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StPointCoordExpression = copy(child = newChild)
-}
-
-/** `st_area(polygon_wkt)` → double (planar shoelace, outer ring). */
-case class StAreaExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_area"
-
-  override def nullSafeEval(input: Any): Any =
-    WktCore.area(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WktCore.area($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StAreaExpression = copy(child = newChild)
-}
-
-/** `st_centroid_x/y(polygon_wkt)` → double (shoelace-weighted). */
-case class StCentroidExpression(child: Expression, idx: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String =
-    if (idx == 0) "st_centroid_x" else "st_centroid_y"
-
-  override def nullSafeEval(input: Any): Any =
-    WktCore.centroid(input.asInstanceOf[UTF8String], idx)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WktCore.centroid($c, $idx);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StCentroidExpression = copy(child = newChild)
-}
-
-/** `st_xmin/ymin/xmax/ymax(geometry_wkt)` → double envelope bound. */
-case class StEnvBoundExpression(child: Expression, which: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String =
-    Seq("st_xmin", "st_ymin", "st_xmax", "st_ymax")(which)
-
-  override def nullSafeEval(input: Any): Any =
-    WktCore.envBound(input.asInstanceOf[UTF8String], which)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WktCore.envBound($c, $which);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StEnvBoundExpression = copy(child = newChild)
-}
-
-/** `st_length(linestring_wkt)` → double (planar segment-sum). */
-case class StLengthExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_length"
-
-  override def nullSafeEval(input: Any): Any =
-    WktCore.length(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WktCore.length($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StLengthExpression = copy(child = newChild)
-}
-
-/** `st_intersection(a_wkt, b_wkt)` → POLYGON WKT (convex ∩ convex via
-  * Sutherland–Hodgman; "POLYGON EMPTY" when disjoint; loud on concave). */
-case class StIntersectionExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_intersection"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.intersectionWkt(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.intersectionWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StIntersectionExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_union(a_wkt, b_wkt)` → POLYGON WKT (single-component union of two
-  * convex rings via the crossing-switch boundary walk; loud on concave,
-  * disjoint — a MULTIPOLYGON result — and degenerate tangency). */
-case class StUnionExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_union"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.unionWkt(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.unionWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StUnionExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_difference(a_wkt, b_wkt)` → POLYGON/MULTIPOLYGON WKT (general
-  * arc-stitching tier; hole-free transversal-or-separated scope, loud
-  * otherwise — a B strictly inside A would punch a hole). */
-case class StDifferenceExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_difference"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.differenceWkt(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.differenceWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StDifferenceExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_symdifference(a_wkt, b_wkt)` → WKT of (a − b) ∪ (b − a) — the
-  * fourth set operation, total over the kind matrix by composition
-  * (r16; Trino geospatial `ST_SymDifference`). */
-case class StSymDifferenceExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_symdifference"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.symDifferenceWkt(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.WktCore.symDifferenceWkt($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StSymDifferenceExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_buffer(wkt, d [, 'round'|'miter'])` → POLYGON WKT. Round joins
-  * (GEOS/Trino default, 8 chords per quarter-turn) unless the explicit
-  * 'miter' flag picks the r13 closed-form join; negative d erodes
-  * (r14). */
-case class StBufferExpression(left: Expression, right: Expression,
-    style: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-
-  // DoubleType coercion: SQL literals like 1.25 arrive as DECIMAL and
-  // must cast before eval (a Decimal is not a java.lang.Number here)
-  override def inputTypes: Seq[DataType] = Seq(StringType, DoubleType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_buffer"
-
-  override protected def nullSafeEval(g: Any, d: Any): Any =
-    WktCore.bufferWkt(g.asInstanceOf[UTF8String],
-      d.asInstanceOf[java.lang.Double].doubleValue(), style)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, d) =>
-      s"${ev.value} = graft.functions.WktCore.bufferWkt($g, (double) $d, " +
-        s"$style);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StBufferExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_convexhull(geom_wkt)` → POLYGON WKT (Andrew's monotone chain over
-  * the geometry's vertices; minimal CCW ring; loud on collinear input). */
-case class StConvexHullExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_convexhull"
-
-  override def nullSafeEval(input: Any): Any =
-    WktCore.convexHullWkt(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WktCore.convexHullWkt($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StConvexHullExpression = copy(child = newChild)
-}
-
-/** `st_numgeometries(wkt)` → BIGINT component count (EMPTY → 0). */
-case class StNumGeometriesExpression(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "st_numgeometries"
-  override protected def nullSafeEval(g: Any): Any =
-    WktCore.numGeometries(g.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WktCore.numGeometries($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): StNumGeometriesExpression = copy(child = newChild)
-}
-
-/** `st_geometryn(wkt, n)` → the n-th (1-based) component as a canonical
-  * POLYGON; NULL out of range. */
-case class StGeometryNExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType, org.apache.spark.sql.types.IntegerType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "st_geometryn"
-  override protected def nullSafeEval(g: Any, n: Any): Any =
-    WktCore.geometryN(g.asInstanceOf[UTF8String],
-      n.asInstanceOf[java.lang.Integer].intValue())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, n) =>
-      s"""${ev.value} = graft.functions.WktCore.geometryN($g, (int) $n);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StGeometryNExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_exteriorring(wkt)` → the POLYGON shell as a closed LINESTRING. */
-case class StExteriorRingExpression(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_exteriorring"
-  override protected def nullSafeEval(g: Any): Any =
-    WktCore.exteriorRing(g.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WktCore.exteriorRing($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): StExteriorRingExpression = copy(child = newChild)
-}
-
-/** `st_numinteriorring(wkt)` → BIGINT interior-ring count of a POLYGON. */
-case class StNumInteriorRingExpression(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "st_numinteriorring"
-  override protected def nullSafeEval(g: Any): Any =
-    WktCore.numInteriorRing(g.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WktCore.numInteriorRing($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): StNumInteriorRingExpression = copy(child = newChild)
-}
-
-/** `st_interiorringn(wkt, n)` → the n-th (1-based) interior ring as a
-  * closed LINESTRING; NULL out of range. */
-case class StInteriorRingNExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType, org.apache.spark.sql.types.IntegerType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "st_interiorringn"
-  override protected def nullSafeEval(g: Any, n: Any): Any =
-    WktCore.interiorRingN(g.asInstanceOf[UTF8String],
-      n.asInstanceOf[java.lang.Integer].intValue())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, n) =>
-      s"""${ev.value} = graft.functions.WktCore.interiorRingN($g, (int) $n);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): StInteriorRingNExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `st_isvalid(wkt)` → BOOLEAN strict structural validity (see
-  * WktCore.invalidReason for the contract). */
-case class StIsValidExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_isvalid"
-  override protected def nullSafeEval(g: Any): Any =
-    WktCore.isValid(g.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WktCore.isValid($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): StIsValidExpression = copy(child = newChild)
-}
-
-/** `geometry_invalid_reason(wkt)` → the violation description, NULL
-  * when the geometry is valid (Trino's convention). */
-case class StInvalidReasonExpression(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "geometry_invalid_reason"
-  override protected def nullSafeEval(g: Any): Any =
-    WktCore.invalidReason(g.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.WktCore.invalidReason($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override protected def withNewChildInternal(
-      newChild: Expression): StInvalidReasonExpression = copy(child = newChild)
-}
-
-/** `st_asbinary(wkt)` → BINARY / `st_geomfrombinary(wkb)` → canonical
-  * WKT — OGC well-known-binary interchange (op 0 = to, 1 = from); see
-  * WktCore.toWkb / fromWkb for the encoding contract. */
-case class WkbExpression(child: Expression, op: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    if (op == 0) org.apache.spark.sql.types.BinaryType else StringType
-  override def prettyName: String =
-    if (op == 0) "st_asbinary" else "st_geomfrombinary"
-
-  override protected def nullSafeEval(g: Any): Any =
-    if (op == 0) WktCore.toWkb(g.asInstanceOf[UTF8String])
-    else WktCore.fromWkb(g.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      if (op == 0) s"graft.functions.WktCore.toWkb($c)"
-      else s"graft.functions.WktCore.fromWkb($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WkbExpression = copy(child = newChild)
-}
-
-/** `geometry_nearest_points(a, b)` → [POINT, POINT] (NULL on EMPTY);
-  * see WktCore.nearestPointsWkt for the contract. */
-case class GeometryNearestPointsExpression(left: Expression,
-    right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "geometry_nearest_points"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    WktCore.nearestPointsWkt(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.WktCore.nearestPointsWkt($a, $b);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): GeometryNearestPointsExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `line_interpolate_points(line, fraction)` → array of POINTs at each
-  * fraction multiple (Trino's count = floor(1/fraction)). */
-case class LineInterpolatePointsExpression(left: Expression,
-    right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "line_interpolate_points"
-
-  override protected def nullSafeEval(g: Any, f: Any): Any =
-    WktCore.lineInterpolatePoints(g.asInstanceOf[UTF8String],
-      f.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, f) =>
-      s"${ev.value} = graft.functions.WktCore.lineInterpolatePoints($g, $f);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): LineInterpolatePointsExpression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `to_spherical_geography(geom)` / `to_geometry(geography)` — the
-  * tag-typed geography conversions (op 0 = to geography, 1 = back);
-  * see the spherical section of WktCore for the model. */
-case class SphericalGeographyExpression(child: Expression, op: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String =
-    if (op == 0) "to_spherical_geography" else "to_geometry"
-
-  override protected def nullSafeEval(g: Any): Any =
-    if (op == 0) WktCore.toSphericalGeography(g.asInstanceOf[UTF8String])
-    else WktCore.sphericalToGeometry(g.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      if (op == 0) s"graft.functions.WktCore.toSphericalGeography($c)"
-      else s"graft.functions.WktCore.sphericalToGeometry($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SphericalGeographyExpression =
-    copy(child = newChild)
-}
-
-/** `st_points(geom)` → array of POINT texts in document order (Trino's
-  * ST_Points); NULL on EMPTY. POINT / MULTIPOINT / LINESTRING /
-  * MULTILINESTRING. */
-case class StPointsExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "st_points"
-
-  override protected def nullSafeEval(g: Any): Any =
-    WktCore.pointsOf(g.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.WktCore.pointsOf($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): StPointsExpression = copy(child = newChild)
 }

@@ -4496,7 +4496,7 @@ object PrestoSql {
   }
 
   /** Trino `normalize(s[, NFC|NFD|NFKC|NFKD])` onto the native codegen
-    * NormalizeExpression (registered as normalize_str — Spark has no
+    * NormalizeKernel (registered as normalize_str — Spark has no
     * builtin under either name): Trino passes the form as a BARE
     * keyword, which becomes the expression's string-literal argument.
     */

@@ -1,0 +1,92 @@
+package graft
+
+import graft.functions.{GraftFunctions, Kernel, TextFunctions}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.functions.{call_function, col, lit}
+import org.apache.spark.sql.types.{DateType, StructField, StructType}
+
+/** The registry's `Kernel` entries: every one binds to its static method
+  * and answers alike interpreted and generated; the builder rejects a
+  * wrong argument count or a column where a literal belongs. */
+class KernelSpec extends SparkSpec {
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  /** Every argument list of probe literals a kernel entry accepts: the
+    * literal 5 stands for each column and each constant (`k`, `n`), a
+    * DATE for `to_iso8601`'s one argument. */
+  private def probes(build: Seq[Expression] => Expression): Seq[(Seq[Expression], Kernel)] =
+    for {
+      probe <- Seq[Expression](Literal(5), Literal.create(0, DateType))
+      n <- 1 to 3
+      args = Seq.fill(n)(probe)
+      k <- scala.util.Try(build(args)).toOption.collect { case k: Kernel => k }
+    } yield (args, k)
+
+  /** Binds `k` (built from `args`) through the session registry over a
+    * one-row frame of typed NULLs and runs it interpreted and generated. */
+  private def check(name: String, args: Seq[Expression], k: Kernel): Unit = {
+    // a typed NULL for each column argument, from a non-foldable scan
+    val types = k.inputTypes
+    val schema = StructType(types.zipWithIndex.map { case (t, i) => StructField(s"c$i", t) })
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row.fromSeq(types.map(_ => null))), 1), schema)
+    val cols: Seq[Column] = args.indices.map(i =>
+      if (i < types.length) col(s"c$i") else lit(5))
+    val q = df.select(call_function(name, cols: _*).as("r"))
+    val bound = q.queryExecution.analyzed.expressions.flatMap(_.collect { case a: Kernel => a })
+    assert(bound.size == 1 && bound.head.invoke.method != null, q.queryExecution.analyzed)
+    def run(mode: String): Seq[Row] = GraftSession.withConf(spark,
+      "spark.sql.codegen.factoryMode" -> mode,
+      "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString
+    )(q.collect().toSeq)
+    val codegen = run("CODEGEN_ONLY")
+    assert(codegen == run("NO_CODEGEN"))
+    assert(codegen == Seq(Row(null)), codegen)
+  }
+
+  test("every Kernel entry binds its static method and agrees interpreted vs codegen") {
+    val entries = GraftFunctions.all.filter(_._2.getClassName == classOf[Kernel].getName)
+    assert(entries.size > 90, entries.size)
+    val problems = entries.flatMap { case (id, _, build) =>
+      probes(build) match {
+        case Seq() => Seq(s"${id.funcName}: no probe argument list builds")
+        case built => built.flatMap { case (args, k) =>
+          scala.util.Try(check(id.funcName, args, k)).failed.toOption
+            .map(e => s"${id.funcName}/${args.length}: ${messages(e).take(300)}")
+        }
+      }
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("a wrong argument count or a non-literal constant fails, naming the function") {
+    val df = spark.range(1).selectExpr("'POLYGON ((0 0, 1 0, 1 1, 0 0))' AS g",
+      "'a b c' AS t", "CAST(id AS INT) + 3 AS n")
+    def err(sql: String): String = messages(intercept[Exception](df.selectExpr(sql).collect()))
+    assert(err("word_tokens(t, t)").contains("word_tokens expects 1 argument; got 2"))
+    assert(err("st_area(g, g)").contains("st_area expects 1 argument; got 2"))
+    assert(err("minhash_text_sig(t, n)")
+      .contains("minhash_text_sig: argument 2 must be a literal"))
+  }
+
+  test("kernels keep their SQL names in plans and auto-named columns") {
+    val df = spark.range(1).selectExpr("'a b c' AS t")
+      .selectExpr("kgram_hashes(word_tokens(t), 2)", "st_x('POINT (1 2)')")
+    // constants print in plans, not in column names (as before the Kernel)
+    assert(df.columns.toSeq == Seq("kgram_hashes(word_tokens(t))",
+      "st_x(POINT (1 2))"), df.columns.toSeq)
+    // the Column form builds the same kernel without the session registry
+    val viaColumns = spark.range(1).selectExpr("'a b c' AS t").select(
+      TextFunctions.kgramHashes(TextFunctions.wordTokens(col("t")), 2))
+    assert(viaColumns.columns.toSeq == Seq("kgram_hashes(word_tokens(t))"))
+    assert(viaColumns.collect().toSeq == df.select(df.columns(0)).collect().toSeq)
+    val plan = spark.range(1).selectExpr("CAST(id AS STRING) AS t")
+      .selectExpr("kgram_hashes(word_tokens(t), 2) AS h")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("kgram_hashes(word_tokens(") && plan.contains(", 2) AS h#"),
+      plan)
+  }
+}
