@@ -48,18 +48,19 @@ object GraftFunctions {
   private val longs = ArrayType(LongType, containsNull = false)
 
   val all: Seq[Entry] = Seq(
-    entry("cosine_sim", classOf[CosineSimilarityExpression])(
-      e => CosineSimilarityExpression(e(0), e(1))),
+    entry("cosine_sim", classOf[CosineSimilarityExpression]) { e =>
+      Kernel.arity("cosine_sim", e, 2)
+      CosineSimilarityExpression(e(0), e(1))
+    },
     // Trino's dual-form similarity functions (r15): array×array dense
     // AND map<string,·>×map sparse behind one name — the overload SQL
     // temp functions cannot express (dialect infra note in PrestoSql)
     entry("cosine_similarity", classOf[CosineSimilarityDispatchExpression]) { e =>
-      require(e.length == 2,
-        s"cosine_similarity expects 2 arguments; got ${e.length}")
+      Kernel.arity("cosine_similarity", e, 2)
       CosineSimilarityDispatchExpression(e(0), e(1))
     },
     entry("dot_product", classOf[DotProductDispatchExpression]) { e =>
-      require(e.length == 2, s"dot_product expects 2 arguments; got ${e.length}")
+      Kernel.arity("dot_product", e, 2)
       DotProductDispatchExpression(e(0), e(1))
     },
     entry("to_iso8601", classOf[Kernel]) { e =>
@@ -106,7 +107,10 @@ object GraftFunctions {
     kernel("fnv1a_64", FnvKernels, "fnv64", LongType, fixed = Seq(true)),
     kernel("gopher_repetition_stats", GopherKernels, "repetitionStats",
       GopherKernels.resultType),
-    entry("try_eval", classOf[TryEvalExpression])(e => TryEvalExpression(e(0))),
+    entry("try_eval", classOf[TryEvalExpression]) { e =>
+      Kernel.arity("try_eval", e, 1)
+      TryEvalExpression(e(0))
+    },
     // Presto normalize(string[, form]); the form is a plan-time literal
     entry("normalize_str", classOf[Kernel]) { e =>
       val form =
@@ -116,16 +120,16 @@ object GraftFunctions {
         NormalizeKernel, "normalize", StringType, nullResult = false)
     },
     entry("bpe_count", classOf[BpeCountExpression])(e =>
-      BpeCountExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+      BpeCountExpression(e(0), merges("bpe_count", e))),
     kernel("image_stats", ImageCore, "stats", ImageCore.resultType, nullResult = true),
     kernel("audio_stats", AudioCore, "stats", AudioCore.resultType, nullResult = true),
     kernel("ws_words", BpeCore, "wsWords", strings),
     entry("bpe_segment", classOf[BpeSegmentExpression])(e =>
-      BpeSegmentExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+      BpeSegmentExpression(e(0), merges("bpe_segment", e))),
     entry("bpe_count_bytes", classOf[ByteBpeCountExpression])(e =>
-      ByteBpeCountExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+      ByteBpeCountExpression(e(0), merges("bpe_count_bytes", e))),
     entry("bpe_segment_bytes", classOf[ByteBpeSegmentExpression])(e =>
-      ByteBpeSegmentExpression(e(0), BpeCountExpression.parseMerges(litStr(e(1))))),
+      ByteBpeSegmentExpression(e(0), merges("bpe_segment_bytes", e))),
     // arity dispatch: the 3-arg form is the original (polyWkt, x, y)
     // point test; the 2-arg form is OGC ST_Contains(a, b) — geometry b
     // within geometry a — which is exactly the within kernel with the
@@ -222,8 +226,12 @@ object GraftFunctions {
         PorterKernel, "stem", StringType, nullResult = false)
     },
     kernel("jaro_winkler", JaroWinklerKernel, "sim", DoubleType, cols = 2),
-    entry("multi_count", classOf[MultiCountExpression])(e =>
-      MultiCountExpression(e(0), e.tail.map(litStr))),
+    entry("multi_count", classOf[MultiCountExpression]) { e =>
+      Kernel.arity("multi_count", e, 2, atLeast = true)
+      MultiCountExpression(e(0), e.tail.zipWithIndex.map { case (p, i) =>
+        Kernel.literal("multi_count", p, i + 2).toString
+      })
+    },
     kernel("graft_pgamma", StatKernel, "pgamma", DoubleType, cols = 2),
     kernel("graft_ibeta", StatKernel, "ibeta", DoubleType, cols = 3),
     kernel("graft_inv_pgamma", StatKernel, "invPgamma", DoubleType, cols = 2),
@@ -231,12 +239,11 @@ object GraftFunctions {
     kernel("graft_inv_poisson", StatKernel, "invPoisson", LongType, cols = 2),
     kernel("graft_inv_binomial", StatKernel, "invBinomial", LongType, cols = 3))
 
-  private def litStr(e: Expression): String =
-    e.eval(null) match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-      case other => throw new IllegalArgumentException(
-        s"expected foldable string literal, got $other")
-    }
+  /** The merge list of a BPE entry `name(text, 'l r,l r,…')`. */
+  private def merges(name: String, e: Seq[Expression]): Seq[(String, String)] = {
+    Kernel.arity(name, e, 2)
+    BpeCountExpression.parseMerges(Kernel.literal(name, e(1), 2).toString)
+  }
 
   private lazy val builders = all.map { case (id, _, b) => id.funcName -> b }.toMap
 

@@ -79,14 +79,21 @@ object Kernel {
       fixed: Seq[Any], target: AnyRef, method: String, dataType: DataType,
       nullResult: Boolean): Kernel = {
     val n = cols + lits
-    require(args.length == n,
-      s"$name expects $n argument${if (n == 1) "" else "s"}; got ${args.length}")
+    arity(name, args, n)
     val literals = args.drop(cols).zipWithIndex.map { case (e, i) =>
       literal(name, e, cols + i + 1)
     }
     Kernel(name, args.take(cols), literals ++ fixed)(
       target.getClass, method, dataType, nullResult)
   }
+
+  /** Checks that `name` got exactly `n` arguments, or at least `n`
+    * when `atLeast`. */
+  def arity(name: String, args: Seq[Expression], n: Int,
+      atLeast: Boolean = false): Unit =
+    require(args.length == n || (atLeast && args.length > n),
+      s"$name expects ${if (atLeast) "at least " else ""}$n " +
+        s"argument${if (n == 1) "" else "s"}; got ${args.length}")
 
   /** The value of `name`'s argument number `pos`, which must be a
     * non-null literal. */

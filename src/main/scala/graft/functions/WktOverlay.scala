@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.unsafe.types.UTF8String
 
-/** General polygon-overlay tier (r13): boolean ops and OGC relate
-  * predicates over (MULTI)POLYGONs WITH interior rings and WITH
-  * non-transversal boundary contact — the two loud gaps of the r10/r11
-  * arc-stitching tier (`WktCore.generalClip` rejects vertex-on-edge /
-  * collinear-overlap contact and holed inputs).
+/** The polygon overlay: boolean ops and OGC relate predicates over
+  * (MULTI)POLYGONs, convex or concave, with interior rings and with
+  * any boundary contact (transversal crossings, vertex-on-edge,
+  * collinear overlap, corner touch). Every ST_Intersection /
+  * ST_Union / ST_Difference of two areal operands is built here
+  * (`WktCore.clipDispatch`).
   *
   * Method — a noded planar-subdivision overlay (the classical
   * snap-free exact-arithmetic variant of Weiler–Atherton /
@@ -42,9 +43,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     strictly contains a "clean" vertex of it (one not lying on any
   *     shell boundary — exists for every non-pathological result).
   *
-  * Exactness contract (same as the r10 tier): all predicates are sign
-  * tests on double cross-products and the only division is the proper-
-  * crossing t; with dyadic axis-parallel fixture edges every node
+  * Exactness contract: all predicates are sign tests on double
+  * cross-products and the only division is the proper-crossing t;
+  * with dyadic axis-parallel fixture edges every node
   * coordinate is exact in IEEE, so node identity by coordinate value is
   * sound. Loud scope: inputs must be structurally valid
   * (`WktCore.invalidReason`); results whose boundary would revisit a
@@ -102,9 +103,9 @@ private[functions] object WktOverlay {
   // ---- degenerate-contact pre-test ---------------------------------------
 
   /** True iff some edge pair across the two ring sets touches
-    * non-transversally — exactly the condition the r10 arc-stitching
-    * tier throws on. Used by the op entry points to keep the legacy
-    * (bit-stable) fast paths for their original domain. */
+    * non-transversally (vertex-on-edge, collinear overlap, shared
+    * vertex). The single-ring fast paths of `withinWkt` and
+    * `overlapsWkt` hold only without such contact. */
   private[functions] def degenerateContact(ringsA: Array[Array[Double]],
       ringsB: Array[Array[Double]]): Boolean = {
     var i = 0

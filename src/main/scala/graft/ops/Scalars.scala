@@ -491,14 +491,13 @@ object Scalars extends QueryModule {
         .orderBy(col("n_nationkey"), col("mode"))
     }),
 
-    // sc21e: polygon CONSTRUCTION tier (r9 verdict missing #1) —
-    // ST_Intersection (Sutherland–Hodgman), ST_Union (crossing-switch
-    // boundary walk) and ST_Buffer (miter join), convex-only and loud
-    // otherwise. Oracle strategy: every coordinate is DYADIC (integers
-    // and quarters), so clip/walk/offset arithmetic is exact in IEEE and
-    // the shoelace areas land exactly on closed forms DuckDB computes
-    // from first principles — rect∩rect = overlap box, two offset
-    // congruent L1-balls intersect in a diamond of area 2t²
+    // sc21e: polygon CONSTRUCTION over convex inputs —
+    // ST_Intersection and ST_Union (the polygon overlay, WktOverlay)
+    // and ST_Buffer (miter join). Oracle strategy: every coordinate is
+    // DYADIC (integers and quarters), so overlay/offset arithmetic is
+    // exact in IEEE and the shoelace areas land exactly on closed forms
+    // DuckDB computes from first principles — rect∩rect = overlap box,
+    // two offset congruent L1-balls intersect in a diamond of area 2t²
     // (t = r − dx/2), union by inclusion–exclusion, miter rect buffer =
     // the grown rectangle. Centers (cx, cy) translate out of every
     // area, so the oracle needs only the size parameters. The disjoint
@@ -580,13 +579,12 @@ object Scalars extends QueryModule {
         .orderBy(col("n_nationkey"))
     }),
 
-    // sc21f: GENERAL (concave) clipping tier (r10 verdict missing #1) —
-    // ST_Intersection/ST_Union/ST_Difference through the arc-stitching
-    // Greiner–Hormann clipper, plus MULTIPOLYGON rendering for
-    // multi-component results. Fixtures are hole-free concave polygons
-    // with DYADIC axis-parallel edges, so every crossing coordinate and
-    // shoelace area is IEEE-exact against first-principles closed
-    // forms: an L-shape (area 3ab) clipped by a rectangle riding its
+    // sc21f: concave clipping — ST_Intersection/ST_Union/ST_Difference
+    // through the polygon overlay (WktOverlay), plus MULTIPOLYGON
+    // rendering for multi-component results. Fixtures are hole-free
+    // concave polygons with DYADIC axis-parallel edges, so every
+    // crossing coordinate and shoelace area is IEEE-exact against
+    // first-principles closed forms: an L-shape (area 3ab) clipped by a rectangle riding its
     // notch corner (∩ = 3ab/4, − = 9ab/4, ∪ = 13ab/4 — inclusion–
     // exclusion closes exactly); a U-shape whose bar crosses BOTH arms
     // (∩ = two components, ab/2 total — the MULTIPOLYGON path); a
@@ -2930,10 +2928,10 @@ object Scalars extends QueryModule {
         |FROM f ORDER BY n_nationkey, mode""".stripMargin,
 
     // sc21e: pure closed forms — every coordinate is dyadic so the
-    // Spark kernels (Sutherland–Hodgman clip, union boundary walk,
-    // miter offset, shoelace area) are exact, and the 1e6+0.5
-    // quantization lands on the same integers as these first-principles
-    // formulas; centers translate out of every area
+    // Spark kernels (polygon overlay, miter offset, shoelace area) are
+    // exact, and the 1e6+0.5 quantization lands on the same integers
+    // as these first-principles formulas; centers translate out of
+    // every area
     "sc21e_geo_clipping" ->
       """WITH p AS (
         |  SELECT n_nationkey,

@@ -70,6 +70,18 @@ class KernelSpec extends SparkSpec {
     assert(err("st_area(g, g)").contains("st_area expects 1 argument; got 2"))
     assert(err("minhash_text_sig(t, n)")
       .contains("minhash_text_sig: argument 2 must be a literal"))
+    // the hand-written builders check the same way
+    assert(err("cosine_sim(array(1.0f))").contains("cosine_sim expects 2 arguments; got 1"))
+    assert(err("cosine_similarity(array(1.0f))")
+      .contains("cosine_similarity expects 2 arguments; got 1"))
+    assert(err("dot_product(array(1.0f))").contains("dot_product expects 2 arguments; got 1"))
+    assert(err("try_eval(1, 2)").contains("try_eval expects 1 argument; got 2"))
+    for (bpe <- Seq("bpe_count", "bpe_segment", "bpe_count_bytes", "bpe_segment_bytes")) {
+      assert(err(s"$bpe(t)").contains(s"$bpe expects 2 arguments; got 1"))
+      assert(err(s"$bpe(t, t)").contains(s"$bpe: argument 2 must be a literal"))
+    }
+    assert(err("multi_count(t)").contains("multi_count expects at least 2 arguments; got 1"))
+    assert(err("multi_count(t, 'a', t)").contains("multi_count: argument 3 must be a literal"))
   }
 
   test("kernels keep their SQL names in plans and auto-named columns") {

@@ -234,6 +234,13 @@ class WktSpec extends SparkSpec {
     val sqB = "POLYGON ((0.5 0.5, 1.5 0.5, 1.5 1.5, 0.5 1.5, 0.5 0.5))"
     val inter = WktCore.intersectionWkt(u(unitSq), u(sqB)).toString
     assert(WktCore.area(u(inter)) == 0.25, inter)
+    // one rendering whichever operand comes first: every ring starts at
+    // its lexicographically smallest vertex (a Sutherland–Hodgman clip
+    // of sqB by unitSq starts at (0.5, 1.0))
+    assert(inter == "POLYGON ((0.5 0.5, 1.0 0.5, 1.0 1.0, 0.5 1.0, 0.5 0.5))")
+    assert(WktCore.intersectionWkt(u(sqB), u(unitSq)).toString == inter)
+    assert(WktCore.unionWkt(u(sqB), u(unitSq)).toString ==
+      WktCore.unionWkt(u(unitSq), u(sqB)).toString)
     // clockwise input normalizes (winding-insensitive)
     val cw = "POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))"
     val interCw = WktCore.intersectionWkt(u(cw), u(sqB)).toString
