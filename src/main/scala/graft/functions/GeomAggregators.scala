@@ -3,19 +3,18 @@ package graft.functions
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Geometry AGGREGATES (r13, SURVEY §2.10) — the Trino geospatial
   * aggregation pair:
   *
   *  - `geometry_union_agg` (Trino's geometry_union / ST_Union over a
   *    group): the "dissolve" every spatial rollup wants. Buffer and
-  *    output are WKT text; reduce/merge fold `WktCore.unionWkt` (the
+  *    output are WKT text; reduce/merge fold `WktCore.unionMixed` (the
   *    r13 overlay handles shared borders, holes, MULTIPOLYGON and
   *    EMPTY, so any fold shape is total on valid inputs). The union
   *    REGION is associative + commutative, so map-side partial
   *    aggregation is sound; finish re-renders through
-  *    `canonMinimalWkt`, dropping exactly-collinear fold artifacts so
+  *    `WktCore.finishMixed`, dropping exactly-collinear fold artifacts so
   *    the TEXT is a pure function of the region, independent of
   *    reduce/merge order (GeomAggSpec pins fold-order invariance).
   *
@@ -37,8 +36,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GeomAggregators {
 
-  private def u(s: String): UTF8String = UTF8String.fromString(s)
-
   val unionOf: Aggregator[String, String, String] =
     new Aggregator[String, String, String] {
       def zero: String = "POLYGON EMPTY"
@@ -50,10 +47,11 @@ object GeomAggregators {
       // mixed-dimension result renders as a GEOMETRYCOLLECTION in fixed
       // dimension order — Trino's geometry_union shape
       def reduce(b: String, g: String): String =
-        if (g == null) b else WktCore.unionMixed(b, g)
+        if (g == null) b else merge(b, g)
       def merge(x: String, y: String): String =
-        WktCore.unionMixed(x, y)
-      def finish(b: String): String = WktCore.finishMixed(b)
+        WktCore.render(WktCore.unionMixed(Geom.parse(x), Geom.parse(y)))
+      def finish(b: String): String =
+        WktCore.render(WktCore.finishMixed(Geom.parse(b)))
       def bufferEncoder: Encoder[String] = Encoders.STRING
       def outputEncoder: Encoder[String] = Encoders.STRING
     }
@@ -81,7 +79,7 @@ object GeomAggregators {
       }
 
       def reduce(b: HullBuf, g: String): HullBuf = {
-        if (g != null) b.pts = prune(b.pts ++ WktCore.allVertices(u(g)))
+        if (g != null) b.pts = prune(b.pts ++ WktCore.vertices(Geom.parse(g)))
         b
       }
       def merge(x: HullBuf, y: HullBuf): HullBuf = {

@@ -1,22 +1,23 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import graft.functions.Geom._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** WKT geometry v2 (r4 verdict missing #4 beyond the lat/lon starter):
-  * `POINT (x y)` / `POLYGON ((x y, …))` text parsing and ray-cast
-  * point-in-polygon as codegen expressions — the ST_GeometryFromText /
-  * ST_Contains pair a Presto geospatial user reaches for after
-  * great_circle_distance. Only the outer ring of a POLYGON is read
-  * (holes and MULTI* are out of scope, documented).
+import scala.collection.mutable.ArrayBuffer
+
+/** The WKT geometry kernels behind the ST_* functions. Every kernel
+  * reads its WKT argument once, through `read`, into a parsed `Geom` —
+  * point, multipoint, lines, polygons or collection, where EMPTY is the
+  * declared kind with no parts — and pattern-matches on that value; no
+  * kernel looks at the text. `render` is the one way back: each kind
+  * through its canonical formatter.
   *
-  * Scale shape: the parse is O(ring length) per DISTINCT polygon, not
-  * per row — a last-parse memo (thread-local, one entry) makes the two
-  * dominant access patterns free: a plan-constant polygon literal
-  * (parsed once per task) and a polygons-table join sorted or bucketed
-  * by polygon (parsed once per run of equal values). The containment
-  * test itself is the O(ring) even-odd crossing scan, all primitive
-  * double compares inside whole-stage codegen.
+  * Scale shape: the parse is O(text) per DISTINCT value, not per row —
+  * `read` keeps a two-entry memo per thread, so a plan-constant
+  * polygon (parsed once per task), a run of equal values (a sorted or
+  * bucketed join) and both sides of a two-geometry join probe each
+  * parse once. The kernels then run over primitive double arrays.
   *
   * Boundary semantics: even-odd ray casting — points strictly inside
   * are true, strictly outside false; points ON an edge are
@@ -26,171 +27,101 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object WktCore {
 
-  /** One WKT ring body "x y, x y, …" → flat [x0,y0,…] (closing
-    * duplicate vertex dropped). */
-  private def parseRingBody(body: String, what: String): Array[Double] = {
-    val parts = body.split(',')
-    require(parts.length >= 3, s"$what ring needs >= 3 vertices: $body")
-    val out = new Array[Double](parts.length * 2)
-    var i = 0
-    while (i < parts.length) {
-      val p = parts(i).trim
-      val sp = p.indexOf(' ')
-      require(sp > 0, s"bad $what vertex '$p'")
-      out(2 * i) = java.lang.Double.parseDouble(p.substring(0, sp))
-      out(2 * i + 1) = java.lang.Double.parseDouble(p.substring(sp + 1).trim)
-      i += 1
-    }
-    val n = parts.length
-    if (n > 3 && out(0) == out(2 * (n - 1)) && out(1) == out(2 * n - 1))
-      java.util.Arrays.copyOf(out, 2 * (n - 1))
-    else out
+  // ---- reading and rendering ----------------------------------------------
+
+  private final class Memo {
+    var k0: UTF8String = null; var v0: Geom = null
+    var k1: UTF8String = null; var v1: Geom = null
   }
 
-  /** Depth-driven ring scanner: collects ring bodies at `ringDepth`
-    * and groups them into (shell, holes) polygons that close at
-    * `ringDepth − 1`. POLYGON → ringDepth 2; MULTIPOLYGON → 3. */
-  private def scanPolys(t: String, from: Int, ringDepth: Int,
-      what: String): Array[(Array[Double], Array[Array[Double]])] = {
-    val out = new scala.collection.mutable.ArrayBuffer[
-      (Array[Double], Array[Array[Double]])]()
-    val cur = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
-    var depth = 0
-    var ringStart = -1
-    var opened = false
-    var i = from
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == '(') {
-        // loud-on-malformed (r13, ADVICE): text between the keyword and
-        // the first '(' , or after the final top-level ')', must be
-        // blank — 'POLYGON ((…)) junk' used to parse silently
-        require(depth > 0 || !opened,
-          s"$what: trailing content after the final ring: $t")
-        depth += 1
-        opened = true
-        if (depth == ringDepth) ringStart = i + 1
-      } else if (c == ')') {
-        if (depth == ringDepth) {
-          cur += parseRingBody(t.substring(ringStart, i), what)
-        } else if (depth == ringDepth - 1) {
-          require(cur.nonEmpty, s"empty polygon in $what: $t")
-          out += ((cur.head, cur.tail.toArray))
-          cur.clear()
-        }
-        depth -= 1
-        require(depth >= 0, s"unbalanced parens in $what: $t")
-      } else if (depth == 0) {
-        require(c.isWhitespace,
-          if (opened) s"$what: trailing content after the final ring: $t"
-          else s"$what: unexpected text before the first ring: $t")
-      }
-      i += 1
-    }
-    require(depth == 0 && out.nonEmpty, s"bad $what syntax: $t")
-    out.toArray
+  private val memo = ThreadLocal.withInitial[Memo](() => new Memo)
+
+  /** The parsed value of a WKT argument (`Geom.parse`), through the
+    * per-thread memo of the two most recently read distinct values. */
+  def read(g: UTF8String): Geom = {
+    val m = memo.get()
+    if (g.equals(m.k0)) return m.v0
+    val hit = g.equals(m.k1)
+    // clone: the argument may view a reused row buffer
+    val k = if (hit) m.k1 else g.clone()
+    val v = if (hit) m.v1 else Geom.parse(g.toString)
+    m.k1 = m.k0; m.v1 = m.v0
+    m.k0 = k; m.v0 = v
+    v
   }
 
-  /** Parse `POLYGON ((shell)[, (hole), …])` → (shell, holes), flat
-    * coordinate arrays, closing duplicates dropped. Throws
-    * IllegalArgumentException on malformed text — callers wanting
-    * NULL-on-error wrap in try_eval. */
-  def parsePolygonFull(s: String): (Array[Double], Array[Array[Double]]) = {
-    val t = s.trim
-    require(t.regionMatches(true, 0, "POLYGON", 0, 7), s"not a POLYGON: $t")
-    val polys = scanPolys(t, 7, 2, "POLYGON")
-    require(polys.length == 1, s"POLYGON with multiple outer rings: $t")
-    polys(0)
+  /** Canonical WKT of a parsed value; EMPTY keeps its declared kind. */
+  def render(g: Geom): String = g match {
+    case Point(x, y) => pointText(x, y)
+    case MultiPoint(c) => fmtMultiPoint(c)
+    case Lines(ps, multi) =>
+      if (ps.isEmpty && multi) "MULTILINESTRING EMPTY" else fmtLines(ps)
+    case Polys(ps, multi) =>
+      if (ps.isEmpty && multi) "MULTIPOLYGON EMPTY" else fmtGeom(ps)
+    case Collection(ms) =>
+      if (ms.isEmpty) "GEOMETRYCOLLECTION EMPTY"
+      else ms.map(render).mkString("GEOMETRYCOLLECTION (", ", ", ")")
   }
 
-  /** Parse `MULTIPOLYGON (((shell)[, (hole)…]), …)` → components. */
-  def parseMultiPolygonFull(s: String)
-      : Array[(Array[Double], Array[Array[Double]])] = {
-    val t = s.trim
-    require(t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12),
-      s"not a MULTIPOLYGON: $t")
-    scanPolys(t, 12, 3, "MULTIPOLYGON")
+  private def text(g: Geom): UTF8String = UTF8String.fromString(render(g))
+
+  // computed values are built in the form their rendering reads back as
+  private val NoArea = Polys(Array.empty, multi = false)
+  private val NoPoints = MultiPoint(Array.emptyDoubleArray)
+
+  private def areal(ps: Array[Poly]): Polys = Polys(canonPolys(ps), ps.length > 1)
+
+  private def lines(cs: Array[Array[Double]]): Lines = Lines(cs, cs.length > 1)
+
+  private def pointSet(c: Array[Double]): Geom =
+    if (c.length == 2) Point(c(0), c(1)) else MultiPoint(c)
+
+  private def kindName(g: Geom): String = g match {
+    case _: Point => "POINT"
+    case _: MultiPoint => "MULTIPOINT"
+    case Lines(_, multi) => if (multi) "MULTILINESTRING" else "LINESTRING"
+    case Polys(_, multi) => if (multi) "MULTIPOLYGON" else "POLYGON"
+    case _: Collection => "GEOMETRYCOLLECTION"
   }
 
-  /** Outer ring of a POLYGON for the single-ring kernels. Interior
-    * rings are LOUD here: every consumer of this accessor (pairwise
-    * predicates, clipping inputs, centroid/envelope/buffer) assumes a
-    * simply-connected region, and silently dropping a hole would be
-    * silently wrong. Holes-aware operations (st_area, st_contains) go
-    * through parsePolygonFull instead. */
-  def parsePolygon(s: String): Array[Double] = {
-    val (shell, holes) = parsePolygonFull(s)
-    require(holes.isEmpty,
-      "interior rings (holes) unsupported by this operation - " +
-        "only st_area / st_contains accept holed polygons")
-    shell
+  private def notA(op: String, want: String, g: Geom): Nothing =
+    throw new IllegalArgumentException(
+      s"$op: not a $want (got ${kindName(g)}${if (isEmpty(g)) " EMPTY" else ""})")
+
+  /** The components of an areal value; any other kind is loud. */
+  private def polysOf(g: Geom, op: String): Array[Poly] = g match {
+    case Polys(ps, _) => ps
+    case _ => notA(op, "POLYGON or MULTIPOLYGON", g)
   }
 
-  /** Parse `POINT (x y)` → Array(x, y). */
-  def parsePoint(s: String): Array[Double] = {
-    val t = s.trim
-    require(t.regionMatches(true, 0, "POINT", 0, 5), s"not a POINT: $t")
-    val open = t.indexOf('(', 5)
-    val close = if (open < 0) -1 else t.indexOf(')', open + 1)
-    require(open >= 0 && close > open, s"bad POINT syntax: $t")
-    val body = t.substring(open + 1, close).trim
-    val sp = body.indexOf(' ')
-    require(sp > 0, s"bad POINT body '$body'")
-    Array(java.lang.Double.parseDouble(body.substring(0, sp)),
-      java.lang.Double.parseDouble(body.substring(sp + 1).trim))
+  /** The vertices of a non-empty LINESTRING; any other kind is loud. */
+  private def lineOf(g: Geom, op: String): Array[Double] = g match {
+    case Lines(Array(c), false) => c
+    case _ => notA(op, "non-empty LINESTRING", g)
   }
 
-  // one-entry parse memo per thread: free for plan-constant polygons and
-  // for runs of equal polygon values (sorted / bucketed joins)
-  private val lastPoly =
-    new ThreadLocal[(UTF8String, (Array[Double], Array[Array[Double]]))]
-
-  /** Memoized full (shell, holes) parse. */
-  def polygonFull(s: UTF8String): (Array[Double], Array[Array[Double]]) = {
-    val cached = lastPoly.get()
-    if (cached != null && cached._1.equals(s)) cached._2
-    else {
-      val parsed = parsePolygonFull(s.toString)
-      // clone: the incoming UTF8String may view a reused row buffer
-      lastPoly.set((s.clone(), parsed))
-      parsed
-    }
+  private def pointOf(g: Geom, op: String): Point = g match {
+    case p: Point => p
+    case _ => notA(op, "POINT", g)
   }
 
-  def polygonCoords(s: UTF8String): Array[Double] = {
-    val (shell, holes) = polygonFull(s)
-    require(holes.isEmpty,
-      "interior rings (holes) unsupported by this operation - " +
-        "only st_area / st_contains accept holed polygons")
-    shell
+  /** EMPTY: no point at all (a collection of EMPTY members included). */
+  private def isEmpty(g: Geom): Boolean = g match {
+    case _: Point => false
+    case MultiPoint(c) => c.isEmpty
+    case Lines(ps, _) => ps.isEmpty
+    case Polys(ps, _) => ps.isEmpty
+    case Collection(ms) => ms.forall(isEmpty)
   }
 
-  // memoized POLYGON-or-MULTIPOLYGON-or-EMPTY component list — the
-  // uniform accessor for the holes/multi-aware operations (st_area,
-  // st_contains, the geometry accessors)
-  private val lastGeom = new ThreadLocal[
-    (UTF8String, Array[(Array[Double], Array[Array[Double]])])]
-
-  def geomPolys(s: UTF8String)
-      : Array[(Array[Double], Array[Array[Double]])] = {
-    val cached = lastGeom.get()
-    if (cached != null && cached._1.equals(s)) cached._2
-    else {
-      val t = s.toString.trim
-      // EMPTY must match EXACTLY (a prefix test would silently accept
-      // malformed text like 'POLYGON EMPTYX …' as the empty geometry,
-      // violating the loud-on-malformed contract); both spellings are
-      // valid WKT from the consumers this module interoperates with
-      val parsed =
-        if (t.equalsIgnoreCase("POLYGON EMPTY") ||
-            t.equalsIgnoreCase("MULTIPOLYGON EMPTY"))
-          Array.empty[(Array[Double], Array[Array[Double]])]
-        else if (t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-          parseMultiPolygonFull(t)
-        else Array(parsePolygonFull(t))
-      lastGeom.set((s.clone(), parsed))
-      parsed
-    }
+  /** Every vertex in document order (shells before their interior
+    * rings) as one flat list. */
+  private[functions] def vertices(g: Geom): Array[Double] = g match {
+    case Point(x, y) => Array(x, y)
+    case MultiPoint(c) => c
+    case Lines(ps, _) => ps.flatten
+    case Polys(ps, _) => ps.flatMap { case (shell, holes) => shell +: holes.toSeq }.flatten
+    case Collection(ms) => ms.flatMap(vertices)
   }
 
   /** Even-odd ray-cast containment test against a flat coords ring. */
@@ -217,12 +148,11 @@ object WktCore {
     * MULTIPOLYGON contains the point iff any component does. EMPTY
     * contains nothing. */
   def containsWkt(poly: UTF8String, x: Double, y: Double): Boolean =
-    containsPolys(geomPolys(poly), x, y)
+    containsPolys(polysOf(read(poly), "st_contains"), x, y)
 
   /** Even-odd containment over parsed components (shared with the
     * overlay tier, which classifies noded segment midpoints). */
-  private[functions] def containsPolys(
-      polys: Array[(Array[Double], Array[Array[Double]])],
+  private[functions] def containsPolys(polys: Array[Poly],
       x: Double, y: Double): Boolean = {
     var p = 0
     while (p < polys.length) {
@@ -240,29 +170,9 @@ object WktCore {
   }
 
   /** Codegen entry: POINT coordinate extraction (0 = x, 1 = y). */
-  def pointCoord(wkt: UTF8String, idx: Int): Double = parsePoint(wkt.toString)(idx)
-
-  /** Parse `LINESTRING (x y, x y, …)` into flat [x0,y0,x1,y1,…]. */
-  def parseLineString(s: String): Array[Double] = {
-    val t = s.trim
-    require(t.regionMatches(true, 0, "LINESTRING", 0, 10),
-      s"not a LINESTRING: $t")
-    val open = t.indexOf('(', 10)
-    val close = if (open < 0) -1 else t.indexOf(')', open + 1)
-    require(open >= 0 && close > open, s"bad LINESTRING syntax: $t")
-    val parts = t.substring(open + 1, close).split(',')
-    require(parts.length >= 2, s"LINESTRING needs >= 2 points: $t")
-    val out = new Array[Double](parts.length * 2)
-    var i = 0
-    while (i < parts.length) {
-      val p = parts(i).trim
-      val sp = p.indexOf(' ')
-      require(sp > 0, s"bad LINESTRING point '$p'")
-      out(2 * i) = java.lang.Double.parseDouble(p.substring(0, sp))
-      out(2 * i + 1) = java.lang.Double.parseDouble(p.substring(sp + 1).trim)
-      i += 1
-    }
-    out
+  def pointCoord(wkt: UTF8String, idx: Int): Double = {
+    val p = pointOf(read(wkt), "st_x/st_y")
+    if (idx == 0) p.x else p.y
   }
 
   /** Segment–segment intersection (orientation signs; collinear
@@ -313,136 +223,40 @@ object WktCore {
     contains(a, b(0), b(1)) || contains(b, a(0), a(1))
   }
 
-  /** Codegen entry: st_intersects(aWkt, bWkt) — POLYGON×POLYGON,
-    * POINT×POLYGON (containment), POINT×POINT (coordinate equality).
-    * A POINT degenerates to its containment test rather than the
-    * edge-pair walk. */
-  // ASCII whitespace for the byte-prefix probes — must match what
-  // String.trim strips (trim drops everything ≤ 0x20; the chars that
-  // plausibly lead WKT are space/tab/newline/CR)
-  @inline private def isAsciiSpace(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == '\r'
+  /** Codegen entry: st_intersects(aWkt, bWkt). A collection or a
+    * MULTIPOINT intersects iff some member does; a POINT pair compares
+    * coordinates, a POINT against a hole-free POLYGON is its
+    * containment test, a hole-free POLYGON pair keeps the edge walk
+    * above, and every other pairing (lines, holes, MULTIPOLYGON,
+    * EMPTY) rides the overlay tier's relate. */
+  def intersectsWkt(a: UTF8String, b: UTF8String): Boolean =
+    geomIntersects(read(a), read(b))
 
-  // allocation-free "starts with POINT" (case-insensitive, leading
-  // spaces skipped) so the polygon-polygon hot path pays two byte
-  // probes, not a String copy
-  private def isPointWkt(s: UTF8String): Boolean = {
-    var i = 0
-    val n = s.numBytes()
-    while (i < n && isAsciiSpace(s.getByte(i))) i += 1
-    n - i >= 5 &&
-      (s.getByte(i) | 0x20) == 'p' && (s.getByte(i + 1) | 0x20) == 'o' &&
-      (s.getByte(i + 2) | 0x20) == 'i' && (s.getByte(i + 3) | 0x20) == 'n' &&
-      (s.getByte(i + 4) | 0x20) == 't'
+  private def geomIntersects(a: Geom, b: Geom): Boolean = (a, b) match {
+    case (Collection(ms), _) => ms.exists(geomIntersects(_, b))
+    case (_, Collection(ms)) => ms.exists(geomIntersects(a, _))
+    case (MultiPoint(c), _) => pointsIn(c).exists(geomIntersects(_, b))
+    case (_, MultiPoint(c)) => pointsIn(c).exists(geomIntersects(a, _))
+    case (Point(x, y), Point(u, v)) => x == u && y == v
+    case (Point(x, y), Polys(Array((shell, holes)), _)) if holes.isEmpty =>
+      contains(shell, x, y)
+    case (Polys(Array((shell, holes)), _), Point(x, y)) if holes.isEmpty =>
+      contains(shell, x, y)
+    case (Polys(Array((sa, ha)), _), Polys(Array((sb, hb)), _))
+        if ha.isEmpty && hb.isEmpty =>
+      intersects(sa, sb)
+    case _ => WktOverlay.intersects(a, b)
   }
 
-  // allocation-free "starts with LINESTRING" probe, like isPointWkt
-  private def isLineWkt(s: UTF8String): Boolean = {
-    var i = 0
-    val n = s.numBytes()
-    while (i < n && isAsciiSpace(s.getByte(i))) i += 1
-    n - i >= 10 &&
-      (s.getByte(i) | 0x20) == 'l' && (s.getByte(i + 1) | 0x20) == 'i' &&
-      (s.getByte(i + 2) | 0x20) == 'n' && (s.getByte(i + 3) | 0x20) == 'e' &&
-      (s.getByte(i + 4) | 0x20) == 's' && (s.getByte(i + 5) | 0x20) == 't'
-  }
-
-  // allocation-free case-insensitive "starts with kw" probe (leading
-  // spaces skipped; kw must be lowercase) — generalizes isPointWkt's
-  // byte dispatch to the longer keywords
-  private def hasWktPrefix(s: UTF8String, kw: String): Boolean = {
-    var i = 0
-    val n = s.numBytes()
-    // skip ALL ASCII whitespace, matching the String.trim-based
-    // probes this replaced (r15 ADVICE: space-only skipping sent
-    // tab/newline-prefixed WKT down the wrong parser path)
-    while (i < n && isAsciiSpace(s.getByte(i))) i += 1
-    if (n - i < kw.length) return false
-    var k = 0
-    while (k < kw.length) {
-      if ((s.getByte(i + k) | 0x20) != kw.charAt(k)) return false
-      k += 1
-    }
-    true
-  }
-
-  // GEOMETRYCOLLECTION byte-prefix probe (r15 ADVICE: the join-probe
-  // kernels dispatch on bytes, never materializing non-collections)
-  private def isCollectionWkt(s: UTF8String): Boolean =
-    hasWktPrefix(s, "geometrycollection")
-
-  // LINESTRING or MULTILINESTRING (r14): the line-kind dispatch probe
-  private def isLineKindWkt(s: UTF8String): Boolean =
-    isLineWkt(s) || hasWktPrefix(s, "multilinestring")
-
-  // second one-entry memo, for the RIGHT argument of the two-geometry
-  // predicates: a join probes (a, b) pairs where both sides vary, so a
-  // single shared slot would thrash on every call
-  private val lastGeomB = new ThreadLocal[
-    (UTF8String, Array[(Array[Double], Array[Array[Double]])])]
-
-  private def geomPolysB(s: UTF8String)
-      : Array[(Array[Double], Array[Array[Double]])] = {
-    val cached = lastGeomB.get()
-    if (cached != null && cached._1.equals(s)) cached._2
-    else {
-      val parsed = geomPolys(s)
-      lastGeomB.set((s.clone(), parsed))
-      parsed
-    }
-  }
-
-  def intersectsWkt(a: UTF8String, b: UTF8String): Boolean = {
-    // GEOMETRYCOLLECTION operands (r14): a collection intersects iff
-    // ANY member does — recursive decomposition. The probe is a byte
-    // prefix (r15 ADVICE): the hot areal join path must not pay a
-    // String materialization just to rule collections out.
-    // EMPTY members intersect nothing and must not reach the polygon
-    // parser (r16, per the r15 segmentsOf ADVICE: a MULTIPOINT EMPTY
-    // member used to crash the non-collection dispatch below)
-    if (isCollectionWkt(a))
-      return parseCollection(a.toString.trim).exists(c =>
-        !isEmptyMemberText(c) && intersectsWkt(UTF8String.fromString(c), b))
-    if (isCollectionWkt(b))
-      return parseCollection(b.toString.trim).exists(c =>
-        !isEmptyMemberText(c) && intersectsWkt(a, UTF8String.fromString(c)))
-    // (MULTI)LINESTRING operands (r13/r14) ride the overlay tier's
-    // line kernels
-    if (isLineKindWkt(a) || isLineKindWkt(b))
-      return WktOverlay.intersectsExt(a, b)
-    val aPt = isPointWkt(a)
-    val bPt = isPointWkt(b)
-    if (aPt && bPt) {
-      val p = parsePoint(a.toString); val q = parsePoint(b.toString)
-      p(0) == q(0) && p(1) == q(1)
-    } else if (aPt) {
-      val p = parsePoint(a.toString)
-      val g = geomPolysB(b)
-      if (g.length == 1 && g(0)._2.isEmpty) contains(g(0)._1, p(0), p(1))
-      else WktOverlay.intersectsExt(a, b)
-    } else if (bPt) {
-      val q = parsePoint(b.toString)
-      val g = geomPolys(a)
-      if (g.length == 1 && g(0)._2.isEmpty) contains(g(0)._1, q(0), q(1))
-      else WktOverlay.intersectsExt(a, b)
-    } else {
-      val ga = geomPolys(a)
-      val gb = geomPolysB(b)
-      // single hole-free pairs keep the r4 edge-walk kernel; interior
-      // rings / MULTIPOLYGON (r13) ride the holes-aware extension
-      if (ga.length == 1 && ga(0)._2.isEmpty &&
-          gb.length == 1 && gb(0)._2.isEmpty)
-        intersects(ga(0)._1, gb(0)._1)
-      else WktOverlay.intersectsExt(a, b)
-    }
-  }
+  private def pointsIn(c: Array[Double]): Array[Geom] =
+    Array.tabulate[Geom](c.length / 2)(i => Point(c(2 * i), c(2 * i + 1)))
 
   /** Codegen entry: st_touches(aWkt, bWkt) — OGC: the geometries
     * intersect but their interiors do not. Full POINT / LINESTRING /
     * (MULTI)POLYGON matrix via the overlay tier (areal pairs: boundary
     * contact AND an empty areal intersection). */
   def touchesWkt(a: UTF8String, b: UTF8String): Boolean =
-    WktOverlay.touchesWkt(a, b)
+    WktOverlay.touches(read(a), read(b))
 
   /** Codegen entry: st_crosses(aWkt, bWkt) — OGC: interiors intersect
     * in a lower dimension than the higher-dimensional operand
@@ -450,7 +264,7 @@ object WktCore {
     * interior AND exterior). POINT pairings and area×area are false,
     * matching JTS/Trino. */
   def crossesWkt(a: UTF8String, b: UTF8String): Boolean =
-    WktOverlay.crossesWkt(a, b)
+    WktOverlay.crosses(read(a), read(b))
 
   /** PROPER edge crossing only — the strict-interior branch of
     * segIntersect (collinear touches and shared endpoints excluded).
@@ -500,62 +314,64 @@ object WktCore {
 
   /** Codegen entry: st_within(aWkt, bWkt) — OGC argument order (is `a`
     * within `b`). POINT a degenerates to point-in-polygon. */
-  def withinWkt(a: UTF8String, b: UTF8String): Boolean =
-    if (isPointWkt(a)) {
-      // point-in-geometry delegates to the holes- and MULTIPOLYGON-
-      // aware even-odd test (r11); identical to the old single-ring
-      // ray cast on hole-free POLYGON inputs
-      val p = parsePoint(a.toString)
-      containsWkt(b, p(0), p(1))
-    } else {
-      val ga = geomPolys(a)
-      val gb = geomPolysB(b)
-      // clean single hole-free pairs keep the r9 vertex+crossing kernel;
-      // holed / MULTIPOLYGON / EMPTY operands and DEGENERATE boundary
-      // contact (shared edges — where a ray cast on boundary vertices
-      // is float-dependent) resolve through the overlay (r13):
-      // A ⊆ B ⟺ the areal difference A − B is empty
-      if (ga.length == 1 && ga(0)._2.isEmpty &&
-          gb.length == 1 && gb(0)._2.isEmpty &&
-          !WktOverlay.degenerateContact(Array(toCcw(ga(0)._1)),
-            Array(toCcw(gb(0)._1))))
-        containsPoly(gb(0)._1, ga(0)._1)
-      else if (ga.isEmpty) false // EMPTY is within nothing (Trino)
-      else {
-        requireValidGeom(ga, a)
-        requireValidGeom(gb, b)
-        WktOverlay.overlay(ga, gb, 2, "st_within").isEmpty
-      }
+  def withinWkt(a: UTF8String, b: UTF8String): Boolean = {
+    val gb = polysOf(read(b), "st_within")
+    read(a) match {
+      // point-in-geometry: the holes- and MULTIPOLYGON-aware even-odd
+      // test (r11), identical to the single-ring ray cast on hole-free
+      // POLYGON inputs
+      case Point(x, y) => containsPolys(gb, x, y)
+      case a0 =>
+        val ga = polysOf(a0, "st_within")
+        // clean single hole-free pairs keep the r9 vertex+crossing
+        // kernel; holed / MULTIPOLYGON / EMPTY operands and DEGENERATE
+        // boundary contact (shared edges — where a ray cast on boundary
+        // vertices is float-dependent) resolve through the overlay
+        // (r13): A ⊆ B ⟺ the areal difference A − B is empty
+        if (ga.length == 1 && ga(0)._2.isEmpty &&
+            gb.length == 1 && gb(0)._2.isEmpty &&
+            !WktOverlay.degenerateContact(Array(toCcw(ga(0)._1)),
+              Array(toCcw(gb(0)._1))))
+          containsPoly(gb(0)._1, ga(0)._1)
+        else if (ga.isEmpty) false // EMPTY is within nothing (Trino)
+        else {
+          requireValidGeom(ga)
+          requireValidGeom(gb)
+          WktOverlay.overlay(ga, gb, 2, "st_within").isEmpty
+        }
     }
+  }
 
   /** Codegen entry: st_overlaps(aWkt, bWkt) — POLYGON×POLYGON only:
     * interiors intersect but NEITHER ring contains the other (the OGC
     * same-dimension overlap; equal rings report false through the
     * mutual-containment test). POINT operands are dimension-mismatched
     * per OGC and return false. */
-  def overlapsWkt(a: UTF8String, b: UTF8String): Boolean = {
-    if (isPointWkt(a) || isPointWkt(b)) return false
-    val ga = geomPolys(a)
-    val gb = geomPolysB(b)
-    if (ga.length == 1 && ga(0)._2.isEmpty &&
-        gb.length == 1 && gb(0)._2.isEmpty &&
-        !WktOverlay.degenerateContact(Array(toCcw(ga(0)._1)),
-          Array(toCcw(gb(0)._1)))) {
-      val ca = ga(0)._1
-      val cb = gb(0)._1
-      intersects(ca, cb) && !containsPoly(ca, cb) && !containsPoly(cb, ca)
-    } else if (ga.isEmpty || gb.isEmpty) false
-    else {
-      // holed / MULTIPOLYGON / degenerate-contact operands (r13): OGC
-      // overlaps ⟺ the interiors share area AND each side keeps some
-      // exclusive area — three overlay emptiness tests
-      requireValidGeom(ga, a)
-      requireValidGeom(gb, b)
-      WktOverlay.overlay(ga, gb, 0, "st_overlaps").nonEmpty &&
-        WktOverlay.overlay(ga, gb, 2, "st_overlaps").nonEmpty &&
-        WktOverlay.overlay(gb, ga, 2, "st_overlaps").nonEmpty
+  def overlapsWkt(a: UTF8String, b: UTF8String): Boolean =
+    (read(a), read(b)) match {
+      case (_: Point, _) | (_, _: Point) => false
+      case (a0, b0) =>
+        val ga = polysOf(a0, "st_overlaps")
+        val gb = polysOf(b0, "st_overlaps")
+        if (ga.length == 1 && ga(0)._2.isEmpty &&
+            gb.length == 1 && gb(0)._2.isEmpty &&
+            !WktOverlay.degenerateContact(Array(toCcw(ga(0)._1)),
+              Array(toCcw(gb(0)._1)))) {
+          val ca = ga(0)._1
+          val cb = gb(0)._1
+          intersects(ca, cb) && !containsPoly(ca, cb) && !containsPoly(cb, ca)
+        } else if (ga.isEmpty || gb.isEmpty) false
+        else {
+          // holed / MULTIPOLYGON / degenerate-contact operands (r13):
+          // OGC overlaps ⟺ the interiors share area AND each side keeps
+          // some exclusive area — three overlay emptiness tests
+          requireValidGeom(ga)
+          requireValidGeom(gb)
+          WktOverlay.overlay(ga, gb, 0, "st_overlaps").nonEmpty &&
+            WktOverlay.overlay(ga, gb, 2, "st_overlaps").nonEmpty &&
+            WktOverlay.overlay(gb, ga, 2, "st_overlaps").nonEmpty
+        }
     }
-  }
 
   /** Codegen entry: st_distance(aWkt, bWkt) — planar minimum distance
     * over the POINT / LINESTRING / (MULTI)POLYGON matrix (r13):
@@ -572,54 +388,47 @@ object WktCore {
     // GEOGRAPHY-tagged operands: great-circle meters, POINT × POINT
     // only (Trino's documented spherical ST_Distance scope); a
     // geometry×geography mix is a type error, loud (r13)
-    val ta = a.toString.trim
-    val tb = b.toString.trim
-    if (isGeographyText(ta) || isGeographyText(tb)) {
-      require(isGeographyText(ta) && isGeographyText(tb),
+    val geoA = isGeography(a)
+    val geoB = isGeography(b)
+    if (geoA || geoB) {
+      require(geoA && geoB,
         "st_distance: cannot mix GEOMETRY and GEOGRAPHY operands")
-      return geographyDistance(ta, tb)
+      val p = pointOf(geography(a), "st_distance")
+      val q = pointOf(geography(b), "st_distance")
+      return gcMeters(p.x, p.y, q.x, q.y)
     }
+    geomDistance(read(a), read(b))
+  }
+
+  private def geomDistance(a: Geom, b: Geom): Double = {
     // GEOMETRYCOLLECTION operands (r14): min over members (the point-
     // set distance); EMPTY members contribute no points so they are
-    // skipped (r15 ADVICE — they used to poison the min with the
-    // uninitialized sqrt(MaxValue)); a collection with no non-empty
-    // member has no distance — loud
-    if (isCollectionText(ta)) {
-      val comps = parseCollection(ta)
-        .filterNot(c => isEmptyGeom(UTF8String.fromString(c)))
+    // skipped, and a collection with no non-empty member has no
+    // distance — loud
+    def overMembers(ms: Array[Geom], d: Geom => Double): Double = {
+      val comps = ms.filterNot(isEmpty)
       require(comps.nonEmpty, "st_distance: GEOMETRYCOLLECTION with no " +
         "non-empty members has no distance")
-      return comps.map(c => distanceWkt(UTF8String.fromString(c), b)).min
+      comps.map(d).min
     }
-    if (isCollectionText(tb)) {
-      val comps = parseCollection(tb)
-        .filterNot(c => isEmptyGeom(UTF8String.fromString(c)))
-      require(comps.nonEmpty, "st_distance: GEOMETRYCOLLECTION with no " +
-        "non-empty members has no distance")
-      return comps.map(c => distanceWkt(a, UTF8String.fromString(c))).min
-    }
-    // MULTIPOINT operands (r13): the areal-overlay intersects test does
-    // not apply to point sets — a member point strictly INSIDE an areal
-    // other side is the one zero-distance case the segment math would
-    // miss, so it is tested directly; point-on-point and
-    // point-on-segment coincidences fall out of the projections at 0
-    if (isMultiPointText(ta) || isMultiPointText(tb)) {
-      def inside(mpT: String, otherT: String): Boolean = {
-        if (!(otherT.regionMatches(true, 0, "POLYGON", 0, 7) ||
-            otherT.regionMatches(true, 0, "MULTIPOLYGON", 0, 12)))
-          return false
-        val c = parseMultiPoint(mpT)
-        val other = UTF8String.fromString(otherT)
-        var i = 0
-        while (2 * i < c.length) {
-          if (containsWkt(other, c(2 * i), c(2 * i + 1))) return true
-          i += 1
+    (a, b) match {
+      case (Collection(ms), _) => return overMembers(ms, geomDistance(_, b))
+      case (_, Collection(ms)) => return overMembers(ms, geomDistance(a, _))
+      // MULTIPOINT operands (r13): the areal-overlay intersects test
+      // does not apply to point sets — a member point strictly INSIDE
+      // an areal other side is the one zero-distance case the segment
+      // math would miss, so it is tested directly; point-on-point and
+      // point-on-segment coincidences fall out of the projections at 0
+      case (_: MultiPoint, _) | (_, _: MultiPoint) =>
+        def inside(mp: Geom, other: Geom): Boolean = (mp, other) match {
+          case (MultiPoint(c), Polys(g, _)) =>
+            (0 until c.length / 2).exists(i =>
+              containsPolys(g, c(2 * i), c(2 * i + 1)))
+          case _ => false
         }
-        false
-      }
-      if (isMultiPointText(ta) && inside(ta, tb)) return 0.0
-      if (isMultiPointText(tb) && inside(tb, ta)) return 0.0
-    } else if (intersectsWkt(a, b)) return 0.0
+        if (inside(a, b) || inside(b, a)) return 0.0
+      case _ => if (geomIntersects(a, b)) return 0.0
+    }
     val sa = segmentsOf(a)
     val sb = segmentsOf(b)
     // EMPTY operands yield zero segments and would silently return
@@ -641,53 +450,42 @@ object WktCore {
     math.sqrt(best)
   }
 
-  /** Geometry → segment list (x1,y1,x2,y2 each); POINT degenerates to
-    * one zero-length segment; polygon rings close. */
-  private def segmentsOf(g: UTF8String): Array[Array[Double]] = {
-    val t = g.toString.trim
-    val out = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) {
-      val p = parsePoint(t)
-      out += Array(p(0), p(1), p(0), p(1))
-    } else if (isMultiPointText(t)) {
-      // each point degenerates to a zero-length segment, so the
-      // distance/nearest-points kernels support MULTIPOINT for free;
-      // MULTIPOINT EMPTY contributes none (r15 ADVICE: it reached
-      // parseMultiPoint and crashed when a GC member, while the
-      // LINESTRING/MULTILINESTRING EMPTYs were already guarded)
-      val c = if (t.equalsIgnoreCase("MULTIPOINT EMPTY"))
-        Array.empty[Double] else parseMultiPoint(t)
+  /** Geometry → segment list (x1,y1,x2,y2 each); a point degenerates to
+    * one zero-length segment; polygon rings close; a collection is the
+    * union of its members' segments. */
+  private def segmentsOf(g: Geom): Array[Array[Double]] = {
+    val out = new ArrayBuffer[Array[Double]]()
+    def points(c: Array[Double]): Unit = {
       var i = 0
       while (2 * i < c.length) {
         out += Array(c(2 * i), c(2 * i + 1), c(2 * i), c(2 * i + 1))
         i += 1
       }
-    } else if (t.regionMatches(true, 0, "LINESTRING", 0, 10) ||
-        t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) {
-      lineParts(t).foreach { c =>
-        var i = 0
-        while (2 * i + 3 < c.length) {
-          out += Array(c(2 * i), c(2 * i + 1), c(2 * i + 2), c(2 * i + 3))
-          i += 1
-        }
-      }
-    } else if (isCollectionText(t)) {
-      // GEOMETRYCOLLECTION (r15): the segment set is the union over
-      // members (EMPTY members contribute no segments)
-      parseCollection(t).foreach(c =>
-        out ++= segmentsOf(UTF8String.fromString(c)))
-    } else {
-      geomPolys(g).foreach { case (shell, holes) =>
-        (shell +: holes.toSeq).foreach { c =>
-          val n = c.length / 2
+    }
+    g match {
+      case Point(x, y) => points(Array(x, y))
+      case MultiPoint(c) => points(c)
+      case Lines(ps, _) =>
+        ps.foreach { c =>
           var i = 0
-          while (i < n) {
-            val j = if (i + 1 == n) 0 else i + 1
-            out += Array(c(2 * i), c(2 * i + 1), c(2 * j), c(2 * j + 1))
+          while (2 * i + 3 < c.length) {
+            out += Array(c(2 * i), c(2 * i + 1), c(2 * i + 2), c(2 * i + 3))
             i += 1
           }
         }
-      }
+      case Collection(ms) => ms.foreach(m => out ++= segmentsOf(m))
+      case Polys(ps, _) =>
+        ps.foreach { case (shell, holes) =>
+          (shell +: holes.toSeq).foreach { c =>
+            val n = c.length / 2
+            var i = 0
+            while (i < n) {
+              val j = if (i + 1 == n) 0 else i + 1
+              out += Array(c(2 * i), c(2 * i + 1), c(2 * j), c(2 * j + 1))
+              i += 1
+            }
+          }
+        }
     }
     out.toArray
   }
@@ -728,26 +526,25 @@ object WktCore {
     * and ties resolve to the first segment pair in document order
     * (deterministic). */
   def nearestPointsWkt(a: UTF8String, b: UTF8String): ArrayData = {
-    val ta = a.toString.trim
-    val tb = b.toString.trim
-    // every EMPTY operand returns NULL (Trino's convention) — r14
-    // ADVICE fix widened in r15: isEmptyGeom covers every spelling AND
-    // collections whose members are all empty
-    if (isEmptyGeom(a) || isEmptyGeom(b)) return null
+    val ga = read(a)
+    val gb = read(b)
+    // every EMPTY operand returns NULL (Trino's convention), a
+    // collection whose members are all empty included
+    if (isEmpty(ga) || isEmpty(gb)) return null
     // MULTIPOINT operands route through the distance kernel's zero
     // test (the areal intersects test does not apply to point sets)
-    if (isMultiPointText(ta) || isMultiPointText(tb))
-      require(distanceWkt(a, b) > 0,
+    if (ga.isInstanceOf[MultiPoint] || gb.isInstanceOf[MultiPoint])
+      require(geomDistance(ga, gb) > 0,
         "geometry_nearest_points: inputs intersect (distance 0) - the " +
           "nearest pair is not unique; test st_distance first")
-    else require(!intersectsWkt(a, b),
+    else require(!geomIntersects(ga, gb),
       "geometry_nearest_points: inputs intersect (distance 0) - the " +
         "nearest pair is not unique; test st_intersects first")
     // GEOMETRYCOLLECTION operands (r15) need no special casing beyond
     // this point: segmentsOf unions the members' segments, and the
     // argmin over segment pairs is the collection min
-    val sa = segmentsOf(a)
-    val sb = segmentsOf(b)
+    val sa = segmentsOf(ga)
+    val sb = segmentsOf(gb)
     require(sa.nonEmpty && sb.nonEmpty,
       "geometry_nearest_points: operand has no coordinates")
     var best = Double.MaxValue
@@ -796,8 +593,7 @@ object WktCore {
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array[Any](pointStr(ax, ay), pointStr(bx, by)))
+    new GenericArrayData(Array[Any](pointStr(ax, ay), pointStr(bx, by)))
   }
 
   /** st_issimple — no anomalous self-contact. POINT and EMPTY are
@@ -813,16 +609,12 @@ object WktCore {
     * every part simple, and parts may touch ONLY at points on the
     * boundaries (terminals) of both parts — see the inline rule
     * below. */
-  def isSimpleWkt(g: UTF8String): Boolean = {
-    val t = g.toString.trim
-    if (t.equalsIgnoreCase("LINESTRING EMPTY") ||
-        t.equalsIgnoreCase("POLYGON EMPTY") ||
-        t.equalsIgnoreCase("MULTIPOLYGON EMPTY") ||
-        t.equalsIgnoreCase("MULTILINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTIPOINT EMPTY")) return true
+  def isSimpleWkt(g: UTF8String): Boolean = isSimple(read(g))
+
+  private def isSimple(g: Geom): Boolean = g match {
+    case _: Point => true
     // OGC: a MultiPoint is simple iff no two points coincide (r13)
-    if (isMultiPointText(t)) {
-      val c = parseMultiPoint(t)
+    case MultiPoint(c) =>
       val n = c.length / 2
       var i = 0
       while (i < n) {
@@ -834,15 +626,13 @@ object WktCore {
         }
         i += 1
       }
-      return true
-    }
+      true
     // SFS MultiCurve rule (r14): every part simple AND intersections
     // between any two parts only at points on the BOUNDARIES of both
     // parts (a part's boundary is its terminals — empty when closed):
     // a T-junction (one part's endpoint on another's interior) and any
-    // collinear overlap are non-simple
-    if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) {
-      val parts = lineParts(t)
+    // collinear overlap are non-simple; a LINESTRING is the one-part case
+    case Lines(parts, _) =>
       if (!parts.forall(isSimpleChain)) return false
       def partBnd(c: Array[Double])(x: Double, y: Double): Boolean = {
         val m = c.length / 2
@@ -862,24 +652,16 @@ object WktCore {
         }
         i += 1
       }
-      return true
-    }
+      true
+    case Polys(ps, _) =>
+      ps.forall { case (shell, holes) =>
+        (shell +: holes.toSeq).forall { r =>
+          r.length >= 6 && signedArea2(r) != 0 && selfIntersection(r).isEmpty
+        }
+      }
     // GEOMETRYCOLLECTION (r15): simple iff every member is (the JTS
     // rule — simplicity is a per-element property for collections)
-    if (isCollectionText(t))
-      return parseCollection(t)
-        .forall(m => isSimpleWkt(UTF8String.fromString(m)))
-    WktOverlay.kindOf(g) match {
-      case 0 => parsePoint(t); true
-      case 1 => isSimpleChain(parseLineString(t))
-      case _ =>
-        geomPolys(g).forall { case (shell, holes) =>
-          (shell +: holes.toSeq).forall { r =>
-            r.length >= 6 && signedArea2(r) != 0 &&
-              selfIntersection(r).isEmpty
-          }
-        }
-    }
+    case Collection(ms) => ms.forall(isSimple)
   }
 
   /** Single-chain simplicity (the r13 LINESTRING rule, factored for the
@@ -923,128 +705,68 @@ object WktCore {
     true
   }
 
-  /** st_coorddim — this model is strictly 2-D; the parse validates. */
+  /** st_coorddim — this model is strictly 2-D; the read validates. */
   def coordDim(g: UTF8String): Long = {
-    isEmptyGeom(g) // full parse via the kind dispatch; loud on malformed
+    read(g)
     2L
-  }
-
-  /** line_interpolate_points(line, fraction) — POINTs at fraction,
-    * 2·fraction, …, ⌊1/fraction⌋·fraction of the line's length (Trino's
-    * contract: 0 < fraction ≤ 1, count = floor(1/fraction); fraction
-    * 0.25 includes the endpoint, 0.4 stops at 0.8). */
-  def lineInterpolatePoints(line: UTF8String, frac: Double): ArrayData = {
-    require(frac > 0 && frac <= 1,
-      s"line_interpolate_points: fraction must be in (0, 1], got $frac")
-    val k = math.floor(1.0 / frac).toInt
-    val out = new Array[Any](k)
-    var i = 1
-    while (i <= k) {
-      out(i - 1) = lineInterpolatePoint(line, math.min(i * frac, 1.0))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
   // ---- GeoJSON interchange (Trino to/from_geojson_geometry, r13) ---------
 
-  /** to_geojson_geometry(wkt) — RFC 7946 geometry object for POINT /
-    * LINESTRING / (MULTI)POLYGON. Rings render CLOSED (first
-    * coordinate repeated last, the GeoJSON requirement) with shells
-    * CCW and holes CW (the RFC 7946 right-hand rule); numbers use the
-    * same shortest-round-trip rendering as WKT, so the trip is
-    * lossless. */
-  def toGeoJson(g: UTF8String): UTF8String = {
-    val t = g.toString.trim
-    def num(d: Double): String = fmtCoord(d)
-    def pos(x: Double, y: Double): String = "[" + num(x) + "," + num(y) + "]"
-    def ringJson(c0: Array[Double], cw: Boolean): String = {
-      val c = if (cw) reverseRing(toCcw(c0)) else toCcw(c0)
-      val n = c.length / 2
+  /** to_geojson_geometry(wkt) — RFC 7946 geometry object of any kind;
+    * EMPTY is its declared type with no coordinates. Rings render
+    * CLOSED (first coordinate repeated last, the GeoJSON requirement)
+    * with shells CCW and holes CW (the RFC 7946 right-hand rule);
+    * numbers use the same shortest-round-trip rendering as WKT, so the
+    * trip is lossless. */
+  def toGeoJson(g: UTF8String): UTF8String = UTF8String.fromString(geoJson(read(g)))
+
+  private def geoJson(g: Geom): String = {
+    def pos(x: Double, y: Double): String =
+      "[" + fmtCoord(x) + "," + fmtCoord(y) + "]"
+    def chain(c: Array[Double]): String = {
       val sb = new java.lang.StringBuilder("[")
       var i = 0
-      while (i <= n) {
-        val k = if (i == n) 0 else i
+      while (2 * i < c.length) {
         if (i > 0) sb.append(',')
-        sb.append(pos(c(2 * k), c(2 * k + 1)))
+        sb.append(pos(c(2 * i), c(2 * i + 1)))
         i += 1
       }
       sb.append(']').toString
     }
-    def polyCoords(p: (Array[Double], Array[Array[Double]])): String =
-      (ringJson(p._1, cw = false) +:
-        p._2.map(h => ringJson(h, cw = true)).toSeq).mkString("[", ",", "]")
-    val out =
-      if (t.regionMatches(true, 0, "POINT", 0, 5)) {
-        val p = parsePoint(t)
-        "{\"type\":\"Point\",\"coordinates\":" + pos(p(0), p(1)) + "}"
-      } else if (isMultiPointText(t)) {
-        val c =
-          if (t.equalsIgnoreCase("MULTIPOINT EMPTY")) Array.empty[Double]
-          else parseMultiPoint(t)
-        val sb = new java.lang.StringBuilder(
-          "{\"type\":\"MultiPoint\",\"coordinates\":[")
-        var i = 0
-        while (2 * i < c.length) {
-          if (i > 0) sb.append(',')
-          sb.append(pos(c(2 * i), c(2 * i + 1)))
-          i += 1
-        }
-        sb.append("]}").toString
-      } else if (t.regionMatches(true, 0, "LINESTRING", 0, 10)) {
-        val c = parseLineString(t)
-        val sb = new java.lang.StringBuilder(
-          "{\"type\":\"LineString\",\"coordinates\":[")
-        var i = 0
-        while (2 * i < c.length) {
-          if (i > 0) sb.append(',')
-          sb.append(pos(c(2 * i), c(2 * i + 1)))
-          i += 1
-        }
-        sb.append("]}").toString
-      } else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) {
-        val parts =
-          if (t.equalsIgnoreCase("MULTILINESTRING EMPTY"))
-            Array.empty[Array[Double]]
-          else parseMultiLineString(t).toArray
-        def chain(c: Array[Double]): String = {
-          val sb = new java.lang.StringBuilder("[")
-          var i = 0
-          while (2 * i < c.length) {
-            if (i > 0) sb.append(',')
-            sb.append(pos(c(2 * i), c(2 * i + 1)))
-            i += 1
-          }
-          sb.append(']').toString
-        }
-        "{\"type\":\"MultiLineString\",\"coordinates\":" +
-          parts.map(chain).mkString("[", ",", "]") + "}"
-      } else if (isCollectionText(t)) {
-        // RFC 7946 GeometryCollection: recursive member objects
+    def ring(c0: Array[Double], cw: Boolean): String = {
+      val c = if (cw) reverseRing(toCcw(c0)) else toCcw(c0)
+      chain(c ++ c.take(2))
+    }
+    def poly(p: Poly): String =
+      (ring(p._1, cw = false) +: p._2.map(ring(_, cw = true)).toSeq)
+        .mkString("[", ",", "]")
+    def obj(typ: String, coords: String): String =
+      "{\"type\":\"" + typ + "\",\"coordinates\":" + coords + "}"
+    g match {
+      case Point(x, y) => obj("Point", pos(x, y))
+      case MultiPoint(c) => obj("MultiPoint", chain(c))
+      case Lines(ps, false) =>
+        obj("LineString", if (ps.isEmpty) "[]" else chain(ps(0)))
+      case Lines(ps, true) =>
+        obj("MultiLineString", ps.map(chain).mkString("[", ",", "]"))
+      case Polys(ps, false) =>
+        obj("Polygon", if (ps.isEmpty) "[]" else poly(ps(0)))
+      case Polys(ps, true) =>
+        obj("MultiPolygon", ps.map(poly).mkString("[", ",", "]"))
+      // RFC 7946 GeometryCollection: recursive member objects
+      case Collection(ms) =>
         "{\"type\":\"GeometryCollection\",\"geometries\":[" +
-          parseCollection(t)
-            .map(c => toGeoJson(UTF8String.fromString(c)).toString)
-            .mkString(",") + "]}"
-      } else {
-        val polys = geomPolys(g)
-        if (t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-          "{\"type\":\"MultiPolygon\",\"coordinates\":" +
-            polys.map(polyCoords).mkString("[", ",", "]") + "}"
-        else {
-          require(polys.length == 1, s"not a single POLYGON: $t")
-          "{\"type\":\"Polygon\",\"coordinates\":" +
-            polyCoords(polys(0)) + "}"
-        }
-      }
-    UTF8String.fromString(out)
+          ms.map(geoJson).mkString(",") + "]}"
+    }
   }
 
   /** from_geojson_geometry(json) — strict parser for the geometry
-    * objects toGeoJson emits (Point / LineString / Polygon /
-    * MultiPolygon; whitespace tolerated, anything else loud). Rings
-    * must arrive closed (the RFC requirement) — the closing duplicate
-    * drops into this engine's open-ring model; output renders through
-    * the canonical WKT formatter. */
+    * objects toGeoJson emits (whitespace tolerated, anything else
+    * loud). Rings must arrive closed (the RFC requirement) — the
+    * closing duplicate drops into this engine's open-ring model; an
+    * object with no coordinates reads as the canonical EMPTY of its
+    * kind. Output renders through the canonical WKT formatters. */
   def fromGeoJson(j: UTF8String): UTF8String = {
     val t = j.toString
     var i = 0
@@ -1081,19 +803,27 @@ object WktCore {
       expect(']')
       (x, y)
     }
-    def posArray(): Array[Double] = {
+    // `[item, item, …]`, possibly empty
+    def array[A: scala.reflect.ClassTag](item: => A): Array[A] = {
       expect('[')
-      val out = new scala.collection.mutable.ArrayBuffer[Double]()
-      ws()
+      val out = new ArrayBuffer[A]()
       var first = true
-      while ({ ws(); t.charAt(i) != ']' }) {
+      while ({ ws(); require(i < t.length, "from_geojson_geometry: " +
+          "unterminated array"); t.charAt(i) != ']' }) {
         if (!first) expect(',')
         first = false
-        val (x, y) = position()
-        out += x; out += y
+        out += item
       }
       i += 1
       out.toArray
+    }
+    def posArray(): Array[Double] =
+      array(position()).flatMap(p => Array(p._1, p._2))
+    def chain(): Array[Double] = {
+      val c = posArray()
+      require(c.length >= 4,
+        "from_geojson_geometry: LineString needs >= 2 positions")
+      c
     }
     def ring(): Array[Double] = {
       val c = posArray()
@@ -1102,40 +832,19 @@ object WktCore {
         "from_geojson_geometry: ring must be closed with >= 4 positions")
       java.util.Arrays.copyOf(c, c.length - 2)
     }
-    def ringArray(): Array[Array[Double]] = {
-      expect('[')
-      val out = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
-      var first = true
-      while ({ ws(); t.charAt(i) != ']' }) {
-        if (!first) expect(',')
-        first = false
-        out += ring()
-      }
-      i += 1
-      out.toArray
-    }
-    def lineBody(): String = {
-      val c = posArray()
-      require(c.length >= 4,
-        "from_geojson_geometry: LineString needs >= 2 positions")
-      val sb = new java.lang.StringBuilder("(")
-      var k = 0
-      while (2 * k < c.length) {
-        if (k > 0) sb.append(", ")
-        sb.append(fmtCoord(c(2 * k))).append(' ')
-          .append(fmtCoord(c(2 * k + 1)))
-        k += 1
-      }
-      sb.append(')').toString
+    def poly(): Array[Poly] = {
+      val rs = array(ring())
+      if (rs.isEmpty) Array.empty else Array((rs(0), rs.drop(1)))
     }
     // one geometry object — recursive so GeometryCollection members
     // parse through the same strict reader (r14)
-    def geomObject(): String = {
+    def geomObject(): Geom = {
       expect('{')
       var typ: String = null
-      var wkt: String = null
+      var geom: Geom = null
       var first = true
-      while ({ ws(); t.charAt(i) != '}' }) {
+      while ({ ws(); require(i < t.length, "from_geojson_geometry: " +
+          "unterminated object"); t.charAt(i) != '}' }) {
         if (!first) expect(',')
         first = false
         val key = string()
@@ -1146,61 +855,31 @@ object WktCore {
             require(typ == "GeometryCollection",
               "from_geojson_geometry: \"geometries\" is only valid for " +
                 "GeometryCollection (\"type\" must precede it)")
-            expect('[')
-            val comps = new scala.collection.mutable.ArrayBuffer[String]()
-            var f2 = true
-            while ({ ws(); t.charAt(i) != ']' }) {
-              if (!f2) expect(',')
-              f2 = false
-              comps += geomObject()
-            }
-            i += 1
-            wkt = fmtCollection(comps.toArray)
+            geom = Collection(array(geomObject()))
           case "coordinates" =>
             require(typ != null,
               "from_geojson_geometry: \"type\" must precede \"coordinates\"")
-            typ match {
+            geom = typ match {
               case "Point" =>
                 val (x, y) = position()
-                wkt = "POINT (" + fmtCoord(x) + " " + fmtCoord(y) + ")"
-              case "MultiPoint" =>
-                wkt = fmtMultiPoint(posArray())
+                Point(x, y)
+              case "MultiPoint" => MultiPoint(posArray())
               case "LineString" =>
-                wkt = "LINESTRING " + lineBody()
-              case "MultiLineString" =>
-                expect('[')
-                val parts = new scala.collection.mutable.ArrayBuffer[String]()
-                var f2 = true
-                while ({ ws(); t.charAt(i) != ']' }) {
-                  if (!f2) expect(',')
-                  f2 = false
-                  parts += lineBody()
-                }
-                i += 1
-                require(parts.nonEmpty,
-                  "from_geojson_geometry: empty MultiLineString")
-                wkt =
-                  if (parts.length == 1) "LINESTRING " + parts(0)
-                  else parts.mkString("MULTILINESTRING (", ", ", ")")
-              case "Polygon" =>
-                val rs = ringArray()
-                require(rs.nonEmpty, "from_geojson_geometry: empty Polygon")
-                wkt = fmtGeom(Array((rs(0), rs.drop(1))))
+                val c = posArray()
+                lines(if (c.isEmpty) Array.empty else {
+                  require(c.length >= 4,
+                    "from_geojson_geometry: LineString needs >= 2 positions")
+                  Array(c)
+                })
+              case "MultiLineString" => lines(array(chain()))
+              case "Polygon" => areal(poly())
               case "MultiPolygon" =>
-                expect('[')
-                val polys = new scala.collection.mutable.ArrayBuffer[
-                  (Array[Double], Array[Array[Double]])]()
-                var f2 = true
-                while ({ ws(); t.charAt(i) != ']' }) {
-                  if (!f2) expect(',')
-                  f2 = false
-                  val rs = ringArray()
-                  require(rs.nonEmpty,
+                areal(array {
+                  val p = poly()
+                  require(p.nonEmpty,
                     "from_geojson_geometry: empty MultiPolygon component")
-                  polys += ((rs(0), rs.drop(1)))
-                }
-                i += 1
-                wkt = fmtGeom(polys.toArray)
+                  p(0)
+                })
               case other => throw new IllegalArgumentException(
                 s"from_geojson_geometry: unsupported type '$other'")
             }
@@ -1209,128 +888,78 @@ object WktCore {
         }
       }
       expect('}')
-      require(wkt != null, "from_geojson_geometry: missing coordinates")
-      wkt
+      require(geom != null, "from_geojson_geometry: missing coordinates")
+      geom
     }
-    val wkt = geomObject()
+    val g = geomObject()
     ws()
     require(i == t.length,
       "from_geojson_geometry: trailing content after the geometry")
-    UTF8String.fromString(wkt)
+    text(g)
   }
 
   // ---- WKB interchange (Trino ST_AsBinary / ST_GeomFromBinary, r13) ------
 
   /** st_asbinary(wkt) — OGC 06-103r4 well-known binary, little-endian
-    * (byte-order marker 01, the encoding mainstream producers emit).
-    * POINT / LINESTRING / MULTILINESTRING / (MULTI)POLYGON; rings emit
-    * CLOSED (first point repeated last, the spec form) with shells CCW
-    * and holes CW — the same region-normalization as to_geojson_geometry,
-    * so the binary is a pure function of the REGION, not of the input
-    * vertex rotation. EMPTY encodes as its declared type with a zero
-    * element count; each component of a MULTI carries its own byte-order
-    * marker + type header, per the spec. */
+    * (byte-order marker 01, the encoding mainstream producers emit),
+    * every kind; rings emit CLOSED (first point repeated last, the spec
+    * form) with shells CCW and holes CW — the same region-normalization
+    * as to_geojson_geometry, so the binary is a pure function of the
+    * REGION, not of the input vertex rotation. EMPTY encodes as its
+    * declared type with a zero element count; each component of a
+    * MULTI carries its own byte-order marker + type header, per the
+    * spec. */
   def toWkb(g: UTF8String): Array[Byte] = {
-    val t = g.toString.trim
-    def alloc(n: Int): java.nio.ByteBuffer =
-      java.nio.ByteBuffer.allocate(n)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def lineBytes(c: Array[Double]): Int = 9 + 8 * c.length
-    def polyBytes(p: (Array[Double], Array[Array[Double]])): Int =
-      9 + 4 * (1 + p._2.length) +
-        16 * ((p._1.length / 2 + 1) + p._2.map(_.length / 2 + 1).sum)
-    def putHeader(bb: java.nio.ByteBuffer, typ: Int): Unit = {
-      bb.put(1.toByte); bb.putInt(typ)
+    val bytes = new java.io.ByteArrayOutputStream()
+    writeWkb(read(g), new java.io.DataOutputStream(bytes))
+    bytes.toByteArray
+  }
+
+  private def writeWkb(g: Geom, out: java.io.DataOutputStream): Unit = {
+    def int(n: Int): Unit = out.writeInt(Integer.reverseBytes(n))
+    def header(typ: Int): Unit = { out.writeByte(1); int(typ) }
+    def xy(x: Double, y: Double): Unit = {
+      out.writeLong(java.lang.Long.reverseBytes(java.lang.Double.doubleToRawLongBits(x)))
+      out.writeLong(java.lang.Long.reverseBytes(java.lang.Double.doubleToRawLongBits(y)))
     }
-    def putRing(bb: java.nio.ByteBuffer, c: Array[Double]): Unit = {
-      val n = c.length / 2
-      bb.putInt(n + 1)
+    def coords(c: Array[Double]): Unit = {
       var i = 0
-      while (i <= n) {
-        val k = if (i == n) 0 else i
-        bb.putDouble(c(2 * k)); bb.putDouble(c(2 * k + 1))
-        i += 1
-      }
+      while (2 * i < c.length) { xy(c(2 * i), c(2 * i + 1)); i += 1 }
     }
-    def putPoly(bb: java.nio.ByteBuffer,
-        p: (Array[Double], Array[Array[Double]])): Unit = {
-      putHeader(bb, 3)
-      bb.putInt(1 + p._2.length)
-      // canonRing after the orientation fix: lexicographic-min start +
-      // fixed winding = bytes are a pure function of the region
-      putRing(bb, canonRing(toCcw(p._1)))
-      p._2.foreach(h => putRing(bb, canonRing(reverseRing(toCcw(h)))))
+    def line(c: Array[Double]): Unit = { header(2); int(c.length / 2); coords(c) }
+    def ring(c: Array[Double]): Unit = { int(c.length / 2 + 1); coords(c); xy(c(0), c(1)) }
+    // canonRing after the orientation fix: lexicographic-min start +
+    // fixed winding = bytes are a pure function of the region
+    def poly(p: Poly): Unit = {
+      header(3)
+      int(1 + p._2.length)
+      ring(canonRing(toCcw(p._1)))
+      p._2.foreach(h => ring(canonRing(reverseRing(toCcw(h)))))
     }
-    def putLine(bb: java.nio.ByteBuffer, c: Array[Double]): Unit = {
-      putHeader(bb, 2)
-      bb.putInt(c.length / 2)
-      var i = 0
-      while (i < c.length) { bb.putDouble(c(i)); i += 1 }
-    }
-    val out: java.nio.ByteBuffer =
-      if (t.regionMatches(true, 0, "POINT", 0, 5)) {
-        val p = parsePoint(t)
-        val bb = alloc(21)
-        putHeader(bb, 1); bb.putDouble(p(0)); bb.putDouble(p(1))
-        bb
-      } else if (t.equalsIgnoreCase("LINESTRING EMPTY")) {
-        val bb = alloc(9); putHeader(bb, 2); bb.putInt(0); bb
-      } else if (isMultiPointText(t)) {
-        val c =
-          if (t.equalsIgnoreCase("MULTIPOINT EMPTY")) Array.empty[Double]
-          else parseMultiPoint(t)
-        val bb = alloc(9 + 21 * (c.length / 2))
-        putHeader(bb, 4); bb.putInt(c.length / 2)
+    g match {
+      case Point(x, y) => header(1); xy(x, y)
+      case MultiPoint(c) =>
+        header(4); int(c.length / 2)
         var i = 0
-        while (2 * i < c.length) {
-          putHeader(bb, 1)
-          bb.putDouble(c(2 * i)); bb.putDouble(c(2 * i + 1))
-          i += 1
-        }
-        bb
-      } else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) {
-        val parts = parseMultiLineString(t)
-        val bb = alloc(9 + parts.map(lineBytes).sum)
-        putHeader(bb, 5); bb.putInt(parts.length)
-        parts.foreach(putLine(bb, _))
-        bb
-      } else if (t.regionMatches(true, 0, "LINESTRING", 0, 10)) {
-        val c = parseLineString(t)
-        val bb = alloc(lineBytes(c)); putLine(bb, c); bb
-      } else if (isCollectionText(t)) {
-        // GEOMETRYCOLLECTION (r14): type 7, members as full nested WKB
-        // geometries (own byte-order marker + header each, per spec)
-        val comps = parseCollection(t)
-          .map(c => toWkb(UTF8String.fromString(c)))
-        val bb = alloc(9 + comps.map(_.length).sum)
-        putHeader(bb, 7); bb.putInt(comps.length)
-        comps.foreach(bb.put)
-        bb
-      } else {
-        val polys = geomPolys(g)
-        val multi = t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12)
-        if (polys.length == 1 && !multi) {
-          val bb = alloc(polyBytes(polys(0))); putPoly(bb, polys(0)); bb
-        } else if (polys.isEmpty && !multi) {
-          val bb = alloc(9); putHeader(bb, 3); bb.putInt(0); bb
-        } else {
-          val bb = alloc(9 + polys.map(polyBytes).sum)
-          putHeader(bb, 6); bb.putInt(polys.length)
-          polys.foreach(putPoly(bb, _))
-          bb
-        }
-      }
-    out.array()
+        while (2 * i < c.length) { header(1); xy(c(2 * i), c(2 * i + 1)); i += 1 }
+      case Lines(ps, false) => if (ps.isEmpty) { header(2); int(0) } else line(ps(0))
+      case Lines(ps, true) => header(5); int(ps.length); ps.foreach(line)
+      case Polys(ps, false) => if (ps.isEmpty) { header(3); int(0) } else poly(ps(0))
+      case Polys(ps, true) => header(6); int(ps.length); ps.foreach(poly)
+      // GEOMETRYCOLLECTION (r14): type 7, members as full nested WKB
+      // geometries (own byte-order marker + header each, per spec)
+      case Collection(ms) => header(7); int(ms.length); ms.foreach(writeWkb(_, out))
+    }
   }
 
   /** st_geomfrombinary(wkb) — strict WKB reader: both byte orders,
-    * geometry types 1/2/3/5/6 only (Z/M and EWKB-SRID type flags fail
+    * geometry types 1–7 only (Z/M and EWKB-SRID type flags fail
     * LOUDLY rather than silently dropping dimensions), rings must
     * arrive closed, trailing bytes after the geometry are loud. Output
     * re-renders through the canonical WKT formatters, so
     * st_geomfrombinary(st_asbinary(g)) lands exactly on canonical text
-    * (the engine's canonical EMPTY is POLYGON EMPTY for any empty
-    * areal input, matching canonMinimalWkt). */
+    * (an empty MULTI* reads as the canonical POLYGON EMPTY or
+    * LINESTRING EMPTY). */
   def fromWkb(b: Array[Byte]): UTF8String = {
     val bb = java.nio.ByteBuffer.wrap(b)
     def header(): Int = {
@@ -1376,7 +1005,7 @@ object WktCore {
         "st_geomfrombinary: ring is not closed")
       java.util.Arrays.copyOf(c, c.length - 2)
     }
-    def polyBody(): Array[(Array[Double], Array[Array[Double]])] = {
+    def polyBody(): Array[Poly] = {
       val r = count("ring")
       if (r == 0) Array.empty
       else {
@@ -1394,14 +1023,14 @@ object WktCore {
     }
     // one full geometry — recursive so GEOMETRYCOLLECTION members parse
     // through the same strict reader (r14)
-    def geom(): String = header() match {
+    def geom(): Geom = header() match {
       case 1 =>
         require(bb.remaining >= 16, "st_geomfrombinary: truncated POINT")
-        "POINT (" + fmtCoord(bb.getDouble) + " " + fmtCoord(bb.getDouble) + ")"
+        Point(bb.getDouble, bb.getDouble)
       case 2 =>
         val c = lineBody(2)
-        if (c.isEmpty) "LINESTRING EMPTY" else fmtLines(Array(c))
-      case 3 => fmtGeom(polyBody())
+        lines(if (c.isEmpty) Array.empty else Array(c))
+      case 3 => areal(polyBody())
       case 4 =>
         val pts = count("MultiPoint component")
         // bound the allocation by the bytes that could back it — a
@@ -1416,12 +1045,12 @@ object WktCore {
           c(2 * i) = bb.getDouble; c(2 * i + 1) = bb.getDouble
           i += 1
         }
-        fmtMultiPoint(c)
+        MultiPoint(c)
       case 5 =>
         val parts = count("MultiLineString component")
         require(bb.remaining >= 9L * parts, // 9-byte nested headers min
           "st_geomfrombinary: truncated MultiLineString")
-        fmtLines(Array.fill(parts) { nested(2, "MultiLineString")
+        lines(Array.fill(parts) { nested(2, "MultiLineString")
           val c = lineBody(2)
           require(c.nonEmpty,
             "st_geomfrombinary: empty MultiLineString component")
@@ -1430,7 +1059,7 @@ object WktCore {
         val comps = count("MultiPolygon component")
         require(bb.remaining >= 13L * comps, // 13-byte nested min
           "st_geomfrombinary: truncated MultiPolygon")
-        fmtGeom(Array.fill(comps) { nested(3, "MultiPolygon")
+        areal(Array.fill(comps) { nested(3, "MultiPolygon")
           val p = polyBody()
           require(p.nonEmpty,
             "st_geomfrombinary: empty MultiPolygon component")
@@ -1439,14 +1068,14 @@ object WktCore {
         val comps = count("GeometryCollection member")
         require(bb.remaining >= 5L * comps, // 5-byte nested headers min
           "st_geomfrombinary: truncated GeometryCollection")
-        fmtCollection(Array.fill(comps)(geom()))
+        Collection(Array.fill(comps)(geom()))
       case other => throw new IllegalArgumentException(
         s"st_geomfrombinary: unsupported geometry type $other")
     }
-    val wkt = geom()
+    val g = geom()
     require(bb.remaining == 0,
       "st_geomfrombinary: trailing bytes after the geometry")
-    UTF8String.fromString(wkt)
+    text(g)
   }
 
   // ---- simplify_geometry (Douglas–Peucker, r13) --------------------------
@@ -1479,7 +1108,7 @@ object WktCore {
     val keep = new Array[Boolean](n)
     keep(0) = true; keep(n - 1) = true
     dpSimplify(c, 0, n - 1, tol * tol, keep)
-    val out = new scala.collection.mutable.ArrayBuffer[Double]()
+    val out = new ArrayBuffer[Double]()
     var i = 0
     while (i < n) {
       if (keep(i)) { out += c(2 * i); out += c(2 * i + 1) }
@@ -1489,122 +1118,59 @@ object WktCore {
   }
 
   /** Codegen entry: simplify_geometry(wkt, tolerance) — Douglas–Peucker
-    * (Trino's spelling). LINESTRINGs simplify directly; polygon rings
-    * anchor at vertex 0 and the vertex FARTHEST from it (ties → first),
-    * then DP each half — the standard closed-ring split, deterministic.
-    * Loud when a simplified ring degenerates (< 3 vertices, zero area,
-    * or self-intersecting) instead of emitting silent garbage; Trino's
-    * topology-preserving variant never degenerates either, it just
-    * stops simplifying. */
+    * (Trino's spelling). Line parts simplify directly, each part in
+    * document order; polygon rings anchor at vertex 0 and the vertex
+    * FARTHEST from it (ties → first), then DP each half — the standard
+    * closed-ring split, deterministic. Point sets are already minimal;
+    * a GEOMETRYCOLLECTION simplifies per member. Loud when a simplified
+    * ring degenerates (< 3 vertices, zero area, or self-intersecting)
+    * instead of emitting silent garbage; Trino's topology-preserving
+    * variant never degenerates either, it just stops simplifying. */
   def simplifyWkt(g: UTF8String, tol: Double): UTF8String = {
     require(tol >= 0, s"simplify_geometry: negative tolerance $tol")
-    val t = g.toString.trim
-    // point sets are already minimal; GEOMETRYCOLLECTION simplifies
-    // per member in document order (r15)
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) {
-      val p = parsePoint(t); return pointStr(p(0), p(1))
-    }
-    if (isMultiPointText(t)) {
-      if (t.equalsIgnoreCase("MULTIPOINT EMPTY")) return g
-      return UTF8String.fromString(fmtMultiPoint(parseMultiPoint(t)))
-    }
-    if (isCollectionText(t)) {
-      if (t.equalsIgnoreCase("GEOMETRYCOLLECTION EMPTY")) return g
-      return UTF8String.fromString(fmtCollection(parseCollection(t)
-        .map(m => simplifyWkt(UTF8String.fromString(m), tol).toString)))
-    }
-    // MULTILINESTRING (r14): DP each part independently, parts in
-    // document order (the same per-chain kernel LINESTRING uses)
-    if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) {
-      if (t.equalsIgnoreCase("MULTILINESTRING EMPTY")) return g
-      return UTF8String.fromString(
-        fmtLines(lineParts(t).map(c => dpLine(c, tol))))
-    }
-    if (t.regionMatches(true, 0, "LINESTRING", 0, 10)) {
-      if (t.equalsIgnoreCase("LINESTRING EMPTY")) return g
-      val out = dpLine(parseLineString(t), tol)
-      val sb = new java.lang.StringBuilder("LINESTRING (")
-      var i = 0
-      while (2 * i < out.length) {
-        if (i > 0) sb.append(", ")
-        sb.append(fmtCoord(out(2 * i))).append(' ')
-          .append(fmtCoord(out(2 * i + 1)))
-        i += 1
-      }
-      return UTF8String.fromString(sb.append(')').toString)
-    }
-    def ring(c: Array[Double]): Array[Double] = {
-      val n = c.length / 2
-      // anchor 1 = vertex 0; anchor 2 = the vertex farthest from it
-      var far = 1
-      var farD2 = -1.0
-      var i = 1
-      while (i < n) {
-        val dx = c(2 * i) - c(0); val dy = c(2 * i + 1) - c(1)
-        val d2 = dx * dx + dy * dy
-        if (d2 > farD2) { farD2 = d2; far = i }
-        i += 1
-      }
-      // two halves as open polylines sharing the anchors
-      val h1 = java.util.Arrays.copyOfRange(c, 0, 2 * far + 2)
-      val h2 = new Array[Double](2 * (n - far) + 2)
-      System.arraycopy(c, 2 * far, h2, 0, 2 * (n - far))
-      h2(h2.length - 2) = c(0); h2(h2.length - 1) = c(1)
-      val s1 = dpLine(h1, tol)
-      val s2 = dpLine(h2, tol)
-      val out = new scala.collection.mutable.ArrayBuffer[Double]()
-      out ++= s1
-      // skip the shared anchor at both seams (start of s2, end of s2)
-      var k = 2
-      while (k < s2.length - 2) { out += s2(k); k += 1 }
-      val r = out.toArray
-      require(r.length >= 6 && signedArea2(r) != 0 &&
-        selfIntersection(r).isEmpty,
-        "simplify_geometry: tolerance collapses a ring into a degenerate " +
-          "or self-intersecting shape - lower the tolerance")
-      r
-    }
-    val polys = geomPolys(g)
-    if (polys.isEmpty) return g
-    UTF8String.fromString(fmtGeom(polys.map { case (shell, holes) =>
-      (ring(shell), holes.map(ring))
-    }))
+    text(simplified(read(g), tol))
   }
 
-  // ---- MULTIPOINT (the last WKT kind, r13) -------------------------------
+  private def simplified(g: Geom, tol: Double): Geom = g match {
+    case _: Point | _: MultiPoint => g
+    case Collection(ms) => Collection(ms.map(simplified(_, tol)))
+    case Lines(ps, multi) => Lines(ps.map(dpLine(_, tol)), multi)
+    case Polys(ps, multi) =>
+      Polys(ps.map { case (shell, holes) =>
+        (simplifyRing(shell, tol), holes.map(simplifyRing(_, tol)))
+      }, multi)
+  }
 
-  /** Parse `MULTIPOINT ((x y), (x y), …)` — also the bare
-    * `MULTIPOINT (x y, x y)` spelling some producers emit — into flat
-    * coords in DOCUMENT order (no canonicalization, like LINESTRING:
-    * point multisets have no preferred rotation). */
-  def parseMultiPoint(s: String): Array[Double] = {
-    val t = s.trim
-    require(t.regionMatches(true, 0, "MULTIPOINT", 0, 10),
-      s"not a MULTIPOINT: $t")
-    val open = t.indexOf('(', 10)
-    require(open >= 0 && t.endsWith(")"), s"bad MULTIPOINT syntax: $t")
-    require(t.substring(10, open).isBlank,
-      s"MULTIPOINT: unexpected text before the first point: $t")
-    val body = t.substring(open + 1, t.length - 1).trim
-    val parts = body.split(',')
-    require(parts.nonEmpty && parts.forall(_.trim.nonEmpty),
-      s"bad MULTIPOINT syntax: $t")
-    val out = new Array[Double](parts.length * 2)
-    var i = 0
-    while (i < parts.length) {
-      var p = parts(i).trim
-      // the parenthesized per-point spelling
-      if (p.startsWith("(")) {
-        require(p.endsWith(")"), s"bad MULTIPOINT point '$p'")
-        p = p.substring(1, p.length - 1).trim
-      }
-      val sp = p.indexOf(' ')
-      require(sp > 0, s"bad MULTIPOINT point '$p'")
-      out(2 * i) = java.lang.Double.parseDouble(p.substring(0, sp))
-      out(2 * i + 1) = java.lang.Double.parseDouble(p.substring(sp + 1).trim)
+  private def simplifyRing(c: Array[Double], tol: Double): Array[Double] = {
+    val n = c.length / 2
+    // anchor 1 = vertex 0; anchor 2 = the vertex farthest from it
+    var far = 1
+    var farD2 = -1.0
+    var i = 1
+    while (i < n) {
+      val dx = c(2 * i) - c(0); val dy = c(2 * i + 1) - c(1)
+      val d2 = dx * dx + dy * dy
+      if (d2 > farD2) { farD2 = d2; far = i }
       i += 1
     }
-    out
+    // two halves as open polylines sharing the anchors
+    val h1 = java.util.Arrays.copyOfRange(c, 0, 2 * far + 2)
+    val h2 = new Array[Double](2 * (n - far) + 2)
+    System.arraycopy(c, 2 * far, h2, 0, 2 * (n - far))
+    h2(h2.length - 2) = c(0); h2(h2.length - 1) = c(1)
+    val s1 = dpLine(h1, tol)
+    val s2 = dpLine(h2, tol)
+    val out = new ArrayBuffer[Double]()
+    out ++= s1
+    // skip the shared anchor at both seams (start of s2, end of s2)
+    var k = 2
+    while (k < s2.length - 2) { out += s2(k); k += 1 }
+    val r = out.toArray
+    require(r.length >= 6 && signedArea2(r) != 0 &&
+      selfIntersection(r).isEmpty,
+      "simplify_geometry: tolerance collapses a ring into a degenerate " +
+        "or self-intersecting shape - lower the tolerance")
+    r
   }
 
   /** Canonical MULTIPOINT rendering: the parenthesized per-point form. */
@@ -1622,110 +1188,19 @@ object WktCore {
       sb.append(')').toString
     }
 
-  private def isMultiPointText(t: String): Boolean =
-    t.regionMatches(true, 0, "MULTIPOINT", 0, 10)
-
-  // ---- GEOMETRYCOLLECTION (r14, the last WKT kind) ------------------------
-  // Modeled as a TOP-LEVEL list of component texts: parsing splits at
-  // depth-0 commas inside the collection's parens (components carry
-  // their own parens; nested collections nest depth), every component
-  // re-validates and re-renders through its kind's canonical formatter.
-
-  private[functions] def isCollectionText(t: String): Boolean =
-    t.regionMatches(true, 0, "GEOMETRYCOLLECTION", 0, 18)
-
-  /** `GEOMETRYCOLLECTION (comp, …)` → component texts in document
-    * order; `GEOMETRYCOLLECTION EMPTY` → zero components. Components
-    * are validated (each must parse under its own kind). */
-  private[functions] def parseCollection(s: String): Array[String] = {
-    val t = s.trim
-    require(isCollectionText(t), s"not a GEOMETRYCOLLECTION: $t")
-    if (t.equalsIgnoreCase("GEOMETRYCOLLECTION EMPTY"))
-      return Array.empty[String]
-    val open = t.indexOf('(', 18)
-    require(open >= 0 && t.endsWith(")"),
-      s"bad GEOMETRYCOLLECTION syntax: $t")
-    require(t.substring(18, open).isBlank,
-      s"GEOMETRYCOLLECTION: unexpected text before the first member: $t")
-    val body = t.substring(open + 1, t.length - 1)
-    val out = new scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') {
-        depth -= 1
-        require(depth >= 0, s"unbalanced parens in GEOMETRYCOLLECTION: $t")
-      } else if (c == ',' && depth == 0) {
-        out += body.substring(start, i).trim
-        start = i + 1
-      }
-      i += 1
-    }
-    require(depth == 0, s"unbalanced parens in GEOMETRYCOLLECTION: $t")
-    out += body.substring(start).trim
-    require(out.forall(_.nonEmpty),
-      s"empty member in GEOMETRYCOLLECTION: $t")
-    // validate every member through its canonical renderer
-    out.foreach(canonGeomText)
-    out.toArray
-  }
-
-  /** Canonical single-geometry re-rendering, any kind (the
-    * GEOMETRYCOLLECTION member normalizer): parse under the member's
-    * declared kind, render through that kind's canonical formatter;
-    * declared-type EMPTY spellings pass through upper-cased. */
-  private[functions] def canonGeomText(s: String): String = {
-    val t = s.trim
-    if (t.equalsIgnoreCase("POLYGON EMPTY") ||
-        t.equalsIgnoreCase("MULTIPOLYGON EMPTY") ||
-        t.equalsIgnoreCase("LINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTILINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTIPOINT EMPTY") ||
-        t.equalsIgnoreCase("GEOMETRYCOLLECTION EMPTY"))
-      return t.toUpperCase(java.util.Locale.ROOT)
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) {
-      val p = parsePoint(t)
-      pointStr(p(0), p(1)).toString
-    } else if (isMultiPointText(t)) fmtMultiPoint(parseMultiPoint(t))
-    else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-      fmtLines(parseMultiLineString(t).toArray)
-    else if (t.regionMatches(true, 0, "LINESTRING", 0, 10))
-      fmtLines(Array(parseLineString(t)))
-    else if (isCollectionText(t)) fmtCollection(parseCollection(t))
-    else fmtGeom(geomPolys(UTF8String.fromString(t)))
-  }
-
-  /** Canonical collection rendering (members already canonical). */
-  private[functions] def fmtCollection(comps: Array[String]): String =
-    if (comps.isEmpty) "GEOMETRYCOLLECTION EMPTY"
-    else comps.map(canonGeomText)
-      .mkString("GEOMETRYCOLLECTION (", ", ", ")")
-
   /** st_points — the vertex array as POINT texts in document order
     * (Trino's ST_Points): POINT / MULTIPOINT / LINESTRING /
     * MULTILINESTRING; NULL on EMPTY (Trino's convention). */
   def pointsOf(g: UTF8String): ArrayData = {
-    val t = g.toString.trim
-    if (t.equalsIgnoreCase("MULTIPOINT EMPTY") ||
-        t.equalsIgnoreCase("LINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTILINESTRING EMPTY")) return null
-    val coords: Array[Double] =
-      if (isMultiPointText(t)) parseMultiPoint(t)
-      else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-        parseMultiLineString(t).toArray.flatten
-      else if (t.regionMatches(true, 0, "LINESTRING", 0, 10))
-        parseLineString(t)
-      else parsePoint(t)
-    val out = new Array[Any](coords.length / 2)
-    var i = 0
-    while (2 * i < coords.length) {
-      out(i) = pointStr(coords(2 * i), coords(2 * i + 1))
-      i += 1
+    val c = read(g) match {
+      case Point(x, y) => Array(x, y)
+      case MultiPoint(c) => c
+      case Lines(ps, _) => ps.flatten
+      case other => notA("st_points", "POINT, MULTIPOINT or (MULTI)LINESTRING", other)
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    if (c.isEmpty) null
+    else new GenericArrayData(Array.tabulate[Any](c.length / 2)(i =>
+      pointStr(c(2 * i), c(2 * i + 1))))
   }
 
   // ---- line & scalar accessors (Trino geospatial page, r13) -------------
@@ -1733,139 +1208,91 @@ object WktCore {
   /** st_geometrytype — Trino's "ST_Point"/"ST_LineString"/"ST_Polygon"/
     * "ST_MultiPolygon"/"ST_GeomCollection" spellings (EMPTY keeps its
     * declared type). */
-  def geometryType(g: UTF8String): UTF8String = {
-    val t = g.toString.trim
-    val name =
-      if (t.regionMatches(true, 0, "POINT", 0, 5)) "ST_Point"
-      else if (t.regionMatches(true, 0, "LINESTRING", 0, 10)) "ST_LineString"
-      else if (isMultiPointText(t)) "ST_MultiPoint"
-      else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-        "ST_MultiLineString"
-      else if (t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-        "ST_MultiPolygon"
-      else if (t.regionMatches(true, 0, "POLYGON", 0, 7)) "ST_Polygon"
-      else if (isCollectionText(t)) "ST_GeomCollection"
-      else throw new IllegalArgumentException(s"unsupported geometry: $t")
-    UTF8String.fromString(name)
-  }
-
-  /** Exact-match test for the six EMPTY spellings — the cheap member
-    * screen for collection decompositions (no parse, no recursion). */
-  private[functions] def isEmptyMemberText(t: String): Boolean =
-    t.equalsIgnoreCase("POLYGON EMPTY") ||
-      t.equalsIgnoreCase("MULTIPOLYGON EMPTY") ||
-      t.equalsIgnoreCase("LINESTRING EMPTY") ||
-      t.equalsIgnoreCase("MULTILINESTRING EMPTY") ||
-      t.equalsIgnoreCase("MULTIPOINT EMPTY") ||
-      t.equalsIgnoreCase("GEOMETRYCOLLECTION EMPTY")
+  def geometryType(g: UTF8String): UTF8String = UTF8String.fromString(read(g) match {
+    case _: Point => "ST_Point"
+    case _: MultiPoint => "ST_MultiPoint"
+    case Lines(_, multi) => if (multi) "ST_MultiLineString" else "ST_LineString"
+    case Polys(_, multi) => if (multi) "ST_MultiPolygon" else "ST_Polygon"
+    case _: Collection => "ST_GeomCollection"
+  })
 
   /** st_isempty — true for the EMPTY spellings, and for a
-    * GEOMETRYCOLLECTION whose members are all empty (the JTS rule);
-    * the parse validates either way. */
-  def isEmptyGeom(g: UTF8String): Boolean = {
-    val t = g.toString.trim
-    if (t.equalsIgnoreCase("POLYGON EMPTY") ||
-        t.equalsIgnoreCase("MULTIPOLYGON EMPTY") ||
-        t.equalsIgnoreCase("LINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTILINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTIPOINT EMPTY") ||
-        t.equalsIgnoreCase("GEOMETRYCOLLECTION EMPTY")) true
-    else if (isMultiPointText(t)) { parseMultiPoint(t); false }
-    else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) {
-      parseMultiLineString(t); false
-    }
-    else if (isCollectionText(t))
-      parseCollection(t).forall(c => isEmptyGeom(UTF8String.fromString(c)))
-    else {
-      WktOverlay.kindOf(g) match {
-        case 0 => parsePoint(t)
-        case 1 => parseLineString(t)
-        case _ => geomPolys(g)
-      }
-      false
-    }
-  }
+    * GEOMETRYCOLLECTION whose members are all empty (the JTS rule). */
+  def isEmptyGeom(g: UTF8String): Boolean = isEmpty(read(g))
 
   /** st_dimension — 0 points, 1 lines, 2 areal; a collection takes the
     * MAX over members (the OGC inherited-dimension rule), 0 if empty. */
-  def dimensionOf(g: UTF8String): Long = {
-    val t = g.toString.trim
-    if (isMultiPointText(t)) {
-      if (!t.equalsIgnoreCase("MULTIPOINT EMPTY")) parseMultiPoint(t)
-      0L
-    } else if (isCollectionText(t)) {
-      val comps = parseCollection(t)
-      if (comps.isEmpty) 0L
-      else comps.map(c => dimensionOf(UTF8String.fromString(c))).max
-    } else WktOverlay.kindOf(g).toLong
+  def dimensionOf(g: UTF8String): Long = dim(read(g)).toLong
+
+  private def dim(g: Geom): Int = g match {
+    case _: Point | _: MultiPoint => 0
+    case _: Lines => 1
+    case _: Polys => 2
+    case Collection(ms) => if (ms.isEmpty) 0 else ms.map(dim).max
   }
 
-  /** st_numpoints — vertex count of a POINT (1) or LINESTRING; areal
-    * inputs are loud (Trino counts ring closers — an interop trap this
-    * model sidesteps by scoping to the unambiguous kinds). */
-  def numPoints(g: UTF8String): Long = {
-    val t = g.toString.trim
-    if (isMultiPointText(t))
-      return if (t.equalsIgnoreCase("MULTIPOINT EMPTY")) 0L
-        else parseMultiPoint(t).length / 2
-    WktOverlay.kindOf(g) match {
-      case 0 => 1L
-      // (MULTI)LINESTRING (r14): vertex count summed over parts — no
-      // ring-closer ambiguity on line kinds
-      case 1 => lineParts(t).map(_.length / 2).sum.toLong
-      case _ => throw new IllegalArgumentException(
-        "st_numpoints supports POINT, MULTIPOINT and (MULTI)LINESTRING " +
-          "(polygon ring-closer counting differs across engines - count " +
-          "st_exteriorring instead)")
-    }
+  /** st_numpoints — vertex count of a point set or (MULTI)LINESTRING,
+    * summed over parts; areal inputs are loud (Trino counts ring
+    * closers — an interop trap this model sidesteps by scoping to the
+    * unambiguous kinds). */
+  def numPoints(g: UTF8String): Long = read(g) match {
+    case _: Point => 1L
+    case MultiPoint(c) => c.length / 2
+    case Lines(ps, _) => ps.map(_.length / 2).sum.toLong
+    case _ => throw new IllegalArgumentException(
+      "st_numpoints supports POINT, MULTIPOINT and (MULTI)LINESTRING " +
+        "(polygon ring-closer counting differs across engines - count " +
+        "st_exteriorring instead)")
   }
+
+  private def pointText(x: Double, y: Double): String =
+    "POINT (" + fmtCoord(x) + " " + fmtCoord(y) + ")"
 
   private def pointStr(x: Double, y: Double): UTF8String =
-    UTF8String.fromString(
-      "POINT (" + fmtCoord(x) + " " + fmtCoord(y) + ")")
+    UTF8String.fromString(pointText(x, y))
 
   /** st_pointn(line, n) — 1-based vertex as a POINT; NULL out of range. */
   def pointN(g: UTF8String, n: Int): UTF8String = {
-    val c = parseLineString(g.toString)
+    val c = lineOf(read(g), "st_pointn")
     if (n < 1 || n > c.length / 2) null
     else pointStr(c(2 * (n - 1)), c(2 * (n - 1) + 1))
   }
 
   /** st_startpoint / st_endpoint — the line terminals. */
   def lineTerminal(g: UTF8String, end: Boolean): UTF8String = {
-    val c = parseLineString(g.toString)
+    val c = lineOf(read(g), if (end) "st_endpoint" else "st_startpoint")
     if (end) pointStr(c(c.length - 2), c(c.length - 1))
     else pointStr(c(0), c(1))
   }
 
-  /** st_isclosed — first vertex equals last; a MULTILINESTRING is
-    * closed iff EVERY part is (Trino/OGC), r14. */
-  def isClosedLine(g: UTF8String): Boolean = {
-    val t = g.toString.trim
-    if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-      return parseMultiLineString(t).forall(c =>
-        c(0) == c(c.length - 2) && c(1) == c(c.length - 1))
-    val c = parseLineString(t)
+  private def closedChain(c: Array[Double]): Boolean =
     c(0) == c(c.length - 2) && c(1) == c(c.length - 1)
+
+  /** st_isclosed — first vertex equals last; a MULTILINESTRING is
+    * closed iff EVERY part is (Trino/OGC), r14. EMPTY is loud. */
+  def isClosedLine(g: UTF8String): Boolean = read(g) match {
+    case Lines(ps, _) if ps.nonEmpty => ps.forall(closedChain)
+    case other => notA("st_isclosed", "non-empty (MULTI)LINESTRING", other)
   }
 
-  /** st_isring — closed AND simple (the ring formed by dropping the
-    * closing duplicate has no non-adjacent edge contact and nonzero
-    * area). */
+  /** st_isring — a LINESTRING that is closed AND simple (the ring formed
+    * by dropping the closing duplicate has no non-adjacent edge contact
+    * and nonzero area). */
   def isRingLine(g: UTF8String): Boolean = {
-    if (!isClosedLine(g)) return false
-    val c = parseLineString(g.toString)
-    val ring = java.util.Arrays.copyOf(c, c.length - 2)
-    ring.length >= 6 && signedArea2(ring) != 0 &&
-      selfIntersection(ring).isEmpty
+    val c = lineOf(read(g), "st_isring")
+    closedChain(c) && {
+      val ring = java.util.Arrays.copyOf(c, c.length - 2)
+      ring.length >= 6 && signedArea2(ring) != 0 &&
+        selfIntersection(ring).isEmpty
+    }
   }
 
   /** line_locate_point(line, point) — the fraction of the line's length
     * at the point on the line NEAREST to the argument (Trino/PostGIS
     * semantics); ties resolve to the earliest position. */
   def lineLocatePoint(line: UTF8String, pt: UTF8String): Double = {
-    val c = parseLineString(line.toString)
-    val p = parsePoint(pt.toString)
+    val c = lineOf(read(line), "line_locate_point")
+    val p = pointOf(read(pt), "line_locate_point")
     val n = c.length / 2
     var bestD2 = Double.MaxValue
     var bestFrac = 0.0
@@ -1883,11 +1310,11 @@ object WktCore {
       val t =
         if (len2 == 0) 0.0
         else {
-          val raw = ((p(0) - ax) * dx + (p(1) - ay) * dy) / len2
+          val raw = ((p.x - ax) * dx + (p.y - ay) * dy) / len2
           if (raw < 0) 0.0 else if (raw > 1) 1.0 else raw
         }
-      val ex = ax + t * dx - p(0)
-      val ey = ay + t * dy - p(1)
+      val ex = ax + t * dx - p.x
+      val ey = ay + t * dy - p.y
       val d2 = ex * ex + ey * ey
       if (d2 < bestD2) {
         bestD2 = d2
@@ -1907,7 +1334,23 @@ object WktCore {
   def lineInterpolatePoint(line: UTF8String, frac: Double): UTF8String = {
     require(frac >= 0 && frac <= 1,
       s"line_interpolate_point: fraction must be in [0, 1], got $frac")
-    val c = parseLineString(line.toString)
+    pointAlong(lineOf(read(line), "line_interpolate_point"), frac)
+  }
+
+  /** line_interpolate_points(line, fraction) — POINTs at fraction,
+    * 2·fraction, …, ⌊1/fraction⌋·fraction of the line's length (Trino's
+    * contract: 0 < fraction ≤ 1, count = floor(1/fraction); fraction
+    * 0.25 includes the endpoint, 0.4 stops at 0.8). */
+  def lineInterpolatePoints(line: UTF8String, frac: Double): ArrayData = {
+    require(frac > 0 && frac <= 1,
+      s"line_interpolate_points: fraction must be in (0, 1], got $frac")
+    val c = lineOf(read(line), "line_interpolate_points")
+    val k = math.floor(1.0 / frac).toInt
+    new GenericArrayData(Array.tabulate[Any](k)(i =>
+      pointAlong(c, math.min((i + 1) * frac, 1.0))))
+  }
+
+  private def pointAlong(c: Array[Double], frac: Double): UTF8String = {
     val n = c.length / 2
     var total = 0.0
     var i = 0
@@ -1951,87 +1394,71 @@ object WktCore {
     *    compare component-wise per dimension;
     *  - cross-dimension pairs are false (the model parse-rejects the
     *    degenerate zero-measure geometries that could tie them). */
-  def equalsWkt(a: UTF8String, b: UTF8String): Boolean = {
-    val ta = a.toString.trim
-    val tb = b.toString.trim
-    if (isEmptyGeom(a) || isEmptyGeom(b))
-      return isEmptyGeom(a) && isEmptyGeom(b)
-    def pointish(t: String): Boolean =
-      t.regionMatches(true, 0, "POINT", 0, 5) || isMultiPointText(t)
-    def ptSet(t: String): Set[(Double, Double)] =
-      (if (isMultiPointText(t)) parseMultiPoint(t) else parsePoint(t))
-        .grouped(2).map(p => (p(0), p(1))).toSet
-    // GC operands (r15): absorb (self-union), then compare components
-    if (isCollectionText(ta) || isCollectionText(tb)) {
-      val aa = finishMixed(unionMixed(ta, ta))
-      val ba = finishMixed(unionMixed(tb, tb))
-      if (!isCollectionText(aa) && !isCollectionText(ba))
-        return equalsWkt(UTF8String.fromString(aa),
-          UTF8String.fromString(ba))
-      if (!isCollectionText(aa) || !isCollectionText(ba)) return false
-      val (pa, la, qa) = decomposeMixed(aa)
-      val (pb, lb, qb) = decomposeMixed(ba)
-      val arealEq = {
-        val ea = pa.equalsIgnoreCase("POLYGON EMPTY")
-        val eb = pb.equalsIgnoreCase("POLYGON EMPTY")
-        if (ea || eb) ea && eb
-        else equalsWkt(UTF8String.fromString(pa), UTF8String.fromString(pb))
-      }
-      val linesEq =
-        if (la.isEmpty || lb.isEmpty) la.isEmpty && lb.isEmpty
-        else WktOverlay.lineLineDifference(la, lb).isEmpty &&
-          WktOverlay.lineLineDifference(lb, la).isEmpty
-      val ptsEq = qa.grouped(2).map(p => (p(0), p(1))).toSet ==
-        qb.grouped(2).map(p => (p(0), p(1))).toSet
-      return arealEq && linesEq && ptsEq
+  def equalsWkt(a: UTF8String, b: UTF8String): Boolean =
+    geomEquals(read(a), read(b))
+
+  private def geomEquals(a: Geom, b: Geom): Boolean = {
+    if (isEmpty(a) || isEmpty(b)) return isEmpty(a) && isEmpty(b)
+    def ptSet(g: Geom): Set[(Double, Double)] =
+      vertices(g).grouped(2).map(p => (p(0), p(1))).toSet
+    (a, b) match {
+      // GC operands (r15): absorb (self-union), then compare components
+      case (_: Collection, _) | (_, _: Collection) =>
+        (finishMixed(unionMixed(a, a)), finishMixed(unionMixed(b, b))) match {
+          case (aa: Collection, ba: Collection) =>
+            val (pa, la, qa) = decompose(aa)
+            val (pb, lb, qb) = decompose(ba)
+            val arealEq =
+              if (pa.polys.isEmpty || pb.polys.isEmpty)
+                pa.polys.isEmpty && pb.polys.isEmpty
+              else geomEquals(pa, pb)
+            val linesEq =
+              if (la.isEmpty || lb.isEmpty) la.isEmpty && lb.isEmpty
+              else WktOverlay.lineLineDifference(la, lb).isEmpty &&
+                WktOverlay.lineLineDifference(lb, la).isEmpty
+            val ptsEq = qa.grouped(2).map(p => (p(0), p(1))).toSet ==
+              qb.grouped(2).map(p => (p(0), p(1))).toSet
+            arealEq && linesEq && ptsEq
+          case (_: Collection, _) | (_, _: Collection) => false
+          case (aa, ba) => geomEquals(aa, ba)
+        }
+      case (_: Point | _: MultiPoint, _: Point | _: MultiPoint) => ptSet(a) == ptSet(b)
+      case (Lines(pa, _), Lines(pb, _)) =>
+        WktOverlay.lineLineDifference(pa, pb).isEmpty &&
+          WktOverlay.lineLineDifference(pb, pa).isEmpty
+      case (Polys(ga, _), Polys(gb, _)) =>
+        requireValidGeom(ga)
+        requireValidGeom(gb)
+        WktOverlay.overlay(ga, gb, 2, "st_equals").isEmpty &&
+          WktOverlay.overlay(gb, ga, 2, "st_equals").isEmpty
+      case _ => false
     }
-    if (pointish(ta) || pointish(tb)) {
-      if (!(pointish(ta) && pointish(tb))) return false
-      return ptSet(ta) == ptSet(tb)
-    }
-    val aLineK = isLineKindWkt(a)
-    val bLineK = isLineKindWkt(b)
-    if (aLineK || bLineK) {
-      if (!(aLineK && bLineK)) return false
-      val pa = lineParts(ta)
-      val pb = lineParts(tb)
-      return WktOverlay.lineLineDifference(pa, pb).isEmpty &&
-        WktOverlay.lineLineDifference(pb, pa).isEmpty
-    }
-    val ga = geomPolys(a)
-    val gb = geomPolysB(b)
-    requireValidGeom(ga, a)
-    requireValidGeom(gb, b)
-    WktOverlay.overlay(ga, gb, 2, "st_equals").isEmpty &&
-      WktOverlay.overlay(gb, ga, 2, "st_equals").isEmpty
   }
 
-  /** Codegen entry: st_area(polygonWkt) — planar shoelace area of the
-    * outer ring. Term and accumulation order are FIXED (i ascending,
-    * left-associated sum) so an oracle can mirror the arithmetic
-    * operation-for-operation. */
-  def area(poly: UTF8String): Double = {
-    // EMPTY has zero area (Trino's ST_Area convention); a
-    // MULTIPOLYGON's area is the sum over components (valid
-    // components have disjoint interiors); a component's interior
-    // rings SUBTRACT (holes carve area out). GEOGRAPHY-tagged input
-    // dispatches to the spherical-excess kernel (m², r13).
-    val t = poly.toString.trim
-    if (isGeographyText(t)) geographyArea(t)
-    else if (isCollectionText(t))
-      // a collection's area sums its AREAL members; lower-dimension
-      // members contribute 0 (the Trino/JTS reading), r14
-      parseCollection(t).map { c =>
-        if (c.regionMatches(true, 0, "POLYGON", 0, 7) ||
-            c.regionMatches(true, 0, "MULTIPOLYGON", 0, 12) ||
-            isCollectionText(c))
-          area(UTF8String.fromString(c))
-        else 0.0
+  /** Codegen entry: st_area(polygonWkt) — planar shoelace area. Term
+    * and accumulation order are FIXED (i ascending, left-associated
+    * sum) so an oracle can mirror the arithmetic operation-for-
+    * operation. EMPTY has zero area (Trino's ST_Area convention); a
+    * MULTIPOLYGON's area is the sum over components (valid components
+    * have disjoint interiors); a component's interior rings SUBTRACT.
+    * GEOGRAPHY-tagged input dispatches to the spherical-excess kernel
+    * (m², r13). */
+  def area(poly: UTF8String): Double =
+    if (isGeography(poly)) geographyArea(polysOf(geography(poly), "st_area"))
+    else areaOf(read(poly))
+
+  private def areaOf(g: Geom): Double = g match {
+    // a collection's area sums its AREAL members; lower-dimension
+    // members contribute 0 (the Trino/JTS reading), r14
+    case Collection(ms) =>
+      ms.map {
+        case m @ (_: Polys | _: Collection) => areaOf(m)
+        case _ => 0.0
       }.sum
-    else geomPolys(poly).map(polyArea).sum
+    case _ => polysOf(g, "st_area").map(polyArea).sum
   }
 
-  private def polyArea(p: (Array[Double], Array[Array[Double]])): Double =
+  private def polyArea(p: Poly): Double =
     ringArea(p._1) - p._2.map(ringArea).sum
 
   // ---- spherical geography (Trino to_spherical_geography tier, r13) -----
@@ -2041,54 +1468,51 @@ object WktCore {
   // measures (st_distance / st_area / st_length) dispatch on the tag —
   // a poor-man's type exactly strong enough that geometry×geography
   // mixes and unsupported operations fail LOUDLY, like Trino's type
-  // errors, instead of silently computing planar math on degrees.
+  // errors, instead of silently computing planar math on degrees. The
+  // tagged geometry reads through the same reader as any other.
 
-  private[functions] val GeoTag = "GEOGRAPHY "
+  private val GeoTag = "GEOGRAPHY "
+  private val GeoTagBytes = GeoTag.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
-  private def isGeographyText(t: String): Boolean = t.startsWith(GeoTag)
+  /** Whether the text starts with the tag (after the whitespace
+    * `String.trim` drops), probed on the bytes. */
+  private def isGeography(g: UTF8String): Boolean = {
+    val n = g.numBytes
+    var i = 0
+    while (i < n && (g.getByte(i) & 0xff) <= ' ') i += 1
+    var k = 0
+    while (k < GeoTagBytes.length && i + k < n && g.getByte(i + k) == GeoTagBytes(k))
+      k += 1
+    k == GeoTagBytes.length
+  }
 
-  /** to_spherical_geography(geom) — validates the kind parses and every
-    * vertex is a lon/lat pair in range (x = longitude, per the
+  private def untagged(g: UTF8String): String = g.toString.trim.drop(GeoTag.length)
+
+  private def geography(g: UTF8String): Geom = Geom.parse(untagged(g))
+
+  /** to_spherical_geography(geom) — validates the geometry and that
+    * every vertex is a lon/lat pair in range (x = longitude, per the
     * geospatial convention), then tags. EMPTY tags as-is. */
   def toSphericalGeography(g: UTF8String): UTF8String = {
-    val t = g.toString.trim
-    require(!isGeographyText(t),
+    require(!isGeography(g),
       "to_spherical_geography: input is already a geography")
-    def check(x: Double, y: Double): Unit = {
+    val c = vertices(read(g))
+    var i = 0
+    while (2 * i < c.length) {
+      val x = c(2 * i); val y = c(2 * i + 1)
       require(x >= -180.0 && x <= 180.0,
         s"to_spherical_geography: longitude $x out of [-180, 180]")
       require(y >= -90.0 && y <= 90.0,
         s"to_spherical_geography: latitude $y out of [-90, 90]")
+      i += 1
     }
-    // r14 ADVICE fix: MULTIPOINT and MULTILINESTRING validate their own
-    // lon/lat paths (kindOf used to throw a misleading 'unsupported
-    // geometry' and kept the geography ST_Length multiline branch dead)
-    def checkAll(c: Array[Double]): Unit = {
-      var i = 0
-      while (2 * i < c.length) { check(c(2 * i), c(2 * i + 1)); i += 1 }
-    }
-    if (!isEmptyGeom(g)) {
-      if (isMultiPointText(t)) checkAll(parseMultiPoint(t))
-      else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-        parseMultiLineString(t).foreach(checkAll)
-      else WktOverlay.kindOf(g) match {
-        case 0 => val p = parsePoint(t); check(p(0), p(1))
-        case 1 => checkAll(parseLineString(t))
-        case _ =>
-          geomPolys(g).foreach { case (shell, holes) =>
-            (shell +: holes.toSeq).foreach(checkAll)
-          }
-      }
-    }
-    UTF8String.fromString(GeoTag + t)
+    UTF8String.fromString(GeoTag + g.toString.trim)
   }
 
   /** to_geometry(geography) — strips the tag (loud on plain geometry). */
   def sphericalToGeometry(g: UTF8String): UTF8String = {
-    val t = g.toString.trim
-    require(isGeographyText(t),
-      "to_geometry: input is not a spherical geography")
-    UTF8String.fromString(t.substring(GeoTag.length))
+    require(isGeography(g), "to_geometry: input is not a spherical geography")
+    UTF8String.fromString(untagged(g))
   }
 
   // π/180 and 2R(km) — the same literals as the dialect's
@@ -2110,14 +1534,6 @@ object WktCore {
     TwoRKm * math.asin(math.sqrt(math.min(a, 1.0))) * 1000.0
   }
 
-  /** Geography ST_Distance — POINT × POINT only (Trino's documented
-    * spherical scope), meters. */
-  private def geographyDistance(ta: String, tb: String): Double = {
-    val pa = parsePoint(ta.substring(GeoTag.length))
-    val pb = parsePoint(tb.substring(GeoTag.length))
-    gcMeters(pa(0), pa(1), pb(0), pb(1))
-  }
-
   /** Chamberlain–Duquette (JPL 89-16) ring spherical excess:
     * Σ (λ2 − λ1)(2 + sin φ1 + sin φ2) over edges in PARSED vertex order
     * (closing edge last), left-associated — mirrorable term-for-term.
@@ -2137,10 +1553,9 @@ object WktCore {
   }
 
   /** Geography ST_Area — m², shells minus holes, components summed. */
-  private def geographyArea(t: String): Double = {
-    val body = UTF8String.fromString(t.substring(GeoTag.length))
+  private def geographyArea(ps: Array[Poly]): Double = {
     var total = 0.0
-    geomPolys(body).foreach { case (shell, holes) =>
+    ps.foreach { case (shell, holes) =>
       var a = sphericalRingArea(shell)
       holes.foreach(h => a -= sphericalRingArea(h))
       total += a
@@ -2150,9 +1565,7 @@ object WktCore {
 
   /** Geography ST_Length — great-circle meters summed over consecutive
     * vertices in line order (LINESTRING / MULTILINESTRING). */
-  private def geographyLength(t: String): Double = {
-    val body = t.substring(GeoTag.length).trim
-    if (body.equalsIgnoreCase("LINESTRING EMPTY")) return 0.0
+  private def geographyLength(g: Geom): Double = {
     def one(c: Array[Double]): Double = {
       var s = 0.0
       var i = 0
@@ -2162,75 +1575,56 @@ object WktCore {
       }
       s
     }
-    if (body.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-      parseMultiLineString(body).map(one).sum
-    else one(parseLineString(body))
+    g match {
+      case Lines(ps, _) => ps.map(one).sum
+      case other => notA("st_length", "(MULTI)LINESTRING geography", other)
+    }
   }
 
   // ---- geometry accessors (Trino ST_NumGeometries family, r11) ---------
 
-  /** st_numgeometries: component count (EMPTY → 0; MULTIPOINT counts
-    * its points, r13; MULTILINESTRING its parts and GEOMETRYCOLLECTION
-    * its top-level members, r14). */
-  def numGeometries(g: UTF8String): Long = {
-    val t = g.toString.trim
-    if (isMultiPointText(t))
-      if (t.equalsIgnoreCase("MULTIPOINT EMPTY")) 0L
-      else parseMultiPoint(t).length / 2
-    else if (isCollectionText(t)) parseCollection(t).length.toLong
-    else if (isLineKindWkt(g)) lineParts(t).length.toLong
-    else geomPolys(g).length.toLong
+  /** The top-level components: a POINT, LINESTRING or POLYGON is its
+    * own one component (none when EMPTY), a MULTI* value has its parts
+    * and a GEOMETRYCOLLECTION its members. */
+  private def components(g: Geom): Array[Geom] = g match {
+    case p: Point => Array(p)
+    case MultiPoint(c) => pointsIn(c)
+    case Lines(ps, _) => ps.map[Geom](c => Lines(Array(c), multi = false))
+    case Polys(ps, _) => ps.map[Geom](p => Polys(Array(p), multi = false))
+    case Collection(ms) => ms
   }
 
-  /** st_geometryn (1-based): the n-th component re-rendered as a
-    * canonical POLYGON (POINT for MULTIPOINT, LINESTRING for
-    * MULTILINESTRING, the member itself for GEOMETRYCOLLECTION); null
-    * out of range (Trino's convention). */
+  /** st_numgeometries: the component count (EMPTY → 0). */
+  def numGeometries(g: UTF8String): Long = components(read(g)).length.toLong
+
+  /** st_geometryn (1-based): the n-th component, canonically rendered;
+    * null out of range (Trino's convention). */
   def geometryN(g: UTF8String, n: Int): UTF8String = {
-    val t = g.toString.trim
-    if (isMultiPointText(t)) {
-      val c =
-        if (t.equalsIgnoreCase("MULTIPOINT EMPTY")) Array.empty[Double]
-        else parseMultiPoint(t)
-      if (n < 1 || n > c.length / 2) null
-      else pointStr(c(2 * (n - 1)), c(2 * (n - 1) + 1))
-    } else if (isCollectionText(t)) {
-      val comps = parseCollection(t)
-      if (n < 1 || n > comps.length) null
-      else UTF8String.fromString(canonGeomText(comps(n - 1)))
-    } else if (isLineKindWkt(g)) {
-      val parts = lineParts(t)
-      if (n < 1 || n > parts.length) null
-      else UTF8String.fromString(fmtLines(Array(parts(n - 1))))
-    } else {
-      val polys = geomPolys(g)
-      if (n < 1 || n > polys.length) null
-      else UTF8String.fromString(fmtGeom(Array(polys(n - 1))))
-    }
+    val cs = components(read(g))
+    if (n < 1 || n > cs.length) null else text(cs(n - 1))
   }
 
-  private def requireSinglePoly(g: UTF8String, op: String)
-      : (Array[Double], Array[Array[Double]]) = {
-    val polys = geomPolys(g)
-    require(polys.length == 1,
-      s"$op requires a single POLYGON (got ${polys.length} components)")
-    polys(0)
+  private def singlePoly(g: UTF8String, op: String): Poly = {
+    val ps = polysOf(read(g), op)
+    require(ps.length == 1,
+      s"$op requires a single POLYGON (got ${ps.length} components)")
+    ps(0)
   }
 
   /** st_exteriorring: the shell as a closed LINESTRING. */
   def exteriorRing(g: UTF8String): UTF8String = {
-    val (shell, _) = requireSinglePoly(g, "st_exteriorring")
+    val (shell, _) = singlePoly(g, "st_exteriorring")
     UTF8String.fromString("LINESTRING (" + ringBody(shell) + ")")
   }
 
   /** st_numinteriorring: interior-ring count of a POLYGON. */
   def numInteriorRing(g: UTF8String): Long =
-    requireSinglePoly(g, "st_numinteriorring")._2.length.toLong
+    singlePoly(g, "st_numinteriorring")._2.length.toLong
 
   /** st_interiorringn (1-based): the n-th interior ring as a closed
     * LINESTRING; null out of range. */
   def interiorRingN(g: UTF8String, n: Int): UTF8String = {
-    val (_, holes) = requireSinglePoly(g, "st_interiorringn")
+    val (_, holes) = singlePoly(g, "st_interiorringn")
     if (n < 1 || n > holes.length) null
     else UTF8String.fromString("LINESTRING (" + ringBody(holes(n - 1)) + ")")
   }
@@ -2247,47 +1641,44 @@ object WktCore {
     math.abs(s) / 2
   }
 
-
   /** Codegen entry: shoelace-weighted polygon centroid (idx 0 = x,
     * 1 = y). Terms accumulate in vertex order — the sc21 mirroring
     * contract — and divide by the SIGNED tripled cross-sum, so the
     * ring's winding cancels and both orientations yield the true
     * centroid. Degenerate (zero-area) rings divide by zero → ±Inf/NaN,
     * loud rather than silently wrong. */
-  def centroid(poly: UTF8String, idx: Int): Double = {
+  def centroid(poly: UTF8String, idx: Int): Double = centroidOf(read(poly), idx)
+
+  private def centroidOf(g: Geom, idx: Int): Double = g match {
+    // GEOMETRYCOLLECTION (r15): the centroid of the HIGHEST-dimension
+    // members only (the JTS convention — lower dimensions carry zero
+    // measure against them); areal members fold through the union
+    // first, so the result is the POINT-SET centroid (overlapping
+    // members are not double-weighted). All-EMPTY stays loud.
+    case c: Collection =>
+      val (ar, ln, pt) = decompose(c)
+      if (ar.polys.nonEmpty) centroidOf(ar, idx)
+      else if (ln.nonEmpty) centroidOf(lines(ln), idx)
+      else {
+        require(pt.nonEmpty, "st_centroid: empty geometry")
+        centroidOf(MultiPoint(pt), idx)
+      }
     // r14: Trino's ST_Centroid also covers points and lines — a POINT
     // is its own centroid, MULTIPOINT is the arithmetic mean in
     // document order, and (MULTI)LINESTRING is the LENGTH-weighted mean
     // of segment midpoints (segments in document order, ONE final
     // division — mirrorable op-for-op; axis-parallel dyadic fixtures
     // keep every segment length exact)
-    val t0 = poly.toString.trim
-    // GEOMETRYCOLLECTION (r15): the centroid of the HIGHEST-dimension
-    // members only (the JTS convention — lower dimensions carry zero
-    // measure against them); areal members fold through the union
-    // first, so the result is the POINT-SET centroid (overlapping
-    // members are not double-weighted). All-EMPTY stays loud.
-    if (isCollectionText(t0)) {
-      val (ar, ln, pt) = decomposeMixed(t0)
-      if (!ar.equalsIgnoreCase("POLYGON EMPTY"))
-        return centroid(UTF8String.fromString(ar), idx)
-      if (ln.nonEmpty)
-        return centroid(UTF8String.fromString(fmtLines(ln)), idx)
-      require(pt.nonEmpty, "st_centroid: empty geometry")
-      return centroid(UTF8String.fromString(fmtMultiPoint(pt)), idx)
-    }
-    if (t0.regionMatches(true, 0, "POINT", 0, 5))
-      return parsePoint(t0)(idx)
-    if (isMultiPointText(t0)) {
-      val c = parseMultiPoint(t0)
+    case Point(x, y) => if (idx == 0) x else y
+    case MultiPoint(c) =>
+      require(c.nonEmpty, "st_centroid: empty geometry")
       var s = 0.0
       var i = 0
       while (2 * i < c.length) { s += c(2 * i + idx); i += 1 }
-      return s / (c.length / 2)
-    }
-    if (isLineKindWkt(poly)) {
+      s / (c.length / 2)
+    case Lines(ps, _) =>
       var sLen = 0.0; var sVal = 0.0
-      lineParts(t0).foreach { c =>
+      ps.foreach { c =>
         var i = 0
         while (2 * i + 3 < c.length) {
           val dx = c(2 * i + 2) - c(2 * i)
@@ -2299,34 +1690,34 @@ object WktCore {
         }
       }
       require(sLen > 0, "st_centroid: zero-length line")
-      return sVal / sLen
-    }
-    val polys = geomPolys(poly)
-    require(polys.nonEmpty, "st_centroid: empty geometry")
-    if (polys.length == 1 && polys(0)._2.isEmpty) {
-      // hole-free single polygon: the ORIGINAL path, bit-identical term
-      // order (sc21c's oracle mirrors this arithmetic op-for-op) —
-      // winding-insensitive because the signed cross-sum divides out
-      val c = polys(0)._1
-      val (sa, sx, sy) = centroidTerms(c, 0.0, 0.0, 0.0)
-      return if (idx == 0) sx / (3.0 * sa) else sy / (3.0 * sa)
-    }
-    // holed / MULTIPOLYGON (r11): same term formulas accumulated over
-    // every ring with FIXED orientation — shells CCW (positive cross
-    // terms), interior rings CW (negative) — so the moments and the
-    // cross-sum are shell − holes and the division yields the true
-    // centroid of the remaining region; components accumulate in
-    // order, shell before its holes
-    var sa = 0.0; var sx = 0.0; var sy = 0.0
-    polys.foreach { case (shell0, holes) =>
-      val r1 = centroidTerms(toCcw(shell0), sa, sx, sy)
-      sa = r1._1; sx = r1._2; sy = r1._3
-      holes.foreach { h =>
-        val r2 = centroidTerms(reverseRing(toCcw(h)), sa, sx, sy)
-        sa = r2._1; sx = r2._2; sy = r2._3
+      sVal / sLen
+    case Polys(polys, _) =>
+      require(polys.nonEmpty, "st_centroid: empty geometry")
+      if (polys.length == 1 && polys(0)._2.isEmpty) {
+        // hole-free single polygon: the ORIGINAL path, bit-identical
+        // term order (sc21c's oracle mirrors this arithmetic op-for-op)
+        // — winding-insensitive because the signed cross-sum divides out
+        val c = polys(0)._1
+        val (sa, sx, sy) = centroidTerms(c, 0.0, 0.0, 0.0)
+        if (idx == 0) sx / (3.0 * sa) else sy / (3.0 * sa)
+      } else {
+        // holed / MULTIPOLYGON (r11): same term formulas accumulated
+        // over every ring with FIXED orientation — shells CCW (positive
+        // cross terms), interior rings CW (negative) — so the moments
+        // and the cross-sum are shell − holes and the division yields
+        // the true centroid of the remaining region; components
+        // accumulate in order, shell before its holes
+        var sa = 0.0; var sx = 0.0; var sy = 0.0
+        polys.foreach { case (shell0, holes) =>
+          val r1 = centroidTerms(toCcw(shell0), sa, sx, sy)
+          sa = r1._1; sx = r1._2; sy = r1._3
+          holes.foreach { h =>
+            val r2 = centroidTerms(reverseRing(toCcw(h)), sa, sx, sy)
+            sa = r2._1; sx = r2._2; sy = r2._3
+          }
+        }
+        if (idx == 0) sx / (3.0 * sa) else sy / (3.0 * sa)
       }
-    }
-    if (idx == 0) sx / (3.0 * sa) else sy / (3.0 * sa)
   }
 
   private def centroidTerms(c: Array[Double], sa0: Double, sx0: Double,
@@ -2345,64 +1736,49 @@ object WktCore {
     (sa, sx, sy)
   }
 
-  /** Codegen entry: envelope bound of POINT/LINESTRING/POLYGON WKT —
-    * which: 0 xmin, 1 ymin, 2 xmax, 3 ymax. Min/max over vertices:
-    * order-independent and exact in IEEE, so no accumulation-order
-    * contract is needed. */
-  def envBound(g: UTF8String, which: Int): Double = {
-    val t = g.toString.trim
-    // polygonal inputs go through the multi-ring accessor: the envelope
-    // of a holed polygon is its SHELL's bbox (interior rings cannot
-    // extend it), and a MULTIPOLYGON's envelope spans all shells (r11);
-    // EMPTY has no envelope — loud, like the rest of the malformed scope
-    val rings: Seq[Array[Double]] =
-      if (t.regionMatches(true, 0, "POLYGON", 0, 7) ||
-          t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12)) {
-        val polys = geomPolys(g)
-        require(polys.nonEmpty, "st_envelope: empty geometry")
-        polys.toSeq.map(_._1)
-      } else if (t.regionMatches(true, 0, "LINESTRING", 0, 10))
-        Seq(parseLineString(t))
-      else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) {
-        val parts = parseMultiLineString(t)
-        require(parts.nonEmpty, "st_envelope: empty geometry")
-        parts
-      } else if (isMultiPointText(t)) {
-        // MULTIPOINT (r15): the point set's bbox
-        val c = parseMultiPoint(t)
-        require(c.nonEmpty, "st_envelope: empty geometry")
-        Seq(c)
-      } else if (isCollectionText(t)) {
-        // GEOMETRYCOLLECTION (r15): the envelope spans the members'
-        // envelopes (EMPTY members span nothing; all-EMPTY is loud)
-        val members = parseCollection(t)
-          .filterNot(m => isEmptyGeom(UTF8String.fromString(m)))
-        require(members.nonEmpty, "st_envelope: empty geometry")
-        val vals = members.map(m =>
-          envBound(UTF8String.fromString(m), which))
-        return if (which <= 1) vals.min else vals.max
-      } else Seq(parsePoint(t))
-    var xmin = rings.head(0)
-    var ymin = rings.head(1)
-    var xmax = xmin
-    var ymax = ymin
-    rings.foreach { c =>
-      var i = 0
-      while (2 * i < c.length) {
-        val x = c(2 * i)
-        val y = c(2 * i + 1)
-        if (x < xmin) xmin = x
-        if (x > xmax) xmax = x
-        if (y < ymin) ymin = y
-        if (y > ymax) ymax = y
-        i += 1
-      }
-    }
-    which match {
-      case 0 => xmin
-      case 1 => ymin
-      case 2 => xmax
-      case _ => ymax
+  /** Codegen entry: envelope bound of any geometry — which: 0 xmin,
+    * 1 ymin, 2 xmax, 3 ymax. Min/max over vertices: order-independent
+    * and exact in IEEE, so no accumulation-order contract is needed.
+    * EMPTY has no envelope — loud, every kind alike. */
+  def envBound(g: UTF8String, which: Int): Double = bound(read(g), which)
+
+  private def bound(g: Geom, which: Int): Double = {
+    require(!isEmpty(g), "st_envelope: empty geometry")
+    g match {
+      // GEOMETRYCOLLECTION (r15): the envelope spans the members'
+      // envelopes (EMPTY members span nothing)
+      case Collection(ms) =>
+        val vals = ms.filterNot(isEmpty).map(bound(_, which))
+        if (which <= 1) vals.min else vals.max
+      case _ =>
+        // the envelope of a holed polygon is its SHELL's bbox (interior
+        // rings cannot extend it); a MULTIPOLYGON's spans all shells
+        val rings: Array[Array[Double]] = g match {
+          case Polys(ps, _) => ps.map(_._1)
+          case other => Array(vertices(other))
+        }
+        var xmin = rings(0)(0)
+        var ymin = rings(0)(1)
+        var xmax = xmin
+        var ymax = ymin
+        rings.foreach { c =>
+          var i = 0
+          while (2 * i < c.length) {
+            val x = c(2 * i)
+            val y = c(2 * i + 1)
+            if (x < xmin) xmin = x
+            if (x > xmax) xmax = x
+            if (y < ymin) ymin = y
+            if (y > ymax) ymax = y
+            i += 1
+          }
+        }
+        which match {
+          case 0 => xmin
+          case 1 => ymin
+          case 2 => xmax
+          case _ => ymax
+        }
     }
   }
 
@@ -2414,76 +1790,27 @@ object WktCore {
     * convention) — so the mixed line×line intersection outputs are
     * measurable too; areal operands stay loud (Trino's ST_Length is
     * not a perimeter). */
-  def length(line: UTF8String): Double = {
-    val t = line.toString.trim
-    if (isGeographyText(t)) return geographyLength(t) // meters (r13)
-    if (t.equalsIgnoreCase("LINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTILINESTRING EMPTY")) return 0.0
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) {
-      parsePoint(t); return 0.0
-    }
-    if (isMultiPointText(t)) {
-      if (!t.equalsIgnoreCase("MULTIPOINT EMPTY")) parseMultiPoint(t)
-      return 0.0
-    }
-    if (isCollectionText(t))
-      return parseCollection(t)
-        .map(c => length(UTF8String.fromString(c))).sum
-    val parts: Seq[Array[Double]] =
-      if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-        parseMultiLineString(t)
-      else Seq(parseLineString(t))
-    var s = 0.0
-    parts.foreach { c =>
-      val n = c.length / 2
-      var i = 1
-      while (i < n) {
-        val dx = c(2 * i) - c(2 * (i - 1))
-        val dy = c(2 * i + 1) - c(2 * i - 1)
-        s += math.sqrt(dx * dx + dy * dy)
-        i += 1
-      }
-    }
-    s
-  }
+  def length(line: UTF8String): Double =
+    if (isGeography(line)) geographyLength(geography(line)) // meters (r13)
+    else lengthOf(read(line))
 
-  /** Parse `MULTILINESTRING ((x y, …), (x y, …))` → parts in order. */
-  private[functions] def parseMultiLineString(s: String): Seq[Array[Double]] = {
-    val t = s.trim
-    require(t.regionMatches(true, 0, "MULTILINESTRING", 0, 15),
-      s"not a MULTILINESTRING: $t")
-    val out = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
-    var depth = 0
-    var start = -1
-    var i = 15
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == '(') {
-        depth += 1
-        if (depth == 2) start = i + 1
-      } else if (c == ')') {
-        if (depth == 2)
-          out += parseLineString("LINESTRING (" + t.substring(start, i) + ")")
-        depth -= 1
-        require(depth >= 0, s"unbalanced parens in MULTILINESTRING: $t")
+  private def lengthOf(g: Geom): Double = g match {
+    case _: Point | _: MultiPoint => 0.0
+    case Collection(ms) => ms.map(lengthOf).sum
+    case Lines(ps, _) =>
+      var s = 0.0
+      ps.foreach { c =>
+        val n = c.length / 2
+        var i = 1
+        while (i < n) {
+          val dx = c(2 * i) - c(2 * (i - 1))
+          val dy = c(2 * i + 1) - c(2 * i - 1)
+          s += math.sqrt(dx * dx + dy * dy)
+          i += 1
+        }
       }
-      i += 1
-    }
-    require(depth == 0 && out.nonEmpty, s"bad MULTILINESTRING syntax: $t")
-    out.toSeq
-  }
-
-  /** Uniform line-kind accessor (r14 MULTILINESTRING completion): the
-    * parts of a LINESTRING (one) or MULTILINESTRING (several) as flat
-    * coordinate chains; the EMPTY spellings yield zero parts. */
-  private[functions] def lineParts(s: String): Array[Array[Double]] = {
-    val t = s.trim
-    if (t.equalsIgnoreCase("LINESTRING EMPTY") ||
-        t.equalsIgnoreCase("MULTILINESTRING EMPTY"))
-      Array.empty[Array[Double]]
-    else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-      parseMultiLineString(t).toArray
-    else Array(parseLineString(t))
+      s
+    case other => notA("st_length", "line, point set or collection", other)
   }
 
   /** OGC mod-2 boundary of a line geometry: the endpoints that occur in
@@ -2556,27 +1883,6 @@ object WktCore {
 
   private[functions] def toCcw(c: Array[Double]): Array[Double] =
     if (signedArea2(c) >= 0) c else reverseRing(c)
-
-  private def requireConvex(c: Array[Double], op: String): Unit = {
-    // all-collinear rings have zero signed area and would otherwise slip
-    // through the cr >= 0 turn test below — reject them loudly like
-    // st_convexhull does (this geometry model cannot represent the
-    // degenerate segment such input describes)
-    require(signedArea2(c) != 0,
-      s"$op: degenerate zero-area ring - all vertices collinear")
-    val n = c.length / 2
-    var i = 0
-    while (i < n) {
-      val j = if (i + 1 == n) 0 else i + 1
-      val k = if (j + 1 == n) 0 else j + 1
-      val cr = (c(2 * j) - c(2 * i)) * (c(2 * k + 1) - c(2 * j + 1)) -
-        (c(2 * j + 1) - c(2 * i + 1)) * (c(2 * k) - c(2 * j))
-      require(cr >= 0,
-        s"$op supports CONVEX polygons only; " +
-          s"got a concave ring - decompose concave inputs upstream")
-      i += 1
-    }
-  }
 
   private[functions] def isConvexRing(c: Array[Double]): Boolean = {
     if (signedArea2(c) == 0) return false
@@ -2680,30 +1986,21 @@ object WktCore {
     * (MULTI)POLYGON — rings non-degenerate and simple, interior rings
     * inside their shell and not nested, components with disjoint
     * interiors and not nested; rings may touch at isolated points, as
-    * OGC permits. EMPTY is valid. Malformed TEXT still throws (parse
-    * errors are not validity verdicts — wrap in try_eval for NULL).
-    * Returns null when valid, else the reason. */
+    * OGC permits. EMPTY is valid. Points and lines are always valid
+    * once they read (simplicity is the separate st_issimple question),
+    * and a collection is valid iff every member is (JTS/Trino).
+    * Malformed TEXT still throws (parse errors are not validity
+    * verdicts — wrap in try_eval for NULL). Returns null when valid,
+    * else the reason. */
   def invalidReason(g: UTF8String): UTF8String = {
-    // r14: OGC validity is an AREAL concept — points and lines are
-    // always valid once they parse (simplicity is the separate
-    // st_issimple question), and a collection is valid iff every
-    // member is (JTS/Trino)
-    val t = g.toString.trim
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) { parsePoint(t); return null }
-    if (isMultiPointText(t)) {
-      if (!t.equalsIgnoreCase("MULTIPOINT EMPTY")) parseMultiPoint(t)
-      return null
-    }
-    if (isLineKindWkt(g)) { lineParts(t); return null }
-    if (isCollectionText(t)) {
-      var why: UTF8String = null
-      parseCollection(t).foreach { c =>
-        if (why == null) why = invalidReason(UTF8String.fromString(c))
-      }
-      return why
-    }
-    val why = invalidReasonPolys(geomPolys(g))
+    val why = invalidity(read(g))
     if (why == null) null else UTF8String.fromString(why)
+  }
+
+  private def invalidity(g: Geom): String = g match {
+    case Polys(ps, _) => invalidReasonPolys(ps)
+    case Collection(ms) => ms.iterator.map(invalidity).find(_ != null).orNull
+    case _ => null
   }
 
   /** Same verdict over already-parsed components (shared with the
@@ -2789,12 +2086,10 @@ object WktCore {
   /** Loud input gate for the overlay tier: structurally invalid
     * operands throw with the validity reason instead of producing an
     * undefined overlay. */
-  private[functions] def requireValidGeom(
-      polys: Array[(Array[Double], Array[Array[Double]])],
-      src: UTF8String): Unit = {
+  private[functions] def requireValidGeom(polys: Array[Poly]): Unit = {
     val why = invalidReasonPolys(polys)
     if (why != null) throw new IllegalArgumentException(
-      s"invalid geometry operand ($why): $src")
+      s"invalid geometry operand ($why): ${fmtGeom(polys)}")
   }
 
   private[functions] def reverseRing(c: Array[Double]): Array[Double] = {
@@ -2835,27 +2130,32 @@ object WktCore {
     }
   }
 
-  /** POLYGON / MULTIPOLYGON / POLYGON EMPTY rendering of overlay
-    * results; every ring canonically rotated, holes and components
-    * sorted, for output independent of node discovery order.
-    * Shells render CCW and interior rings keep their CW winding (the
-    * usual WKT convention; parsers here are winding-insensitive). */
-  private[functions] def fmtGeom(polys0: Array[(Array[Double], Array[Array[Double]])])
-      : String = {
-    def polyBody(p: (Array[Double], Array[Array[Double]])): String = {
+  /** Canonical form of polygon components, for output independent of
+    * node discovery order: every ring rotated to start at its
+    * lexicographically smallest vertex, interior rings and components
+    * sorted by that vertex. */
+  private def canonPolys(ps: Array[Poly]): Array[Poly] = {
+    val c = ps.map { case (shell, holes) =>
+      (canonRing(shell), holes.map(canonRing).sortBy(h => (h(0), h(1))))
+    }
+    if (c.length > 1) c.sortBy(p => (p._1(0), p._1(1))) else c
+  }
+
+  /** POLYGON / MULTIPOLYGON / POLYGON EMPTY rendering of components in
+    * canonical form. Shells render CCW and interior rings keep their
+    * CW winding (the usual WKT convention; the reader is
+    * winding-insensitive). */
+  private[functions] def fmtGeom(ps: Array[Poly]): String = {
+    def polyBody(p: Poly): String = {
       val sb = new java.lang.StringBuilder("((")
-      sb.append(ringBody(canonRing(p._1))).append(')')
-      p._2.map(canonRing).sortBy(c => (c(0), c(1))).foreach { h =>
-        sb.append(", (").append(ringBody(h)).append(')')
-      }
+      sb.append(ringBody(p._1)).append(')')
+      p._2.foreach(h => sb.append(", (").append(ringBody(h)).append(')'))
       sb.append(')').toString
     }
-    if (polys0.isEmpty) "POLYGON EMPTY"
-    else if (polys0.length == 1) "POLYGON " + polyBody(polys0(0))
-    else {
-      val polys = polys0.sortBy(p => (canonRing(p._1)(0), canonRing(p._1)(1)))
-      polys.map(polyBody).mkString("MULTIPOLYGON (", ", ", ")")
-    }
+    val c = canonPolys(ps)
+    if (c.isEmpty) "POLYGON EMPTY"
+    else if (c.length == 1) "POLYGON " + polyBody(c(0))
+    else c.map(polyBody).mkString("MULTIPOLYGON (", ", ", ")")
   }
 
   // Double.toString switches to scientific notation outside
@@ -2893,218 +2193,9 @@ object WktCore {
     * (disjoint interiors — including edge/point tangency, whose
     * lower-dimensional contact an areal result cannot represent).
     * Point, line and collection operands take the non-areal branches
-    * of `clipDispatch`. */
+    * of `intersection`. */
   def intersectionWkt(a: UTF8String, b: UTF8String): UTF8String =
-    clipDispatch(a, b, 0, "st_intersection")
-
-  /** Dispatch shared by ∩/∪/−. Two POLYGON/MULTIPOLYGON operands take
-    * one path: `requireValidGeom` on each, then the noded
-    * planar-subdivision overlay (`WktOverlay.overlay`), rendered by
-    * `fmtGeom`. Every other kind pair is decomposed below. */
-  private def clipDispatch(a: UTF8String, b: UTF8String, op: Int,
-      name: String): UTF8String = {
-    // Non-areal operands: ∪ (r14) and − and ∩ (r15) are TOTAL over the
-    // kind matrix — collections decompose, point sets test coverage,
-    // line pairs ride the noded per-part scan.
-    val aLine = isLineKindWkt(a)
-    val bLine = isLineKindWkt(b)
-    def pointish(t: String): Boolean =
-      t.regionMatches(true, 0, "POINT", 0, 5) || isMultiPointText(t)
-    val aT = a.toString.trim
-    val bT = b.toString.trim
-    val aNonAreal = aLine || pointish(aT) || isCollectionText(aT)
-    val bNonAreal = bLine || pointish(bT) || isCollectionText(bT)
-    if (aNonAreal || bNonAreal) {
-      // r14: the model has GEOMETRYCOLLECTION now, so mixed-dimension
-      // ∪/− get real semantics instead of the r13 loud scope-out
-      if (op == 1) // union of ANY kinds: the mixed decompose-and-absorb
-        return UTF8String.fromString(finishMixed(unionMixed(aT, bT)))
-      if (op == 2) {
-        // collection MINUEND (r15 follow-up): difference distributes
-        // over the minuend's union — (m1 ∪ m2) − b = (m1−b) ∪ (m2−b),
-        // so members subtract independently and the results fold
-        // through the mixed-union absorb (a fully-consumed collection
-        // renders the fold's canonical POLYGON EMPTY). With this, all
-        // three set operations are TOTAL over the kind matrix.
-        if (isCollectionText(aT)) {
-          val parts = parseCollection(aT)
-            .map(m => differenceWkt(UTF8String.fromString(m), b).toString)
-          val folded = finishMixed(
-            parts.reduceOption(unionMixed).getOrElse("POLYGON EMPTY"))
-          return UTF8String.fromString(
-            if (isEmptyGeom(UTF8String.fromString(folded))) "POLYGON EMPTY"
-            else folded)
-        }
-        // collection SUBTRAHEND (r15, verdict missing #2): decompose
-        // over members as a SEQUENTIAL difference chain a − m1 − m2 − …
-        // (the overlay's pinch rule: never union-then-subtract); an
-        // all-EMPTY collection subtracts nothing — canonical minuend
-        if (isCollectionText(bT)) {
-          var acc = UTF8String.fromString(canonGeomText(aT))
-          parseCollection(bT).foreach { m =>
-            acc = differenceWkt(acc, UTF8String.fromString(m))
-          }
-          return acc
-        }
-        // line − line (r15, verdict missing #2): maximal chains of the
-        // minuend not collinearly covered by the subtrahend — the noded
-        // per-part scan (lineLineDifference); crossings and touches
-        // remove a measure-zero set, so purely-transversal pairs return
-        // the canonical minuend (st_intersection's line×line dual keeps
-        // exactly what this drops: covered runs + contact points)
-        if (aLine && bLine)
-          return UTF8String.fromString(fmtLines(
-            WktOverlay.lineLineDifference(lineParts(aT), lineParts(bT))))
-        // line − point(s): a measure-zero subtrahend — canonical minuend
-        if (aLine && pointish(bT))
-          return UTF8String.fromString(fmtLines(lineParts(aT)))
-        // line − areal: the complement clip (chains strictly outside)
-        if (aLine && !bNonAreal) {
-          val g = geomPolys(b)
-          requireValidGeom(g, b)
-          return UTF8String.fromString(fmtLines(
-            lineParts(aT).flatMap(c => WktOverlay.lineClipOut(c, g))))
-        }
-        // areal − (line|point): subtracting a measure-zero set leaves
-        // the REGION unchanged — canonical re-render
-        if (!aNonAreal && (bLine || pointish(bT)))
-          return UTF8String.fromString(fmtGeom(geomPolys(a)))
-        // point(s) − (areal|line|point(s)): drop covered members; an
-        // emptied point set renders MULTIPOINT EMPTY (this model's
-        // empty-point spelling — documented where Trino would say POINT
-        // EMPTY). Point subtrahends (r15) cover by coordinate equality.
-        if (pointish(aT) && (!bNonAreal || bLine || pointish(bT))) {
-          val pts =
-            if (isMultiPointText(aT)) parseMultiPoint(aT)
-            else parsePoint(aT)
-          val bPts =
-            if (!pointish(bT)) Array.empty[Double]
-            else if (isMultiPointText(bT)) parseMultiPoint(bT)
-            else parsePoint(bT)
-          val keep = new scala.collection.mutable.ArrayBuffer[Double]()
-          var i = 0
-          while (2 * i < pts.length) {
-            val x = pts(2 * i); val y = pts(2 * i + 1)
-            val covered =
-              if (pointish(bT)) {
-                var j = 0; var hit = false
-                while (2 * j < bPts.length && !hit) {
-                  hit = bPts(2 * j) == x && bPts(2 * j + 1) == y
-                  j += 1
-                }
-                hit
-              } else if (bLine) lineParts(bT).exists(c =>
-                WktOverlay.pointOnLine(c, x, y))
-              else {
-                val g = geomPolys(b)
-                containsPolys(g, x, y) ||
-                  WktOverlay.pointOnBoundary(g, x, y)
-              }
-            if (!covered) { keep += x; keep += y }
-            i += 1
-          }
-          return UTF8String.fromString(
-            if (keep.isEmpty) "MULTIPOINT EMPTY"
-            else if (keep.length == 2) pointStr(keep(0), keep(1)).toString
-            else fmtMultiPoint(keep.toArray))
-        }
-        // every kind pair is dispatched above (the matrix is total)
-        throw new IllegalStateException(
-          s"$name: unreachable difference shape '$aT' − '$bT'")
-      }
-      // op == 0: INTERSECTION — TOTAL over the kind matrix as of r15.
-      // GEOMETRYCOLLECTION operands decompose over members (∩
-      // distributes over ∪) and member results fold through the mixed
-      // union absorb; emptied non-areal intersections render MULTIPOINT
-      // EMPTY (the point-set empty — intersections only REMOVE, so the
-      // natural empty is the lowest-dimensional spelling).
-      def emptyNorm(t: String): String =
-        if (isEmptyGeom(UTF8String.fromString(t))) "MULTIPOINT EMPTY" else t
-      if (isCollectionText(aT)) {
-        val parts = parseCollection(aT)
-          .map(m => intersectionWkt(UTF8String.fromString(m), b).toString)
-        return UTF8String.fromString(emptyNorm(finishMixed(
-          parts.reduceOption(unionMixed).getOrElse("MULTIPOINT EMPTY"))))
-      }
-      if (isCollectionText(bT)) {
-        val parts = parseCollection(bT)
-          .map(m => intersectionWkt(a, UTF8String.fromString(m)).toString)
-        return UTF8String.fromString(emptyNorm(finishMixed(
-          parts.reduceOption(unionMixed).getOrElse("MULTIPOINT EMPTY"))))
-      }
-      // point(s) ∩ x — the covered members survive (the exact dual of
-      // the point-minuend difference: same covered tests)
-      if (pointish(aT) || pointish(bT)) {
-        val (ptsT, otherT) = if (pointish(aT)) (aT, bT) else (bT, aT)
-        val pts =
-          if (isMultiPointText(ptsT)) parseMultiPoint(ptsT)
-          else parsePoint(ptsT)
-        val otherPts =
-          if (!pointish(otherT)) Array.empty[Double]
-          else if (isMultiPointText(otherT)) parseMultiPoint(otherT)
-          else parsePoint(otherT)
-        val keep = new scala.collection.mutable.ArrayBuffer[Double]()
-        var i = 0
-        while (2 * i < pts.length) {
-          val x = pts(2 * i); val y = pts(2 * i + 1)
-          val covered =
-            if (pointish(otherT)) {
-              var j = 0; var hit = false
-              while (2 * j < otherPts.length && !hit) {
-                hit = otherPts(2 * j) == x && otherPts(2 * j + 1) == y
-                j += 1
-              }
-              hit
-            } else if (isLineKindWkt(UTF8String.fromString(otherT)))
-              lineParts(otherT).exists(c => WktOverlay.pointOnLine(c, x, y))
-            else {
-              val g = geomPolys(UTF8String.fromString(otherT))
-              containsPolys(g, x, y) ||
-                WktOverlay.pointOnBoundary(g, x, y)
-            }
-          if (covered) { keep += x; keep += y }
-          i += 1
-        }
-        // dedupe (a MULTIPOINT with repeats keeps one copy) + sort —
-        // the mixed-union point convention
-        val distinct = keep.grouped(2).map(p => (p(0), p(1))).toArray
-          .distinct.sorted
-        return UTF8String.fromString(
-          if (distinct.isEmpty) "MULTIPOINT EMPTY"
-          else if (distinct.length == 1)
-            pointStr(distinct(0)._1, distinct(0)._2).toString
-          else fmtMultiPoint(distinct.flatMap(p => Array(p._1, p._2))))
-      }
-      // line × line (r15): collinear covered runs as chains + isolated
-      // contacts (crossings, touches, vertex coincidences) as points —
-      // the dual of lineLineDifference under the same noding
-      if (aLine && bLine) {
-        val (chains, pts) =
-          WktOverlay.lineLineIntersection(lineParts(aT), lineParts(bT))
-        val members = new scala.collection.mutable.ArrayBuffer[String]()
-        if (chains.nonEmpty) members += fmtLines(chains)
-        if (pts.nonEmpty) members +=
-          (if (pts.length == 2) pointStr(pts(0), pts(1)).toString
-           else fmtMultiPoint(pts))
-        return UTF8String.fromString(
-          if (members.isEmpty) "MULTIPOINT EMPTY"
-          else if (members.length == 1) members(0)
-          else members.mkString("GEOMETRYCOLLECTION (", ", ", ")"))
-      }
-      val (line, poly) = if (aLine) (a, b) else (b, a)
-      val g = geomPolys(poly)
-      requireValidGeom(g, poly)
-      // MULTILINESTRING inputs clip part-by-part in document order (r14)
-      val chains = lineParts(line.toString)
-        .flatMap(c => WktOverlay.lineClip(c, g))
-      return UTF8String.fromString(fmtLines(chains))
-    }
-    val pa = geomPolys(a)
-    val pb = geomPolys(b)
-    requireValidGeom(pa, a)
-    requireValidGeom(pb, b)
-    UTF8String.fromString(fmtGeom(WktOverlay.overlay(pa, pb, op, name)))
-  }
+    text(intersection(read(a), read(b)))
 
   /** Codegen entry: st_union(aWkt, bWkt). Two areal operands go
     * through the polygon overlay: a containing operand absorbs the
@@ -3113,16 +2204,16 @@ object WktCore {
     * polygon. Any other kind pair takes the mixed decompose-and-absorb
     * union (a GEOMETRYCOLLECTION when dimensions differ). */
   def unionWkt(a: UTF8String, b: UTF8String): UTF8String =
-    clipDispatch(a, b, 1, "st_union")
+    text(union(read(a), read(b)))
 
   /** Codegen entry: st_difference(aWkt, bWkt) — A minus B. Two areal
     * operands go through the polygon overlay: "POLYGON EMPTY" when
     * A ⊆ B; B strictly inside A yields A with B carved out as an
     * INTERIOR ring (`POLYGON ((shell), (hole))`). Structurally invalid
     * operands throw with their validity reason. Non-areal kind pairs
-    * take the branches of `clipDispatch`. */
+    * take the branches of `difference`. */
   def differenceWkt(a: UTF8String, b: UTF8String): UTF8String =
-    clipDispatch(a, b, 2, "st_difference")
+    text(difference(read(a), read(b)))
 
   /** Codegen entry: st_symdifference(aWkt, bWkt) — (a − b) ∪ (b − a),
     * the fourth set operation (r16, the r15 verdict missing #1). Total
@@ -3143,8 +2234,148 @@ object WktCore {
     * union's canonical rendering of (a − b) first, so textual output
     * is NOT symmetric in general — st_equals(sym(a,b), sym(b,a)) is
     * the symmetry invariant (WktSpec/WktFuzzSpec pin it). */
-  def symDifferenceWkt(a: UTF8String, b: UTF8String): UTF8String =
-    unionWkt(differenceWkt(a, b), differenceWkt(b, a))
+  def symDifferenceWkt(a: UTF8String, b: UTF8String): UTF8String = {
+    val ga = read(a)
+    val gb = read(b)
+    text(union(difference(ga, gb), difference(gb, ga)))
+  }
+
+  /** Two POLYGON/MULTIPOLYGON operands take one path: `requireValidGeom`
+    * on each, then the noded planar-subdivision overlay
+    * (`WktOverlay.overlay`), in canonical form. */
+  private def overlayOp(pa: Array[Poly], pb: Array[Poly], op: Int,
+      name: String): Polys = {
+    requireValidGeom(pa)
+    requireValidGeom(pb)
+    areal(WktOverlay.overlay(pa, pb, op, name))
+  }
+
+  /** Whether (x, y) lies on `g` — the coverage test of the point-set
+    * intersection and difference. */
+  private def covers(g: Geom, x: Double, y: Double): Boolean = g match {
+    case Point(u, v) => u == x && v == y
+    case MultiPoint(c) =>
+      var j = 0; var hit = false
+      while (2 * j < c.length && !hit) {
+        hit = c(2 * j) == x && c(2 * j + 1) == y
+        j += 1
+      }
+      hit
+    case Lines(ps, _) => ps.exists(WktOverlay.pointOnLine(_, x, y))
+    case Polys(ps, _) =>
+      containsPolys(ps, x, y) || WktOverlay.pointOnBoundary(ps, x, y)
+    case Collection(ms) => ms.exists(covers(_, x, y))
+  }
+
+  // Non-areal operands: ∪ (r14) and − and ∩ (r15) are TOTAL over the
+  // kind matrix — collections decompose, point sets test coverage, line
+  // pairs ride the noded per-part scan.
+
+  private def union(a: Geom, b: Geom): Geom = (a, b) match {
+    case (Polys(pa, _), Polys(pb, _)) => overlayOp(pa, pb, 1, "st_union")
+    // the model has GEOMETRYCOLLECTION (r14), so a mixed-dimension ∪
+    // gets real semantics: the mixed decompose-and-absorb
+    case _ => finishMixed(unionMixed(a, b))
+  }
+
+  private def difference(a: Geom, b: Geom): Geom = (a, b) match {
+    case (Polys(pa, _), Polys(pb, _)) => overlayOp(pa, pb, 2, "st_difference")
+    // collection MINUEND (r15 follow-up): difference distributes over
+    // the minuend's union — (m1 ∪ m2) − b = (m1−b) ∪ (m2−b), so members
+    // subtract independently and the results fold through the
+    // mixed-union absorb (a fully-consumed collection renders the
+    // fold's canonical POLYGON EMPTY)
+    case (Collection(ms), _) =>
+      val folded = finishMixed(
+        ms.map(difference(_, b)).reduceOption(unionMixed).getOrElse(NoArea))
+      if (isEmpty(folded)) NoArea else folded
+    // collection SUBTRAHEND (r15, verdict missing #2): a SEQUENTIAL
+    // difference chain a − m1 − m2 − … (the overlay's pinch rule: never
+    // union-then-subtract); an all-EMPTY collection subtracts nothing
+    case (_, Collection(ms)) => ms.foldLeft(a)(difference)
+    // line − line (r15, verdict missing #2): maximal chains of the
+    // minuend not collinearly covered by the subtrahend — the noded
+    // per-part scan (lineLineDifference); crossings and touches remove
+    // a measure-zero set, so purely-transversal pairs return the
+    // canonical minuend (st_intersection's line×line dual keeps
+    // exactly what this drops: covered runs + contact points)
+    case (Lines(pa, _), Lines(pb, _)) =>
+      lines(WktOverlay.lineLineDifference(pa, pb))
+    // line − areal: the complement clip (chains strictly outside)
+    case (Lines(pa, _), Polys(g, _)) =>
+      requireValidGeom(g)
+      lines(pa.flatMap(WktOverlay.lineClipOut(_, g)))
+    // line − point(s): a measure-zero subtrahend — canonical minuend
+    case (Lines(pa, _), _) => lines(pa)
+    // areal − (line|point): subtracting a measure-zero set leaves the
+    // REGION unchanged — canonical re-render
+    case (Polys(pa, _), _) => areal(pa)
+    // point(s) − (areal|line|point(s)): drop covered members, in
+    // document order; an emptied point set renders MULTIPOINT EMPTY
+    // (this model's empty-point spelling — documented where Trino
+    // would say POINT EMPTY)
+    case _ => pointSet(keepPoints(vertices(a), !covers(b, _, _)))
+  }
+
+  private def keepPoints(c: Array[Double],
+      keep: (Double, Double) => Boolean): Array[Double] = {
+    val out = new ArrayBuffer[Double]()
+    var i = 0
+    while (2 * i < c.length) {
+      val x = c(2 * i); val y = c(2 * i + 1)
+      if (keep(x, y)) { out += x; out += y }
+      i += 1
+    }
+    out.toArray
+  }
+
+  // INTERSECTION — TOTAL over the kind matrix as of r15. Emptied
+  // non-areal intersections render MULTIPOINT EMPTY (the point-set
+  // empty — intersections only REMOVE, so the natural empty is the
+  // lowest-dimensional spelling).
+  private def intersection(a: Geom, b: Geom): Geom = {
+    // GEOMETRYCOLLECTION operands decompose over members (∩ distributes
+    // over ∪) and member results fold through the mixed union absorb
+    def fold(parts: Array[Geom]): Geom = {
+      val f = finishMixed(parts.reduceOption(unionMixed).getOrElse(NoPoints))
+      if (isEmpty(f)) NoPoints else f
+    }
+    (a, b) match {
+      case (Polys(pa, _), Polys(pb, _)) => overlayOp(pa, pb, 0, "st_intersection")
+      case (Collection(ms), _) => fold(ms.map(intersection(_, b)))
+      case (_, Collection(ms)) => fold(ms.map(intersection(a, _)))
+      // point(s) ∩ x — the covered members survive (the exact dual of
+      // the point-minuend difference: same covered tests), deduped and
+      // sorted — the mixed-union point convention
+      case (_: Point | _: MultiPoint, _) | (_, _: Point | _: MultiPoint) =>
+        val (pts, other) = a match {
+          case _: Point | _: MultiPoint => (a, b)
+          case _ => (b, a)
+        }
+        val kept = keepPoints(vertices(pts), covers(other, _, _))
+        pointSet(kept.grouped(2).map(p => (p(0), p(1))).toArray.distinct.sorted
+          .flatMap(p => Array(p._1, p._2)))
+      // line × line (r15): collinear covered runs as chains + isolated
+      // contacts (crossings, touches, vertex coincidences) as points —
+      // the dual of lineLineDifference under the same noding
+      case (Lines(pa, _), Lines(pb, _)) =>
+        val (chains, pts) = WktOverlay.lineLineIntersection(pa, pb)
+        val members = new ArrayBuffer[Geom]()
+        if (chains.nonEmpty) members += lines(chains)
+        if (pts.nonEmpty) members += pointSet(pts)
+        if (members.isEmpty) NoPoints
+        else if (members.length == 1) members(0)
+        else Collection(members.toArray)
+      // MULTILINESTRING inputs clip part-by-part in document order (r14)
+      case (Lines(ps, _), Polys(g, _)) => clipLines(ps, g)
+      case (Polys(g, _), Lines(ps, _)) => clipLines(ps, g)
+    }
+  }
+
+  private def clipLines(parts: Array[Array[Double]], g: Array[Poly]): Geom = {
+    requireValidGeom(g)
+    lines(parts.flatMap(WktOverlay.lineClip(_, g)))
+  }
 
   /** Codegen entry: st_buffer(polyWkt, d) — MITER-join outward offset of
     * a convex ring by d ≥ 0: each edge shifts along its outward normal,
@@ -3219,6 +2450,88 @@ object WktCore {
     * DOCUMENTED approximation; area = 16·d²·sin(π/16) in closed form.
     * d = 0 returns the input unchanged; negative d on a POINT is the
     * empty region. */
+  def bufferWkt(g: UTF8String, d: Double, style: Int): UTF8String =
+    read(g) match {
+      // a line at distance 0 comes back as given
+      case _: Lines if d == 0 => g
+      case v => UTF8String.fromString(buffer(v, d, style))
+    }
+
+  /** Union of buffer outputs in order; a single output stays as it is. */
+  private def unionFold(parts: Array[String]): String =
+    parts.reduceLeft((acc, p) => render(union(Geom.parse(acc), Geom.parse(p))))
+
+  private def ringPiece(c: Array[Double]): Geom =
+    Polys(Array((c, Array.empty[Array[Double]])), multi = false)
+
+  private def buffer(g: Geom, d: Double, style: Int): String = g match {
+    case Point(x, y) =>
+      if (d == 0) pointText(x, y)
+      else if (d < 0) "POLYGON EMPTY"
+      else {
+        val n = 4 * QuadSegs
+        val out = new Array[Double](2 * n)
+        var k = 0
+        while (k < n) {
+          val th = 2.0 * math.Pi * k / n
+          out(2 * k) = x + d * math.cos(th)
+          out(2 * k + 1) = y + d * math.sin(th)
+          k += 1
+        }
+        fmtRing(out)
+      }
+    // MULTIPOINT / GEOMETRYCOLLECTION buffers (r15, verdict missing
+    // #4): per-member buffer folded through the union dispatch —
+    // disjoint member buffers render as MULTIPOLYGON; members whose
+    // buffers merely TOUCH at a point hit the overlay's loud pinch
+    // rule (documented). d = 0 returns the canonical input; EMPTY
+    // inputs (and EMPTY members) buffer to nothing, an all-EMPTY input
+    // to POLYGON EMPTY; negative d over a point set erodes a
+    // measure-zero set to EMPTY. Negative d over a COLLECTION: see
+    // erodeMembers.
+    case MultiPoint(c) =>
+      if (c.isEmpty) "POLYGON EMPTY"
+      else if (d == 0) render(g)
+      else if (d < 0) "POLYGON EMPTY"
+      else unionFold(pointsIn(c).map(buffer(_, d, style)))
+    case Collection(ms) =>
+      val members = ms.filterNot(isEmpty)
+      if (ms.isEmpty) "POLYGON EMPTY"
+      else if (d == 0) render(g)
+      else if (members.isEmpty) "POLYGON EMPTY"
+      else if (d < 0) erodeMembers(members, d, style, "GEOMETRYCOLLECTION")
+      else unionFold(members.map(buffer(_, d, style)))
+    // MULTIPOLYGON buffers (r16): dilation distributes over union
+    // EXACTLY ((A ∪ B) ⊕ d = (A ⊕ d) ∪ (B ⊕ d) is the Minkowski
+    // identity) — per-component dilation folded through the overlay
+    // union (canonical components touch at most at points, so their
+    // dilations overlap with positive area and merge cleanly);
+    // erosion (r17): separated components erode independently,
+    // contacting ones union-then-erode — see erodeMembers; only
+    // union-pinched folds stay loud.
+    case Polys(ps, true) =>
+      val comps = ps.map[Geom](p => areal(Array(p)))
+      if (ps.isEmpty) "POLYGON EMPTY"
+      else if (d == 0) render(g)
+      else if (d < 0) erodeMembers(comps, d, style, "MULTIPOLYGON")
+      else unionFold(comps.map(buffer(_, d, style)))
+    case Lines(parts, _) =>
+      if (d == 0) render(g)
+      else if (d < 0) "POLYGON EMPTY"
+      else {
+        require(parts.nonEmpty, "st_buffer: empty line geometry")
+        render(minimal(polysOf(capsule(parts, d, style), "st_buffer")))
+      }
+    case Polys(ps, false) =>
+      if (ps.isEmpty) "POLYGON EMPTY"
+      else {
+        require(ps(0)._2.isEmpty,
+          "interior rings (holes) unsupported by this operation - " +
+            "only st_area / st_contains accept holed polygons")
+        bufferRing(toCcw(ps(0)._1), g, d, style)
+      }
+  }
+
   /** Shared erosion kernel for MULTIPOLYGON components and
     * GEOMETRYCOLLECTION members. r16 required the areal members to be
     * pairwise non-intersecting (erosion distributes exactly across a
@@ -3239,276 +2552,134 @@ object WktCore {
     * refusal. Point/line members erode to measure zero and vanish; a
     * member whose erosion consumes it renders POLYGON EMPTY and drops
     * from the fold; all-vanished renders POLYGON EMPTY. */
-  private def erodeSeparatedMembers(members: Seq[String], d: Double,
-      style: Int, kind: String): UTF8String = {
-    def dimOf(m: String): Int = {
-      val t = m.trim
-      if (t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12) ||
-          t.regionMatches(true, 0, "POLYGON", 0, 7)) 2
-      else if (isLineKindWkt(UTF8String.fromString(t))) 1
-      else if (t.regionMatches(true, 0, "POINT", 0, 5) ||
-          isMultiPointText(t)) 0
-      else throw new IllegalArgumentException(
-        s"st_buffer: negative distance cannot erode a $kind member " +
-          s"of kind '${t.takeWhile(_ != ' ')}'")
-    }
+  private def erodeMembers(members: Array[Geom], d: Double, style: Int,
+      kind: String): String = {
     // flatten MULTIPOLYGON members (a collection member can itself be
     // multi) so contact detection sees elementary polygons
-    val polys = members.filter(dimOf(_) == 2).flatMap { m =>
-      val t = m.trim
-      if (t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-        geomPolys(UTF8String.fromString(t)).map(p => fmtGeom(Array(p)))
-      else Seq(t)
+    val polys = members.flatMap {
+      case Polys(ps, true) => ps.map[Geom](p => areal(Array(p)))
+      case m: Polys => Array[Geom](m)
+      case _: Lines | _: Point | _: MultiPoint => Array.empty[Geom]
+      case m => throw new IllegalArgumentException(
+        s"st_buffer: negative distance cannot erode a $kind member " +
+          s"of kind '${kindName(m)}'")
     }
     var anyContact = false
     var i = 0
     while (i < polys.length && !anyContact) {
       var j = i + 1
       while (j < polys.length && !anyContact) {
-        if (intersectsWkt(UTF8String.fromString(polys(i)),
-            UTF8String.fromString(polys(j)))) anyContact = true
+        if (geomIntersects(polys(i), polys(j))) anyContact = true
         j += 1
       }
       i += 1
     }
-    val units: Seq[String] =
+    val units =
       if (!anyContact) polys
-      else {
-        var acc: UTF8String = null
-        polys.foreach { m =>
-          val u = UTF8String.fromString(m)
-          acc = if (acc == null) u else unionWkt(acc, u)
-        }
-        val merged = acc.toString.trim
-        if (merged.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-          geomPolys(acc).map(p => fmtGeom(Array(p))).toSeq
-        else if (merged.regionMatches(true, 0, "POLYGON", 0, 7))
-          Seq(merged)
-        else throw new IllegalArgumentException(
-          s"st_buffer: union of $kind areal members rendered " +
-            s"non-areal '${merged.takeWhile(_ != ' ')}'")
-      }
-    var acc: UTF8String = null
-    units.foreach { m =>
-      val e = bufferWkt(UTF8String.fromString(m), d, style)
-      if (e.toString != "POLYGON EMPTY")
-        acc = if (acc == null) e else unionWkt(acc, e)
-    }
-    if (acc == null) UTF8String.fromString("POLYGON EMPTY") else acc
+      else polysOf(polys.reduceLeft(union), "st_buffer")
+        .map[Geom](p => areal(Array(p)))
+    val eroded = units.map(buffer(_, d, style))
+      .filterNot(e => isEmpty(Geom.parse(e)))
+    if (eroded.isEmpty) "POLYGON EMPTY" else unionFold(eroded)
   }
 
-  def bufferWkt(g: UTF8String, d: Double, style: Int): UTF8String = {
-    val t0 = g.toString.trim
-    if (t0.regionMatches(true, 0, "POINT", 0, 5)) {
-      val p = parsePoint(t0)
-      if (d == 0) return pointStr(p(0), p(1))
-      if (d < 0) return UTF8String.fromString("POLYGON EMPTY")
-      val n = 4 * QuadSegs
-      val out = new Array[Double](2 * n)
-      var k = 0
-      while (k < n) {
-        val th = 2.0 * math.Pi * k / n
-        out(2 * k) = p(0) + d * math.cos(th)
-        out(2 * k + 1) = p(1) + d * math.sin(th)
-        k += 1
-      }
-      return UTF8String.fromString(fmtRing(out))
-    }
-    // MULTIPOINT / GEOMETRYCOLLECTION buffers (r15, verdict missing
-    // #4): per-member buffer folded through the union dispatch —
-    // disjoint member buffers render as MULTIPOLYGON; members whose
-    // buffers merely TOUCH at a point hit the overlay's loud pinch
-    // rule (documented). d = 0 returns the canonical input; EMPTY
-    // inputs (and EMPTY members) buffer to nothing, an all-EMPTY input
-    // to POLYGON EMPTY; negative d over a point set erodes a
-    // measure-zero set to EMPTY. Negative d over a COLLECTION (r16):
-    // distributes per member iff the areal members are pairwise
-    // STRICTLY separated (erodeSeparatedMembers) — buffer(A ∪ B, −d)
-    // = buffer(A, −d) ∪ buffer(B, −d) holds exactly then, because a
-    // connected d-disk cannot span a positive gap; touching or
-    // overlapping members stay LOUD, and this model refuses to guess.
-    if (isMultiPointText(t0)) {
-      if (t0.equalsIgnoreCase("MULTIPOINT EMPTY"))
-        return UTF8String.fromString("POLYGON EMPTY")
-      if (d == 0) return UTF8String.fromString(canonGeomText(t0))
-      if (d < 0) return UTF8String.fromString("POLYGON EMPTY")
-      val c = parseMultiPoint(t0)
-      var acc: UTF8String = null
+  /** (MULTI)LINESTRING buffer (r14): the CAPSULE/corridor — per-segment
+    * rectangles of width 2d, a join fan on the OUTER side of every
+    * interior vertex (the side where the normals diverge; the inner
+    * side is covered by the rectangles' own overlap), and a half-disk
+    * cap (θ = π → 16 chords) at each open-part terminal; closed parts
+    * treat the seam vertex as an interior joint. Pieces fold through
+    * the overlay union segment-by-segment (each cap/fan shares an
+    * edge with its rectangle; consecutive rectangles overlap with
+    * positive area at the joint — never point-pinched). Parts of a
+    * MULTILINESTRING buffer independently and union (disjoint parts →
+    * MULTIPOLYGON). Both styles share the shape: miter replaces the
+    * outer fan with the kite, caps stay round (GEOS's flat/square caps
+    * are a different cap_style, not a join style). */
+  private def capsule(parts: Array[Array[Double]], d: Double,
+      style: Int): Geom = {
+    var acc: Geom = null
+    parts.foreach { c =>
+      require(isSimpleChain(c),
+        "st_buffer: self-intersecting LINESTRING part - simplify first")
+      val m = c.length / 2
+      val closed = c(0) == c(2 * m - 2) && c(1) == c(2 * m - 1)
+      val segs = m - 1
+      val nx = new Array[Double](segs); val ny = new Array[Double](segs)
       var i = 0
-      while (2 * i < c.length) {
-        val disk = bufferWkt(pointStr(c(2 * i), c(2 * i + 1)), d, style)
-        acc = if (acc == null) disk else unionWkt(acc, disk)
+      while (i < segs) {
+        val ex = c(2 * i + 2) - c(2 * i)
+        val ey = c(2 * i + 3) - c(2 * i + 1)
+        val len = math.sqrt(ex * ex + ey * ey)
+        require(len > 0, "st_buffer: zero-length segment")
+        nx(i) = ey / len
+        ny(i) = -ex / len
         i += 1
       }
-      return acc
-    }
-    if (isCollectionText(t0)) {
-      if (t0.equalsIgnoreCase("GEOMETRYCOLLECTION EMPTY"))
-        return UTF8String.fromString("POLYGON EMPTY")
-      if (d == 0) return UTF8String.fromString(canonGeomText(t0))
-      val members = parseCollection(t0)
-        .filterNot(m => isEmptyGeom(UTF8String.fromString(m)))
-      if (members.isEmpty) return UTF8String.fromString("POLYGON EMPTY")
-      if (d < 0) {
-        // EROSION over a collection (r16 separated members; r17
-        // TOTAL over contacting members too): separated members erode
-        // independently (a connected d-disk cannot span a positive
-        // gap); contacting areal members union-fold FIRST and the
-        // merged components erode — the definition itself, since
-        // erosion acts on the region (erode-then-union would be
-        // wrong: a disk straddling a shared boundary makes
-        // buffer(A ∪ B, −d) ⊋ ∪ buffer(·, −d)). Loudness now
-        // coincides with the overlay union's own pinch contract.
-        // Lower-dimension members erode to a measure-zero set and
-        // vanish, exactly like their standalone negative buffers;
-        // members whose erosion consumes them render POLYGON EMPTY
-        // and drop out of the fold (the vanished-member edge);
-        // all-vanished renders POLYGON EMPTY.
-        return erodeSeparatedMembers(members.toSeq, d, style,
-          "GEOMETRYCOLLECTION")
+      val pieces = new ArrayBuffer[Geom]()
+      i = 0
+      while (i < segs) {
+        pieces += ringPiece(Array(
+          c(2 * i) + nx(i) * d, c(2 * i + 1) + ny(i) * d,
+          c(2 * i + 2) + nx(i) * d, c(2 * i + 3) + ny(i) * d,
+          c(2 * i + 2) - nx(i) * d, c(2 * i + 3) - ny(i) * d,
+          c(2 * i) - nx(i) * d, c(2 * i + 1) - ny(i) * d))
+        i += 1
       }
-      var acc: UTF8String = null
-      members.foreach { m =>
-        val bm = bufferWkt(UTF8String.fromString(m), d, style)
-        acc = if (acc == null) bm else unionWkt(acc, bm)
-      }
-      return acc
-    }
-    if (t0.regionMatches(true, 0, "MULTIPOLYGON", 0, 12)) {
-      // MULTIPOLYGON buffers (r16): dilation distributes over union
-      // EXACTLY ((A ∪ B) ⊕ d = (A ⊕ d) ∪ (B ⊕ d) is the Minkowski
-      // identity) — per-component dilation folded through the overlay
-      // union (canonical components touch at most at points, so their
-      // dilations overlap with positive area and merge cleanly);
-      // erosion (r17): separated components erode independently,
-      // contacting ones union-then-erode — see
-      // erodeSeparatedMembers; only union-pinched folds stay loud.
-      if (t0.equalsIgnoreCase("MULTIPOLYGON EMPTY"))
-        return UTF8String.fromString("POLYGON EMPTY")
-      if (d == 0) return UTF8String.fromString(canonGeomText(t0))
-      val comps = geomPolys(g).map(p => fmtGeom(Array(p)))
-      if (d < 0)
-        return erodeSeparatedMembers(comps.toSeq, d, style, "MULTIPOLYGON")
-      var acc: UTF8String = null
-      comps.foreach { m =>
-        val bm = bufferWkt(UTF8String.fromString(m), d, style)
-        acc = if (acc == null) bm else unionWkt(acc, bm)
-      }
-      return acc
-    }
-    // (MULTI)LINESTRING buffer (r14): the CAPSULE/corridor — per-segment
-    // rectangles of width 2d, a join fan on the OUTER side of every
-    // interior vertex (the side where the normals diverge; the inner
-    // side is covered by the rectangles' own overlap), and a half-disk
-    // cap (θ = π → 16 chords) at each open-part terminal; closed parts
-    // treat the seam vertex as an interior joint. Pieces fold through
-    // the overlay union segment-by-segment (each cap/fan shares an
-    // edge with its rectangle; consecutive rectangles overlap with
-    // positive area at the joint — never point-pinched). Parts of a
-    // MULTILINESTRING buffer independently and union (disjoint parts →
-    // MULTIPOLYGON). Negative d erodes a measure-zero set: EMPTY.
-    // Both styles share the shape: miter replaces the outer fan with
-    // the kite, caps stay round (GEOS's flat/square caps are a
-    // different cap_style, not a join style).
-    if (isLineKindWkt(g)) {
-      if (d == 0) return g
-      if (d < 0) return UTF8String.fromString("POLYGON EMPTY")
-      val parts = lineParts(t0)
-      require(parts.nonEmpty, "st_buffer: empty line geometry")
-      var acc: UTF8String = null
-      parts.foreach { c =>
-        require(isSimpleChain(c),
-          "st_buffer: self-intersecting LINESTRING part - simplify first")
-        val m = c.length / 2
-        val closed = c(0) == c(2 * m - 2) && c(1) == c(2 * m - 1)
-        val segs = m - 1
-        val nx = new Array[Double](segs); val ny = new Array[Double](segs)
-        var i = 0
-        while (i < segs) {
-          val ex = c(2 * i + 2) - c(2 * i)
-          val ey = c(2 * i + 3) - c(2 * i + 1)
-          val len = math.sqrt(ex * ex + ey * ey)
-          require(len > 0, "st_buffer: zero-length segment")
-          nx(i) = ey / len
-          ny(i) = -ex / len
-          i += 1
-        }
-        val pieces = new scala.collection.mutable.ArrayBuffer[String]()
-        i = 0
-        while (i < segs) {
-          pieces += fmtRing(Array(
-            c(2 * i) + nx(i) * d, c(2 * i + 1) + ny(i) * d,
-            c(2 * i + 2) + nx(i) * d, c(2 * i + 3) + ny(i) * d,
-            c(2 * i + 2) - nx(i) * d, c(2 * i + 3) - ny(i) * d,
-            c(2 * i) - nx(i) * d, c(2 * i + 1) - ny(i) * d))
-          i += 1
-        }
-        // interior joints (plus the seam joint when closed)
-        val joints =
-          if (closed) (0 until segs).map(i =>
-            (if (i == 0) segs - 1 else i - 1, i, 2 * i))
-          else (1 until segs).map(i => (i - 1, i, 2 * i))
-        joints.foreach { case (p, i2, vOff) =>
-          val delta = turnAngle(nx(p), ny(p), nx(i2), ny(i2))
-          if (delta != 0) {
-            val s = if (delta > 0) 1.0 else -1.0
-            val vx = c(vOff); val vy = c(vOff + 1)
-            if (style == BufMiter) {
-              // outer miter kite: intersect the two outer offset lines
-              // (unit directions recovered from the normals: dir =
-              // (−ny, nx), exact negation/swap of the stored unit n)
-              val dpx = -ny(p); val dpy = nx(p)
-              val dix = -ny(i2); val diy = nx(i2)
-              val opx = vx + s * nx(p) * d; val opy = vy + s * ny(p) * d
-              val oix = vx + s * nx(i2) * d; val oiy = vy + s * ny(i2) * d
-              val den = dpx * diy - dpy * dix
-              require(den != 0, "st_buffer: collinear consecutive " +
-                "segments - drop redundant vertices upstream")
-              val tt = ((oix - opx) * diy - (oiy - opy) * dix) / den
-              pieces += fmtRing(Array(
-                vx, vy, opx, opy,
-                opx + tt * dpx, opy + tt * dpy,
-                oix, oiy))
-            } else {
-              val fan = arcFan(vx, vy, d, s * nx(p), s * ny(p),
-                s * nx(i2), s * ny(i2),
-                turnAngle(s * nx(p), s * ny(p), s * nx(i2), s * ny(i2)))
-              val ring = new Array[Double](fan.length + 2)
-              ring(0) = vx; ring(1) = vy
-              System.arraycopy(fan, 0, ring, 2, fan.length)
-              pieces += fmtRing(ring)
-            }
+      // interior joints (plus the seam joint when closed)
+      val joints =
+        if (closed) (0 until segs).map(i =>
+          (if (i == 0) segs - 1 else i - 1, i, 2 * i))
+        else (1 until segs).map(i => (i - 1, i, 2 * i))
+      joints.foreach { case (p, i2, vOff) =>
+        val delta = turnAngle(nx(p), ny(p), nx(i2), ny(i2))
+        if (delta != 0) {
+          val s = if (delta > 0) 1.0 else -1.0
+          val vx = c(vOff); val vy = c(vOff + 1)
+          if (style == BufMiter) {
+            // outer miter kite: intersect the two outer offset lines
+            // (unit directions recovered from the normals: dir =
+            // (−ny, nx), exact negation/swap of the stored unit n)
+            val dpx = -ny(p); val dpy = nx(p)
+            val dix = -ny(i2); val diy = nx(i2)
+            val opx = vx + s * nx(p) * d; val opy = vy + s * ny(p) * d
+            val oix = vx + s * nx(i2) * d; val oiy = vy + s * ny(i2) * d
+            val den = dpx * diy - dpy * dix
+            require(den != 0, "st_buffer: collinear consecutive " +
+              "segments - drop redundant vertices upstream")
+            val tt = ((oix - opx) * diy - (oiy - opy) * dix) / den
+            pieces += ringPiece(Array(
+              vx, vy, opx, opy,
+              opx + tt * dpx, opy + tt * dpy,
+              oix, oiy))
+          } else {
+            val fan = arcFan(vx, vy, d, s * nx(p), s * ny(p),
+              s * nx(i2), s * ny(i2),
+              turnAngle(s * nx(p), s * ny(p), s * nx(i2), s * ny(i2)))
+            pieces += ringPiece(Array(vx, vy) ++ fan)
           }
         }
-        if (!closed) {
-          // half-disk caps: sweep from +n through the BACK direction to
-          // −n (start cap CW, end cap CCW) — θ = π, 16 chords
-          val sFan = arcFan(c(0), c(1), d, nx(0), ny(0),
-            -nx(0), -ny(0), -math.Pi)
-          val sRing = new Array[Double](sFan.length + 2)
-          sRing(0) = c(0); sRing(1) = c(1)
-          System.arraycopy(sFan, 0, sRing, 2, sFan.length)
-          pieces += fmtRing(sRing)
-          val l = segs - 1
-          val eFan = arcFan(c(2 * m - 2), c(2 * m - 1), d, nx(l), ny(l),
-            -nx(l), -ny(l), math.Pi)
-          val eRing = new Array[Double](eFan.length + 2)
-          eRing(0) = c(2 * m - 2); eRing(1) = c(2 * m - 1)
-          System.arraycopy(eFan, 0, eRing, 2, eFan.length)
-          pieces += fmtRing(eRing)
-        }
-        var partAcc = UTF8String.fromString(pieces.head)
-        var k = 1
-        while (k < pieces.length) {
-          partAcc = unionWkt(partAcc, UTF8String.fromString(pieces(k)))
-          k += 1
-        }
-        acc = if (acc == null) partAcc else unionWkt(acc, partAcc)
       }
-      return canonMinimalWkt(acc)
+      if (!closed) {
+        // half-disk caps: sweep from +n through the BACK direction to
+        // −n (start cap CW, end cap CCW) — θ = π, 16 chords
+        pieces += ringPiece(Array(c(0), c(1)) ++ arcFan(c(0), c(1), d,
+          nx(0), ny(0), -nx(0), -ny(0), -math.Pi))
+        val l = segs - 1
+        pieces += ringPiece(Array(c(2 * m - 2), c(2 * m - 1)) ++
+          arcFan(c(2 * m - 2), c(2 * m - 1), d, nx(l), ny(l),
+            -nx(l), -ny(l), math.Pi))
+      }
+      val part = pieces.reduceLeft(union)
+      acc = if (acc == null) part else union(acc, part)
     }
-    val c = toCcw(polygonCoords(g))
-    if (d == 0) return UTF8String.fromString(fmtRing(c))
+    acc
+  }
+
+  /** st_buffer of one hole-free ring `c` (CCW) of the POLYGON `g`. */
+  private def bufferRing(c: Array[Double], g: Geom, d: Double,
+      style: Int): String = {
+    if (d == 0) return fmtRing(c)
     val n = c.length / 2
     // unit outward normals + edge lengths (CCW ring: outward is right)
     val nx = new Array[Double](n); val ny = new Array[Double](n)
@@ -3547,7 +2718,6 @@ object WktCore {
     }
     if (d > 0 && isConvexRing(c) && style == BufMiter) {
       // legacy closed-form convex miter ring — bit-identical to r13
-      requireConvex(c, "st_buffer")
       val out = new Array[Double](2 * n)
       i = 0
       while (i < n) {
@@ -3555,13 +2725,12 @@ object WktCore {
         out(2 * i) = mx; out(2 * i + 1) = my
         i += 1
       }
-      return UTF8String.fromString(fmtRing(out))
+      return fmtRing(out)
     }
     if (d > 0 && isConvexRing(c) && style == BufRound) {
       // direct rounded offset of a convex ring: per-vertex arc fan
       // endpoints double as the edge-offset corners
-      requireConvex(c, "st_buffer")
-      val out = new scala.collection.mutable.ArrayBuffer[Double]()
+      val out = new ArrayBuffer[Double]()
       i = 0
       while (i < n) {
         val p = if (i == 0) n - 1 else i - 1
@@ -3580,20 +2749,20 @@ object WktCore {
         }
         i += 1
       }
-      return UTF8String.fromString(fmtRing(out.toArray))
+      return fmtRing(out.toArray)
     }
     requireSimple(c, "st_buffer")
     val r = math.abs(d)
     val inward = d < 0
     val sgn = if (inward) -1.0 else 1.0
-    val pieces = new scala.collection.mutable.ArrayBuffer[String]()
-    if (!inward) pieces += fmtRing(c)
+    val pieces = new ArrayBuffer[Geom]()
+    if (!inward) pieces += ringPiece(c)
     // per-edge rectangles at signed offset (outward for dilation,
     // inward for erosion)
     i = 0
     while (i < n) {
       val j = if (i + 1 == n) 0 else i + 1
-      pieces += fmtRing(Array(
+      pieces += ringPiece(Array(
         c(2 * i), c(2 * i + 1), c(2 * j), c(2 * j + 1),
         c(2 * j) + sgn * nx(i) * r, c(2 * j + 1) + sgn * ny(i) * r,
         c(2 * i) + sgn * nx(i) * r, c(2 * i + 1) + sgn * ny(i) * r))
@@ -3609,45 +2778,28 @@ object WktCore {
         val vx = c(2 * i); val vy = c(2 * i + 1)
         if (style == BufMiter) {
           val (mx, my) = miterPoint(i, sgn * r)
-          pieces += fmtRing(Array(
+          pieces += ringPiece(Array(
             vx, vy, vx + sgn * nx(p) * r, vy + sgn * ny(p) * r,
             mx, my, vx + sgn * nx(i) * r, vy + sgn * ny(i) * r))
         } else {
           val delta = turnAngle(sgn * nx(p), sgn * ny(p),
             sgn * nx(i), sgn * ny(i))
-          val fan = arcFan(vx, vy, r, sgn * nx(p), sgn * ny(p),
-            sgn * nx(i), sgn * ny(i), delta)
-          val ring = new Array[Double](fan.length + 2)
-          ring(0) = vx; ring(1) = vy
-          System.arraycopy(fan, 0, ring, 2, fan.length)
-          pieces += fmtRing(ring)
+          pieces += ringPiece(Array(vx, vy) ++ arcFan(vx, vy, r,
+            sgn * nx(p), sgn * ny(p), sgn * nx(i), sgn * ny(i), delta))
         }
       }
       i += 1
     }
-    if (!inward) {
+    val region =
       // dilation: fold onto the INPUT ring first — every strip shares
       // an edge with it, so no intermediate union is point-pinched
-      var acc = UTF8String.fromString(pieces.head)
-      var k = 1
-      while (k < pieces.length) {
-        acc = unionWkt(acc, UTF8String.fromString(pieces(k)))
-        k += 1
-      }
-      canonMinimalWkt(acc)
-    } else {
+      if (!inward) pieces.reduceLeft(union)
       // erosion: subtract each piece from g SEQUENTIALLY (adjacent
       // inward strips meet only at the input vertex — their union is
       // point-pinched, which the overlay rightly refuses; the
       // difference chain computes g − ∪pieces without ever forming it)
-      var acc: UTF8String = g
-      var k = 0
-      while (k < pieces.length) {
-        acc = differenceWkt(acc, UTF8String.fromString(pieces(k)))
-        k += 1
-      }
-      canonMinimalWkt(acc)
-    }
+      else pieces.foldLeft(g)(difference)
+    render(minimal(polysOf(region, "st_buffer")))
   }
 
   /** Codegen entry: st_convexhull(geomWkt) — Andrew's monotone chain
@@ -3659,26 +2811,10 @@ object WktCore {
     * the lexicographically smallest vertex — deterministic; collinear
     * boundary points are DROPPED (strict turns only), matching the
     * minimal-vertex hull every classical presentation produces.
-    * Degenerate inputs (all points collinear, or EMPTY) throw loudly —
-    * this engine's geometry model has no LINESTRING-valued hull. */
+    * EMPTY inputs throw loudly; collinear ones degenerate to a segment
+    * or a point (degenerateHullWkt). */
   def convexHullWkt(g: UTF8String): UTF8String = {
-    def coordsOf(t0: String): Array[Double] = {
-      val t = t0.trim
-      if (isEmptyGeom(UTF8String.fromString(t))) Array.emptyDoubleArray
-      else if (isCollectionText(t))
-        parseCollection(t).toArray.flatMap(coordsOf)
-      else if (isMultiPointText(t)) parseMultiPoint(t)
-      else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-        lineParts(t).flatten
-      else if (t.regionMatches(true, 0, "LINESTRING", 0, 10))
-        parseLineString(t)
-      else if (t.regionMatches(true, 0, "POLYGON", 0, 7) ||
-          t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-        geomPolys(UTF8String.fromString(t))
-          .flatMap { case (shell, holes) => shell +: holes.toSeq }.flatten
-      else parsePoint(t)
-    }
-    val c = coordsOf(g.toString)
+    val c = vertices(read(g))
     require(c.nonEmpty, "st_convexhull: EMPTY geometry has no hull")
     val out = monotoneChain(c)
     UTF8String.fromString(
@@ -3746,31 +2882,6 @@ object WktCore {
     out
   }
 
-  /** Every vertex of a geometry (POINT / LINESTRING / (MULTI)POLYGON
-    * incl. interior rings) as a flat list — the convex_hull_agg input
-    * reduction (a hull only ever depends on vertices). */
-  private[functions] def allVertices(g: UTF8String): Array[Double] = {
-    val t = g.toString.trim
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) parsePoint(t)
-    else if (t.regionMatches(true, 0, "LINESTRING", 0, 10))
-      parseLineString(t)
-    else if (isMultiPointText(t))
-      (if (t.equalsIgnoreCase("MULTIPOINT EMPTY")) Array.emptyDoubleArray
-       else parseMultiPoint(t))
-    else if (t.regionMatches(true, 0, "MULTILINESTRING", 0, 15))
-      lineParts(t).flatten
-    else if (isCollectionText(t))
-      parseCollection(t).flatMap(c => allVertices(UTF8String.fromString(c)))
-    else {
-      val out = new scala.collection.mutable.ArrayBuffer[Double]()
-      geomPolys(g).foreach { case (shell, holes) =>
-        out ++= shell
-        holes.foreach(out ++= _)
-      }
-      out.toArray
-    }
-  }
-
   /** Codegen entry: st_boundary — areal inputs: every ring as a closed
     * LINESTRING, components in input order (shell before its interior
     * rings); one ring renders LINESTRING, several MULTILINESTRING,
@@ -3780,73 +2891,49 @@ object WktCore {
     * a closed line's boundary is MULTIPOINT EMPTY. POINT/MULTIPOINT
     * have an empty boundary: GEOMETRYCOLLECTION EMPTY, the JTS/Trino
     * convention. */
-  def boundaryWkt(g: UTF8String): UTF8String = {
-    val t = g.toString.trim
-    if (t.regionMatches(true, 0, "POINT", 0, 5) || isMultiPointText(t)) {
-      if (!t.equalsIgnoreCase("MULTIPOINT EMPTY")) {
-        if (isMultiPointText(t)) parseMultiPoint(t) else parsePoint(t)
-      }
-      return UTF8String.fromString("GEOMETRYCOLLECTION EMPTY")
-    }
-    if (isLineKindWkt(g))
-      return UTF8String.fromString(
-        fmtMultiPoint(lineBoundaryPts(lineParts(t))))
-    val polys = geomPolys(g)
-    if (polys.isEmpty) return UTF8String.fromString("LINESTRING EMPTY")
-    val rings = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
-    polys.foreach { case (shell, holes) =>
-      rings += shell
-      holes.foreach(rings += _)
-    }
-    if (rings.length == 1)
-      UTF8String.fromString("LINESTRING (" + ringBody(rings(0)) + ")")
-    else
-      UTF8String.fromString(rings.map(r => "(" + ringBody(r) + ")")
-        .mkString("MULTILINESTRING (", ", ", ")"))
-  }
+  def boundaryWkt(g: UTF8String): UTF8String = UTF8String.fromString(read(g) match {
+    case _: Point | _: MultiPoint => "GEOMETRYCOLLECTION EMPTY"
+    case Lines(ps, _) => fmtMultiPoint(lineBoundaryPts(ps))
+    case Polys(ps, _) =>
+      val rings = ps.flatMap { case (shell, holes) => shell +: holes.toSeq }
+      if (rings.isEmpty) "LINESTRING EMPTY"
+      else if (rings.length == 1) "LINESTRING (" + ringBody(rings(0)) + ")"
+      else rings.map(r => "(" + ringBody(r) + ")")
+        .mkString("MULTILINESTRING (", ", ", ")")
+    case other => notA("st_boundary", "POINT, LINE or POLYGON kind", other)
+  })
 
   // ---- mixed-dimension union (r14: geometry_union_agg over mixed
   // kinds emits a GEOMETRYCOLLECTION, the Trino geometry_union shape) --
 
   /** Areal union with EMPTY short-circuits (an EMPTY side is the
     * union identity — skip the overlay). */
-  private def unionAreal(a: String, b: String): String =
-    if (geomPolys(UTF8String.fromString(a)).isEmpty) b
-    else if (geomPolys(UTF8String.fromString(b)).isEmpty) a
-    else unionWkt(UTF8String.fromString(a), UTF8String.fromString(b))
-      .toString
+  private def unionAreal(a: Polys, b: Polys): Polys =
+    if (a.polys.isEmpty) b
+    else if (b.polys.isEmpty) a
+    else overlayOp(a.polys, b.polys, 1, "st_union")
 
-  /** Decompose any supported WKT into (areal component WKT — the fold
-    * of its areal members, "POLYGON EMPTY" if none; line chains; flat
-    * point coords). Collections recurse. */
-  private def decomposeMixed(t0: String)
-      : (String, Array[Array[Double]], Array[Double]) = {
-    val t = t0.trim
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) {
-      val p = parsePoint(t)
-      ("POLYGON EMPTY", Array.empty[Array[Double]], p)
-    } else if (isMultiPointText(t)) {
-      val c = if (t.equalsIgnoreCase("MULTIPOINT EMPTY"))
-        Array.emptyDoubleArray else parseMultiPoint(t)
-      ("POLYGON EMPTY", Array.empty[Array[Double]], c)
-    } else if (isLineKindWkt(UTF8String.fromString(t)))
-      ("POLYGON EMPTY", lineParts(t), Array.emptyDoubleArray)
-    else if (isCollectionText(t)) {
-      var areal = "POLYGON EMPTY"
-      val lines = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
-      val pts = new scala.collection.mutable.ArrayBuffer[Double]()
-      parseCollection(t).foreach { c =>
-        val (a2, l2, p2) = decomposeMixed(c)
-        areal = unionAreal(areal, a2)
-        lines ++= l2
-        pts ++= p2
-      }
-      (areal, lines.toArray, pts.toArray)
-    } else {
-      geomPolys(UTF8String.fromString(t)) // validate
-      (t, Array.empty[Array[Double]], Array.emptyDoubleArray)
+  /** Decompose any value into (its areal part — the fold of its areal
+    * members, EMPTY if none; line chains; flat point coords).
+    * Collections recurse. */
+  private def decompose(g: Geom): (Polys, Array[Array[Double]], Array[Double]) =
+    g match {
+      case Point(x, y) => (NoArea, Array.empty, Array(x, y))
+      case MultiPoint(c) => (NoArea, Array.empty, c)
+      case Lines(ps, _) => (NoArea, ps, Array.emptyDoubleArray)
+      case p: Polys => (p, Array.empty, Array.emptyDoubleArray)
+      case Collection(ms) =>
+        var area = NoArea
+        val chains = new ArrayBuffer[Array[Double]]()
+        val pts = new ArrayBuffer[Double]()
+        ms.foreach { m =>
+          val (a2, l2, p2) = decompose(m)
+          area = unionAreal(area, a2)
+          chains ++= l2
+          pts ++= p2
+        }
+        (area, chains.toArray, pts.toArray)
     }
-  }
 
   /** Lexicographically canonical chain direction (so an exact duplicate
     * arriving reversed still dedupes). */
@@ -3875,18 +2962,18 @@ object WktCore {
     * chain. Line chains crossing the region's boundary are kept WHOLE —
     * the represented point set is still exactly the union (the covered
     * run is redundantly covered), and whole-chain identity keeps the
-    * fold associative and order-independent. Members render in fixed
+    * fold associative and order-independent. Members come in fixed
     * dimension order (areal, lines, points), chains and points sorted —
-    * the TEXT is a pure function of the inputs' point set, so map-side
-    * partials merge deterministically. */
-  private[functions] def unionMixed(aT: String, bT: String): String = {
-    val (pa, la, qa) = decomposeMixed(aT)
-    val (pb, lb, qb) = decomposeMixed(bT)
-    val areal = unionAreal(pa, pb)
-    val region = geomPolys(UTF8String.fromString(areal))
+    * the rendering is a pure function of the inputs' point set, so
+    * map-side partials merge deterministically. */
+  private[functions] def unionMixed(a: Geom, b: Geom): Geom = {
+    val (pa, la, qa) = decompose(a)
+    val (pb, lb, qb) = decompose(b)
+    val area = unionAreal(pa, pb)
+    val region = area.polys
     // chains: canonical direction, exact dedupe, drop fully-covered
     val chains = (la ++ lb).map(canonChain)
-    val keptChains = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
+    val keptChains = new ArrayBuffer[Array[Double]]()
     val chainOrd = new Ordering[Array[Double]] {
       def compare(x: Array[Double], y: Array[Double]): Int = {
         var k = 0
@@ -3907,7 +2994,7 @@ object WktCore {
       if (!dup && !covered) keptChains += c
     }
     // points: exact dedupe, drop covered by the region or a kept chain
-    val keptPts = new scala.collection.mutable.ArrayBuffer[Double]()
+    val keptPts = new ArrayBuffer[Double]()
     val seen = scala.collection.mutable.LinkedHashSet[(Double, Double)]()
     var i = 0
     while (2 * i < qa.length + qb.length) {
@@ -3923,45 +3010,32 @@ object WktCore {
       val onChain = keptChains.exists(c => WktOverlay.pointOnLine(c, x, y))
       if (!onRegion && !onChain) { keptPts += x; keptPts += y }
     }
-    val members = new scala.collection.mutable.ArrayBuffer[String]()
-    if (region.nonEmpty) members += areal
-    if (keptChains.nonEmpty) members += fmtLines(keptChains.toArray)
-    if (keptPts.nonEmpty) members +=
-      (if (keptPts.length == 2) pointStr(keptPts(0), keptPts(1)).toString
-       else fmtMultiPoint(keptPts.toArray))
-    if (members.isEmpty) "POLYGON EMPTY"
+    val members = new ArrayBuffer[Geom]()
+    if (region.nonEmpty) members += area
+    if (keptChains.nonEmpty) members += lines(keptChains.toArray)
+    if (keptPts.nonEmpty) members += pointSet(keptPts.toArray)
+    if (members.isEmpty) NoArea
     else if (members.length == 1) members(0)
-    else members.mkString("GEOMETRYCOLLECTION (", ", ", ")")
+    else Collection(members.toArray)
   }
 
-  /** Finish step for the mixed union: canonical-minimal re-rendering of
-    * the areal member (the r13 fold-artifact rule), members re-rendered
-    * canonically. */
-  private[functions] def finishMixed(bT: String): String = {
-    val t = bT.trim
-    if (isCollectionText(t)) {
-      val members = parseCollection(t).map { c =>
-        if (c.regionMatches(true, 0, "POLYGON", 0, 7) ||
-            c.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-          canonMinimalWkt(UTF8String.fromString(c)).toString
-        else canonGeomText(c)
-      }
-      fmtCollection(members)
-    } else if (t.regionMatches(true, 0, "POLYGON", 0, 7) ||
-        t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12))
-      canonMinimalWkt(UTF8String.fromString(t)).toString
-    else canonGeomText(t)
+  /** Finish step for the mixed union: every areal part in its
+    * canonical-minimal form (the r13 fold-artifact rule). */
+  private[functions] def finishMixed(g: Geom): Geom = g match {
+    case Collection(ms) => Collection(ms.map(finishMixed))
+    case Polys(ps, _) => minimal(ps)
+    case _ => g
   }
 
-  /** Minimal-vertex canonical re-rendering for the union aggregator's
-    * finish: exactly-collinear straight-through vertices (fold-order
-    * artifacts — crossing points that ended up interior to a final
-    * edge) are dropped from every ring, so the rendered text is a pure
-    * function of the REGION, independent of reduce/merge order. */
-  private[functions] def canonMinimalWkt(g: UTF8String): UTF8String = {
+  /** Minimal-vertex canonical form for the union aggregator's finish
+    * and st_buffer's folds: exactly-collinear straight-through vertices
+    * (fold-order artifacts — crossing points that ended up interior to
+    * a final edge) are dropped from every ring, so the rendering is a
+    * pure function of the REGION, independent of reduce/merge order. */
+  private def minimal(ps: Array[Poly]): Polys = {
     def dropCollinear(c: Array[Double]): Array[Double] = {
       val n = c.length / 2
-      val keep = new scala.collection.mutable.ArrayBuffer[Double]()
+      val keep = new ArrayBuffer[Double]()
       var i = 0
       while (i < n) {
         val p = if (i == 0) n - 1 else i - 1
@@ -3973,10 +3047,8 @@ object WktCore {
       }
       if (keep.length >= 6) keep.toArray else c
     }
-    val polys = geomPolys(g)
-    if (polys.isEmpty) return UTF8String.fromString("POLYGON EMPTY")
-    UTF8String.fromString(fmtGeom(polys.map { case (shell, holes) =>
+    areal(ps.map { case (shell, holes) =>
       (dropCollinear(shell), holes.map(dropCollinear))
-    }))
+    })
   }
 }

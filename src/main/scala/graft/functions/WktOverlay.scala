@@ -1,13 +1,14 @@
 package graft.functions
 
-import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Geom.{Lines, Point, Poly, Polys}
 
 /** The polygon overlay: boolean ops and OGC relate predicates over
   * (MULTI)POLYGONs, convex or concave, with interior rings and with
   * any boundary contact (transversal crossings, vertex-on-edge,
   * collinear overlap, corner touch). Every ST_Intersection /
   * ST_Union / ST_Difference of two areal operands is built here
-  * (`WktCore.clipDispatch`).
+  * (`WktCore.overlayOp`), and the relate predicates below match on
+  * the parsed `Geom` values that `WktCore.read` gives every kernel.
   *
   * Method — a noded planar-subdivision overlay (the classical
   * snap-free exact-arithmetic variant of Weiler–Atherton /
@@ -53,8 +54,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * non-simple ring.
   */
 private[functions] object WktOverlay {
-
-  type Poly = (Array[Double], Array[Array[Double]])
 
   @inline private def orient(px: Double, py: Double, qx: Double, qy: Double,
       rx: Double, ry: Double): Double =
@@ -458,16 +457,6 @@ private[functions] object WktOverlay {
   }
 
   // ---- relate predicates ---------------------------------------------------
-
-  private[functions] def kindOf(s: UTF8String): Int = {
-    val t = s.toString.trim
-    if (t.regionMatches(true, 0, "POINT", 0, 5)) 0
-    else if (t.regionMatches(true, 0, "LINESTRING", 0, 10) ||
-      t.regionMatches(true, 0, "MULTILINESTRING", 0, 15)) 1
-    else if (t.regionMatches(true, 0, "POLYGON", 0, 7) ||
-      t.regionMatches(true, 0, "MULTIPOLYGON", 0, 12)) 2
-    else throw new IllegalArgumentException(s"unsupported geometry: $t")
-  }
 
   /** Any boundary contact between two ring sets (shared points count). */
   private def ringsContact(ringsA: Array[Array[Double]],
@@ -943,16 +932,22 @@ private[functions] object WktOverlay {
       (flags & LOverlap) != 0)
   }
 
-  private def polysOf(s: UTF8String): Array[Poly] = {
-    val g = WktCore.geomPolys(s)
-    WktCore.requireValidGeom(g, s)
-    g
+  /** The operand rank of the relate matrix: POINT 0, line kinds 1,
+    * areal kinds 2; MULTIPOINT and GEOMETRYCOLLECTION are loud. Each
+    * relate below spells out the pairs with rank(a) <= rank(b) and
+    * swaps the others. */
+  private def rank(g: Geom): Int = g match {
+    case _: Point => 0
+    case _: Lines => 1
+    case _: Polys => 2
+    case _ => throw new IllegalArgumentException(
+      s"unsupported geometry: ${WktCore.render(g)}")
   }
 
-  /** Line-kind operand as parts (LINESTRING → one; MULTILINESTRING →
-    * several; the EMPTY spellings → zero). */
-  private def lineOf(s: UTF8String): Array[Array[Double]] =
-    WktCore.lineParts(s.toString)
+  private def valid(g: Array[Poly]): Array[Poly] = {
+    WktCore.requireValidGeom(g)
+    g
+  }
 
   /** lineAreaRelate over every part of a line geometry, OR-combined
     * (contact / inside / outside are each unions over parts). */
@@ -968,82 +963,70 @@ private[functions] object WktOverlay {
 
   /** OGC ST_Touches over the POINT/(MULTI)LINESTRING/(MULTI)POLYGON
     * matrix: geometries intersect but their interiors do not. */
-  private[functions] def touchesWkt(a: UTF8String, b: UTF8String): Boolean = {
-    val (ka, kb) = (kindOf(a), kindOf(b))
-    // normalize so ka <= kb (the predicate is symmetric)
-    if (ka > kb) return touchesWkt(b, a)
-    (ka, kb) match {
-      case (0, 0) => false // equal points intersect at interiors; disjoint don't touch
-      case (0, 1) =>
-        // mod-2 rule: the point must be a boundary point of the line
-        // geometry (a shared endpoint of two parts is INTERIOR)
-        val p = WktCore.parsePoint(a.toString)
-        ptSetContains(WktCore.lineBoundaryPts(lineOf(b)))(p(0), p(1))
-      case (0, 2) =>
-        val p = WktCore.parsePoint(a.toString)
-        pointOnBoundary(polysOf(b), p(0), p(1))
-      case (1, 1) =>
-        val (contact, ii, overlap) = lineLineRelate(lineOf(a), lineOf(b))
+  private[functions] def touches(a: Geom, b: Geom): Boolean =
+    (a, b) match {
+      case (_: Point, _: Point) => false // equal points intersect at interiors; disjoint don't touch
+      // mod-2 rule: the point must be a boundary point of the line
+      // geometry (a shared endpoint of two parts is INTERIOR)
+      case (Point(x, y), Lines(ps, _)) =>
+        ptSetContains(WktCore.lineBoundaryPts(ps))(x, y)
+      case (Point(x, y), Polys(g, _)) => pointOnBoundary(valid(g), x, y)
+      case (Lines(pa, _), Lines(pb, _)) =>
+        val (contact, ii, overlap) = lineLineRelate(pa, pb)
         contact && !ii && !overlap
-      case (1, 2) =>
-        val (contact, hasIn, _) = linesAreaRelate(lineOf(a), polysOf(b))
+      case (Lines(ps, _), Polys(g, _)) =>
+        val (contact, hasIn, _) = linesAreaRelate(ps, valid(g))
         contact && !hasIn
-      case _ =>
-        val pa = polysOf(a); val pb = polysOf(b)
+      case (Polys(ga, _), Polys(gb, _)) =>
+        val pa = valid(ga); val pb = valid(gb)
         if (!ringsContact(directedRings(pa), directedRings(pb))) false
         else overlay(pa, pb, 0, "st_touches").isEmpty
+      // the predicate is symmetric: the cases above have rank(a) <= rank(b)
+      case _ => rank(a) > rank(b) && touches(b, a)
     }
-  }
 
   /** OGC ST_Crosses: interiors intersect in a lower dimension than the
     * higher-dimensional operand — meaningful for line×line (point
     * contact between interiors) and line×area (the line passes through
     * both interior and exterior); every POINT pairing and area×area is
     * false, matching JTS/Trino. */
-  private[functions] def crossesWkt(a: UTF8String, b: UTF8String): Boolean = {
-    val (ka, kb) = (kindOf(a), kindOf(b))
-    if (ka > kb) return crossesWkt(b, a)
-    (ka, kb) match {
-      case (1, 1) =>
-        val (_, ii, overlap) = lineLineRelate(lineOf(a), lineOf(b))
+  private[functions] def crosses(a: Geom, b: Geom): Boolean =
+    (a, b) match {
+      case (Lines(pa, _), Lines(pb, _)) =>
+        val (_, ii, overlap) = lineLineRelate(pa, pb)
         ii && !overlap
-      case (1, 2) =>
-        val (_, hasIn, hasOut) = linesAreaRelate(lineOf(a), polysOf(b))
+      case (Lines(ps, _), Polys(g, _)) =>
+        val (_, hasIn, hasOut) = linesAreaRelate(ps, valid(g))
         hasIn && hasOut
-      case _ => false
+      case _ => rank(a) > rank(b) && crosses(b, a)
     }
-  }
 
-  /** ST_Intersects for the pairings the legacy kernel does not cover:
-    * anything involving a (MULTI)LINESTRING, and holed / MULTIPOLYGON
-    * areal pairs. */
-  private[functions] def intersectsExt(a: UTF8String, b: UTF8String): Boolean = {
-    val (ka, kb) = (kindOf(a), kindOf(b))
-    if (ka > kb) return intersectsExt(b, a)
-    (ka, kb) match {
-      case (0, 1) =>
-        val p = WktCore.parsePoint(a.toString)
-        lineOf(b).exists(c => pointOnLine(c, p(0), p(1)))
-      case (0, 2) =>
-        val p = WktCore.parsePoint(a.toString)
-        val g = polysOf(b)
-        pointOnBoundary(g, p(0), p(1)) || containsGeom(g, p(0), p(1))
-      case (1, 1) =>
-        val (contact, _, _) = lineLineRelate(lineOf(a), lineOf(b))
+  /** ST_Intersects for the pairings the single-ring kernel does not
+    * cover: anything involving a (MULTI)LINESTRING, and holed /
+    * MULTIPOLYGON / EMPTY areal pairs. */
+  private[functions] def intersects(a: Geom, b: Geom): Boolean =
+    (a, b) match {
+      case (Point(x, y), Point(u, v)) => x == u && y == v
+      case (Point(x, y), Lines(ps, _)) => ps.exists(c => pointOnLine(c, x, y))
+      case (Point(x, y), Polys(ga, _)) =>
+        val g = valid(ga)
+        pointOnBoundary(g, x, y) || containsGeom(g, x, y)
+      case (Lines(pa, _), Lines(pb, _)) =>
+        val (contact, _, _) = lineLineRelate(pa, pb)
         contact
-      case (1, 2) =>
-        val (contact, hasIn, _) = linesAreaRelate(lineOf(a), polysOf(b))
+      case (Lines(ps, _), Polys(g, _)) =>
+        val (contact, hasIn, _) = linesAreaRelate(ps, valid(g))
         contact || hasIn
-      case _ =>
-        val pa = polysOf(a); val pb = polysOf(b)
+      case (Polys(ga, _), Polys(gb, _)) =>
+        val pa = valid(ga); val pb = valid(gb)
         if (pa.isEmpty || pb.isEmpty) false
         else if (ringsContact(directedRings(pa), directedRings(pb))) true
         else // no boundary contact: each is entirely in one face of the
              // other, so one clean vertex decides (even-odd, holes-aware)
           containsGeom(pa, pb(0)._1(0), pb(0)._1(1)) ||
             containsGeom(pb, pa(0)._1(0), pa(0)._1(1))
+      case _ => rank(a) > rank(b) && intersects(b, a)
     }
-  }
 
   // ---- validity helpers (r13: point-contact tolerance, OGC-aligned) -------
 

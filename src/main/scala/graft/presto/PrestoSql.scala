@@ -1824,8 +1824,8 @@ object PrestoSql {
     // before these temp functions are created, so the bodies resolve).
     // st_distance resolves to the native general kernel (see below).
     // validating constructor (r13): Trino throws on malformed WKT at
-    // construction; st_coorddim forces the kind-dispatched parse (the
-    // thread-local parse memo makes the later kernel re-parse free)
+    // construction; st_coorddim forces the WKT read (WktCore.read's
+    // per-thread memo makes the later kernel's read free)
     "st_geometryfromtext(w STRING) RETURNS STRING RETURN" +
       " CASE WHEN st_coorddim(w) = 2 THEN w END",
     "st_astext(g STRING) RETURNS STRING RETURN g",

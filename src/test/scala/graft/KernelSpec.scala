@@ -1,10 +1,14 @@
 package graft
 
-import graft.functions.{GraftFunctions, Kernel, TextFunctions}
+import graft.functions.{GraftFunctions, Kernel, TextFunctions, WktCore}
 import org.apache.spark.sql.{Column, Row}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  InterpretedUnsafeProjection, Literal, UnsafeProjection}
 import org.apache.spark.sql.functions.{call_function, col, lit}
-import org.apache.spark.sql.types.{DateType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, DateType, DoubleType, IntegerType,
+  StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The registry's `Kernel` entries: every one binds to its static method
   * and answers alike interpreted and generated; the builder rejects a
@@ -57,6 +61,73 @@ class KernelSpec extends SparkSpec {
           scala.util.Try(check(id.funcName, args, k)).failed.toOption
             .map(e => s"${id.funcName}/${args.length}: ${messages(e).take(300)}")
         }
+      }
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("every WktCore kernel answers the EMPTY corpus alike interpreted and generated, " +
+      "failing only with IllegalArgumentException") {
+    // the six EMPTY spellings and one non-empty value of each kind
+    val corpus = Seq("POLYGON EMPTY", "MULTIPOLYGON EMPTY", "LINESTRING EMPTY",
+      "MULTILINESTRING EMPTY", "MULTIPOINT EMPTY", "GEOMETRYCOLLECTION EMPTY",
+      "POINT (1 2)", "MULTIPOINT ((0 0), (3 1))", "LINESTRING (0 0, 2 0, 2 2)",
+      "MULTILINESTRING ((0 0, 1 0), (0 1, 1 1))", "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",
+      "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((3 3, 4 3, 4 4, 3 4, 3 3)))",
+      "GEOMETRYCOLLECTION (POINT (5 5), LINESTRING (0 0, 1 1))")
+      .map(UTF8String.fromString)
+    val kernels = (for {
+      (id, info, build) <- GraftFunctions.all
+      if info.getClassName == classOf[Kernel].getName
+      (args, k) <- probes(build)
+      if k.invoke.staticObject == WktCore.getClass && args.head.dataType != DateType
+    } yield (s"${id.funcName}/${args.length}", k)).toMap
+    assert(kernels.size >= 55, kernels.keys)
+    def root(e: Throwable): Throwable = e match {
+      case w: java.lang.reflect.InvocationTargetException if w.getCause != null =>
+        root(w.getCause)
+      case other => other
+    }
+    val problems = kernels.toSeq.sortBy(_._1).flatMap { case (name, k) =>
+      // a geometry argument takes every corpus value (in the encoding the
+      // kernel reads); a number is 0.5, a position 1
+      val values: Seq[Seq[Any]] = k.inputTypes.map {
+        case StringType => k.invoke.functionName match {
+          case "fromGeoJson" => corpus.map(WktCore.toGeoJson)
+          case "sphericalToGeometry" => corpus.map(g => UTF8String.fromString(s"GEOGRAPHY $g"))
+          case _ => corpus
+        }
+        case BinaryType => corpus.map(WktCore.toWkb)
+        case DoubleType => Seq(0.5)
+        case IntegerType => Seq(1)
+        case t => fail(s"$name: no corpus for $t")
+      }
+      val rows = values.foldLeft(Seq(Seq.empty[Any]))((acc, vs) =>
+        for (a <- acc; v <- vs) yield a :+ v).map(InternalRow.fromSeq)
+      val bound = k.withNewChildren(k.inputTypes.zipWithIndex.map { case (t, i) =>
+        BoundReference(i, t, nullable = true) })
+      def run(mode: String): Seq[Either[Throwable, String]] =
+        GraftSession.withConf(spark, "spark.sql.codegen.factoryMode" -> mode) {
+          val p = UnsafeProjection.create(Seq(bound))
+          assert(p.isInstanceOf[InterpretedUnsafeProjection] == (mode == "NO_CODEGEN"))
+          rows.map(r => try {
+            Right(CatalystTypeConverters.convertToScala(p(r).get(0, k.dataType),
+              k.dataType) match {
+              case b: Array[Byte] => b.mkString(",")
+              case v => String.valueOf(v)
+            })
+          } catch { case e: Throwable => Left(root(e)) })
+        }
+      def show(o: Either[Throwable, String]): String =
+        o.fold(e => s"${e.getClass.getName}: ${e.getMessage}", identity)
+      val codegen = run("CODEGEN_ONLY")
+      val interpreted = run("NO_CODEGEN")
+      rows.indices.flatMap { i =>
+        val input = rows(i).toSeq(k.inputTypes).mkString(", ")
+        if (show(codegen(i)) != show(interpreted(i)))
+          Some(s"$name($input): ${show(codegen(i))} vs ${show(interpreted(i))}")
+        else codegen(i).left.toOption.filterNot(_.isInstanceOf[IllegalArgumentException])
+          .map(e => s"$name($input): ${show(Left(e))}")
       }
     }
     assert(problems.isEmpty, problems.mkString("\n"))

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.WktCore
+import graft.functions.{Geom, WktCore}
 
 /** Randomized adversarial cross-check of the general clipping tier
   * (r11): the clipper's ∩/∪/− outputs — including MULTIPOLYGON
@@ -26,6 +26,12 @@ import graft.functions.WktCore
 class WktFuzzSpec extends AnyFunSuite {
 
   private def u(s: String) = UTF8String.fromString(s)
+
+  /** The vertices of a LINESTRING, through WktCore.read. */
+  private def line(wkt: String): Array[Double] = WktCore.read(u(wkt)) match {
+    case Geom.Lines(Array(c), false) => c
+    case _ => throw new IllegalArgumentException(s"not a LINESTRING: $wkt")
+  }
 
   /** Skyline polygon over columns [x0, x0+k·w]: per-column heights,
     * traced CCW with the base at y0. Heights > 0; adjacent equal
@@ -333,8 +339,8 @@ class WktFuzzSpec extends AnyFunSuite {
       if (g.startsWith("MULTILINESTRING"))
         g.stripPrefix("MULTILINESTRING ((").stripSuffix("))")
           .split("\\), \\(").toSeq
-          .map(p => WktCore.parseLineString(s"LINESTRING ($p)"))
-      else Seq(WktCore.parseLineString(g))
+          .map(p => line(s"LINESTRING ($p)"))
+      else Seq(line(g))
     val cells = scala.collection.mutable.Set[(Double, Double, Double, Double)]()
     parts.foreach { c =>
       var i = 0
@@ -365,8 +371,8 @@ class WktFuzzSpec extends AnyFunSuite {
           if (g.startsWith("MULTILINESTRING"))
             g.stripPrefix("MULTILINESTRING ((").stripSuffix("))")
               .split("\\), \\(").toSeq
-              .map(p => WktCore.parseLineString(s"LINESTRING ($p)"))
-          else Seq(WktCore.parseLineString(g))
+              .map(p => line(s"LINESTRING ($p)"))
+          else Seq(line(g))
         parts.flatMap { c =>
           (0 until c.length / 2 - 1).map(i =>
             (c(2 * i), c(2 * i + 1), c(2 * i + 2), c(2 * i + 3)))

@@ -1,7 +1,8 @@
 package graft
 
-import graft.functions.{GraftFunctions => GF, WktCore}
+import graft.functions.{Geom, GraftFunctions => GF, WktCore}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** WKT geometry v2: parser round-trips, ray-cast correctness vs a
   * brute-force reference on random polygons, hostile-input behavior,
@@ -9,13 +10,30 @@ import org.apache.spark.sql.functions._
 class WktSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
+  // coordinates of one kind, read through WktCore.read; any other kind
+  // is an IllegalArgumentException, as the reader's own errors are
+  private def kind[A](wkt: String)(pf: PartialFunction[Geom, A]): A = {
+    val g = WktCore.read(UTF8String.fromString(wkt))
+    pf.applyOrElse(g, (_: Geom) =>
+      throw new IllegalArgumentException(s"unexpected kind: $wkt"))
+  }
+  private def point(wkt: String): Array[Double] =
+    kind(wkt) { case Geom.Point(x, y) => Array(x, y) }
+  /** The shell of a hole-free POLYGON. */
+  private def shell(wkt: String): Array[Double] =
+    kind(wkt) { case Geom.Polys(Array((s, h)), false) if h.isEmpty => s }
+  private def line(wkt: String): Array[Double] =
+    kind(wkt) { case Geom.Lines(Array(c), false) => c }
+  private def multiPoint(wkt: String): Array[Double] =
+    kind(wkt) { case Geom.MultiPoint(c) => c }
+
   test("POINT and POLYGON parse, closing vertex dropped, whitespace tolerated") {
-    assert(WktCore.parsePoint("POINT (3.5 -2.25)").sameElements(Array(3.5, -2.25)))
-    assert(WktCore.parsePoint("  point( 1 2 )  ").sameElements(Array(1.0, 2.0)))
-    val tri = WktCore.parsePolygon("POLYGON ((0 0, 4 0, 0 4, 0 0))")
+    assert(point("POINT (3.5 -2.25)").sameElements(Array(3.5, -2.25)))
+    assert(point("  point( 1 2 )  ").sameElements(Array(1.0, 2.0)))
+    val tri = shell("POLYGON ((0 0, 4 0, 0 4, 0 0))")
     assert(tri.sameElements(Array(0.0, 0.0, 4.0, 0.0, 0.0, 4.0)))
     // unclosed ring is accepted as-is
-    val tri2 = WktCore.parsePolygon("POLYGON((0 0, 4 0, 0 4))")
+    val tri2 = shell("POLYGON((0 0, 4 0, 0 4))")
     assert(tri2.sameElements(Array(0.0, 0.0, 4.0, 0.0, 0.0, 4.0)))
   }
 
@@ -23,19 +41,19 @@ class WktSpec extends SparkSpec {
     Seq("POLYGO ((0 0, 1 0, 0 1))", "POLYGON (0 0, 1 0)", "POLYGON ((0 0, 1 1))",
         "POINT ()", "POINT (1)", "LINESTRING (0 0, 1 1)").foreach { bad =>
       intercept[IllegalArgumentException] {
-        if (bad.toUpperCase.startsWith("POI")) WktCore.parsePoint(bad)
-        else WktCore.parsePolygon(bad)
+        if (bad.toUpperCase.startsWith("POI")) point(bad)
+        else shell(bad)
       }
     }
   }
 
   test("ray cast agrees with closed forms on diamond, rect, and concave shapes") {
-    val diamond = WktCore.parsePolygon(
+    val diamond = shell(
       "POLYGON ((5 0, 0 5, -5 0, 0 -5, 5 0))")
-    val rect = WktCore.parsePolygon(
+    val rect = shell(
       "POLYGON ((-3 -2, 3 -2, 3 2, -3 2, -3 -2))")
     // L-shape: unit squares at (0..2)x(0..1) plus (0..1)x(1..2)
-    val ell = WktCore.parsePolygon(
+    val ell = shell(
       "POLYGON ((0 0, 2 0, 2 1, 1 1, 1 2, 0 2, 0 0))")
     for (x <- -60 to 60; y <- -60 to 60) {
       // off-edge offsets: ±.013 ±.037 can never sum to a multiple of 0.1,
@@ -60,7 +78,7 @@ class WktSpec extends SparkSpec {
     // 3-4-5 triangle legs then hypotenuse back
     assert(WktCore.length(u("LINESTRING (0 0, 3 0, 3 4, 0 0)")) == 12.0)
     intercept[IllegalArgumentException] {
-      WktCore.parseLineString("LINESTRING (1 2)")
+      line("LINESTRING (1 2)")
     }
     // SQL path, codegen'd
     val r = Seq(1).toDF("i").select(
@@ -93,7 +111,7 @@ class WktSpec extends SparkSpec {
 
   test("st_intersects: crossing, containment both ways, disjoint, codegen parity") {
     import graft.functions.WktCore
-    def p(wkt: String) = WktCore.parsePolygon(wkt)
+    def p(wkt: String) = shell(wkt)
     val diamond = p("POLYGON ((5 0, 0 5, -5 0, 0 -5, 5 0))")
     // PURE edge crossing: a thin slab cutting through the diamond with
     // NO vertex of either shape inside the other (slab corners have
@@ -1347,12 +1365,12 @@ class WktSpec extends SparkSpec {
     val mp = "MULTIPOINT ((1 2), (3 4), (0 0))"
 
     // both spellings parse; the parenthesized form is canonical
-    assert(WktCore.parseMultiPoint(mp).sameElements(
+    assert(multiPoint(mp).sameElements(
       Array(1.0, 2.0, 3.0, 4.0, 0.0, 0.0)))
-    assert(WktCore.parseMultiPoint("MULTIPOINT (1 2, 3 4)").sameElements(
+    assert(multiPoint("MULTIPOINT (1 2, 3 4)").sameElements(
       Array(1.0, 2.0, 3.0, 4.0)))
     intercept[IllegalArgumentException] {
-      WktCore.parseMultiPoint("MULTIPOINT ((1 2), ())")
+      multiPoint("MULTIPOINT ((1 2), ())")
     }
 
     // accessors
@@ -1525,5 +1543,69 @@ class WktSpec extends SparkSpec {
       s"SELECT ST_AsText(ST_SymDifference(ST_GeometryFromText('$sqa'), " +
         s"ST_GeometryFromText('$sqb'))) AS v").head()
     assert(r.getString(0) == sSq)
+  }
+
+  test("WktCore.read: one parsed value per text, two per thread memoized") {
+    def u(x: String) = UTF8String.fromString(x)
+    val a = WktCore.read(u("POLYGON ((0 0, 1 0, 1 1, 0 0))"))
+    val b = WktCore.read(u("POINT (1 2)"))
+    // both the constant side and the probe side of a join stay parsed
+    assert(WktCore.read(u("POLYGON ((0 0, 1 0, 1 1, 0 0))")) eq a)
+    assert(WktCore.read(u("POINT (1 2)")) eq b)
+    assert(WktCore.read(u(" point(1 2) ")) == Geom.Point(1, 2))
+    // the EMPTY spellings are their declared kind with no parts
+    assert(WktCore.read(u("multilinestring empty")) match {
+      case Geom.Lines(Array(), true) => true
+      case _ => false
+    })
+    assert(WktCore.read(u("GEOMETRYCOLLECTION (POINT (1 2), POLYGON EMPTY)")) match {
+      case Geom.Collection(Array(Geom.Point(1.0, 2.0), Geom.Polys(Array(), false))) => true
+      case _ => false
+    })
+    Seq("POINT EMPTY", "POINT (1 2) x", "LINESTRING (0 0, 1 1", "GEOMETRYCOLLECTION ()",
+        "MULTIPOINT ((1 2) (3 4))", "TRIANGLE ((0 0, 1 0, 0 1, 0 0))").foreach { bad =>
+      intercept[IllegalArgumentException](WktCore.read(u(bad)))
+    }
+  }
+
+  test("every EMPTY spelling round-trips through GeoJSON and WKB to its canonical EMPTY") {
+    def u(x: String) = UTF8String.fromString(x)
+    // (spelling, GeoJSON type, WKB type code, canonical text read back)
+    Seq(("POLYGON EMPTY", "Polygon", 3, "POLYGON EMPTY"),
+        ("MULTIPOLYGON EMPTY", "MultiPolygon", 6, "POLYGON EMPTY"),
+        ("LINESTRING EMPTY", "LineString", 2, "LINESTRING EMPTY"),
+        ("MULTILINESTRING EMPTY", "MultiLineString", 5, "LINESTRING EMPTY"),
+        ("MULTIPOINT EMPTY", "MultiPoint", 4, "MULTIPOINT EMPTY"),
+        ("GEOMETRYCOLLECTION EMPTY", "GeometryCollection", 7, "GEOMETRYCOLLECTION EMPTY"))
+      .foreach { case (empty, typ, code, canon) =>
+        val json = WktCore.toGeoJson(u(empty)).toString
+        val member = if (code == 7) "geometries" else "coordinates"
+        assert(json == s"""{"type":"$typ","$member":[]}""", empty)
+        assert(WktCore.fromGeoJson(u(json)).toString == canon, empty)
+        val wkb = WktCore.toWkb(u(empty))
+        assert(java.util.HexFormat.of().formatHex(wkb) == f"01$code%02x00000000000000", empty)
+        assert(WktCore.fromWkb(wkb).toString == canon, empty)
+      }
+  }
+
+  test("one answer per kind: a POINT is one component, every EMPTY has no envelope, " +
+      "every leading control character is whitespace") {
+    def u(x: String) = UTF8String.fromString(x)
+    assert(WktCore.numGeometries(u("POINT (1 2)")) == 1L)
+    assert(WktCore.geometryN(u("POINT (1 2)"), 1).toString == "POINT (1.0 2.0)")
+    assert(WktCore.geometryN(u("POINT (1 2)"), 2) == null)
+    for (empty <- Seq("POLYGON EMPTY", "MULTIPOLYGON EMPTY", "LINESTRING EMPTY",
+        "MULTILINESTRING EMPTY", "MULTIPOINT EMPTY", "GEOMETRYCOLLECTION EMPTY");
+        which <- 0 to 3) {
+      val e = intercept[IllegalArgumentException](WktCore.envBound(u(empty), which))
+      assert(e.getMessage.contains("st_envelope: empty geometry"), s"$empty: ${e.getMessage}")
+    }
+    // String.trim's whitespace: every character up to U+0020
+    val tri = "POLYGON ((0 0, 1 0, 0 1, 0 0))"
+    for (ws <- Seq("\f", "\u000b", "\u0001", "\t\n")) {
+      assert(WktCore.intersectsWkt(u(ws + "POINT (0.1 0.1)"), u(tri)))
+      assert(WktCore.area(u(ws + tri)) == 0.5)
+      assert(WktCore.geometryType(u(ws + "LINESTRING (0 0, 1 1)")).toString == "ST_LineString")
+    }
   }
 }
